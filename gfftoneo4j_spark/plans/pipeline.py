@@ -27,6 +27,12 @@ Scale notes (100 TB / 10^12 turns):
   semantically sequential per conversation, so we cap skew damage by
   AQE + `repartition(conv_id)` before the window rather than salting
   (salting would break lead() chains).
+- Every output reads `mentions` and `linked`; left lazy, each written
+  output re-ran the pandas extraction and the link joins. Without a
+  checkpointer both are `localCheckpoint`ed, so they run once per build.
+  Those blocks are executor-local: a lost executor fails the job instead
+  of recomputing; resumable runs pass a `StageCheckpointer`. `edges`,
+  the largest table, stays lazy: storing it bought nothing.
 - Node ids are deterministic strings (content-addressed), so re-runs
   and resumed runs produce identical graphs — unlike the reference's
   server-assigned Neo4j ids (Neo4JUtils.scala:38).
@@ -101,6 +107,20 @@ def _canonicalize_entities(alias_dict: DataFrame) -> DataFrame:
     return connected_components(parent_edges)  # (node, component)
 
 
+class InSessionStages:
+    """``build_kg``'s stager without a ``checkpointer``: lazily
+    ``localCheckpoint`` the stages every output reads (computed by the
+    first job that needs them, read back by the rest); pass the others
+    through."""
+
+    materialized = ("mentions", "linked")
+
+    def stage(self, name: str, df: DataFrame, fingerprint: str) -> DataFrame:
+        if name in self.materialized:
+            return df.localCheckpoint(eager=False)
+        return df
+
+
 def build_kg(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -108,17 +128,17 @@ def build_kg(
     extraction: str = "pandas",
     checkpointer: StageCheckpointer | None = None,
     fingerprint: str = "default",
-    persist_intermediates: bool = False,
     segment_rows: int | None = None,
     strict: bool = False,
 ) -> KGResult:
-    """``persist_intermediates`` caches ``linked`` for interactive
-    sessions that act on many outputs (nodes AND edges AND metrics...).
-    Off by default: building the columnar cache costs more than one
-    recompute (measured at local[32]: +40s cache build vs 11s recompute
-    of the extraction+linking plan), and production multi-output runs
-    pass a ``checkpointer``, which materializes stages as parquet
-    snapshots — the resumable, cluster-correct equivalent.
+    """Stages go through ``checkpointer.stage``: a
+    :class:`StageCheckpointer` snapshots them to parquet and reuses them
+    on resume. Without one, :class:`InSessionStages` materializes
+    ``mentions`` and ``linked``, which every output reads, so extraction
+    and linking run once per build, not once per written output. Those
+    blocks are executor-local: a lost executor fails the job instead of
+    recomputing, so runs that need resume or fault tolerance pass a
+    checkpointer.
 
     ``strict=True`` raises :class:`StrictModeViolation` if any row
     fails the parse contract instead of quarantining it — the
@@ -251,6 +271,7 @@ def build_kg(
     )
 
     # --- vectorized extraction (P1) ------------------------------------
+    stages = checkpointer if checkpointer is not None else InSessionStages()
     if extraction == "pandas":
         ms = extract_mentions_udf(F.col("text"))
     elif extraction == "sql":
@@ -266,18 +287,16 @@ def build_kg(
             F.col("m.alias").alias("alias"),
         )
     )
-    if checkpointer is not None:
-        mentions = checkpointer.stage(
-            "mentions", mentions, f"{fingerprint}:extract:{extraction}"
-        )
+    mentions = stages.stage(
+        "mentions", mentions, f"{fingerprint}:extract:{extraction}"
+    )
 
     # --- broadcast entity linking (J1/J2) -------------------------------
     lr = link_mentions(mentions, alias_dict)
 
     # --- canonicalization (J4 -> CC) ------------------------------------
     canon = _canonicalize_entities(alias_dict)
-    if checkpointer is not None:
-        canon = checkpointer.stage("canon", canon, f"{fingerprint}:canon")
+    canon = stages.stage("canon", canon, f"{fingerprint}:canon")
     linked = (
         lr.linked.join(
             F.broadcast(canon), lr.linked["entity_id"] == canon["node"], "left"
@@ -285,12 +304,7 @@ def build_kg(
         .withColumn("canonical_id", F.coalesce("component", "entity_id"))
         .drop("node", "component")
     )
-    if checkpointer is not None:
-        linked = checkpointer.stage(
-            "linked", linked, f"{fingerprint}:link:{extraction}"
-        )
-    elif persist_intermediates:
-        linked = linked.persist()
+    linked = stages.stage("linked", linked, f"{fingerprint}:link:{extraction}")
 
     # --- mention edge families in ONE window pass over linked ----------
     # The conv-wide lead() ordered by (turn_idx, pos) yields the `links`
@@ -404,8 +418,7 @@ def build_kg(
     # row). `create unique` write semantics for arbitrary inputs remain
     # available via dropDuplicates at the sink (see queries.dedup_on_write).
     edges = turn_edges.unionByName(mention_edges)
-    if checkpointer is not None:
-        edges = checkpointer.stage("edges", edges, f"{fingerprint}:edges")
+    edges = stages.stage("edges", edges, f"{fingerprint}:edges")
 
     triples = edges.select(
         F.col("src").alias("subj"), F.col("type").alias("pred"), F.col("dst").alias("obj")

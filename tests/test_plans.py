@@ -3,62 +3,134 @@
 The scale story lives in the PLAN, not just the results: these tests
 freeze the properties that make the pipeline 100-TB-viable so a future
 refactor can't silently reintroduce a third full shuffle, a sort-merge
-join of the mention table, or a dropped filter pushdown.
+join of the mention table, a dropped filter pushdown, or a build that
+re-runs extraction for every output it writes.
 """
 
 import re
 
 import pytest
+from pyspark.sql import functions as F
 
+from gfftoneo4j_spark import oracle
+from gfftoneo4j_spark.corpus import CorpusConfig, make_alias_dict, make_transcripts
+from gfftoneo4j_spark.plans.graph_sink import read_graph, write_graph
+from gfftoneo4j_spark.plans.pipeline import InSessionStages, build_kg
 from gfftoneo4j_spark.queries import QUERIES
+from gfftoneo4j_spark.sources.transcripts import (
+    ALIAS_DICT_SCHEMA,
+    TRANSCRIPT_SCHEMA,
+    alias_dict_from_events,
+    transcripts_from_events,
+)
 
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+class _PlanRecorder(InSessionStages):
+    """The default in-session staging, recording the executed plan of
+    each stage it materializes. Those plans plus the ``triples`` plan
+    are every plan a build runs to produce its triples."""
+
+    def __init__(self):
+        self.plans = {}
+
+    def stage(self, name, df, fingerprint):
+        if name in self.materialized:
+            self.plans[name] = _plan(df)
+        return super().stage(name, df, fingerprint)
+
+
+def _build_plans(spark, sf_dir, extraction) -> dict[str, str]:
+    t = transcripts_from_events(spark, sf_dir)
+    d = alias_dict_from_events(spark, sf_dir)
+    rec = _PlanRecorder()
+    res = build_kg(spark, t, d, extraction=extraction, checkpointer=rec)
+    assert set(rec.plans) == set(InSessionStages.materialized)
+    return {**rec.plans, "triples": _plan(res.triples)}
+
+
 @pytest.fixture(scope="module")
-def triples_plan(spark, sf_dir):
-    return _plan(QUERIES["kg_triples"](spark, sf_dir))
+def build_plans(spark, sf_dir):
+    """The ``kg_triples`` query's build (pandas extraction)."""
+    return _build_plans(spark, sf_dir, "pandas")
 
 
-def test_pipeline_has_exactly_two_wide_exchanges(triples_plan):
+def test_pipeline_has_exactly_two_wide_exchanges(build_plans):
     """The ONLY full-data shuffles are the two per-conversation windows
     (turn pass + mention pass); every edge family rides one of them."""
-    n = len(re.findall(r"Exchange hashpartitioning\(conv_id", triples_plan))
-    assert n == 2, f"expected 2 conv_id exchanges, plan has {n}"
+    n = sum(
+        len(re.findall(r"Exchange hashpartitioning\(conv_id", p))
+        for p in build_plans.values()
+    )
+    assert n == 2, f"expected 2 conv_id exchanges, plans have {n}"
 
 
-def test_pipeline_linking_is_broadcast_not_sortmerge(triples_plan):
+def test_pipeline_linking_is_broadcast_not_sortmerge(build_plans):
     """The alias dictionary / canonical map are broadcast: the mention
     table must never shuffle for the join (J1/J2's in-memory index,
     GeneReader.scala:43-56)."""
-    assert "BroadcastHashJoin" in triples_plan
-    assert "SortMergeJoin" not in triples_plan
-    assert "ShuffledHashJoin" not in triples_plan
+    assert "BroadcastHashJoin" in build_plans["linked"]
+    for plan in build_plans.values():
+        assert "SortMergeJoin" not in plan
+        assert "ShuffledHashJoin" not in plan
 
 
-def test_pipeline_no_global_edge_dedup(triples_plan):
+def test_pipeline_no_global_edge_dedup(build_plans):
     """Edge uniqueness comes from in-window key dedup, not a corpus-wide
     dropDuplicates (measured hottest operator before removal)."""
     # a global dedup would appear as HashAggregate on (src, dst, type)
-    assert not re.search(r"HashAggregate\(keys=\[src[^\]]*dst", triples_plan)
+    for plan in build_plans.values():
+        assert not re.search(r"HashAggregate\(keys=\[src[^\]]*dst", plan)
 
 
-def test_sql_extraction_plan_is_pure_jvm(spark, sf_dir):
-    from gfftoneo4j_spark.plans.pipeline import build_kg
-    from gfftoneo4j_spark.sources.transcripts import (
-        alias_dict_from_events,
-        transcripts_from_events,
+def test_sql_extraction_plan_is_pure_jvm(spark, sf_dir, build_plans):
+    plans = _build_plans(spark, sf_dir, "sql")
+    # the extraction's explode is among the checked plans
+    assert "Generate" in plans["mentions"]
+    for plan in plans.values():
+        assert "EvalPython" not in plan  # no Python workers anywhere
+    # vectorized, not row-at-a-time
+    assert "ArrowEvalPython" in build_plans["mentions"]
+    for plan in build_plans.values():
+        assert "BatchEvalPython" not in plan
+
+
+def test_default_build_extracts_once(spark, tmp_path):
+    """Without a checkpointer, every output reads the materialized
+    ``mentions``/``linked`` stages: writing the graph, lineage and
+    metrics runs the extraction UDF once, not once per output."""
+    cfg = CorpusConfig(n_conversations=30, n_entities=15, seed=11)
+    turns, dict_rows = make_transcripts(cfg), make_alias_dict(cfg)
+    res = build_kg(
+        spark,
+        spark.createDataFrame(turns, TRANSCRIPT_SCHEMA),
+        spark.createDataFrame(dict_rows, ALIAS_DICT_SCHEMA),
     )
+    outputs = [res.nodes, res.edges, res.triples, res.lineage, res.metrics]
+    for df in outputs:
+        assert "ArrowEvalPython" not in _plan(df)
 
-    t = transcripts_from_events(spark, sf_dir)
-    d = alias_dict_from_events(spark, sf_dir)
-    plan = _plan(build_kg(spark, t, d, extraction="sql").triples)
-    assert "EvalPython" not in plan  # no Python workers anywhere
-    plan_pd = _plan(build_kg(spark, t, d, extraction="pandas").triples)
-    assert "ArrowEvalPython" in plan_pd  # vectorized, not row-at-a-time
-    assert "BatchEvalPython" not in plan_pd
+    graph, lin = str(tmp_path / "graph"), str(tmp_path / "lineage")
+    write_graph(res.nodes, res.edges, graph)
+    res.lineage.write.parquet(f"{lin}/lineage")
+    res.metrics.write.parquet(f"{lin}/metrics")
+
+    want = oracle.build_graph(turns, dict_rows)
+    g = read_graph(spark, graph)
+    assert {tuple(r) for r in g.triples.collect()} == want["triples"]
+    assert {(r["node_id"], r["label"]) for r in g.nodes.collect()} == want["nodes"]
+    by_reason = (
+        spark.read.parquet(f"{lin}/lineage")
+        .groupBy("reason")
+        .agg(F.sum("n").alias("n"))
+    )
+    assert {r["reason"]: r["n"] for r in by_reason.collect()} == want["lineage"]
+    metrics = spark.read.parquet(f"{lin}/metrics")
+    per_part = metrics.where(F.col("metric") == "triples_per_partition")
+    assert per_part.agg(F.sum("value")).first()[0] == len(want["triples"])
 
 
 def test_scan_filter_pushdown(spark, sf_dir):

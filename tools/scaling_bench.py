@@ -188,9 +188,11 @@ def run_once(
 
         def one_run() -> tuple[float, int]:
             # a NEW plan per execution: re-collecting the same DataFrame
-            # would reuse its shuffle map outputs (stage skipping)
-            res = build_kg(spark, t, d, extraction=extraction)
+            # would reuse its shuffle map outputs (stage skipping).
+            # build_kg is timed too: staging `linked` runs the alias
+            # dictionary's broadcast jobs when the build is created.
             t0 = time.time()
+            res = build_kg(spark, t, d, extraction=extraction)
             n = res.triples.select(F.count(F.lit(1))).collect()[0][0]
             return time.time() - t0, n
 
