@@ -23,7 +23,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _mat(df: DataFrame, prev: DataFrame | None = None) -> DataFrame:
+def _mat(
+    df: DataFrame, prev: DataFrame | None = None, round_no: int = 0
+) -> DataFrame:
     """Materialize loop state as COLUMNAR cache (persist + count),
     freeing the superseded snapshot.
 
@@ -34,16 +36,75 @@ def _mat(df: DataFrame, prev: DataFrame | None = None) -> DataFrame:
     the loop body went 147.9s -> 73.0s at 1x8 and 113.8s -> 28.2s at
     4x8 (per-round 23s -> 5.5s) just by switching the loop state and
     invariants to compressed columnar InMemoryRelation, which also
-    preserves outputPartitioning for the exchange-free SHJ. Lineage
-    is NOT truncated by persist — callers truncate explicitly every
-    few rounds (the loops below checkpoint every 6th round) so the
-    analyzer never sees an unboundedly deep plan.
+    preserves outputPartitioning for the exchange-free SHJ.
+
+    Cadence: loop state is materialized EVERY round. Deferring all
+    rounds into one final mega-DAG made its stages race to
+    materialize the same snapshots and duplicate work (A/B: 286s
+    deferred vs 147s per-round at 4x8); materializing every 2nd or
+    3rd round instead measured inside noise.
+
+    Loop state passes its 1-based ``round_no`` and the state it
+    supersedes as ``prev``; round 1's ``prev`` is the loop's initial
+    projection, never cached, so it is left alone. Lineage is NOT
+    truncated by persist, so every 6th round the fresh cache is copied
+    into a (cache-fed, cheap) localCheckpoint and released: the
+    analyzer never sees an unboundedly deep plan, and no cache leaks
+    per 6 rounds. Loop invariants pass no ``round_no``.
     """
     out = df.persist(StorageLevel.MEMORY_AND_DISK)
     out.count()
-    if prev is not None:
+    if prev is not None and round_no != 1:
+        # a no-op when prev is a checkpoint (never cache-registered)
         prev.unpersist(blocking=False)
+    if round_no and round_no % 6 == 0:
+        truncated = out.localCheckpoint(eager=True)
+        out.unpersist(blocking=False)
+        return truncated
     return out
+
+
+def _directed(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Directed edge set (u, v): null endpoints dropped, deduped. Lazy."""
+    return (
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        .where(F.col("u").isNotNull() & F.col("v").isNotNull())
+        .distinct()
+    )
+
+
+def _undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Symmetrized edge set (s, t): every edge in both directions,
+    self-loops dropped, deduped. Lazy — each caller picks its own
+    materialization. ``s != t`` is null-intolerant, so it also drops
+    null endpoints (the optimizer infers the isNotNull filters)."""
+    return (
+        edges.select(F.col(src).alias("s"), F.col(dst).alias("t"))
+        .unionAll(edges.select(F.col(dst).alias("s"), F.col(src).alias("t")))
+        .where(F.col("s") != F.col("t"))
+        .distinct()
+    )
+
+
+def _canonical_undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Canonical undirected edge set (a, b) with a < b: null endpoints
+    and self-loops dropped, deduped. Lazy."""
+    a, b = F.least(F.col(src), F.col(dst)), F.greatest(F.col(src), F.col(dst))
+    return (
+        edges.where(F.col(src).isNotNull() & F.col(dst).isNotNull())
+        .select(a.alias("a"), b.alias("b"))
+        .where(F.col("a") != F.col("b"))
+        .distinct()
+    )
+
+
+def _endpoints(df: DataFrame, a: str, b: str) -> DataFrame:
+    """Distinct node set (node) over the two endpoint columns. Lazy."""
+    return (
+        df.select(F.col(a).alias("node"))
+        .unionAll(df.select(F.col(b).alias("node")))
+        .distinct()
+    )
 
 
 def _orient_edges(und: DataFrame) -> DataFrame:
@@ -128,13 +189,7 @@ def four_clique_counts(
 
     Returns (node string, n_cliques4 long), nodes in >= 1 4-clique.
     """
-    a, b = F.least(F.col(src), F.col(dst)), F.greatest(F.col(src), F.col(dst))
-    und = (
-        edges.where(F.col(src).isNotNull() & F.col(dst).isNotNull())
-        .select(a.alias("a"), b.alias("b"))
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    und = _canonical_undirected(edges, src, dst)
     oriented = _orient_edges(und)
     tris = _triangles_from_oriented(oriented)
     ext_x = oriented.select(F.col("x"), F.col("y").alias("w"))
@@ -187,11 +242,7 @@ def dag_longest_path_levels(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    nodes = (
-        e.select(F.col("s").alias("node"))
-        .union(e.select(F.col("t").alias("node")))
-        .distinct()
-    )
+    nodes = _endpoints(e, "s", "t")
     targets = e.select(F.col("t").alias("node")).distinct()
     frontier = nodes.join(targets, "node", "left_anti").select(
         "node", F.lit(0).cast("long").alias("l")
@@ -280,11 +331,7 @@ def contract_chains(
     )
     mid = em.where((F.col("si") == 1) & (F.col("ti") == 1)).select("s", "t")
     cc = connected_components(mid, "s", "t")
-    in_mid = (
-        mid.select(F.col("s").alias("node"))
-        .union(mid.select(F.col("t").alias("node")))
-        .distinct()
-    )
+    in_mid = _endpoints(mid, "s", "t")
     singles = interior.join(in_mid, "node", "left_anti").select(
         "node", F.col("node").alias("component")
     )
@@ -341,13 +388,7 @@ def triangle_counts(edges: DataFrame, src: str = "u", dst: str = "v") -> DataFra
 
     Returns (node string, n_triangles long), nodes with >= 1 triangle.
     """
-    a, b = F.least(F.col(src), F.col(dst)), F.greatest(F.col(src), F.col(dst))
-    und = (
-        edges.where(F.col(src).isNotNull() & F.col(dst).isNotNull())
-        .select(a.alias("a"), b.alias("b"))
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    und = _canonical_undirected(edges, src, dst)
     tris = _enumerate_triangles(und)
     corners = tris.select(
         F.explode(F.array(F.col("x"), F.col("y"), F.col("z"))).alias("node")
@@ -364,7 +405,6 @@ def pagerank_fixed_point(
     src: str = "u",
     dst: str = "v",
     seeds: DataFrame | None = None,
-    mat_every: int = 1,
     weight: str | None = None,
 ) -> DataFrame:
     """Damped PageRank over directed ``edges``, integer fixed-point.
@@ -431,11 +471,7 @@ def pagerank_fixed_point(
         .repartition("u")
     )
     e = _mat(e)
-    nodes = _mat(
-        e.select(F.col("u").alias("node"))
-        .unionAll(e.select(F.col("v").alias("node")))
-        .distinct()
-    )
+    nodes = _mat(_endpoints(e, "u", "v"))
     degagg = (
         F.sum("w") if weight is not None else F.count(F.lit(1))
     )
@@ -466,8 +502,7 @@ def pagerank_fixed_point(
         base_col = F.lit(base)
         init_col = F.lit(scale)
     ranks = nodes.select("node", init_col.cast("long").alias("r"))
-    prev_state = None
-    for _i in range(iters):
+    for i in range(1, iters + 1):
         # Per-node quotient BEFORE the edge join (unweighted path): the
         # per-edge contribution (r * num) div (den * deg) depends only
         # on the SOURCE node, so compute it once per node by joining the
@@ -529,32 +564,7 @@ def pagerank_fixed_point(
             .cast("long")
             .alias("r"),
         )
-        # Materialization cadence: deferring ALL rounds into one final
-        # mega-DAG made its stages race to materialize the same
-        # snapshots and duplicate work (A/B: 286s deferred vs 147s
-        # per-round at 4x8), so deep laziness is out — but each
-        # materialization is also a full job barrier plus a cache
-        # write of the |V|-row state. ``mat_every`` trades the two:
-        # intermediate rounds stay lazy with plan depth <= mat_every
-        # (a single job materializes them together, no racing), and
-        # only every ``mat_every``-th state pays the barrier + write.
-        if _i == iters - 1 or (_i + 1) % mat_every == 0:
-            ranks = _mat(new_ranks, prev=prev_state)
-            if (_i + 1) % 6 == 0:
-                # bound plan depth for deep loops: persist keeps
-                # lineage, so truncate with a (cache-fed, cheap)
-                # checkpoint. The checkpoint COPIES the blocks, so the
-                # _mat cache it was fed from must be released here —
-                # prev_state now points at the checkpoint wrapper, and
-                # the next _mat(prev=...) would unpersist that no-op
-                # wrapper while the persisted frame leaked one cache
-                # per 6 rounds on deep loops.
-                mat_ref = ranks
-                ranks = ranks.localCheckpoint(eager=True)
-                mat_ref.unpersist(blocking=False)
-            prev_state = ranks
-        else:
-            ranks = new_ranks
+        ranks = _mat(new_ranks, prev=ranks, round_no=i)
     # the answer lives in the final state's cache; the loop invariants
     # (2-3x |E| of columnar blocks) would otherwise stay pinned for the
     # session — a real leak across a many-query run. Lineage stays
@@ -592,13 +602,7 @@ def bfs_distances(
     Returns (node, dist): every node reachable within max_depth hops,
     including the source at dist 0. Deterministic for any input.
     """
-    und = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("t"))
-        .unionAll(edges.select(F.col(dst).alias("s"), F.col(src).alias("t")))
-        .where(F.col("s") != F.col("t"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = _undirected(edges, src, dst).localCheckpoint(eager=True)
     spark = edges.sparkSession
     visited = (
         spark.range(1)
@@ -660,23 +664,11 @@ def label_propagation(
     holds after ``iters`` rounds; community ids are node ids, so two
     nodes are in the same community iff their labels are equal.
     """
-    und = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("t"))
-        .unionAll(edges.select(F.col(dst).alias("s"), F.col(src).alias("t")))
-        .where(
-            F.col("s").isNotNull()
-            & F.col("t").isNotNull()
-            & (F.col("s") != F.col("t"))
-        )
-        .distinct()
-        .repartition("s")
-    )
-    und = _mat(und)
+    und = _mat(_undirected(edges, src, dst).repartition("s"))
     labels = und.select(F.col("s").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
-    prev_state = None
-    for _i in range(iters):
+    for i in range(1, iters + 1):
         votes = (
             # SHUFFLE_HASH: same lesson as the PageRank loop — SMJ
             # would re-sort the checkpointed |E|-row snapshot every
@@ -689,28 +681,19 @@ def label_propagation(
             .groupBy(F.col("t").alias("node"), "label")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
-        labels = (
-            votes.groupBy("node")
-            .agg(
-                F.min(
-                    F.struct(
-                        (-F.col("cnt")).alias("neg_cnt"),
-                        F.col("label").alias("label"),
-                    )
-                ).alias("best")
-            )
-            .select("node", F.col("best.label").alias("label"))
+        best = votes.groupBy("node").agg(
+            F.min(
+                F.struct(
+                    (-F.col("cnt")).alias("neg_cnt"),
+                    F.col("label").alias("label"),
+                )
+            ).alias("best")
         )
-        # columnar per-round state, same A/B-measured rationale as the
-        # PageRank loop (_mat docstring)
-        labels = _mat(labels, prev=prev_state)
-        if (_i + 1) % 6 == 0:
-            # release the _mat cache the checkpoint copied from (same
-            # per-6-rounds leak as the PageRank loop, fixed the same way)
-            mat_ref = labels
-            labels = labels.localCheckpoint(eager=True)
-            mat_ref.unpersist(blocking=False)
-        prev_state = labels
+        labels = _mat(
+            best.select("node", F.col("best.label").alias("label")),
+            prev=labels,
+            round_no=i,
+        )
     # free the edge-snapshot cache (answer lives in the final labels
     # cache; lineage intact for eviction-triggered recompute)
     und.unpersist(blocking=False)
@@ -745,17 +728,7 @@ def kcore_peel(
     Returns (node string, degree long) for the nodes still alive after
     ``rounds`` rounds, with their residual degree.
     """
-    e = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("t"))
-        .unionAll(edges.select(F.col(dst).alias("s"), F.col(src).alias("t")))
-        .where(
-            F.col("s").isNotNull()
-            & F.col("t").isNotNull()
-            & (F.col("s") != F.col("t"))
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = _undirected(edges, src, dst).localCheckpoint(eager=True)
     for _ in range(rounds):
         deg = e.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
         keep = deg.where(F.col("deg") >= k).select("s")
@@ -799,17 +772,7 @@ def link_prediction(
     ``common >= min_common``, jaccard = |N(a) ∩ N(b)| / |N(a) ∪ N(b)|
     rounded to 6 places for cross-engine comparison.
     """
-    und = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("t"))
-        .unionAll(edges.select(F.col(dst).alias("s"), F.col(src).alias("t")))
-        .where(
-            F.col("s").isNotNull()
-            & F.col("t").isNotNull()
-            & (F.col("s") != F.col("t"))
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = _undirected(edges, src, dst).localCheckpoint(eager=True)
     deg = und.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
     mid_ok = deg.where(F.col("deg") <= hub_cap).select("s")
     thin = und.join(mid_ok, "s", "semi")
@@ -930,18 +893,10 @@ def hits_fixed_point(
     # dedup ONCE, then derive both pre-keyed copies and the node set
     # from the cache — lazily, each of the three _mats below would
     # re-run the |E|-wide distinct shuffle
-    base = _mat(
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .where(F.col("u").isNotNull() & F.col("v").isNotNull())
-        .distinct()
-    )
+    base = _mat(_directed(edges, src, dst))
     e_by_u = _mat(base.repartition("u"))
     e_by_v = _mat(base.repartition("v"))
-    nodes = _mat(
-        base.select(F.col("u").alias("node"))
-        .unionAll(base.select(F.col("v").alias("node")))
-        .distinct()
-    )
+    nodes = _mat(_endpoints(base, "u", "v"))
     base.unpersist(blocking=False)
 
     cached: list[DataFrame] = []
@@ -1028,20 +983,10 @@ def katz_centrality(
 
     Returns (node, katz long).
     """
-    e = _mat(
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .where(F.col("u").isNotNull() & F.col("v").isNotNull())
-        .distinct()
-        .repartition("u")
-    )
-    nodes = _mat(
-        e.select(F.col("u").alias("node"))
-        .unionAll(e.select(F.col("v").alias("node")))
-        .distinct()
-    )
+    e = _mat(_directed(edges, src, dst).repartition("u"))
+    nodes = _mat(_endpoints(e, "u", "v"))
     x = nodes.select("node", F.lit(scale).cast("long").alias("x"))
-    prev_state = None
-    for _i in range(iters):
+    for i in range(1, iters + 1):
         qvec = x.withColumnRenamed("node", "u").select(
             "u",
             F.expr(f"(x * {alpha_num}) div {alpha_den}").alias("q"),
@@ -1058,9 +1003,9 @@ def katz_centrality(
                 .cast("long")
                 .alias("x"),
             ),
-            prev=prev_state,
+            prev=x,
+            round_no=i,
         )
-        prev_state = x
     for inv in (e, nodes):
         inv.unpersist(blocking=False)
     return x.select("node", F.col("x").alias("katz"))
@@ -1135,12 +1080,7 @@ def deterministic_walks(
     sink simply stop (inner join drops them). Returns
     (start, step, node): step 0 is the start itself.
     """
-    e = _mat(
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .where(F.col("u").isNotNull() & F.col("v").isNotNull())
-        .distinct()
-        .repartition("u")
-    )
+    e = _mat(_directed(edges, src, dst).repartition("u"))
     frontier = e.select(F.col("u").alias("node")).distinct().select(
         F.col("node").alias("start"), F.col("node")
     )
@@ -1248,13 +1188,7 @@ def multi_source_bfs(
     seeds: a DataFrame with one bigint column naming the seed nodes.
     Returns (seed, node, dist), dist 0..max_depth.
     """
-    und = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("t"))
-        .unionAll(edges.select(F.col(dst).alias("s"), F.col(src).alias("t")))
-        .where(F.col("s") != F.col("t"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = _undirected(edges, src, dst).localCheckpoint(eager=True)
     seed_col = seeds.columns[0]
     visited = (
         seeds.select(
@@ -1402,11 +1336,7 @@ def scc_coloring(
         .localCheckpoint(eager=True)
     )
     if nodes is None:
-        active = (
-            e_all.select(F.col("eu").alias("node"))
-            .unionAll(e_all.select(F.col("ev").alias("node")))
-            .distinct()
-        )
+        active = _endpoints(e_all, "eu", "ev")
     else:
         ncol = nodes.columns[0]
         active = nodes.select(F.col(ncol).cast("bigint").alias("node"))
@@ -1540,15 +1470,7 @@ def truss_peel(
     left join + filter. Returns surviving edges with their support
     RECOUNTED on the surviving subgraph: (u, v, support), u < v.
     """
-    a = F.least(F.col(src), F.col(dst))
-    b = F.greatest(F.col(src), F.col(dst))
-    und = (
-        edges.where(F.col(src).isNotNull() & F.col(dst).isNotNull())
-        .select(a.alias("a"), b.alias("b"))
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = _canonical_undirected(edges, src, dst).localCheckpoint(eager=True)
     thresh = k - 2
     for _ in range(rounds):
         sup = _edge_support(und)
@@ -1569,6 +1491,85 @@ def truss_peel(
             .alias("support"),
         )
     )
+
+
+def _priority_rounds(
+    edges: DataFrame,
+    nodes: DataFrame,
+    rounds: int,
+    src: str,
+    dst: str,
+    salt: str,
+    out_col: str,
+    drop_neighbors: bool,
+) -> DataFrame:
+    """Shared loop of luby_mis and jones_plassmann_coloring: per round
+    every active node whose md5(salt || id) priority beats ALL active
+    neighbors is selected and tagged with the round index in
+    ``out_col``. The selected nodes leave the active set, and with
+    ``drop_neighbors`` their neighbors too (the closed neighborhood,
+    MIS). Per round: one hash join of the undirected edge snapshot
+    against the active set and a combinable min."""
+    und = _undirected(
+        edges.select(
+            F.col(src).cast("bigint").alias("s"),
+            F.col(dst).cast("bigint").alias("t"),
+        ),
+        "s",
+        "t",
+    ).localCheckpoint(eager=True)
+    ncol = nodes.columns[0]
+    ids = nodes.select(F.col(ncol).cast("bigint").alias("node"))
+    active = (
+        ids.distinct()
+        .select(
+            "node",
+            F.md5(F.concat(F.lit(salt), F.col("node").cast("string")))
+            .alias("p"),
+        )
+        .localCheckpoint(eager=True)
+    )
+    out = None
+    for r in range(rounds):
+        if active.limit(1).count() == 0:
+            break
+        # min active-neighbor priority per active node
+        nbr = (
+            und.join(
+                active.select(F.col("node").alias("s"),
+                              F.col("p").alias("ps")),
+                "s",
+            )
+            .join(active.select(F.col("node").alias("t")), "t")
+            .groupBy("t")
+            .agg(F.min("ps").alias("minp"))
+            .withColumnRenamed("t", "node")
+        )
+        sel = (
+            active.join(nbr, "node", "left_outer")
+            .where(F.col("minp").isNull() | (F.col("p") < F.col("minp")))
+            .select("node")
+            .localCheckpoint(eager=True)
+        )
+        picked = sel.select("node", F.lit(r).cast("integer").alias(out_col))
+        out = (
+            picked if out is None else out.unionAll(picked)
+        ).localCheckpoint(eager=True)
+        removed = sel
+        if drop_neighbors:
+            removed = sel.unionAll(
+                und.join(sel.withColumnRenamed("node", "s"), "s").select(
+                    F.col("t").alias("node")
+                )
+            ).distinct()
+        active = active.join(removed, "node", "left_anti").localCheckpoint(
+            eager=True
+        )
+    if out is None:
+        return ids.select(
+            "node", F.lit(0).cast("integer").alias(out_col)
+        ).where(F.lit(False))
+    return out
 
 
 def luby_mis(
@@ -1596,66 +1597,9 @@ def luby_mis(
 
     Returns (node, round) for MIS members, round = selection wave.
     """
-    und = (
-        edges.select(F.col(src).cast("bigint").alias("s"),
-                     F.col(dst).cast("bigint").alias("t"))
-        .where(F.col("s") != F.col("t"))
+    return _priority_rounds(
+        edges, nodes, rounds, src, dst, "mis:", "round", drop_neighbors=True
     )
-    und = (
-        und.unionAll(und.select(F.col("t").alias("s"), F.col("s").alias("t")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    ncol = nodes.columns[0]
-    active = (
-        nodes.select(F.col(ncol).cast("bigint").alias("node"))
-        .distinct()
-        .select(
-            "node",
-            F.md5(F.concat(F.lit("mis:"), F.col("node").cast("string")))
-            .alias("p"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    out = None
-    for r in range(rounds):
-        if active.limit(1).count() == 0:
-            break
-        # min active-neighbor priority per active node
-        nbr = (
-            und.join(
-                active.select(F.col("node").alias("s"),
-                              F.col("p").alias("ps")),
-                "s",
-            )
-            .join(active.select(F.col("node").alias("t")), "t")
-            .groupBy("t")
-            .agg(F.min("ps").alias("minp"))
-            .withColumnRenamed("t", "node")
-        )
-        sel = (
-            active.join(nbr, "node", "left_outer")
-            .where(F.col("minp").isNull() | (F.col("p") < F.col("minp")))
-            .select("node")
-            .localCheckpoint(eager=True)
-        )
-        picked = sel.select("node", F.lit(r).cast("integer").alias("round"))
-        out = picked if out is None else out.unionAll(picked)
-        out = out.localCheckpoint(eager=True)
-        removed = sel.unionAll(
-            und.join(sel.withColumnRenamed("node", "s"), "s").select(
-                F.col("t").alias("node")
-            )
-        ).distinct()
-        active = active.join(removed, "node", "left_anti").localCheckpoint(
-            eager=True
-        )
-    if out is None:
-        return nodes.select(
-            F.col(ncol).cast("bigint").alias("node"),
-            F.lit(0).cast("integer").alias("round"),
-        ).where(F.lit(False))
-    return out
 
 
 def jones_plassmann_coloring(
@@ -1685,62 +1629,9 @@ def jones_plassmann_coloring(
     Returns (node, color) for nodes colored within `rounds` (callers
     assert exhaustion).
     """
-    und = (
-        edges.select(F.col(src).cast("bigint").alias("s"),
-                     F.col(dst).cast("bigint").alias("t"))
-        .where(F.col("s") != F.col("t"))
+    return _priority_rounds(
+        edges, nodes, rounds, src, dst, "jp:", "color", drop_neighbors=False
     )
-    und = (
-        und.unionAll(und.select(F.col("t").alias("s"), F.col("s").alias("t")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    ncol = nodes.columns[0]
-    active = (
-        nodes.select(F.col(ncol).cast("bigint").alias("node"))
-        .distinct()
-        .select(
-            "node",
-            F.md5(F.concat(F.lit("jp:"), F.col("node").cast("string")))
-            .alias("p"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    out = None
-    for r in range(rounds):
-        if active.limit(1).count() == 0:
-            break
-        nbr = (
-            und.join(
-                active.select(F.col("node").alias("s"),
-                              F.col("p").alias("ps")),
-                "s",
-            )
-            .join(active.select(F.col("node").alias("t")), "t")
-            .groupBy("t")
-            .agg(F.min("ps").alias("minp"))
-            .withColumnRenamed("t", "node")
-        )
-        sel = (
-            active.join(nbr, "node", "left_outer")
-            .where(F.col("minp").isNull() | (F.col("p") < F.col("minp")))
-            .select("node")
-            .localCheckpoint(eager=True)
-        )
-        colored = sel.select(
-            "node", F.lit(r).cast("integer").alias("color")
-        )
-        out = colored if out is None else out.unionAll(colored)
-        out = out.localCheckpoint(eager=True)
-        active = active.join(sel, "node", "left_anti").localCheckpoint(
-            eager=True
-        )
-    if out is None:
-        return nodes.select(
-            F.col(ncol).cast("bigint").alias("node"),
-            F.lit(0).cast("integer").alias("color"),
-        ).where(F.lit(False))
-    return out
 
 
 def boruvka_mst(
@@ -1788,9 +1679,7 @@ def boruvka_mst(
         .localCheckpoint(eager=True)
     )
     comp = (
-        und.select(F.col("a").alias("node"))
-        .unionAll(und.select(F.col("b").alias("node")))
-        .distinct()
+        _endpoints(und, "a", "b")
         .select("node", F.col("node").alias("comp"))
         .localCheckpoint(eager=True)
     )
@@ -1896,14 +1785,7 @@ def kmv_neighborhood_function(
     Returns one row per hop: (hop, n_nodes, sum_reach_milli) where
     sum_reach_milli/1000 estimates sum_u |ball(u, hop)|.
     """
-    und = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("t"))
-        .unionAll(edges.select(F.col(dst).alias("s"), F.col(src).alias("t")))
-        .where(F.col("s") != F.col("t"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    spark = edges.sparkSession
+    und = _undirected(edges, src, dst).localCheckpoint(eager=True)
     nodes = und.select(F.col("s").alias("node")).distinct()
     state = nodes.select(
         "node",
@@ -1926,7 +1808,6 @@ def kmv_neighborhood_function(
         prop = und.join(
             state.withColumnRenamed("node", "t"), "t"
         ).select(F.col("s").alias("node"), "h")
-        prev = state
         state = (
             state.unionAll(prop)
             .distinct()
@@ -1935,7 +1816,6 @@ def kmv_neighborhood_function(
             .drop("rn")
             .localCheckpoint(eager=True)
         )
-        prev.unpersist(blocking=False)
         est = state.groupBy("node").agg(
             F.count("*").alias("n"), F.max("h").alias("mx")
         )

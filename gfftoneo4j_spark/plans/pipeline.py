@@ -87,7 +87,6 @@ class StrictModeViolation(ValueError):
 @dataclass
 class KGResult:
     turns: DataFrame
-    mentions_linked: DataFrame
     nodes: DataFrame
     edges: DataFrame
     triples: DataFrame
@@ -492,11 +491,6 @@ def build_kg(
 
     return KGResult(
         turns=turns,
-        # id columns attached here only: consumers of the result get
-        # them, while the edge plans above construct ids post-shuffle
-        mentions_linked=linked.withColumn("turn_id", _turn_id).withColumn(
-            "mention_id", _mention_id
-        ),
         nodes=nodes,
         edges=edges,
         triples=triples,

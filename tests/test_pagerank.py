@@ -2,6 +2,8 @@
 star, and bit-identical under different partitionings (the property the
 integer formulation exists to guarantee)."""
 
+import pytest
+
 from gfftoneo4j_spark.operators.graph import pagerank_fixed_point
 
 
@@ -131,3 +133,35 @@ def test_personalized_pagerank_mass_only_from_seeds(spark):
         for r in pagerank_fixed_point(edges, iters=3).collect()
     }
     assert min(glob.values()) >= 150000
+
+
+def _logical_joins(df):
+    """Join nodes in the frame's logical plan (shared subtrees counted
+    once per reference, as the analyzer sees them)."""
+    stack, n = [df._jdf.queryExecution().logical()], 0
+    while stack:
+        node = stack.pop()
+        n += node.nodeName() == "Join"
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return n
+
+
+@pytest.mark.parametrize(
+    "op", ["pagerank_fixed_point", "label_propagation", "katz_centrality"]
+)
+def test_loop_lineage_is_truncated(spark, op):
+    """Persisted loop state keeps its lineage, so every rank-style loop
+    must truncate it periodically: the returned frame's logical plan
+    holds the same number of joins after 7 rounds as after 13, instead
+    of growing with each round."""
+    from gfftoneo4j_spark.operators import graph
+
+    edges = spark.createDataFrame(
+        [(f"n{i}", f"n{(i * 7 + 3) % 30}") for i in range(60)],
+        "u string, v string",
+    )
+    fn = getattr(graph, op)
+    assert _logical_joins(fn(edges, iters=7)) == _logical_joins(
+        fn(edges, iters=13)
+    )

@@ -158,8 +158,6 @@ def run_once(
         )
         n_turns = n_edges  # throughput denominator: edges per second
 
-        mat_every = int(os.environ.get("SPARK_GRAFT_PR_MAT_EVERY", "1"))
-
         def one_run() -> tuple[float, int]:
             # HONESTY GUARD: the loop state is columnar `persist`, and
             # Spark's CacheManager matches EQUIVALENT logical plans —
@@ -171,9 +169,7 @@ def run_once(
             # comparable timing requires dropping the cache each run.
             spark.catalog.clearCache()
             t0 = time.time()
-            ranks = pagerank_fixed_point(
-                edges_df, iters=5, mat_every=mat_every
-            )
+            ranks = pagerank_fixed_point(edges_df, iters=5)
             row = ranks.select(
                 F.count(F.lit(1)).alias("n"), F.sum("rank").alias("mass")
             ).collect()[0]
