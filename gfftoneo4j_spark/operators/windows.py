@@ -1,35 +1,49 @@
-"""Ordered operators: stable ordering, consecutive pairing, enumeration.
+"""Ordered operators: stable ordering, consecutive pairing, event-time
+windows and joins.
 
 Reference analogues (SURVEY.md §2.5):
 - W1 sort-within-group  (GenesToNeo4j.scala:22)  -> window orderBy
-- W2 zip-with-tail pair (Neo4JUtils.scala:45-51) -> lead() + filter
-- W3 zipWithIndex       (GenesToNeo4j.scala:12)  -> row_number()
+- W2 zip-with-tail pair (Neo4JUtils.scala:45-51) -> lead() + filter; the
+  pipeline pairs in plans/pipeline.py, mega-groups via segmented_lead
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def stable_turn_order(
-    part: Sequence[str] = ("conv_id",),
-    order: Sequence[str | Column] = ("turn_idx", "ts"),
-) -> Window:
-    """The north_rule's stable (conv_id, turn_idx) ordering window."""
-    return Window.partitionBy(*part).orderBy(*order)
-
-
-def with_rank(df: DataFrame, w: Window, col: str = "rn") -> DataFrame:
-    return df.withColumn(col, F.row_number().over(w))
 
 
 def _with_segment(df: DataFrame, seg_source: str, segment_rows: int) -> DataFrame:
     return df.withColumn(
         "__seg", F.floor(F.col(seg_source) / F.lit(segment_rows)).cast("long")
     )
+
+
+def _segmented_shift(df, part, order, cols, segment_rows, prefix, shift, pick):
+    """Shared body of segmented_lead (``shift=F.lead``, ``pick=F.min``:
+    boundaries filled from the next segment's first row) and
+    segmented_lag (``F.lag``, ``F.max``: from the previous segment's
+    last row)."""
+    seg = _with_segment(df, order[0], segment_rows)
+    w_in = Window.partitionBy(part, "__seg").orderBy(*order)
+    out = seg.withColumns({prefix + c: shift(c).over(w_in) for c in cols})
+    # order fields first (lexicographic min/max = first/last row in
+    # window order), carried cols aliased uniquely (a col may also be
+    # an order key)
+    row_struct = F.struct(
+        *[F.col(o).alias(f"__o{i}") for i, o in enumerate(order)],
+        *[F.col(c).alias(f"__c_{c}") for c in cols],
+    )
+    ends = seg.groupBy(part, "__seg").agg(pick(row_struct).alias("__end"))
+    w_seg = Window.partitionBy(part).orderBy("__seg")
+    boundary = ends.select(part, "__seg", shift("__end").over(w_seg).alias("__nb"))
+    out = out.join(boundary, [part, "__seg"], "left")
+    # the in-segment shift is null exactly on the segment's edge row;
+    # fill it from the neighbouring segment's end row
+    fill = {prefix + c: F.coalesce(prefix + c, f"__nb.__c_{c}") for c in cols}
+    return out.withColumns(fill).drop("__seg", "__nb")
 
 
 def segmented_lead(
@@ -58,30 +72,7 @@ def segmented_lead(
     Requirements: order keys unique per partition (plain lead is
     ill-defined under ties anyway) and ``cols`` non-null (boundary fill
     uses coalesce). order[0] must be numeric and roughly dense."""
-    seg = _with_segment(df, order[0], segment_rows)
-    w_in = Window.partitionBy(part, "__seg").orderBy(*order)
-    out = seg
-    for c in cols:
-        out = out.withColumn(prefix + c, F.lead(c).over(w_in))
-    # order fields first (lexicographic min = first row in window order),
-    # carried cols aliased uniquely (a col may also be an order key)
-    row_struct = F.struct(
-        *[F.col(o).alias(f"__o{i}") for i, o in enumerate(order)],
-        *[F.col(c).alias(f"__c_{c}") for c in cols],
-    )
-    firsts = seg.groupBy(part, "__seg").agg(F.min(row_struct).alias("__first"))
-    w_seg = Window.partitionBy(part).orderBy("__seg")
-    boundary = firsts.withColumn("__nf", F.lead("__first").over(w_seg)).select(
-        part, "__seg", "__nf"
-    )
-    out = out.join(boundary, [part, "__seg"], "left")
-    for c in cols:
-        # in-segment lead is null exactly on the segment-last row; fill
-        # it from the next segment's first row
-        out = out.withColumn(
-            prefix + c, F.coalesce(F.col(prefix + c), F.col(f"__nf.__c_{c}"))
-        )
-    return out.drop("__seg", "__nf")
+    return _segmented_shift(df, part, order, cols, segment_rows, prefix, F.lead, F.min)
 
 
 def segmented_lag(
@@ -94,43 +85,7 @@ def segmented_lag(
 ) -> DataFrame:
     """lag() twin of segmented_lead (same contract; boundary fill comes
     from the previous segment's LAST row via a max-struct)."""
-    seg = _with_segment(df, order[0], segment_rows)
-    w_in = Window.partitionBy(part, "__seg").orderBy(*order)
-    out = seg
-    for c in cols:
-        out = out.withColumn(prefix + c, F.lag(c).over(w_in))
-    row_struct = F.struct(
-        *[F.col(o).alias(f"__o{i}") for i, o in enumerate(order)],
-        *[F.col(c).alias(f"__c_{c}") for c in cols],
-    )
-    lasts = seg.groupBy(part, "__seg").agg(F.max(row_struct).alias("__last"))
-    w_seg = Window.partitionBy(part).orderBy("__seg")
-    boundary = lasts.withColumn("__pl", F.lag("__last").over(w_seg)).select(
-        part, "__seg", "__pl"
-    )
-    out = out.join(boundary, [part, "__seg"], "left")
-    for c in cols:
-        out = out.withColumn(
-            prefix + c, F.coalesce(F.col(prefix + c), F.col(f"__pl.__c_{c}"))
-        )
-    return out.drop("__seg", "__pl")
-
-
-def consecutive_pairs(
-    df: DataFrame, id_col: str, w: Window, edge_type: str
-) -> DataFrame:
-    """zip(xs, xs.tail) as a lead() window: emits (src, dst, type) for
-    each consecutive pair in the window's order. One shuffle on the
-    partition key, no self-join."""
-    nxt = F.lead(id_col).over(w)
-    return (
-        df.select(
-            F.col(id_col).alias("src"),
-            nxt.alias("dst"),
-            F.lit(edge_type).alias("type"),
-        )
-        .where(F.col("dst").isNotNull())
-    )
+    return _segmented_shift(df, part, order, cols, segment_rows, prefix, F.lag, F.max)
 
 
 def sessionize(

@@ -9,9 +9,9 @@ edges; Neo4JUtils.scala:30-48 stringifies properties and enforces
 - nodes/ parquet partitioned by ``label`` (4 labels), edges/ parquet
   partitioned by ``type`` (6 predicates) — per-label / per-predicate
   reads prune to one partition directory at any scale.
-- `create unique` (K2) = ``dropDuplicates`` on the natural key BEFORE
-  the write, not a server-side constraint: one shuffle keyed exactly
-  like the write.
+- `create unique` (K2) = ``dropDuplicates`` on the natural key at
+  the write, not a server-side constraint. The edges dedup runs on the
+  write's own (type, src) spread, so it adds no shuffle.
 - Atomicity (K3, Neo4JUtils.scala:22-28's transaction bracket) =
   parquet overwrite + a ``_GRAPH_MANIFEST.json`` written only AFTER
   both tables commit, via the Hadoop FileSystem API (works for
@@ -31,6 +31,34 @@ from pyspark.sql import functions as F
 from gfftoneo4j_spark.plans.checkpoint import _fs, fs_read_json, fs_write_json
 
 GRAPH_MANIFEST = "_GRAPH_MANIFEST.json"
+
+
+def _write_tables(nodes: DataFrame, edges: DataFrame, path: str, mode: str) -> None:
+    """K2 `create unique`: each table unique by natural key at the sink
+    boundary. r06: repartition by (partition col, natural key) pinned to
+    the core count — keying on the partition column ALONE collapsed the
+    write to one task per label/type (a 30 TB type would be one
+    straggler at scale; measured 3-task serial writes at sf0.1). Each
+    task writes at most one file per directory it holds, so files per
+    directory are bounded by the task count and file size tracks
+    data/cores (guide §6 sizing). Edges spread BEFORE the dedup:
+    hash(type, src) already clusters (src, dst, type), so the dedup
+    needs no exchange of its own; hash(label, node_id) does not cluster
+    node_id alone, so nodes gain nothing from that order."""
+    n_par = nodes.sparkSession.sparkContext.defaultParallelism
+    nodes = nodes.dropDuplicates(["node_id"]).repartition(n_par, "label", "node_id")
+    edges = edges.repartition(n_par, "type", "src").dropDuplicates(
+        ["src", "dst", "type"]
+    )
+    nodes.write.mode(mode).partitionBy("label").parquet(f"{path}/nodes")
+    edges.write.mode(mode).partitionBy("type").parquet(f"{path}/edges")
+
+
+def _read_tables(spark: SparkSession, path: str) -> GraphTables:
+    return GraphTables(
+        nodes=spark.read.parquet(f"{path}/nodes"),
+        edges=spark.read.parquet(f"{path}/edges"),
+    )
 
 
 def write_graph(
@@ -53,29 +81,7 @@ def write_graph(
     fs, mpath = _fs(spark, f"{path}/{GRAPH_MANIFEST}")
     if fs.exists(mpath):
         fs.delete(mpath, False)
-    # K2 `create unique`: unique by natural key at the sink boundary.
-    # r06: repartition by (partition col, natural key) pinned to the
-    # core count — keying on the partition column ALONE collapsed the
-    # write to one task per label/type (a 30 TB type would be one
-    # straggler at scale; measured 3-task serial writes at sf0.1).
-    # Each task now writes at most one file per directory it holds, so
-    # files per directory are bounded by the task count and file size
-    # tracks data/cores (guide §6 sizing).
-    n_par = spark.sparkContext.defaultParallelism
-    (
-        nodes.dropDuplicates(["node_id"])
-        .repartition(n_par, "label", "node_id")
-        .write.mode("overwrite")
-        .partitionBy("label")
-        .parquet(f"{path}/nodes")
-    )
-    (
-        edges.dropDuplicates(["src", "dst", "type"])
-        .repartition(n_par, "type", "src")
-        .write.mode("overwrite")
-        .partitionBy("type")
-        .parquet(f"{path}/edges")
-    )
+    _write_tables(nodes, edges, path, "overwrite")
     manifest = {"fingerprint": fingerprint, "tables": ["nodes", "edges"]}
     fs_write_json(spark, f"{path}/{GRAPH_MANIFEST}", manifest)
     return manifest
@@ -142,10 +148,7 @@ def read_graph(spark: SparkSession, path: str) -> GraphTables:
         raise FileNotFoundError(
             f"{path} has no {GRAPH_MANIFEST}: graph write never completed"
         )
-    return GraphTables(
-        nodes=spark.read.parquet(f"{path}/nodes"),
-        edges=spark.read.parquet(f"{path}/edges"),
-    )
+    return _read_tables(spark, path)
 
 
 # ---------------------------------------------------------------------------
@@ -221,23 +224,7 @@ def write_graph_snapshot(
             if name.startswith("v") and name[1:].isdigit():
                 used.add(int(name[1:]))
     version = (max(used) + 1) if used else 1
-    vdir = f"{path}/v{version}"
-    # r06: (partition col, natural key) spread — see write_graph
-    n_par = spark.sparkContext.defaultParallelism
-    (
-        nodes.dropDuplicates(["node_id"])
-        .repartition(n_par, "label", "node_id")
-        .write.mode("errorifexists")
-        .partitionBy("label")
-        .parquet(f"{vdir}/nodes")
-    )
-    (
-        edges.dropDuplicates(["src", "dst", "type"])
-        .repartition(n_par, "type", "src")
-        .write.mode("errorifexists")
-        .partitionBy("type")
-        .parquet(f"{vdir}/edges")
-    )
+    _write_tables(nodes, edges, f"{path}/v{version}", "errorifexists")
     man["versions"][str(version)] = {"fingerprint": fingerprint}
     man["current"] = version
     _write_manifest_atomic(spark, f"{path}/{SNAPSHOT_MANIFEST}", man)
@@ -256,10 +243,7 @@ def read_graph_snapshot(
             f"{path}: no committed snapshot v{v} (committed: "
             f"{sorted(man['versions'])})"
         )
-    return GraphTables(
-        nodes=spark.read.parquet(f"{path}/v{v}/nodes"),
-        edges=spark.read.parquet(f"{path}/v{v}/edges"),
-    )
+    return _read_tables(spark, f"{path}/v{v}")
 
 
 def rollback_graph(spark: SparkSession, path: str, version: int) -> dict:

@@ -40,10 +40,11 @@ Scale notes (100 TB / 10^12 turns):
 
 from __future__ import annotations
 
+import operator
 from dataclasses import dataclass
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gfftoneo4j_spark.functions.extraction import (
@@ -52,11 +53,7 @@ from gfftoneo4j_spark.functions.extraction import (
 )
 from gfftoneo4j_spark.operators.connected_components import connected_components
 from gfftoneo4j_spark.operators.linking import link_mentions
-from gfftoneo4j_spark.operators.windows import (
-    segmented_lag,
-    segmented_lead,
-    stable_turn_order,
-)
+from gfftoneo4j_spark.operators.windows import segmented_lag, segmented_lead
 from gfftoneo4j_spark.plans.checkpoint import StageCheckpointer
 from gfftoneo4j_spark.plans.lineage import (
     lineage_for,
@@ -64,6 +61,48 @@ from gfftoneo4j_spark.plans.lineage import (
     score_histogram,
     union_lineage,
 )
+
+
+def is_quarantined() -> Column:
+    """The parse contract's failure predicate: a transcript row with
+    null or empty text or a null turn_idx is quarantined to lineage
+    (quirk Q3), never turned into nodes or edges. A function, like the
+    id builders below, because building a Column needs an active
+    session."""
+    return (
+        F.col("text").isNull()
+        | (F.col("text") == "")
+        | F.col("turn_idx").isNull()
+    )
+
+
+# Node-id builders, evaluated POST-shuffle everywhere: exchanges carry
+# only (conv_id, turn_idx[, pos]) — at 10^12 rows the "turn:"/"mention:"
+# prefixes and stringified ints would roughly double the shuffled bytes
+# (and cross executor sockets twice).
+def turn_node_id(turn_idx: str = "turn_idx") -> Column:
+    return F.concat_ws(":", F.lit("turn"), F.col("conv_id"), F.col(turn_idx))
+
+
+def mention_node_id(turn_idx: str = "turn_idx", pos: str = "pos") -> Column:
+    return F.concat_ws(
+        ":", F.lit("mention"), F.col("conv_id"), F.col(turn_idx), F.col(pos)
+    )
+
+
+def conv_node_id() -> Column:
+    return F.concat(F.lit("conv:"), F.col("conv_id"))
+
+
+def entity_node_id(entity_id: str = "canonical_id") -> Column:
+    return F.concat(F.lit("ent:"), F.col(entity_id))
+
+
+def mention_rows(turns: DataFrame, extracted: Column) -> DataFrame:
+    """(conv_id, turn_idx, pos, alias): one row per mention that
+    ``extracted``, an extraction over ``text``, finds in a turn."""
+    exploded = turns.select("conv_id", "turn_idx", F.explode(extracted).alias("m"))
+    return exploded.select("conv_id", "turn_idx", "m.pos", "m.alias")
 
 
 class StrictModeViolation(ValueError):
@@ -120,6 +159,77 @@ class InSessionStages:
         return df
 
 
+def _keyed_chain(df: DataFrame, keys: list[str], segment_rows: int | None):
+    """Pair each row with its successor in its conversation, ordered by
+    ``keys`` — the reference's sort-then-zip-with-tail
+    (Neo4JUtils.scala:45-51). Returns ``(led, dups)``: ``dups`` are the
+    rows whose keys repeat the previous row's; ``led`` is every other
+    row plus ``next_<key>`` for each key (null on a conversation's last
+    row).
+
+    Edge uniqueness (the reference's `create unique`,
+    Neo4JUtils.scala:43) is enforced HERE, not by a global
+    dropDuplicates: every edge family is unique by construction once
+    its keys are unique, so the keys are deduped with a lag() inside
+    the window shuffle that already exists (zero extra exchanges) and
+    violators go to lineage. A global dropDuplicates on the edge set
+    would build a 10^12-entry string-keyed hash map + a full extra
+    shuffle — measured as the single hottest operator in the pipeline
+    before removal (FastHashMap.findOrInsert + copyMemory dominating
+    task CPU).
+
+    Turns order by turn_idx alone: rows tied on (conv_id, turn_idx)
+    build the SAME turn_id string, so the survivor of the lag()-dedup
+    and every lead() target are invariant to tie order — carrying ts
+    as a tie-break would add 8 bytes x 10^12 rows to the pipeline's
+    largest exchange for zero semantic effect (the oracle agrees: its
+    (turn_idx, ts) sort yields key-identical survivors).
+
+    Without ``segment_rows`` the lead() window has the lag() window's
+    spec over the same partitioning: Catalyst reuses the exchange and
+    the sort order survives the filter, so the pass is one shuffle.
+
+    ``segment_rows``: mega-conversation hardening. A plain window puts
+    a whole conversation in ONE task; a 10^10-turn conversation is a
+    straggler/OOM. segmented_lead/lag (operators/windows.py)
+    range-split each conversation into turn_idx segments and stitch
+    boundaries through a tiny per-segment table — identical output
+    (pytest-asserted), bounded task size."""
+    w = Window.partitionBy("conv_id").orderBy(*keys)
+
+    def shift(rows, window_fn, segmented, prefix):
+        if segment_rows:
+            return segmented(rows, "conv_id", keys, keys, segment_rows)
+        return rows.select(
+            "*", *[window_fn(k).over(w).alias(prefix + k) for k in keys]
+        )
+
+    marked = shift(df, F.lag, segmented_lag, "prev_")
+    repeat = reduce(operator.and_, [F.col(f"prev_{k}") == F.col(k) for k in keys])
+    kept = marked.where(F.col(f"prev_{keys[0]}").isNull() | ~repeat).drop(
+        *[f"prev_{k}" for k in keys]
+    )
+    return shift(kept, F.lead, segmented_lead, "next_"), marked.where(repeat)
+
+
+def _edge_rows(df: DataFrame, ids: dict[str, Column], *edges) -> DataFrame:
+    """One ``(src, dst, type)`` row per input row and edge spec, whose
+    ``src`` / ``dst`` name node ids in ``ids`` — an explode of structs,
+    so the edge families built from one window pass need no union
+    branches re-reading it. Each id is built once per row, before the
+    explode. Rows whose ``dst`` is null (no successor) are dropped."""
+    structs = [
+        F.struct(F.col(s).alias("src"), F.col(d).alias("dst"), F.lit(t).alias("type"))
+        for s, d, t in edges
+    ]
+    return (
+        df.select(*[c.alias(name) for name, c in ids.items()])
+        .select(F.explode(F.array(*structs)).alias("e"))
+        .select("e.*")
+        .where(F.col("dst").isNotNull())
+    )
+
+
 def build_kg(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -144,11 +254,7 @@ def build_kg(
     reference's abort-on-bad-line semantics (Application.scala:47) for
     invariant testing and data-quality gates; default ``False`` keeps
     the engine's quarantine-to-lineage behavior (quirk Q3)."""
-    bad = (
-        F.col("text").isNull()
-        | (F.col("text") == "")
-        | F.col("turn_idx").isNull()
-    )
+    bad = is_quarantined()
     quarantined = transcripts.where(bad)
     if strict:
         # Fail-fast data-quality gate (quirk Q3, Application.scala:47;
@@ -169,104 +275,25 @@ def build_kg(
     # (measured 63s for 4M rows at local[32] — slower than every
     # downstream branch combined) and then read *slower* than parquet.
     turns_raw = transcripts.where(~bad)
-    turns = turns_raw.withColumn(
-        "turn_id",
-        F.concat_ws(":", F.lit("turn"), F.col("conv_id"), F.col("turn_idx")),
-    )
-    # id-string constructors, evaluated POST-shuffle everywhere below:
-    # exchanges carry only (conv_id, turn_idx[, pos, ts]) — at 10^12 rows
-    # the "turn:"/"mention:" prefixes and stringified ints would roughly
-    # double the shuffled bytes (and cross executor sockets twice)
-    _turn_id = F.concat_ws(":", F.lit("turn"), F.col("conv_id"), F.col("turn_idx"))
-    _mention_id = F.concat_ws(
-        ":", F.lit("mention"), F.col("conv_id"), F.col("turn_idx"), F.col("pos")
-    )
+    turns = turns_raw.withColumn("turn_id", turn_node_id())
 
     # --- structural + sequence edges in ONE window pass over turns:
     # lead() gives next_turn, the same row emits in_conv — a 2-struct
     # explode instead of two union branches re-shuffling turns.
-    #
-    # Edge uniqueness (the reference's `create unique`, Neo4JUtils.scala:43)
-    # is enforced HERE, not by a global dropDuplicates: every edge family
-    # is unique by construction once (conv_id, turn_idx) is unique, so we
-    # dedup the *keys* with a lag() inside the window shuffle that already
-    # exists (zero extra exchanges) and quarantine violators to lineage.
-    # A global dropDuplicates on the edge set would build a
-    # 10^12-entry string-keyed hash map + a full extra shuffle — measured
-    # as the single hottest operator in the pipeline before removal
-    # (FastHashMap.findOrInsert + copyMemory dominating task CPU).
-    # Order by turn_idx alone: rows tied on (conv_id, turn_idx) build the
-    # SAME turn_id string, so the survivor of the lag()-dedup and every
-    # lead() target are invariant to tie order — carrying ts as a
-    # tie-break would add 8 bytes x 10^12 rows to the pipeline's largest
-    # exchange for zero semantic effect (the oracle agrees: its
-    # (turn_idx, ts) sort yields key-identical survivors).
-    #
-    # segment_rows: mega-conversation hardening. A plain window puts a
-    # whole conversation in ONE task; a 10^10-turn conversation is a
-    # straggler/OOM. segmented_lead/lag (operators/windows.py)
-    # range-split each conversation into turn_idx segments and stitch
-    # boundaries through a tiny per-segment table — identical output
-    # (pytest-asserted), bounded task size.
-    turn_cols = turns_raw.select("conv_id", "turn_idx")
-    if segment_rows:
-        marked_turns = segmented_lag(
-            turn_cols, "conv_id", ["turn_idx"], ["turn_idx"], segment_rows
-        ).withColumnRenamed("prev_turn_idx", "prev_idx")
-    else:
-        w_turn = stable_turn_order(order=("turn_idx",))
-        marked_turns = turn_cols.select(
-            "conv_id",
-            "turn_idx",
-            F.lag("turn_idx").over(w_turn).alias("prev_idx"),
-        )
-    dup_turns = marked_turns.where(
-        F.col("prev_idx") == F.col("turn_idx")
-    ).select(_turn_id.alias("turn_id"), "conv_id")
-    kept_turns = marked_turns.where(
-        F.col("prev_idx").isNull() | (F.col("prev_idx") != F.col("turn_idx"))
-    ).drop("prev_idx")
-    if segment_rows:
-        _next_turn_id = F.when(
-            F.col("next_turn_idx").isNotNull(),
-            F.concat_ws(
-                ":", F.lit("turn"), F.col("conv_id"), F.col("next_turn_idx")
-            ),
-        )
-        led_turns = segmented_lead(
-            kept_turns, "conv_id", ["turn_idx"], ["turn_idx"], segment_rows
-        ).select(
-            _turn_id.alias("turn_id"), "conv_id", _next_turn_id.alias("next_id")
-        )
-    else:
-        # same window spec over the same partitioning: Catalyst reuses
-        # the exchange and the sort order survives the filter, so this
-        # second window adds no shuffle
-        led_turns = kept_turns.select(
-            _turn_id.alias("turn_id"),
-            "conv_id",
-            F.lead(_turn_id).over(w_turn).alias("next_id"),
-        )
-    turn_edges = (
-        led_turns
-        .select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("turn_id").alias("src"),
-                        F.col("next_id").alias("dst"),
-                        F.lit("next_turn").alias("type"),
-                    ),
-                    F.struct(
-                        F.col("turn_id").alias("src"),
-                        F.concat(F.lit("conv:"), F.col("conv_id")).alias("dst"),
-                        F.lit("in_conv").alias("type"),
-                    ),
-                )
-            ).alias("e")
-        )
-        .select("e.*")
-        .where(F.col("dst").isNotNull())
+    led_turns, dup_turns = _keyed_chain(
+        turns_raw.select("conv_id", "turn_idx"), ["turn_idx"], segment_rows
+    )
+    dup_turns = dup_turns.select(turn_node_id().alias("turn_id"), "conv_id")
+    # concat_ws skips nulls, so without the when() a conversation's last
+    # row would get the id "turn:<conv_id>" instead of no successor
+    next_turn = F.when(
+        F.col("next_turn_idx").isNotNull(), turn_node_id("next_turn_idx")
+    )
+    turn_edges = _edge_rows(
+        led_turns,
+        {"turn": turn_node_id(), "next": next_turn, "conv": conv_node_id()},
+        ("turn", "next", "next_turn"),
+        ("turn", "conv", "in_conv"),
     )
 
     # --- vectorized extraction (P1) ------------------------------------
@@ -277,17 +304,8 @@ def build_kg(
         ms = extract_mentions_sql(F.col("text"))
     else:
         raise ValueError(f"unknown extraction mode {extraction!r}")
-    mentions = (
-        turns_raw.select("conv_id", "turn_idx", F.explode(ms).alias("m"))
-        .select(
-            "conv_id",
-            "turn_idx",
-            F.col("m.pos").alias("pos"),
-            F.col("m.alias").alias("alias"),
-        )
-    )
     mentions = stages.stage(
-        "mentions", mentions, f"{fingerprint}:extract:{extraction}"
+        "mentions", mention_rows(turns_raw, ms), f"{fingerprint}:extract:{extraction}"
     )
 
     # --- broadcast entity linking (J1/J2) -------------------------------
@@ -311,103 +329,30 @@ def build_kg(
     # `mentions_seq` chain (consecutive kept mentions within a turn) —
     # no second window shuffle. has_mention / refers_to ride the same
     # row via the 4-struct explode.
-    mention_cols = linked.select("conv_id", "turn_idx", "pos", "canonical_id")
-    if segment_rows:
-        marked_mentions = (
-            segmented_lag(
-                mention_cols,
-                "conv_id",
-                ["turn_idx", "pos"],
-                ["turn_idx", "pos"],
-                segment_rows,
-            )
-            .withColumnRenamed("prev_turn_idx", "prev_t")
-            .withColumnRenamed("prev_pos", "prev_p")
-        )
-    else:
-        w_conv_m = stable_turn_order(part=("conv_id",), order=("turn_idx", "pos"))
-        marked_mentions = mention_cols.select(
-            "conv_id",
-            "turn_idx",
-            "pos",
-            "canonical_id",
-            F.lag("turn_idx").over(w_conv_m).alias("prev_t"),
-            F.lag("pos").over(w_conv_m).alias("prev_p"),
-        )
-    dup_mentions = marked_mentions.where(
-        (F.col("prev_t") == F.col("turn_idx")) & (F.col("prev_p") == F.col("pos"))
-    ).select(_mention_id.alias("mention_id"))
-    kept_mentions = marked_mentions.where(
-        F.col("prev_t").isNull()
-        | (F.col("prev_t") != F.col("turn_idx"))
-        | (F.col("prev_p") != F.col("pos"))
-    ).drop("prev_t", "prev_p")
-    if segment_rows:
-        _next_mention_id = F.when(
-            F.col("next_turn_idx").isNotNull(),
-            F.concat_ws(
-                ":",
-                F.lit("mention"),
-                F.col("conv_id"),
-                F.col("next_turn_idx"),
-                F.col("next_pos"),
-            ),
-        )
-        led_mentions = segmented_lead(
-            kept_mentions,
-            "conv_id",
-            ["turn_idx", "pos"],
-            ["turn_idx", "pos"],
-            segment_rows,
-        ).select(
-            _turn_id.alias("turn_id"),
-            "turn_idx",
-            _mention_id.alias("mention_id"),
-            "canonical_id",
-            _next_mention_id.alias("next_m"),
-            F.col("next_turn_idx").alias("next_t"),
-        )
-    else:
-        led_mentions = kept_mentions.select(
-            _turn_id.alias("turn_id"),
-            "turn_idx",
-            _mention_id.alias("mention_id"),
-            "canonical_id",
-            F.lead(_mention_id).over(w_conv_m).alias("next_m"),
-            F.lead("turn_idx").over(w_conv_m).alias("next_t"),
-        )
-    mention_edges = (
-        led_mentions
-        .select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("turn_id").alias("src"),
-                        F.col("mention_id").alias("dst"),
-                        F.lit("has_mention").alias("type"),
-                    ),
-                    F.struct(
-                        F.col("mention_id").alias("src"),
-                        F.concat(F.lit("ent:"), F.col("canonical_id")).alias("dst"),
-                        F.lit("refers_to").alias("type"),
-                    ),
-                    F.struct(
-                        F.col("mention_id").alias("src"),
-                        F.col("next_m").alias("dst"),
-                        F.lit("links").alias("type"),
-                    ),
-                    F.struct(
-                        F.col("mention_id").alias("src"),
-                        F.when(
-                            F.col("next_t") == F.col("turn_idx"), F.col("next_m")
-                        ).alias("dst"),
-                        F.lit("mentions_seq").alias("type"),
-                    ),
-                )
-            ).alias("e")
-        )
-        .select("e.*")
-        .where(F.col("dst").isNotNull())
+    led_mentions, dup_mentions = _keyed_chain(
+        linked.select("conv_id", "turn_idx", "pos", "canonical_id"),
+        ["turn_idx", "pos"],
+        segment_rows,
+    )
+    dup_mentions = dup_mentions.select(mention_node_id().alias("mention_id"))
+    next_mention = F.when(
+        F.col("next_turn_idx").isNotNull(),
+        mention_node_id("next_turn_idx", "next_pos"),
+    )
+    same_turn = F.col("next_turn_idx") == F.col("turn_idx")
+    mention_edges = _edge_rows(
+        led_mentions,
+        {
+            "turn": turn_node_id(),
+            "mention": mention_node_id(),
+            "entity": entity_node_id(),
+            "next": next_mention,
+            "next_in_turn": F.when(same_turn, next_mention),
+        },
+        ("turn", "mention", "has_mention"),
+        ("mention", "entity", "refers_to"),
+        ("mention", "next", "links"),
+        ("mention", "next_in_turn", "mentions_seq"),
     )
 
     # No dropDuplicates here: with (conv_id, turn_idx) and mention pos
@@ -437,7 +382,7 @@ def build_kg(
         turns.select("conv_id")
         .distinct()
         .select(
-            F.concat(F.lit("conv:"), F.col("conv_id")).alias("node_id"),
+            conv_node_id().alias("node_id"),
             F.lit("conversation").alias("label"),
             F.create_map(F.lit("conv_id"), F.col("conv_id")).alias("props"),
         )
@@ -448,7 +393,7 @@ def build_kg(
         str_props.alias("props"),
     )
     mention_nodes = linked.select(
-        _mention_id.alias("node_id"),
+        mention_node_id().alias("node_id"),
         F.lit("mention").alias("label"),
         F.create_map(
             F.lit("alias"), F.col("alias"),
@@ -459,7 +404,7 @@ def build_kg(
         linked.select(F.col("canonical_id"))
         .distinct()
         .select(
-            F.concat(F.lit("ent:"), F.col("canonical_id")).alias("node_id"),
+            entity_node_id().alias("node_id"),
             F.lit("entity").alias("label"),
             F.create_map(F.lit("entity_id"), F.col("canonical_id")).alias("props"),
         )

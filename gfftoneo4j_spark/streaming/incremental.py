@@ -24,6 +24,14 @@ from pyspark.sql import functions as F
 
 from gfftoneo4j_spark.functions.extraction import extract_mentions_udf
 from gfftoneo4j_spark.operators.linking import link_mentions
+from gfftoneo4j_spark.plans.pipeline import (
+    conv_node_id,
+    entity_node_id,
+    is_quarantined,
+    mention_node_id,
+    mention_rows,
+    turn_node_id,
+)
 from gfftoneo4j_spark.sources.transcripts import TRANSCRIPT_SCHEMA
 
 
@@ -42,50 +50,29 @@ def streaming_turn_triples(stream: DataFrame, alias_dict: DataFrame) -> DataFram
     has_mention, refers_to. alias_dict is a *static* DataFrame — Spark
     plans a stream-static broadcast join, no state store.
 
-    Same quarantine rule as the batch pipeline (empty text dropped).
+    The batch pipeline's quarantine rule, mention rows and node ids.
     ``refers_to`` targets the dictionary entity id; rewriting to the
     CC-canonical id happens in the periodic batch pass (the canon map
     changes as new same-as chains arrive, so it is not stream-stable)."""
-    turns = stream.where(
-        F.col("text").isNotNull() & (F.col("text") != "") & F.col("turn_idx").isNotNull()
-    ).withColumn(
-        "turn_id",
-        F.concat_ws(":", F.lit("turn"), F.col("conv_id"), F.col("turn_idx")),
-    )
-    mentions = turns.select(
-        "conv_id",
-        "turn_idx",
-        "turn_id",
-        F.explode(extract_mentions_udf(F.col("text"))).alias("m"),
-    ).select(
-        "conv_id",
-        "turn_id",
-        "turn_idx",
-        F.col("m.pos").alias("pos"),
-        F.col("m.alias").alias("alias"),
-    )
+    turns = stream.where(~is_quarantined())
+    mentions = mention_rows(turns, extract_mentions_udf(F.col("text")))
     # identical linking semantics to the batch plan (broadcast dict,
     # exactly-one rule): the static side of a stream-static join
-    linked = link_mentions(mentions, alias_dict).linked.withColumn(
-        "mention_id",
-        F.concat_ws(
-            ":", F.lit("mention"), F.col("conv_id"), F.col("turn_idx"), F.col("pos")
-        ),
-    )
+    linked = link_mentions(mentions, alias_dict).linked
     in_conv = turns.select(
-        F.col("turn_id").alias("subj"),
+        turn_node_id().alias("subj"),
         F.lit("in_conv").alias("pred"),
-        F.concat(F.lit("conv:"), F.col("conv_id")).alias("obj"),
+        conv_node_id().alias("obj"),
     )
     has_mention = linked.select(
-        F.col("turn_id").alias("subj"),
+        turn_node_id().alias("subj"),
         F.lit("has_mention").alias("pred"),
-        F.col("mention_id").alias("obj"),
+        mention_node_id().alias("obj"),
     )
     refers_to = linked.select(
-        F.col("mention_id").alias("subj"),
+        mention_node_id().alias("subj"),
         F.lit("refers_to").alias("pred"),
-        F.concat(F.lit("ent:"), F.col("entity_id")).alias("obj"),
+        entity_node_id("entity_id").alias("obj"),
     )
     return in_conv.unionByName(has_mention).unionByName(refers_to)
 

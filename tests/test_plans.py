@@ -11,10 +11,15 @@ import re
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.readwriter import DataFrameWriter
 
 from gfftoneo4j_spark import oracle
 from gfftoneo4j_spark.corpus import CorpusConfig, make_alias_dict, make_transcripts
-from gfftoneo4j_spark.plans.graph_sink import read_graph, write_graph
+from gfftoneo4j_spark.plans.graph_sink import (
+    read_graph,
+    write_graph,
+    write_graph_snapshot,
+)
 from gfftoneo4j_spark.plans.pipeline import InSessionStages, build_kg
 from gfftoneo4j_spark.queries import QUERIES
 from gfftoneo4j_spark.sources.transcripts import (
@@ -131,6 +136,28 @@ def test_default_build_extracts_once(spark, tmp_path):
     metrics = spark.read.parquet(f"{lin}/metrics")
     per_part = metrics.where(F.col("metric") == "triples_per_partition")
     assert per_part.agg(F.sum("value")).first()[0] == len(want["triples"])
+
+
+@pytest.mark.parametrize("writer", [write_graph, write_graph_snapshot])
+def test_sink_edge_dedup_rides_the_write_spread(spark, tmp_path, monkeypatch, writer):
+    """The sink's `create unique` edge dedup runs on the (type, src)
+    exchange that spreads the write, not on a (src, dst, type) exchange
+    of its own."""
+    plans = {}
+    parquet = DataFrameWriter.parquet
+
+    def recording(self, path, *args, **kwargs):
+        plans[path.rsplit("/", 1)[-1]] = _plan(self._df)
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", recording)
+    nodes = spark.createDataFrame([("m", "mention")], "node_id string, label string")
+    edges = spark.createDataFrame(
+        [("m", "e", "refers_to")] * 2, "src string, dst string, type string"
+    )
+    writer(nodes, edges, str(tmp_path / "graph"))
+    assert re.search(r"Exchange hashpartitioning\(type#\d+, src#", plans["edges"])
+    assert not re.search(r"Exchange hashpartitioning\(src#", plans["edges"])
 
 
 def test_scan_filter_pushdown(spark, sf_dir):

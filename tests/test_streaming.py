@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from gfftoneo4j_spark.corpus import write_corpus_fast
+from gfftoneo4j_spark.plans.pipeline import build_kg
 from gfftoneo4j_spark.sources.transcripts import read_alias_dict, read_transcripts
 from gfftoneo4j_spark.streaming.incremental import (
     read_transcript_stream,
@@ -40,6 +41,18 @@ def test_stream_batch_parity_triples(spark, corpus):
     b = {tuple(r) for r in batch.collect()}
     assert g == b
     assert {r[1] for r in g} == {"in_conv", "has_mention", "refers_to"}
+
+
+def test_stream_triples_match_build_kg(spark, corpus):
+    """The twin's in_conv and has_mention triples are build_kg's: the
+    same quarantine rule and the same node ids. (Its refers_to targets
+    dictionary ids, not canonical ones.)"""
+    t, d = read_transcripts(spark, corpus[0]), read_alias_dict(spark, corpus[1])
+    preds = F.col("pred").isin("in_conv", "has_mention")
+    got = {tuple(r) for r in streaming_turn_triples(t, d).where(preds).collect()}
+    want = {tuple(r) for r in build_kg(spark, t, d).triples.where(preds).collect()}
+    assert got == want
+    assert {r[1] for r in got} == {"in_conv", "has_mention"}
 
 
 def test_stream_hourly_rollup_matches_batch(spark, corpus):
