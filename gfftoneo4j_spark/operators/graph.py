@@ -18,6 +18,8 @@ ANSI-SQL oracle and reproducible run-to-run at any cluster size.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -105,6 +107,47 @@ def _endpoints(df: DataFrame, a: str, b: str) -> DataFrame:
         .unionAll(df.select(F.col(b).alias("node")))
         .distinct()
     )
+
+
+def _union_all(pieces: list[DataFrame]) -> DataFrame:
+    """One lazy union of a loop's per-round pieces. Loops keep each
+    round's output as its own piece and union once at the end:
+    re-checkpointing a growing union copies every earlier round again
+    in each round."""
+    return reduce(DataFrame.unionAll, pieces)
+
+
+def _frontier_reach(
+    start: DataFrame, adj: DataFrame, key: list[str], rounds: int
+) -> DataFrame:
+    """The frontier loop of bfs_distances, multi_source_bfs and
+    scc_coloring: ``start`` (*key, node, dist=0) expands over ``adj``
+    (s, t) for ``rounds`` hops, each reach scoped by its ``key``
+    columns. Returns (*key, node, dist), dist = first-discovery round.
+
+    Per round the frontier (last round's discoveries) joins ``adj`` by
+    column name — a DataFrame-qualified ``adj["t"]`` is an ambiguous
+    self-join once frames keep their lineage — and anti-joins the
+    pieces found so far. Each piece is an eager localCheckpoint, never
+    a persisted (_mat) frame: a persisted frame keeps its lineage, and
+    every round's plan reads the earlier rounds twice, through the
+    frontier and through the visited pieces. Every round runs: an
+    emptiness probe would cost a job in every round, more than the
+    empty rounds it could skip."""
+    pieces = [start.localCheckpoint(eager=True)]
+    step = adj.withColumnRenamed("s", "node")
+    for depth in range(1, rounds + 1):
+        reached = (
+            pieces[-1].join(step, "node")
+            .select(*key, F.col("t").alias("node"))
+            .distinct()
+        )
+        pieces.append(
+            reached.join(_union_all(pieces), [*key, "node"], "left_anti")
+            .withColumn("dist", F.lit(depth))
+            .localCheckpoint(eager=True)
+        )
+    return _union_all(pieces)
 
 
 def _orient_edges(und: DataFrame) -> DataFrame:
@@ -603,27 +646,10 @@ def bfs_distances(
     including the source at dist 0. Deterministic for any input.
     """
     und = _undirected(edges, src, dst).localCheckpoint(eager=True)
-    spark = edges.sparkSession
-    visited = (
-        spark.range(1)
-        .select(F.lit(source).cast("bigint").alias("node"), F.lit(0).alias("dist"))
-        .localCheckpoint(eager=True)
+    start = edges.sparkSession.range(1).select(
+        F.lit(source).cast("bigint").alias("node"), F.lit(0).alias("dist")
     )
-    frontier = visited
-    for depth in range(1, max_depth + 1):
-        reached = (
-            frontier.join(und, frontier["node"] == und["s"])
-            .select(und["t"].alias("node"))
-            .distinct()
-        )
-        new = (
-            reached.join(visited, "node", "left_anti")
-            .withColumn("dist", F.lit(depth))
-            .localCheckpoint(eager=True)
-        )
-        visited = visited.unionAll(new).localCheckpoint(eager=True)
-        frontier = new
-    return visited
+    return _frontier_reach(start, und, [], max_depth)
 
 
 def label_propagation(
@@ -1190,30 +1216,12 @@ def multi_source_bfs(
     """
     und = _undirected(edges, src, dst).localCheckpoint(eager=True)
     seed_col = seeds.columns[0]
-    visited = (
-        seeds.select(
-            F.col(seed_col).cast("bigint").alias("seed"),
-            F.col(seed_col).cast("bigint").alias("node"),
-            F.lit(0).alias("dist"),
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    frontier = visited
-    for depth in range(1, max_depth + 1):
-        reached = (
-            frontier.join(und, frontier["node"] == und["s"])
-            .select("seed", und["t"].alias("node"))
-            .distinct()
-        )
-        new = (
-            reached.join(visited, ["seed", "node"], "left_anti")
-            .withColumn("dist", F.lit(depth))
-            .localCheckpoint(eager=True)
-        )
-        visited = visited.unionAll(new).localCheckpoint(eager=True)
-        frontier = new
-    return visited
+    start = seeds.select(
+        F.col(seed_col).cast("bigint").alias("seed"),
+        F.col(seed_col).cast("bigint").alias("node"),
+        F.lit(0).alias("dist"),
+    ).distinct()
+    return _frontier_reach(start, und, ["seed"], max_depth)
 
 
 def temporal_earliest_arrival(
@@ -1305,8 +1313,8 @@ def scc_coloring(
     fixpoint — color(v) = max{u : u ->* v} — as a pagerank-shaped
     combinable fixed point, (2) takes roots (color(v) == v: no larger
     node reaches v), (3) extracts each root's SCC as the backward
-    reach within its own color (a multi_source_bfs-shaped frontier
-    loop), then removes extracted nodes and repeats. Correctness: v
+    reach within its own color (multi_source_bfs's frontier loop,
+    _frontier_reach), then removes extracted nodes and repeats. Correctness: v
     extracted under root r iff v ->* r and color(v) = r (so r ->* v),
     i.e. exactly SCC(r); within-color restriction is lossless because
     every intermediate node of a v ->* r path is itself in SCC(r).
@@ -1340,10 +1348,11 @@ def scc_coloring(
     else:
         ncol = nodes.columns[0]
         active = nodes.select(F.col(ncol).cast("bigint").alias("node"))
-    active = active.localCheckpoint(eager=True)
-    out = None
+    # lazy: the count that opens each outer round materializes it
+    active = active.localCheckpoint(eager=False)
+    pieces = []
     for _ in range(max_outer):
-        if active.limit(1).count() == 0:
+        if active.count() == 0:
             break
         e_act = (
             e_all.join(active.withColumnRenamed("node", "eu"), "eu")
@@ -1369,8 +1378,10 @@ def scc_coloring(
                 .localCheckpoint(eager=True)
             )
         roots = color.where(F.col("c") == F.col("node"))
-        # backward reach from each root restricted to its color
-        ec = (
+        # backward reach from each root over same-color edges (v -> u).
+        # The reach needs no color join term: by induction from the
+        # roots, every visited (col, node) has color(node) == col.
+        adj = (
             e_act.join(
                 color.select(
                     F.col("node").alias("eu"), F.col("c").alias("cu")
@@ -1384,30 +1395,13 @@ def scc_coloring(
                 "ev",
             )
             .where(F.col("cu") == F.col("cv"))
-            .select("eu", "ev", F.col("cu").alias("col"))
+            .select(F.col("ev").alias("s"), F.col("eu").alias("t"))
             .localCheckpoint(eager=True)
         )
-        visited = roots.select(
-            F.col("c").alias("col"), F.col("node")
-        ).localCheckpoint(eager=True)
-        frontier = visited
-        for _ in range(prop_rounds):
-            reached = (
-                frontier.join(
-                    ec,
-                    (frontier["node"] == ec["ev"])
-                    & (frontier["col"] == ec["col"]),
-                )
-                .select(frontier["col"], ec["eu"].alias("node"))
-                .distinct()
-            )
-            new = reached.join(
-                visited, ["col", "node"], "left_anti"
-            ).localCheckpoint(eager=True)
-            if new.limit(1).count() == 0:
-                break
-            visited = visited.unionAll(new).localCheckpoint(eager=True)
-            frontier = new
+        start = roots.select(
+            F.col("c").alias("col"), "node", F.lit(0).alias("dist")
+        )
+        visited = _frontier_reach(start, adj, ["col"], prop_rounds)
         members = visited.groupBy("col").agg(
             F.min("node").alias("scc_id")
         )
@@ -1416,17 +1410,15 @@ def scc_coloring(
             .select("node", "scc_id")
             .localCheckpoint(eager=True)
         )
-        out = (
-            extracted if out is None else out.unionAll(extracted)
-        ).localCheckpoint(eager=True)
+        pieces.append(extracted)
         active = active.join(
             extracted.select("node"), "node", "left_anti"
-        ).localCheckpoint(eager=True)
-    if out is None:
+        ).localCheckpoint(eager=False)
+    if not pieces:
         return active.select(
             "node", F.col("node").alias("scc_id")
         ).where(F.lit(False))
-    return out
+    return _union_all(pieces)
 
 
 def _edge_support(und: DataFrame) -> DataFrame:
@@ -1527,11 +1519,12 @@ def _priority_rounds(
             F.md5(F.concat(F.lit(salt), F.col("node").cast("string")))
             .alias("p"),
         )
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
-    out = None
+    pieces = []
     for r in range(rounds):
-        if active.limit(1).count() == 0:
+        # the count materializes the lazy active checkpoint
+        if active.count() == 0:
             break
         # min active-neighbor priority per active node
         nbr = (
@@ -1551,10 +1544,9 @@ def _priority_rounds(
             .select("node")
             .localCheckpoint(eager=True)
         )
-        picked = sel.select("node", F.lit(r).cast("integer").alias(out_col))
-        out = (
-            picked if out is None else out.unionAll(picked)
-        ).localCheckpoint(eager=True)
+        pieces.append(
+            sel.select("node", F.lit(r).cast("integer").alias(out_col))
+        )
         removed = sel
         if drop_neighbors:
             removed = sel.unionAll(
@@ -1563,13 +1555,13 @@ def _priority_rounds(
                 )
             ).distinct()
         active = active.join(removed, "node", "left_anti").localCheckpoint(
-            eager=True
+            eager=False
         )
-    if out is None:
+    if not pieces:
         return ids.select(
             "node", F.lit(0).cast("integer").alias(out_col)
         ).where(F.lit(False))
-    return out
+    return _union_all(pieces)
 
 
 def luby_mis(
@@ -1683,7 +1675,7 @@ def boruvka_mst(
         .select("node", F.col("node").alias("comp"))
         .localCheckpoint(eager=True)
     )
-    mst = None
+    pieces = []
     for _ in range(phases):
         e = (
             und.join(
@@ -1699,9 +1691,10 @@ def boruvka_mst(
                 "b",
             )
             .where(F.col("ca") != F.col("cb"))
-            .localCheckpoint(eager=True)
+            .localCheckpoint(eager=False)
         )
-        if e.limit(1).count() == 0:
+        # the count materializes e; an empty phase would still run CC
+        if e.count() == 0:
             break
         inc = e.select(
             F.col("ca").alias("c"), F.struct("w", "a", "b").alias("e")
@@ -1714,13 +1707,7 @@ def boruvka_mst(
         chosen = picks.select("e.a", "e.b", "e.w").distinct().localCheckpoint(
             eager=True
         )
-        mst = (
-            chosen
-            if mst is None
-            else mst.unionAll(chosen).groupBy("a", "b").agg(
-                F.min("w").alias("w")
-            )
-        ).localCheckpoint(eager=True)
+        pieces.append(chosen)
         # contract: CC over the chosen edges' component graph
         cgraph = (
             chosen.join(
@@ -1748,9 +1735,9 @@ def boruvka_mst(
             )
             .localCheckpoint(eager=True)
         )
-    if mst is None:
+    if not pieces:
         return und.where(F.lit(False))
-    return mst
+    return _union_all(pieces).groupBy("a", "b").agg(F.min("w").alias("w"))
 
 
 def kmv_neighborhood_function(
@@ -1803,7 +1790,7 @@ def kmv_neighborhood_function(
     ).localCheckpoint(eager=True)
     two48 = float(1 << 48)
     w = Window.partitionBy("node").orderBy("h")
-    out = None
+    pieces = []
     for hop in range(1, rounds + 1):
         prop = und.join(
             state.withColumnRenamed("node", "t"), "t"
@@ -1831,5 +1818,5 @@ def kmv_neighborhood_function(
             F.count("*").cast("bigint").alias("n_nodes"),
             F.sum("est_milli").cast("bigint").alias("sum_reach_milli"),
         )
-        out = hop_row if out is None else out.unionAll(hop_row)
-    return out
+        pieces.append(hop_row)
+    return _union_all(pieces)

@@ -331,11 +331,16 @@ def export_graph(
     """Interchange export of a graph: ``{path}/nodes`` + ``{path}/edges``
     as JSONL, CSV (with header), or parquet — the hand-off surface to
     consumers that are not Spark (a Neo4j bulk importer, a viz tool, a
-    pandas notebook). Distributed writers, one file per task; schemas
-    stay flat so every format round-trips losslessly."""
+    pandas notebook). Distributed writers, one file per task. Columns
+    go out in schema order, because a CSV reader matches them by
+    position; CSV has no map type, so it carries ``props`` as JSON
+    text. Every format round-trips losslessly through import_graph."""
     if fmt not in EXPORT_FORMATS:
         raise ValueError(f"fmt must be one of {EXPORT_FORMATS}, got {fmt!r}")
-    for name, df in (("nodes", tables.nodes), ("edges", tables.edges)):
+    props = F.to_json("props") if fmt == "csv" else F.col("props")
+    nodes = tables.nodes.select("node_id", "label", props.alias("props"))
+    edges = tables.edges.select("src", "dst", "type")
+    for name, df in (("nodes", nodes), ("edges", edges)):
         w = df.write.mode("overwrite")
         target = f"{path.rstrip('/')}/{name}"
         if fmt == "jsonl":
@@ -351,7 +356,8 @@ def import_graph(
 ) -> GraphTables:
     """Read an exported graph back. CSV/JSONL carry no types, so the
     reader re-applies the graph schema explicitly (inferSchema on
-    100 TB means a full extra pass — never rely on it)."""
+    100 TB means a full extra pass — never rely on it). Both read
+    ``props`` as JSON text and parse it back into the map."""
     if fmt not in EXPORT_FORMATS:
         raise ValueError(f"fmt must be one of {EXPORT_FORMATS}, got {fmt!r}")
 
@@ -364,5 +370,7 @@ def import_graph(
         return spark.read.parquet(target)
 
     nodes = _read("nodes", "node_id string, label string, props string")
+    if fmt != "parquet":
+        nodes = nodes.withColumn("props", F.from_json("props", "map<string,string>"))
     edges = _read("edges", "src string, dst string, type string")
     return GraphTables(nodes=nodes, edges=edges)

@@ -11,6 +11,7 @@ comparison; hash primitives are md5-hex for engine portability).
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -2588,24 +2589,34 @@ def value_quantiles(spark, sf_dir):
     )
 
 
-def _circulant_edges(spark, sf_dir):
+_ADDITIVE = ("+1", "+2", "+3", "*2")
+
+
+def _circulant(spark, sf_dir, steps=("+1", "*2", "*3")):
     """Deterministic multi-generator circulant graph over the
-    documents' id space (i -> i+1, 2i, 3i mod N): both engines rebuild
-    it bit-identically, and the modular wrap gives it genuine
-    triangles (shared source of graph_triangles and
-    graph_clustering_coeff)."""
+    documents' id space: one edge i -> step(i) mod N per id and step,
+    where a step is "+k" (i + k), "*k" (i * k) or "-k" (i + N - k).
+    Both engines rebuild it bit-identically, and the modular wrap
+    gives it genuine triangles. The default steps (+1, *2, *3) are
+    _CIRCULANT_SQL's; _ADDITIVE (+1, +2, +3, *2) is the triangle-rich
+    variant.
+
+    Returns (ids, edges): ids (i, m) is the SQL twins' ``base`` — one
+    row per document, i = doc_id % m with m the document count — and
+    edges (s, t) the union over steps in order. One documents count."""
     d = load_table(spark, sf_dir, "documents")
     m = d.count()
-    base = d.select((F.col("doc_id") % m).alias("i"))
-    return (
-        base.select(F.col("i").alias("s"), ((F.col("i") + 1) % m).alias("t"))
-        .unionAll(
-            base.select(F.col("i").alias("s"), ((F.col("i") * 2) % m).alias("t"))
-        )
-        .unionAll(
-            base.select(F.col("i").alias("s"), ((F.col("i") * 3) % m).alias("t"))
-        )
+    ids = d.select((F.col("doc_id") % m).alias("i"), F.lit(m).alias("m"))
+    i = F.col("i")
+    succ = {"+": lambda k: i + k, "*": lambda k: i * k, "-": lambda k: i + m - k}
+    edges = reduce(
+        DataFrame.unionAll,
+        [
+            ids.select(i.alias("s"), (succ[st[0]](int(st[1:])) % m).alias("t"))
+            for st in steps
+        ],
     )
+    return ids, edges
 
 
 _CIRCULANT_SQL = """
@@ -2667,7 +2678,7 @@ def graph_clustering_coeff(spark, sf_dir):
     degree-1 nodes excluded (undefined denominator)."""
     from gfftoneo4j_spark.operators.graph import triangle_counts
 
-    raw = _circulant_edges(spark, sf_dir)
+    _, raw = _circulant(spark, sf_dir)
     a, b = F.least("s", "t"), F.greatest("s", "t")
     und = (
         raw.select(a.alias("a"), b.alias("b"))
@@ -2748,7 +2759,8 @@ def graph_triangles(spark, sf_dir):
     triangles while both engines rebuild it bit-identically."""
     from gfftoneo4j_spark.operators.graph import triangle_counts
 
-    return triangle_counts(_circulant_edges(spark, sf_dir), "s", "t")
+    _, raw = _circulant(spark, sf_dir)
+    return triangle_counts(raw, "s", "t")
 
 
 # --------------------------------------------------------------------------
@@ -3209,9 +3221,8 @@ def graph_sssp_bounded(spark, sf_dir):
     per node equals the Spark side's first-discovery level."""
     from gfftoneo4j_spark.operators.graph import bfs_distances
 
-    return bfs_distances(
-        _circulant_edges(spark, sf_dir), source=0, max_depth=6, src="s", dst="t"
-    )
+    _, raw = _circulant(spark, sf_dir)
+    return bfs_distances(raw, source=0, max_depth=6, src="s", dst="t")
 
 
 # --------------------------------------------------------------------------
@@ -4061,7 +4072,7 @@ def neighbor_sample(spark, sf_dir):
     expansion is bounded k^depth regardless of degree skew; hash-rank
     (not rand()) makes the sample reproducible across engines, runs,
     and partitionings. One window shuffle on the source key."""
-    raw = _circulant_edges(spark, sf_dir)
+    _, raw = _circulant(spark, sf_dir)
     e = (
         raw.select("s", "t")
         .where(F.col("s") != F.col("t"))
@@ -4495,9 +4506,9 @@ def graph_reciprocity(spark, sf_dir):
     metric that catches accidentally-symmetrized edge families after
     an ingest change. (rev is dedup-free: e is distinct, so the
     swapped set is too — the left join cannot duplicate rows.)"""
+    _, raw = _circulant(spark, sf_dir)
     e = (
-        _circulant_edges(spark, sf_dir)
-        .where(F.col("s") != F.col("t"))
+        raw.where(F.col("s") != F.col("t"))
         .distinct()
         .localCheckpoint(eager=True)
     )
@@ -8834,9 +8845,8 @@ def ancestor_closure_q(spark, sf_dir):
     operator with exact hop distances."""
     from gfftoneo4j_spark.operators.graph import ancestor_closure
 
-    d = load_table(spark, sf_dir, "documents")
-    m = d.count()
-    nodes = d.select((F.col("doc_id") % m).alias("i")).distinct()
+    ids, _ = _circulant(spark, sf_dir)
+    nodes = ids.select("i").distinct()
     par = nodes.where(F.col("i") > 0).select(
         F.col("i").alias("c"), F.expr("(i - 1) DIV 3").alias("p")
     )
@@ -8891,9 +8901,8 @@ def graph_closeness_approx(spark, sf_dir):
     |V|, scales the work."""
     from gfftoneo4j_spark.operators.graph import multi_source_bfs
 
-    d = load_table(spark, sf_dir, "documents")
-    m = d.count()
-    nodes = d.select((F.col("doc_id") % m).alias("i")).distinct()
+    ids, raw = _circulant(spark, sf_dir)
+    nodes = ids.select("i").distinct()
     seeds = (
         nodes.select(
             "i",
@@ -8903,9 +8912,7 @@ def graph_closeness_approx(spark, sf_dir):
         .limit(4)
         .select("i")
     )
-    vis = multi_source_bfs(
-        _circulant_edges(spark, sf_dir), seeds, max_depth=6, src="s", dst="t"
-    )
+    vis = multi_source_bfs(raw, seeds, max_depth=6, src="s", dst="t")
     return (
         vis.where(F.col("dist") > 0)
         .groupBy("node")
@@ -10243,27 +10250,7 @@ def graph_truss_peel(spark, sf_dir):
     k-truss are the seed sets entity-resolution uses at 100 TB."""
     from gfftoneo4j_spark.operators.graph import truss_peel
 
-    d = load_table(spark, sf_dir, "documents")
-    m = d.count()
-    base = d.select((F.col("doc_id") % m).alias("i"))
-    raw = (
-        base.select(F.col("i").alias("s"), ((F.col("i") + 1) % m).alias("t"))
-        .unionAll(
-            base.select(
-                F.col("i").alias("s"), ((F.col("i") + 2) % m).alias("t")
-            )
-        )
-        .unionAll(
-            base.select(
-                F.col("i").alias("s"), ((F.col("i") + 3) % m).alias("t")
-            )
-        )
-        .unionAll(
-            base.select(
-                F.col("i").alias("s"), ((F.col("i") * 2) % m).alias("t")
-            )
-        )
-    )
+    _, raw = _circulant(spark, sf_dir, _ADDITIVE)
     return truss_peel(raw, k=4, rounds=2, src="s", dst="t")
 
 
@@ -10335,27 +10322,7 @@ def graph_four_cliques(spark, sf_dir):
     duplicate-community signal an ER pipeline mines at 100 TB."""
     from gfftoneo4j_spark.operators.graph import four_clique_counts
 
-    d = load_table(spark, sf_dir, "documents")
-    m = d.count()
-    base = d.select((F.col("doc_id") % m).alias("i"))
-    raw = (
-        base.select(F.col("i").alias("s"), ((F.col("i") + 1) % m).alias("t"))
-        .unionAll(
-            base.select(
-                F.col("i").alias("s"), ((F.col("i") + 2) % m).alias("t")
-            )
-        )
-        .unionAll(
-            base.select(
-                F.col("i").alias("s"), ((F.col("i") + 3) % m).alias("t")
-            )
-        )
-        .unionAll(
-            base.select(
-                F.col("i").alias("s"), ((F.col("i") * 2) % m).alias("t")
-            )
-        )
-    )
+    _, raw = _circulant(spark, sf_dir, _ADDITIVE)
     return four_clique_counts(raw, src="s", dst="t")
 
 
@@ -10625,28 +10592,8 @@ def luby_mis_q(spark, sf_dir):
     as CTE blocks — the graph_kcore pattern."""
     from gfftoneo4j_spark.operators.graph import luby_mis
 
-    d = load_table(spark, sf_dir, "documents")
-    m = d.count()
-    base = d.select((F.col("doc_id") % m).alias("i"))
-    raw = (
-        base.select(F.col("i").alias("s"), ((F.col("i") + 1) % m).alias("t"))
-        .unionAll(
-            base.select(
-                F.col("i").alias("s"), ((F.col("i") + 2) % m).alias("t")
-            )
-        )
-        .unionAll(
-            base.select(
-                F.col("i").alias("s"), ((F.col("i") + 3) % m).alias("t")
-            )
-        )
-        .unionAll(
-            base.select(
-                F.col("i").alias("s"), ((F.col("i") * 2) % m).alias("t")
-            )
-        )
-    )
-    return luby_mis(raw, nodes=base, rounds=6, src="s", dst="t")
+    ids, raw = _circulant(spark, sf_dir, _ADDITIVE)
+    return luby_mis(raw, nodes=ids, rounds=6, src="s", dst="t")
 
 
 # --------------------------------------------------------------------------
@@ -10865,22 +10812,7 @@ def negative_edge_samples(spark, sf_dir):
     |V|^2 — which is what makes negative sampling viable where
     enumerating non-edges never is. The rejected draws (true edges)
     are simply absent, the standard rejection-sampling contract."""
-    d = load_table(spark, sf_dir, "documents")
-    m = d.count()
-    base = d.select((F.col("doc_id") % m).alias("i"))
-    raw = (
-        base.select(F.col("i").alias("s"), ((F.col("i") + 1) % m).alias("t"))
-        .unionAll(
-            base.select(
-                F.col("i").alias("s"), ((F.col("i") * 2) % m).alias("t")
-            )
-        )
-        .unionAll(
-            base.select(
-                F.col("i").alias("s"), ((F.col("i") * 3) % m).alias("t")
-            )
-        )
-    )
+    ids, raw = _circulant(spark, sf_dir)
     und = (
         raw.where(F.col("s") != F.col("t"))
         .select(
@@ -10889,8 +10821,8 @@ def negative_edge_samples(spark, sf_dir):
         .distinct()
     )
     cand = (
-        base.distinct()
-        .select("i", F.explode(F.expr("sequence(1, 4)")).alias("j"))
+        ids.distinct()
+        .select("i", "m", F.explode(F.expr("sequence(1, 4)")).alias("j"))
         .select(
             F.col("i").alias("u"),
             F.col("j"),
@@ -10911,7 +10843,7 @@ def negative_edge_samples(spark, sf_dir):
                     16,
                     10,
                 ).cast("bigint")
-                % m
+                % F.col("m")
             ).alias("neg"),
         )
         .where(F.col("neg") != F.col("u"))
@@ -11359,24 +11291,9 @@ def graph_coloring(spark, sf_dir):
     (pytest-asserted, with edge-by-edge properness)."""
     from gfftoneo4j_spark.operators.graph import jones_plassmann_coloring
 
-    d = load_table(spark, sf_dir, "documents")
-    m = d.count()
-    base = d.select((F.col("doc_id") % m).alias("i"))
-    raw = (
-        base.select(F.col("i").alias("s"), ((F.col("i") + 1) % m).alias("t"))
-        .unionAll(
-            base.select(
-                F.col("i").alias("s"), ((F.col("i") * 2) % m).alias("t")
-            )
-        )
-        .unionAll(
-            base.select(
-                F.col("i").alias("s"), ((F.col("i") * 3) % m).alias("t")
-            )
-        )
-    )
+    ids, raw = _circulant(spark, sf_dir)
     return jones_plassmann_coloring(
-        raw, nodes=base, rounds=_JP_ROUNDS, src="s", dst="t"
+        raw, nodes=ids, rounds=_JP_ROUNDS, src="s", dst="t"
     )
 
 
@@ -11502,9 +11419,8 @@ def graph_eccentricity_approx(spark, sf_dir):
     standard answer. Hop-bounded (8) so the job count is fixed."""
     from gfftoneo4j_spark.operators.graph import multi_source_bfs
 
-    d = load_table(spark, sf_dir, "documents")
-    m = d.count()
-    nodes = d.select((F.col("doc_id") % m).alias("i")).distinct()
+    ids, raw = _circulant(spark, sf_dir)
+    nodes = ids.select("i").distinct()
     seeds = (
         nodes.select(
             "i",
@@ -11516,9 +11432,7 @@ def graph_eccentricity_approx(spark, sf_dir):
         .limit(4)
         .select("i")
     )
-    vis = multi_source_bfs(
-        _circulant_edges(spark, sf_dir), seeds, max_depth=8, src="s", dst="t"
-    )
+    vis = multi_source_bfs(raw, seeds, max_depth=8, src="s", dst="t")
     return vis.groupBy("seed").agg(
         F.max("dist").cast("integer").alias("ecc_lb"),
         F.count("*").cast("bigint").alias("n_reached"),
@@ -11544,7 +11458,7 @@ def boruvka_mst_q(spark, sf_dir):
     operators/graph.boruvka_mst for the log2(n)-phase scale story."""
     from gfftoneo4j_spark.operators.graph import boruvka_mst
 
-    raw = _circulant_edges(spark, sf_dir)
+    _, raw = _circulant(spark, sf_dir)
     weighted = raw.select(
         F.col("s").alias("u"),
         F.col("t").alias("v"),
@@ -12664,25 +12578,8 @@ def graph_motif_census(spark, sf_dir):
     (+1,+2,+3,-3) both motifs are nonzero (the multiplicative one is
     triangle-poor). Hub caps from graph_triangles apply unchanged if
     degrees skew."""
-    d = load_table(spark, sf_dir, "documents")
-    m = d.count()
-    base = d.select((F.col("doc_id") % m).alias("i"))
-    e = (
-        base.select(F.col("i").alias("s"), ((F.col("i") + 1) % m).alias("t"))
-        .unionAll(
-            base.select(F.col("i").alias("s"), ((F.col("i") + 2) % m).alias("t"))
-        )
-        .unionAll(
-            base.select(F.col("i").alias("s"), ((F.col("i") + 3) % m).alias("t"))
-        )
-        .unionAll(
-            base.select(
-                F.col("i").alias("s"), ((F.col("i") + m - 3) % m).alias("t")
-            )
-        )
-        .where(F.col("s") != F.col("t"))
-        .distinct()
-    )
+    _, raw = _circulant(spark, sf_dir, ("+1", "+2", "+3", "-3"))
+    e = raw.where(F.col("s") != F.col("t")).distinct()
     p2 = (
         e.alias("x")
         .join(e.alias("y"), F.col("y.s") == F.col("x.t"))
@@ -13065,9 +12962,8 @@ def graph_anf_reachability(spark, sf_dir):
     pytest-bounded on a known-topology graph."""
     from gfftoneo4j_spark.operators.graph import kmv_neighborhood_function
 
-    return kmv_neighborhood_function(
-        _circulant_edges(spark, sf_dir), k=8, rounds=3
-    )
+    _, raw = _circulant(spark, sf_dir)
+    return kmv_neighborhood_function(raw, k=8, rounds=3)
 
 
 # --------------------------------------------------------------------------
@@ -13816,13 +13712,12 @@ def wl_refinement(spark, sf_dir):
     per node; the vertex-transitive circulant collapses to few
     colors, a labeled real graph would not."""
     colors = None
+    _, raw = _circulant(spark, sf_dir)
     und = (
-        _circulant_edges(spark, sf_dir)
-        .select("s", "t")
+        raw.select("s", "t")
         .where(F.col("s") != F.col("t"))
         .unionAll(
-            _circulant_edges(spark, sf_dir)
-            .select(F.col("t").alias("s"), F.col("s").alias("t"))
+            raw.select(F.col("t").alias("s"), F.col("s").alias("t"))
             .where(F.col("s") != F.col("t"))
         )
         .distinct()
@@ -13935,10 +13830,8 @@ def label_spreading(spark, sf_dir):
     PageRank discipline: per round ONE edge-keyed equi-join + one
     combinable sum + one anti-join for the clamp; state is (node,
     class, int) rows, only nonzero classes ever materialize."""
-    d = load_table(spark, sf_dir, "documents")
-    m = d.count()
-    nodes = d.select((F.col("doc_id") % m).alias("i")).distinct()
-    raw = _circulant_edges(spark, sf_dir)
+    ids, raw = _circulant(spark, sf_dir)
+    nodes = ids.select("i").distinct()
     und = (
         raw.where(F.col("s") != F.col("t"))
         .unionAll(
@@ -17283,7 +17176,7 @@ def rich_club_coefficient(spark, sf_dir):
     bounded by distinct degrees, not nodes — so no per-threshold scan
     of the graph ever happens. Both histograms are combinable exact
     folds on the degree-joined edge snapshot."""
-    raw = _circulant_edges(spark, sf_dir)
+    _, raw = _circulant(spark, sf_dir)
     a, b = F.least("s", "t"), F.greatest("s", "t")
     und = (
         raw.select(a.alias("a"), b.alias("b"))
@@ -19066,27 +18959,7 @@ def edge_structural_similarity(spark, sf_dir):
     triangle-rich additive circulant."""
     from gfftoneo4j_spark.operators.graph import _enumerate_triangles
 
-    d = load_table(spark, sf_dir, "documents")
-    mm = d.count()
-    base = d.select((F.col("doc_id") % mm).alias("i"))
-    raw = (
-        base.select(F.col("i").alias("s"), ((F.col("i") + 1) % mm).alias("t"))
-        .unionAll(
-            base.select(
-                F.col("i").alias("s"), ((F.col("i") + 2) % mm).alias("t")
-            )
-        )
-        .unionAll(
-            base.select(
-                F.col("i").alias("s"), ((F.col("i") + 3) % mm).alias("t")
-            )
-        )
-        .unionAll(
-            base.select(
-                F.col("i").alias("s"), ((F.col("i") * 2) % mm).alias("t")
-            )
-        )
-    )
+    _, raw = _circulant(spark, sf_dir, _ADDITIVE)
     a, b = F.least("s", "t"), F.greatest("s", "t")
     und = (
         raw.select(a.alias("a"), b.alias("b"))
@@ -19794,27 +19667,7 @@ def densest_subgraph_peel(spark, sf_dir):
     against the kept set, all on an eagerly checkpointed shrinking
     edge frame. The density curve itself is the report (is_best
     marks the certified round)."""
-    d = load_table(spark, sf_dir, "documents")
-    mm = d.count()
-    base = d.select((F.col("doc_id") % mm).alias("i"))
-    raw = (
-        base.select(F.col("i").alias("s"), ((F.col("i") + 1) % mm).alias("t"))
-        .unionAll(
-            base.select(
-                F.col("i").alias("s"), ((F.col("i") + 2) % mm).alias("t")
-            )
-        )
-        .unionAll(
-            base.select(
-                F.col("i").alias("s"), ((F.col("i") + 3) % mm).alias("t")
-            )
-        )
-        .unionAll(
-            base.select(
-                F.col("i").alias("s"), ((F.col("i") * 2) % mm).alias("t")
-            )
-        )
-    )
+    _, raw = _circulant(spark, sf_dir, _ADDITIVE)
     a, b = F.least("s", "t"), F.greatest("s", "t")
     e = (
         raw.select(a.alias("a"), b.alias("b"))

@@ -1,4 +1,5 @@
-"""Spark job budgets for the graph write and read path.
+"""Spark job budgets for the graph write and read path and the graph
+loops.
 
 At test sizes an op's cost is Spark's per-action overhead, not data, so
 its job count is a noise-free proxy for that cost. Each count is pinned
@@ -12,6 +13,8 @@ from pyspark.sql import functions as F
 
 from gfftoneo4j_spark import oracle
 from gfftoneo4j_spark.corpus import CorpusConfig, make_alias_dict, make_transcripts
+from gfftoneo4j_spark.operators import graph as G
+from gfftoneo4j_spark.operators.connected_components import connected_components
 from gfftoneo4j_spark.plans.graph_sink import read_graph, write_graph
 from gfftoneo4j_spark.plans.pipeline import build_kg
 from gfftoneo4j_spark.sources.transcripts import ALIAS_DICT_SCHEMA, TRANSCRIPT_SCHEMA
@@ -19,6 +22,16 @@ from gfftoneo4j_spark.sources.transcripts import ALIAS_DICT_SCHEMA, TRANSCRIPT_S
 WRITE_JOBS = 9  # write_graph of a default build
 READ_JOBS = 2  # read_graph: parquet schema inference
 LOOKUP_JOBS = 4  # one hot-entity lookup
+# graph loops on _budget_graph, each op run once and collected
+LOOP_JOBS = {
+    "pagerank": 28,  # pagerank_fixed_point(iters=3)
+    "lpa": 20,  # label_propagation(iters=3)
+    "cc": 45,  # connected_components(local_threshold=0)
+    "multi_bfs": 17,  # multi_source_bfs(max_depth=3), 2 seeds
+    "scc": 79,  # scc_coloring(prop_rounds=4, max_outer=2)
+    "mis": 27,  # luby_mis(rounds=4)
+    "coloring": 35,  # jones_plassmann_coloring(rounds=4)
+}
 
 
 def _jobs(spark, group, fn):
@@ -62,3 +75,39 @@ def test_write_read_and_lookup_job_budgets(spark, tmp_path):
 
     assert got == want
     assert (n_write, n_read, n_lookup) == (WRITE_JOBS, READ_JOBS, LOOKUP_JOBS)
+
+
+def _budget_graph(spark):
+    """24 nodes in six directed 4-cycles (the SCCs), chained block to
+    block by one forward edge each. Built from spark.range: counts on a
+    createDataFrame graph varied by up to three jobs between runs."""
+    n = spark.range(24).select(F.col("id").alias("i"))
+    cyc = n.select(
+        F.col("i").alias("u"), F.expr("(i DIV 4) * 4 + (i + 1) % 4").alias("v")
+    )
+    chain = n.where("i % 4 = 0 AND i < 20").select(
+        F.col("i").alias("u"), (F.col("i") + 4).alias("v")
+    )
+    return cyc.unionByName(chain)
+
+
+def test_graph_loop_job_budgets(spark):
+    e = _budget_graph(spark)
+    nodes = spark.range(24).select(F.col("id").alias("node"))
+    seeds = spark.range(2).select((F.col("id") * 12).alias("seed"))
+    ops = {
+        "pagerank": lambda: G.pagerank_fixed_point(e, iters=3),
+        "lpa": lambda: G.label_propagation(e, iters=3),
+        "cc": lambda: connected_components(e, local_threshold=0),
+        "multi_bfs": lambda: G.multi_source_bfs(e, seeds, max_depth=3),
+        "scc": lambda: G.scc_coloring(e, prop_rounds=4, max_outer=2),
+        "mis": lambda: G.luby_mis(e, nodes, rounds=4),
+        "coloring": lambda: G.jones_plassmann_coloring(e, nodes, rounds=4),
+    }
+    jobs, rows = {}, {}
+    for name, op in ops.items():
+        rows[name], jobs[name] = _jobs(spark, name, lambda: op().collect())
+
+    assert {r["scc_id"] for r in rows["scc"]} == set(range(0, 24, 4))
+    assert len(rows["multi_bfs"]) == 31 and len(rows["coloring"]) == 24
+    assert jobs == LOOP_JOBS

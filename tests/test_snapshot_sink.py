@@ -113,31 +113,53 @@ def test_diff_snapshots_both_directions(spark, tmp_path):
 
 
 def test_export_import_roundtrip_all_formats(spark, tmp_path):
+    """A graph the engine writes carries props: map<string,string>;
+    CSV has no map type and JSONL no schema, yet both must round-trip."""
     import pytest as _pytest
 
+    from gfftoneo4j_spark.corpus import (
+        CorpusConfig,
+        make_alias_dict,
+        make_transcripts,
+    )
     from gfftoneo4j_spark.plans.graph_sink import (
-        GraphTables,
         export_graph,
         import_graph,
+        read_graph,
+        write_graph,
+    )
+    from gfftoneo4j_spark.plans.pipeline import build_kg
+    from gfftoneo4j_spark.sources.transcripts import (
+        ALIAS_DICT_SCHEMA,
+        TRANSCRIPT_SCHEMA,
     )
 
-    nodes = spark.createDataFrame(
-        [(f"n{i}", "entity", f"p{i}") for i in range(6)],
-        "node_id string, label string, props string",
+    cfg = CorpusConfig(n_conversations=5, seed=3)
+    res = build_kg(
+        spark,
+        spark.createDataFrame(make_transcripts(cfg), TRANSCRIPT_SCHEMA),
+        spark.createDataFrame(make_alias_dict(cfg), ALIAS_DICT_SCHEMA),
     )
-    edges = spark.createDataFrame(
-        [(f"n{i}", f"n{i+1}", "links") for i in range(5)],
-        "src string, dst string, type string",
-    )
-    g = GraphTables(nodes=nodes, edges=edges)
-    want_n = sorted(map(tuple, nodes.collect()))
-    want_e = sorted(map(tuple, edges.collect()))
+    write_graph(res.nodes, res.edges, str(tmp_path / "graph"))
+    g = read_graph(spark, str(tmp_path / "graph"))
+
+    def node_rows(df):
+        return sorted(
+            (r["node_id"], r["label"], tuple(sorted(r["props"].items())))
+            for r in df.collect()
+        )
+
+    want_n = node_rows(g.nodes)
+    want_e = sorted(map(tuple, g.edges.select("src", "dst", "type").collect()))
+    assert {label for _, label, _ in want_n} >= {"conversation", "turn"}
     for fmt in ("jsonl", "csv", "parquet"):
         out = str(tmp_path / fmt)
         export_graph(g, out, fmt)
         back = import_graph(spark, out, fmt)
-        assert sorted(map(tuple, back.nodes.collect())) == want_n, fmt
-        assert sorted(map(tuple, back.edges.collect())) == want_e, fmt
+        assert dict(back.nodes.dtypes)["props"] == "map<string,string>", fmt
+        assert node_rows(back.nodes) == want_n, fmt
+        got_e = back.edges.select("src", "dst", "type").collect()
+        assert sorted(map(tuple, got_e)) == want_e, fmt
         assert sorted(map(tuple, back.triples.collect())) == sorted(
             (s, t, d) for s, d, t in want_e
         ), fmt
