@@ -113,3 +113,32 @@ def test_run_query_cli_list_run_and_oracle_check(tmp_path):
         capture_output=True, text=True, timeout=120,
     )
     assert r3.returncode == 2
+
+
+def _query_profile(*args):
+    r = subprocess.run(
+        [sys.executable, os.path.join(REPO, "tools", "query_profile.py"), *args],
+        capture_output=True, text=True, timeout=900,
+        env={**os.environ, "SPARK_GRAFT_CPUS": "4"},
+    )
+    assert r.returncode == 0, r.stderr[-2000:]
+    return json.loads(r.stdout.splitlines()[-1])["queries"]
+
+
+def test_query_profile_records_each_repetition(sf_dir):
+    rec = _query_profile("--reps", "2", sf_dir, "graph_pagerank")["graph_pagerank"]
+    assert [type(r["wall_s"]) for r in rec["runs"]] == [float, float]
+    jobs = [r["jobs"] for r in rec["runs"]]
+    assert jobs[0] == jobs[1] > 0
+    assert rec["package"].startswith(REPO + os.sep)
+
+
+def test_query_profile_base_runs_an_archive_of_the_commit(sf_dir):
+    rec = _query_profile(
+        "--base", "HEAD", "--reps", "2", sf_dir, "column_profile"
+    )["column_profile"]
+    assert not rec["base"]["package"].startswith(REPO + os.sep)
+    assert rec["head"]["package"].startswith(REPO + os.sep)
+    jobs = {side: [r["jobs"] for r in rec[side]["runs"]] for side in rec}
+    assert jobs["base"] == jobs["head"] and len(jobs["head"]) == 2
+    assert jobs["head"][0] > 0

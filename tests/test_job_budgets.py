@@ -1,5 +1,5 @@
-"""Spark job budgets for the graph write and read path and the graph
-loops.
+"""Spark job budgets for the graph write and read path, the build's
+lineage and metrics writes, and the graph loops.
 
 At test sizes an op's cost is Spark's per-action overhead, not data, so
 its job count is a noise-free proxy for that cost. Each count is pinned
@@ -20,6 +20,8 @@ from gfftoneo4j_spark.plans.pipeline import build_kg
 from gfftoneo4j_spark.sources.transcripts import ALIAS_DICT_SCHEMA, TRANSCRIPT_SCHEMA
 
 WRITE_JOBS = 9  # write_graph of a default build
+LINEAGE_JOBS = 10  # then its lineage to parquet
+METRICS_JOBS = 5  # then its metrics to parquet
 READ_JOBS = 2  # read_graph: parquet schema inference
 LOOKUP_JOBS = 4  # one hot-entity lookup
 # graph loops on _budget_graph, each op run once and collected
@@ -55,6 +57,12 @@ def test_write_read_and_lookup_job_budgets(spark, tmp_path):
     res = build_kg(spark, t, spark.createDataFrame(dict_rows, ALIAS_DICT_SCHEMA))
     path = str(tmp_path / "graph")
     _, n_write = _jobs(spark, "write", lambda: write_graph(res.nodes, res.edges, path))
+    _, n_lineage = _jobs(
+        spark, "lineage", lambda: res.lineage.write.parquet(str(tmp_path / "lineage"))
+    )
+    _, n_metrics = _jobs(
+        spark, "metrics", lambda: res.metrics.write.parquet(str(tmp_path / "metrics"))
+    )
     graph, n_read = _jobs(spark, "read", lambda: read_graph(spark, path))
 
     # the hot-entity lookup a graph consumer runs: turns that mention
@@ -74,7 +82,8 @@ def test_write_read_and_lookup_job_budgets(spark, tmp_path):
     got, n_lookup = _jobs(spark, "lookup", lookup.count)
 
     assert got == want
-    assert (n_write, n_read, n_lookup) == (WRITE_JOBS, READ_JOBS, LOOKUP_JOBS)
+    assert (n_write, n_lineage, n_metrics) == (WRITE_JOBS, LINEAGE_JOBS, METRICS_JOBS)
+    assert (n_read, n_lookup) == (READ_JOBS, LOOKUP_JOBS)
 
 
 def _budget_graph(spark):

@@ -65,7 +65,7 @@ def main(argv: list[str] | None = None) -> int:
     t0 = time.time()
     df = QUERIES[args.query](spark, args.sf_dir)
     if args.explain:
-        print(df._jdf.queryExecution().executedPlan().toString())
+        df.explain("formatted")
     rows = df.limit(args.limit).collect()
     header = df.columns
     print("\t".join(header))

@@ -10,7 +10,7 @@ N = 1 executor x 8 cores; 4N = 4 executors x 8 cores. Same job, same
 input, efficiency = (throughput_4N / throughput_N) / 4.
 
 v2 protocol upgrades (round 2, after the 0.401 round-1 miss was traced):
-- Per-stage profiling (tools/cluster_profile.py) showed the reduce
+- Per-stage profiling (BENCH/stage_profile_sql.json) showed the reduce
   stages scale near-perfectly (354 vs 359 task-seconds at N vs 4N) while
   map stages inflate 1.3-1.7x in CPU at 32 busy cores — single-box
   memory-bus contention, not a pipeline serial fraction.
