@@ -13225,8 +13225,8 @@ j AS (
 ),
 c AS (
   SELECT ta, tb, lag, CAST(count(*) AS BIGINT) AS n_pairs,
-         CAST(floor(greatest(-1.0, least(1.0, corr(x, y))) * 1000000)
-              AS BIGINT) AS xcorr_fp
+         CAST(floor(greatest(-1.0, least(1.0, round(corr(x, y), 12)))
+                    * 1000000) AS BIGINT) AS xcorr_fp
   FROM j GROUP BY ta, tb, lag
 )
 SELECT ta, tb, CAST(lag AS INTEGER) AS lag, n_pairs, xcorr_fp,
@@ -13248,7 +13248,9 @@ def xcorr_leadlag(spark, sf_dir):
     lag) against a BROADCAST 50-row grid, mergeable corr folds; the
     argmax window runs over the bounded (pair, lag) grid. corr is
     clamped into [-1, 1] before the 1e-6 floor (ulp overshoot at
-    exact +/-1 would flip the floor across engines)."""
+    exact +/-1 would flip the floor across engines), and rounded to
+    12 dp first: a zero co-moment comes out as +/-1e-16 depending on
+    aggregation order, which the floor would turn into -1 or 0."""
     ev = load_table(spark, sf_dir, "events")
     h = ev.groupBy(
         "event_type",
@@ -13287,7 +13289,9 @@ def xcorr_leadlag(spark, sf_dir):
     c = j.groupBy("ta", "tb", "lag").agg(
         F.count("*").cast("bigint").alias("n_pairs"),
         F.floor(
-            F.greatest(F.lit(-1.0), F.least(F.lit(1.0), F.corr("x", "y")))
+            F.greatest(
+                F.lit(-1.0), F.least(F.lit(1.0), F.round(F.corr("x", "y"), 12))
+            )
             * 1000000
         )
         .cast("bigint")
