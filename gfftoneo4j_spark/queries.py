@@ -69,6 +69,30 @@ def _scratch_dir(spark, prefix: str, sf_dir: str) -> str:
     return out
 
 
+# bounds(mid): the midpoint second of the events' time span
+_EVENT_MID_SQL = """bounds AS (
+  SELECT (CAST(floor(epoch(min(ts))) AS BIGINT)
+          + CAST(floor(epoch(max(ts))) AS BIGINT)) // 2 AS mid
+  FROM events
+)"""
+
+
+def _event_mid(ev):
+    """Spark twin of _EVENT_MID_SQL: one row (mid)."""
+    sec = F.unix_timestamp("ts").cast("bigint")
+    return ev.agg(
+        F.floor((F.min(sec) + F.max(sec)) / 2).cast("bigint").alias("mid")
+    )
+
+
+# toks(doc_id, w, p): each document's space-split tokens w, one row per
+# 1-based position p
+_TOKS_SQL = """toks AS (
+  SELECT doc_id, w, generate_subscripts(w, 1) AS p
+  FROM (SELECT doc_id, string_split(trim(text), ' ') AS w FROM documents)
+)"""
+
+
 # --------------------------------------------------------------------------
 # KG pipeline queries (SURVEY.md §2.9 composite + north_rule core)
 # --------------------------------------------------------------------------
@@ -137,6 +161,42 @@ def kg_triples(spark, sf_dir):
     t = transcripts_from_events(spark, sf_dir)
     d = alias_dict_from_events(spark, sf_dir)
     return build_kg(spark, t, d, extraction="pandas").triples
+
+
+def _kg_triples(spark, sf_dir):
+    """kg_triples, eager-checkpointed: the graph queries over the KG
+    read it more than once, and each read would re-run the build."""
+    return QUERIES["kg_triples"](spark, sf_dir).localCheckpoint(eager=True)
+
+
+def _kg_edges(spark, sf_dir):
+    """The KG as directed edges (u, v), subj -> obj, one per triple."""
+    t = _kg_triples(spark, sf_dir)
+    return t.select(F.col("subj").alias("u"), F.col("obj").alias("v"))
+
+
+def _kg_edges_sql(e: str = "edges") -> str:
+    """SQL twin of _kg_edges, deduped: the triples, {e}(u, v) and
+    nodes(node) CTEs, with no leading WITH."""
+    return f"""triples AS ({_KG_TRIPLES_SQL}),
+{e} AS (SELECT DISTINCT subj AS u, obj AS v FROM triples),
+nodes AS (
+  SELECT DISTINCT node FROM (
+    SELECT u AS node FROM {e} UNION ALL SELECT v AS node FROM {e}
+  )
+)"""
+
+
+# the KG's undirected simple edges und(s, t), as graph._undirected builds
+# them from _kg_edges
+_KG_UND_SQL = f"""
+WITH triples AS ({_KG_TRIPLES_SQL}),
+raw AS (SELECT subj AS u, obj AS v FROM triples),
+und AS (
+  SELECT DISTINCT s, t FROM (
+    SELECT u AS s, v AS t FROM raw UNION ALL SELECT v AS s, u AS t FROM raw
+  ) WHERE s IS NOT NULL AND t IS NOT NULL AND s <> t
+)"""
 
 
 @register(
@@ -776,15 +836,55 @@ def dedup_on_write(spark, sf_dir):
     ).dropDuplicates(["src", "dst"])
 
 
-@register(
-    "graph_sink_roundtrip",
-    """
-WITH e AS (
+# e(src, dst, type, half): lineitem as distinct order -> part edges of
+# type q<linenumber mod 3>, half the order key's parity
+_ORDER_PART_EDGES_SQL = """e AS (
   SELECT DISTINCT 'o:' || CAST(l_orderkey AS VARCHAR) AS src,
                   'p:' || CAST(l_partkey AS VARCHAR) AS dst,
-                  'q' || CAST(l_linenumber % 3 AS VARCHAR) AS type
+                  'q' || CAST(l_linenumber % 3 AS VARCHAR) AS type,
+                  l_orderkey % 2 AS half
   FROM lineitem
-)
+)"""
+
+# the two snapshots _commit_halves writes: v1 the even half, v2 all
+_SNAPSHOT_HALVES_SQL = f"""{_ORDER_PART_EDGES_SQL},
+v1 AS (SELECT DISTINCT src, dst, type FROM e WHERE half = 0),
+v2 AS (SELECT DISTINCT src, dst, type FROM e)"""
+
+
+def _order_part_edges(li):
+    """Spark twin of _ORDER_PART_EDGES_SQL, before the dedup."""
+    return li.select(
+        F.concat(F.lit("o:"), F.col("l_orderkey").cast("string")).alias("src"),
+        F.concat(F.lit("p:"), F.col("l_partkey").cast("string")).alias("dst"),
+        F.concat(
+            F.lit("q"), F.pmod(F.col("l_linenumber"), F.lit(3)).cast("string")
+        ).alias("type"),
+        F.pmod(F.col("l_orderkey"), F.lit(2)).alias("half"),
+    )
+
+
+def _commit_halves(spark, sf_dir, prefix: str) -> str:
+    """Commit two graph snapshots of the lineitem edges to a scratch
+    root and return it: v1 the even-order half, v2 all of them."""
+    from gfftoneo4j_spark.plans.graph_sink import write_graph_snapshot
+
+    edges = _order_part_edges(load_table(spark, sf_dir, "lineitem"))
+    nodes = edges.select(F.col("src").alias("node_id")).distinct().select(
+        "node_id", F.lit("order").alias("label")
+    )
+    out = _scratch_dir(spark, prefix, sf_dir)
+    write_graph_snapshot(
+        nodes, edges.where(F.col("half") == 0).drop("half"), out, "half"
+    )
+    write_graph_snapshot(nodes, edges.drop("half"), out, "full")
+    return out
+
+
+@register(
+    "graph_sink_roundtrip",
+    f"""
+WITH {_ORDER_PART_EDGES_SQL}
 SELECT 'edge:' || type AS kind, CAST(count(*) AS BIGINT) AS n FROM e GROUP BY type
 UNION ALL
 SELECT 'node:order', count(DISTINCT l_orderkey) FROM lineitem
@@ -802,13 +902,7 @@ def graph_sink_roundtrip(spark, sf_dir):
     from gfftoneo4j_spark.plans.graph_sink import read_graph, write_graph
 
     li = load_table(spark, sf_dir, "lineitem")
-    edges = li.select(
-        F.concat(F.lit("o:"), F.col("l_orderkey").cast("string")).alias("src"),
-        F.concat(F.lit("p:"), F.col("l_partkey").cast("string")).alias("dst"),
-        F.concat(
-            F.lit("q"), F.pmod(F.col("l_linenumber"), F.lit(3)).cast("string")
-        ).alias("type"),
-    )
+    edges = _order_part_edges(li).drop("half")
     nodes = (
         li.select(F.col("l_orderkey").cast("string").alias("key"))
         .distinct()
@@ -1037,103 +1131,82 @@ _EMB_EXPLODE_SQL = """
 """
 
 
-@register(
-    "embedding_topk",
-    f"""
-WITH ex AS ({_EMB_EXPLODE_SQL}),
-n AS (SELECT vec_id, sqrt(sum(x * x)) AS nrm FROM ex GROUP BY vec_id),
-q AS (SELECT * FROM ex WHERE vec_id < 5),
-dots AS (
-  SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id, sum(q.x * e.x) AS dp
-  FROM q JOIN ex e ON q.i = e.i AND e.vec_id <> q.vec_id
-  GROUP BY q.vec_id, e.vec_id
-),
-scored AS (
-  SELECT query_id, neighbor_id,
-         round(dp / (nq.nrm * ne.nrm), 3) AS score
-  FROM dots
-  JOIN n nq ON nq.vec_id = query_id
-  JOIN n ne ON ne.vec_id = neighbor_id
-)
-SELECT query_id, neighbor_id, score, rank FROM (
-  SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-       ORDER BY score DESC, neighbor_id) AS INTEGER) AS rank
-  FROM scored
-) WHERE rank <= 3
-""",
-)
-def embedding_topk(spark, sf_dir):
-    """Brute-force cosine top-k (exact ANN baseline): queries broadcast
-    against the corpus, dot products JVM-side via zip_with/aggregate."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    qids = emb.where(F.col("vec_id") < 5).select("vec_id")
-    return SIM.cosine_topk(emb, qids, k=3)
-
-
-@register(
-    "ann_lsh_topk",
-    f"""
-WITH ex AS ({_EMB_EXPLODE_SQL}),
-planes AS (SELECT vec_id - 5 AS plane_idx, i, x FROM ex WHERE vec_id BETWEEN 5 AND 8),
-bitdots AS (
+def _lsh_sql(plane_src: str | None = "ex") -> str:
+    """LSH sign-bit buckets of the exploded vectors in ex: the 4 fixed
+    hyperplanes planes(plane_idx, i, x) from vectors 5..8 of plane_src
+    (None: the caller defines planes), bitdots(vec_id, plane_idx, dp)
+    and buckets(id, bucket)."""
+    planes = "" if plane_src is None else (
+        f"planes AS (SELECT vec_id - 5 AS plane_idx, i, x FROM {plane_src}"
+        " WHERE vec_id BETWEEN 5 AND 8),\n"
+    )
+    return planes + """bitdots AS (
   SELECT e.vec_id, p.plane_idx, sum(e.x * p.x) AS dp
   FROM ex e JOIN planes p ON e.i = p.i
   GROUP BY e.vec_id, p.plane_idx
 ),
-buckets AS (
+buckets AS MATERIALIZED (
   SELECT vec_id AS id,
          CAST(sum(CASE WHEN dp > 0 THEN CAST(power(2, plane_idx) AS INTEGER) ELSE 0 END) AS INTEGER) AS bucket
   FROM bitdots GROUP BY vec_id
-),
-n AS (SELECT vec_id, sqrt(sum(x * x)) AS nrm FROM ex GROUP BY vec_id),
-q AS (SELECT ex.* FROM ex WHERE vec_id < 5),
-cand AS (
+)"""
+
+
+def _cosine_sql(src: str = "ex", p: str = "") -> str:
+    """Exact cosine prefix over the exploded vectors in src: norms
+    n{p}(vec_id, nrm), query vectors q{p} (vec_id < 5) and their dot
+    products dots{p}(query_id, neighbor_id, dp) with every other vector."""
+    return f"""n{p} AS (SELECT vec_id, sqrt(sum(x * x)) AS nrm FROM {src} GROUP BY vec_id),
+q{p} AS (SELECT * FROM {src} WHERE vec_id < 5),
+dots{p} AS (
+  SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id, sum(q.x * e.x) AS dp
+  FROM q{p} q JOIN {src} e ON q.i = e.i AND e.vec_id <> q.vec_id
+  GROUP BY q.vec_id, e.vec_id
+)"""
+
+
+def _scored_sql(dots: str = "dots", n: str = "n", name: str = "scored") -> str:
+    """{name}(query_id, neighbor_id, score): the 3-dp cosine of each
+    (query_id, neighbor_id, dp) row in dots, norms from n."""
+    return f"""{name} AS (
+  SELECT query_id, neighbor_id, round(dp / (nq.nrm * ne.nrm), 3) AS score
+  FROM {dots} JOIN {n} nq ON nq.vec_id = query_id JOIN {n} ne ON ne.vec_id = neighbor_id
+)"""
+
+
+def _top3_sql(scored: str = "scored") -> str:
+    """Each query's 3 best neighbors in scored, ties broken by id."""
+    return f"""SELECT query_id, neighbor_id, score, rank FROM (
+  SELECT *, CAST(row_number() OVER (PARTITION BY query_id
+       ORDER BY score DESC, neighbor_id) AS INTEGER) AS rank
+  FROM {scored}
+) WHERE rank <= 3"""
+
+
+# single-probe LSH candidates: every other vector in the query's bucket
+_LSH_CAND_SQL = """cand AS (
   SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id, sum(q.x * e.x) AS dp
   FROM q JOIN buckets bq ON bq.id = q.vec_id
   JOIN buckets be ON be.bucket = bq.bucket AND be.id <> q.vec_id
   JOIN ex e ON e.vec_id = be.id AND e.i = q.i
   GROUP BY q.vec_id, e.vec_id
-),
-scored AS (
-  SELECT query_id, neighbor_id, round(dp / (nq.nrm * ne.nrm), 3) AS score
-  FROM cand JOIN n nq ON nq.vec_id = query_id JOIN n ne ON ne.vec_id = neighbor_id
-)
-SELECT query_id, neighbor_id, score, rank FROM (
-  SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-       ORDER BY score DESC, neighbor_id) AS INTEGER) AS rank
-  FROM scored
-) WHERE rank <= 3
-""",
-)
-def ann_lsh_topk(spark, sf_dir):
-    """LSH-bucketed ANN (the 100 TB scale path): sign-bit buckets from 4
-    fixed hyperplanes (vectors 5..8), candidates restricted to the
-    query's bucket."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    qids = emb.where(F.col("vec_id") < 5).select("vec_id")
-    planes = emb.where(F.col("vec_id").between(5, 8)).select(
-        (F.col("vec_id") - 5).cast("int").alias("plane_idx"),
-        F.col("embedding").alias("plane"),
-    )
-    return SIM.lsh_topk(emb, qids, planes, k=3)
+)"""
 
+# exact re-rank of candidate pairs cand(query_id, neighbor_id): the top-3
+_RERANK_SQL = f"""dots AS (
+  SELECT c.query_id, c.neighbor_id, sum(q.x * e.x) AS dp
+  FROM cand c
+  JOIN ex q ON q.vec_id = c.query_id
+  JOIN ex e ON e.vec_id = c.neighbor_id AND e.i = q.i
+  GROUP BY c.query_id, c.neighbor_id
+),
+{_scored_sql()}
+{_top3_sql()}
+"""
 
-@register(
-    "ann_multiprobe_topk",
-    f"""
-WITH ex AS ({_EMB_EXPLODE_SQL}),
-planes AS (SELECT vec_id - 5 AS plane_idx, i, x FROM ex WHERE vec_id BETWEEN 5 AND 8),
-bitdots AS (
-  SELECT e.vec_id, p.plane_idx, sum(e.x * p.x) AS dp
-  FROM ex e JOIN planes p ON e.i = p.i
-  GROUP BY e.vec_id, p.plane_idx
-),
-buckets AS (
-  SELECT vec_id AS id,
-         CAST(sum(CASE WHEN dp > 0 THEN CAST(power(2, plane_idx) AS INTEGER) ELSE 0 END) AS INTEGER) AS bucket
-  FROM bitdots GROUP BY vec_id
-),
-qprobes AS (
+# multi-probe over buckets: the home bucket plus the flips across each
+# query's 2 lowest-margin planes, then the exact re-rank
+_MULTIPROBE_SQL = f"""qprobes AS (
   SELECT b.id AS query_id, b.bucket FROM buckets b WHERE b.id < 5
   UNION ALL
   SELECT d.vec_id AS query_id,
@@ -1151,23 +1224,61 @@ cand AS (
   JOIN buckets be ON be.bucket = qp.bucket AND be.id <> qp.query_id
 ),
 n AS (SELECT vec_id, sqrt(sum(x * x)) AS nrm FROM ex GROUP BY vec_id),
-dots AS (
-  SELECT c.query_id, c.neighbor_id, sum(q.x * e.x) AS dp
-  FROM cand c
-  JOIN ex q ON q.vec_id = c.query_id
-  JOIN ex e ON e.vec_id = c.neighbor_id AND e.i = q.i
-  GROUP BY c.query_id, c.neighbor_id
-),
-scored AS (
-  SELECT query_id, neighbor_id, round(dp / (nq.nrm * ne.nrm), 3) AS score
-  FROM dots JOIN n nq ON nq.vec_id = query_id JOIN n ne ON ne.vec_id = neighbor_id
-)
-SELECT query_id, neighbor_id, score, rank FROM (
-  SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-       ORDER BY score DESC, neighbor_id) AS INTEGER) AS rank
-  FROM scored
-) WHERE rank <= 3
+{_RERANK_SQL}"""
+
+
+def _lsh_planes(emb):
+    """Spark twin of _lsh_sql's planes: vectors 5..8 as (plane_idx, plane)."""
+    return emb.where(F.col("vec_id").between(5, 8)).select(
+        (F.col("vec_id") - 5).cast("int").alias("plane_idx"),
+        F.col("embedding").alias("plane"),
+    )
+
+
+@register(
+    "embedding_topk",
+    f"""
+WITH ex AS ({_EMB_EXPLODE_SQL}),
+{_cosine_sql()},
+{_scored_sql()}
+{_top3_sql()}
 """,
+)
+def embedding_topk(spark, sf_dir):
+    """Brute-force cosine top-k (exact ANN baseline): queries broadcast
+    against the corpus, dot products JVM-side via zip_with/aggregate."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    qids = emb.where(F.col("vec_id") < 5).select("vec_id")
+    return SIM.cosine_topk(emb, qids, k=3)
+
+
+@register(
+    "ann_lsh_topk",
+    f"""
+WITH ex AS ({_EMB_EXPLODE_SQL}),
+{_lsh_sql()},
+{_cosine_sql()},
+{_LSH_CAND_SQL},
+{_scored_sql("cand")}
+{_top3_sql()}
+""",
+)
+def ann_lsh_topk(spark, sf_dir):
+    """LSH-bucketed ANN (the 100 TB scale path): sign-bit buckets from 4
+    fixed hyperplanes (vectors 5..8), candidates restricted to the
+    query's bucket."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    qids = emb.where(F.col("vec_id") < 5).select("vec_id")
+    planes = _lsh_planes(emb)
+    return SIM.lsh_topk(emb, qids, planes, k=3)
+
+
+@register(
+    "ann_multiprobe_topk",
+    f"""
+WITH ex AS ({_EMB_EXPLODE_SQL}),
+{_lsh_sql()},
+{_MULTIPROBE_SQL}""",
 )
 def ann_multiprobe_topk(spark, sf_dir):
     """Multi-probe ANN: beyond the home bucket, each query probes the
@@ -1179,10 +1290,7 @@ def ann_multiprobe_topk(spark, sf_dir):
     grows at most 3x over single-probe."""
     emb = load_table(spark, sf_dir, "embeddings")
     qids = emb.where(F.col("vec_id") < 5).select("vec_id")
-    planes = emb.where(F.col("vec_id").between(5, 8)).select(
-        (F.col("vec_id") - 5).cast("int").alias("plane_idx"),
-        F.col("embedding").alias("plane"),
-    )
+    planes = _lsh_planes(emb)
     return SIM.lsh_topk(emb, qids, planes, k=3, n_probes=2)
 
 
@@ -1205,51 +1313,8 @@ planes AS (
        (SELECT DISTINCT i FROM ex) dims
   WHERE j.p < nb.b
 ),
-bitdots AS (
-  SELECT e.vec_id, p.plane_idx, sum(e.x * p.x) AS dp
-  FROM ex e JOIN planes p ON e.i = p.i
-  GROUP BY e.vec_id, p.plane_idx
-),
-buckets AS (
-  SELECT vec_id AS id,
-         CAST(sum(CASE WHEN dp > 0 THEN CAST(power(2, plane_idx) AS INTEGER) ELSE 0 END) AS INTEGER) AS bucket
-  FROM bitdots GROUP BY vec_id
-),
-qprobes AS (
-  SELECT b.id AS query_id, b.bucket FROM buckets b WHERE b.id < 5
-  UNION ALL
-  SELECT d.vec_id AS query_id,
-         xor(b.bucket, CAST(power(2, d.plane_idx) AS INTEGER)) AS bucket
-  FROM (
-    SELECT vec_id, plane_idx,
-           row_number() OVER (PARTITION BY vec_id ORDER BY abs(dp), plane_idx) AS mr
-    FROM bitdots WHERE vec_id < 5
-  ) d JOIN buckets b ON b.id = d.vec_id
-  WHERE d.mr <= 2
-),
-cand AS (
-  SELECT DISTINCT qp.query_id, be.id AS neighbor_id
-  FROM qprobes qp
-  JOIN buckets be ON be.bucket = qp.bucket AND be.id <> qp.query_id
-),
-n AS (SELECT vec_id, sqrt(sum(x * x)) AS nrm FROM ex GROUP BY vec_id),
-dots AS (
-  SELECT c.query_id, c.neighbor_id, sum(q.x * e.x) AS dp
-  FROM cand c
-  JOIN ex q ON q.vec_id = c.query_id
-  JOIN ex e ON e.vec_id = c.neighbor_id AND e.i = q.i
-  GROUP BY c.query_id, c.neighbor_id
-),
-scored AS (
-  SELECT query_id, neighbor_id, round(dp / (nq.nrm * ne.nrm), 3) AS score
-  FROM dots JOIN n nq ON nq.vec_id = query_id JOIN n ne ON ne.vec_id = neighbor_id
-)
-SELECT query_id, neighbor_id, score, rank FROM (
-  SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-       ORDER BY score DESC, neighbor_id) AS INTEGER) AS rank
-  FROM scored
-) WHERE rank <= 3
-""",
+{_lsh_sql(None)},
+{_MULTIPROBE_SQL}""",
 )
 def ann_scaled_topk(spark, sf_dir):
     """Corpus-SCALED multi-probe ANN — the full 100 TB blocking logic
@@ -1287,17 +1352,7 @@ ex AS (
   FROM corpus
 ),
 pl AS ({_EMB_EXPLODE_SQL}),
-planes AS (SELECT vec_id - 5 AS plane_idx, i, x FROM pl WHERE vec_id BETWEEN 5 AND 8),
-bitdots AS (
-  SELECT e.vec_id, p.plane_idx, sum(e.x * p.x) AS dp
-  FROM ex e JOIN planes p ON e.i = p.i
-  GROUP BY e.vec_id, p.plane_idx
-),
-buckets AS (
-  SELECT vec_id AS id,
-         CAST(sum(CASE WHEN dp > 0 THEN CAST(power(2, plane_idx) AS INTEGER) ELSE 0 END) AS INTEGER) AS bucket
-  FROM bitdots GROUP BY vec_id
-),
+{_lsh_sql("pl")},
 n AS (SELECT vec_id, sqrt(sum(x * x)) AS nrm FROM ex GROUP BY vec_id),
 pairs AS (
   SELECT a.id AS id_a, b.id AS id_b
@@ -1324,10 +1379,7 @@ def embedding_near_dup(spark, sf_dir):
         (F.col("vec_id") + 1000000).alias("vec_id"), "embedding"
     )
     corpus = emb.unionByName(dups)
-    planes = emb.where(F.col("vec_id").between(5, 8)).select(
-        (F.col("vec_id") - 5).cast("int").alias("plane_idx"),
-        F.col("embedding").alias("plane"),
-    )
+    planes = _lsh_planes(emb)
     return SIM.near_dup_pairs(corpus, planes, threshold=0.999)
 
 
@@ -1562,7 +1614,7 @@ def graph_degree_distribution(spark, sf_dir):
     per-partition inside the job, and the two union branches racing on
     uncached partitions recompute extraction->linking->CC upstream
     (same measured pathology as graph_pagerank's docstring)."""
-    t = QUERIES["kg_triples"](spark, sf_dir).localCheckpoint(eager=True)
+    t = _kg_triples(spark, sf_dir)
     nodes = t.select(F.col("subj").alias("node")).unionAll(
         t.select(F.col("obj").alias("node"))
     )
@@ -1601,8 +1653,7 @@ def graph_khop(spark, sf_dir):
     stages race on uncached partitions and recompute the whole
     upstream pipeline several times (round-2 bench: 13.8s wall vs
     5.3s for kg_triples itself, the recompute tax)."""
-    t = QUERIES["kg_triples"](spark, sf_dir).localCheckpoint(eager=True)
-    fwd = t.select(F.col("subj").alias("u"), F.col("obj").alias("v"))
+    fwd = _kg_edges(spark, sf_dir)
     # the undirected edge set fans into FOUR consumers (seeds + three
     # frontier joins); without its own snapshot each consumer re-runs
     # the 2|E|-row union+distinct shuffle from t
@@ -1797,25 +1848,7 @@ cand AS (
   SELECT p.query_id, a.id AS neighbor_id
   FROM probes p JOIN assign a ON a.c_id = p.c_id AND a.id <> p.query_id
 ),
-dots AS (
-  SELECT c.query_id, c.neighbor_id, sum(q.x * e.x) AS dp
-  FROM cand c
-  JOIN ex q ON q.vec_id = c.query_id
-  JOIN ex e ON e.vec_id = c.neighbor_id AND e.i = q.i
-  GROUP BY c.query_id, c.neighbor_id
-),
-scored AS (
-  SELECT query_id, neighbor_id, round(dp / (nq.nrm * ne.nrm), 3) AS score
-  FROM dots
-  JOIN n nq ON nq.vec_id = query_id
-  JOIN n ne ON ne.vec_id = neighbor_id
-)
-SELECT query_id, neighbor_id, score, rank FROM (
-  SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-       ORDER BY score DESC, neighbor_id) AS INTEGER) AS rank
-  FROM scored
-) WHERE rank <= 3
-""",
+{_RERANK_SQL}""",
 )
 def ann_ivf_topk(spark, sf_dir):
     """IVF-flat ANN with IN-ENGINE centroid training: 2 rounds of
@@ -1898,13 +1931,7 @@ def ngram_jaccard_banded(spark, sf_dir):
 @register(
     "graph_pagerank",
     f"""
-WITH triples AS ({_KG_TRIPLES_SQL}),
-edges AS (SELECT DISTINCT subj AS u, obj AS v FROM triples),
-nodes AS (
-  SELECT DISTINCT node FROM (
-    SELECT u AS node FROM edges UNION ALL SELECT v AS node FROM edges
-  )
-),
+WITH {_kg_edges_sql()},
 outdeg AS (SELECT u, CAST(count(*) AS BIGINT) AS deg FROM edges GROUP BY u),
 r0 AS (SELECT node, CAST(1000000 AS BIGINT) AS r FROM nodes),
 c1 AS (
@@ -1950,8 +1977,7 @@ def graph_pagerank(spark, sf_dir):
     (measured 126s -> ~50s at sf0.01 from this one flag)."""
     from gfftoneo4j_spark.operators.graph import pagerank_fixed_point
 
-    t = QUERIES["kg_triples"](spark, sf_dir).localCheckpoint(eager=True)
-    edges = t.select(F.col("subj").alias("u"), F.col("obj").alias("v"))
+    edges = _kg_edges(spark, sf_dir)
     return pagerank_fixed_point(edges, iters=3)
 
 
@@ -1971,14 +1997,8 @@ l{K} AS (
 
 
 _LPA_SQL = (
-    f"""
-WITH triples AS ({_KG_TRIPLES_SQL}),
-raw AS (SELECT subj AS u, obj AS v FROM triples),
-und AS (
-  SELECT DISTINCT s, t FROM (
-    SELECT u AS s, v AS t FROM raw UNION ALL SELECT v AS s, u AS t FROM raw
-  ) WHERE s IS NOT NULL AND t IS NOT NULL AND s <> t
-),
+    _KG_UND_SQL
+    + """,
 l0 AS (SELECT DISTINCT s AS node, s AS label FROM und),"""
     + ",".join(_LPA_ROUND_SQL.format(K=k, P=k - 1) for k in (1, 2, 3))
     + """
@@ -2000,8 +2020,7 @@ def graph_communities(spark, sf_dir):
     (test_label_propagation.py)."""
     from gfftoneo4j_spark.operators.graph import label_propagation
 
-    t = QUERIES["kg_triples"](spark, sf_dir).localCheckpoint(eager=True)
-    edges = t.select(F.col("subj").alias("u"), F.col("obj").alias("v"))
+    edges = _kg_edges(spark, sf_dir)
     return label_propagation(edges, iters=3)
 
 
@@ -2597,9 +2616,8 @@ def _circulant(spark, sf_dir, steps=("+1", "*2", "*3")):
     documents' id space: one edge i -> step(i) mod N per id and step,
     where a step is "+k" (i + k), "*k" (i * k) or "-k" (i + N - k).
     Both engines rebuild it bit-identically, and the modular wrap
-    gives it genuine triangles. The default steps (+1, *2, *3) are
-    _CIRCULANT_SQL's; _ADDITIVE (+1, +2, +3, *2) is the triangle-rich
-    variant.
+    gives it genuine triangles. _ADDITIVE (+1, +2, +3, *2) is the
+    triangle-rich variant of the default (+1, *2, *3).
 
     Returns (ids, edges): ids (i, m) is the SQL twins' ``base`` — one
     row per document, i = doc_id % m with m the document count — and
@@ -2619,51 +2637,82 @@ def _circulant(spark, sf_dir, steps=("+1", "*2", "*3")):
     return ids, edges
 
 
-_CIRCULANT_SQL = """
-WITH m AS (SELECT count(*) AS m FROM documents),
+def _circulant_sql(steps=("+1", "*2", "*3")) -> str:
+    """SQL twin of _circulant(steps): the m, base and raw(s, t) CTE
+    bodies, with no leading WITH so recursive twins can use it too."""
+    succ = {"+": "i + {}", "*": "i * {}", "-": "i + m - {}"}
+    raw = "\n  UNION ALL ".join(
+        f"SELECT i AS s, ({succ[st[0]].format(int(st[1:]))}) % m AS t FROM base"
+        for st in steps
+    )
+    return f"""m AS (SELECT count(*) AS m FROM documents),
 base AS (SELECT doc_id % m.m AS i, m.m AS m FROM documents, m),
 raw AS (
-  SELECT i AS s, (i + 1) % m AS t FROM base
-  UNION ALL SELECT i, (i * 2) % m FROM base
-  UNION ALL SELECT i, (i * 3) % m FROM base
-)
-"""
+  {raw}
+)"""
+
+
+# und(s, t): raw in both directions, self-loops dropped, deduped — the
+# SQL twin of graph._undirected
+_UND_SQL = """und AS MATERIALIZED (
+  SELECT s, t FROM raw WHERE s <> t UNION SELECT t, s FROM raw WHERE s <> t
+)"""
+
+
+def _canonical_sql(name: str = "und") -> str:
+    """{name}(a, b), a < b: raw's distinct undirected edges, self-loops
+    dropped — the SQL twin of graph._canonical_undirected."""
+    return f"""{name} AS MATERIALIZED (
+  SELECT DISTINCT least(s, t) AS a, greatest(s, t) AS b FROM raw WHERE s <> t
+)"""
+
+
+def _triangle_sql(p: str, rel: str) -> str:
+    """Degree-oriented triangle enumeration over the undirected edge
+    relation `rel`(a, b), a < b: the {p}deg(n, d), {p}keyed,
+    {p}o(x, y, dy), {p}w and {p}t(x, y, z) CTEs, one row of {p}t per
+    triangle. Orienting each edge from the lower (degree, id) end
+    bounds the wedge fan-out by ~sqrt(2m) under hub skew."""
+    return f"""{p}deg AS MATERIALIZED (
+  SELECT n, CAST(count(*) AS BIGINT) AS d FROM (
+    SELECT a AS n FROM {rel} UNION ALL SELECT b AS n FROM {rel}
+  ) GROUP BY n
+),
+{p}keyed AS (
+  SELECT u.a, u.b, x.d AS da, y.d AS db
+  FROM {rel} u JOIN {p}deg x ON x.n = u.a JOIN {p}deg y ON y.n = u.b
+),
+{p}o AS MATERIALIZED (
+  SELECT CASE WHEN da < db OR (da = db AND a < b) THEN a ELSE b END AS x,
+         CASE WHEN da < db OR (da = db AND a < b) THEN b ELSE a END AS y,
+         CASE WHEN da < db OR (da = db AND a < b) THEN db ELSE da END AS dy
+  FROM {p}keyed
+),
+{p}w AS (
+  SELECT e1.x, e1.y, e2.y AS z FROM {p}o e1 JOIN {p}o e2 ON e1.x = e2.x
+  WHERE e1.dy < e2.dy OR (e1.dy = e2.dy AND e1.y < e2.y)
+),
+{p}t AS MATERIALIZED (
+  SELECT w.x, w.y, w.z FROM {p}w w JOIN {p}o c ON c.x = w.y AND c.y = w.z
+)"""
+
+
+# per-node triangle counts tc(node, n_triangles) over the default circulant
+_TRIANGLES_SQL = f"""
+WITH {_circulant_sql()},
+{_canonical_sql()},
+{_triangle_sql("", "und")},
+tc AS (
+  SELECT node, CAST(count(*) AS BIGINT) AS n_triangles FROM (
+    SELECT x AS node FROM t UNION ALL SELECT y FROM t UNION ALL SELECT z FROM t
+  ) GROUP BY node
+)"""
 
 
 @register(
     "graph_clustering_coeff",
-    f"""
-{_CIRCULANT_SQL},
-und AS (
-  SELECT DISTINCT least(s, t) AS a, greatest(s, t) AS b FROM raw WHERE s <> t
-),
-deg AS (
-  SELECT n, CAST(count(*) AS BIGINT) AS d FROM (
-    SELECT a AS n FROM und UNION ALL SELECT b AS n FROM und
-  ) GROUP BY n
-),
-keyed AS (
-  SELECT u.a, u.b, x.d AS da, y.d AS db
-  FROM und u JOIN deg x ON x.n = u.a JOIN deg y ON y.n = u.b
-),
-o AS (
-  SELECT CASE WHEN da < db OR (da = db AND a < b) THEN a ELSE b END AS x,
-         CASE WHEN da < db OR (da = db AND a < b) THEN b ELSE a END AS y,
-         CASE WHEN da < db OR (da = db AND a < b) THEN db ELSE da END AS dy
-  FROM keyed
-),
-w AS (
-  SELECT e1.x, e1.y, e2.y AS z FROM o e1 JOIN o e2 ON e1.x = e2.x
-  WHERE e1.dy < e2.dy OR (e1.dy = e2.dy AND e1.y < e2.y)
-),
-t AS (SELECT w.x, w.y, w.z FROM w JOIN o c ON c.x = w.y AND c.y = w.z),
-tc AS (
-  SELECT node, CAST(count(*) AS BIGINT) AS n_triangles FROM (
-    SELECT x AS node FROM t
-    UNION ALL SELECT y FROM t
-    UNION ALL SELECT z FROM t
-  ) GROUP BY node
-)
+    _TRIANGLES_SQL
+    + """
 SELECT d.n AS node, coalesce(tc.n_triangles, 0) AS n_triangles, d.d AS degree,
        round(2.0 * coalesce(tc.n_triangles, 0) / (d.d * (d.d - 1)), 4) AS coeff
 FROM deg d LEFT JOIN tc ON tc.node = d.n
@@ -2676,15 +2725,13 @@ def graph_clustering_coeff(spark, sf_dir):
     neighborhood is to a clique. Triangles from the degree-oriented
     operator, degrees from one combinable aggregation, one left join;
     degree-1 nodes excluded (undefined denominator)."""
-    from gfftoneo4j_spark.operators.graph import triangle_counts
+    from gfftoneo4j_spark.operators.graph import (
+        _canonical_undirected,
+        triangle_counts,
+    )
 
     _, raw = _circulant(spark, sf_dir)
-    a, b = F.least("s", "t"), F.greatest("s", "t")
-    und = (
-        raw.select(a.alias("a"), b.alias("b"))
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    und = _canonical_undirected(raw, "s", "t")
     deg = (
         und.select(F.col("a").alias("node"))
         .unionAll(und.select(F.col("b").alias("node")))
@@ -2708,44 +2755,7 @@ def graph_clustering_coeff(spark, sf_dir):
 
 
 @register(
-    "graph_triangles",
-    """
-WITH m AS (SELECT count(*) AS m FROM documents),
-base AS (SELECT doc_id % m.m AS i, m.m AS m FROM documents, m),
-raw AS (
-  SELECT i AS s, (i + 1) % m AS t FROM base
-  UNION ALL SELECT i, (i * 2) % m FROM base
-  UNION ALL SELECT i, (i * 3) % m FROM base
-),
-und AS (
-  SELECT DISTINCT least(s, t) AS a, greatest(s, t) AS b FROM raw WHERE s <> t
-),
-deg AS (
-  SELECT n, CAST(count(*) AS BIGINT) AS d FROM (
-    SELECT a AS n FROM und UNION ALL SELECT b AS n FROM und
-  ) GROUP BY n
-),
-keyed AS (
-  SELECT u.a, u.b, x.d AS da, y.d AS db
-  FROM und u JOIN deg x ON x.n = u.a JOIN deg y ON y.n = u.b
-),
-o AS (
-  SELECT CASE WHEN da < db OR (da = db AND a < b) THEN a ELSE b END AS x,
-         CASE WHEN da < db OR (da = db AND a < b) THEN b ELSE a END AS y,
-         CASE WHEN da < db OR (da = db AND a < b) THEN db ELSE da END AS dy
-  FROM keyed
-),
-w AS (
-  SELECT e1.x, e1.y, e2.y AS z FROM o e1 JOIN o e2 ON e1.x = e2.x
-  WHERE e1.dy < e2.dy OR (e1.dy = e2.dy AND e1.y < e2.y)
-),
-t AS (SELECT w.x, w.y, w.z FROM w JOIN o c ON c.x = w.y AND c.y = w.z)
-SELECT node, CAST(count(*) AS BIGINT) AS n_triangles FROM (
-  SELECT x AS node FROM t
-  UNION ALL SELECT y FROM t
-  UNION ALL SELECT z FROM t
-) GROUP BY node
-""",
+    "graph_triangles", _TRIANGLES_SQL + "\nSELECT node, n_triangles FROM tc\n"
 )
 def graph_triangles(spark, sf_dir):
     """Per-node triangle counts via degree-ordered orientation
@@ -3188,18 +3198,9 @@ def window_rank_family(spark, sf_dir):
 # Bounded single-source BFS distances
 # --------------------------------------------------------------------------
 
-_BFS_SQL = """
-WITH RECURSIVE m AS (SELECT count(*) AS m FROM documents),
-base AS (SELECT doc_id % m.m AS i, m.m AS m FROM documents, m),
-raw AS (
-  SELECT i AS s, (i + 1) % m AS t FROM base
-  UNION ALL SELECT i, (i * 2) % m FROM base
-  UNION ALL SELECT i, (i * 3) % m FROM base
-),
-und AS (
-  SELECT s, t FROM raw WHERE s <> t
-  UNION SELECT t, s FROM raw WHERE s <> t
-),
+_BFS_SQL = f"""
+WITH RECURSIVE {_circulant_sql()},
+{_UND_SQL},
 bfs AS (
   SELECT CAST(0 AS BIGINT) AS node, 0 AS d
   UNION
@@ -3389,19 +3390,11 @@ def ewma_features(spark, sf_dir):
 # Snapshot sink: commit + time travel under the gate
 # --------------------------------------------------------------------------
 
-_SNAP_SQL = """
-WITH e AS (
-  SELECT DISTINCT 'o:' || CAST(l_orderkey AS VARCHAR) AS src,
-                  'p:' || CAST(l_partkey AS VARCHAR) AS dst,
-                  'q' || CAST(l_linenumber % 3 AS VARCHAR) AS type,
-                  l_orderkey % 2 AS half
-  FROM lineitem
-)
-SELECT 'v1' AS snapshot, type, CAST(count(*) AS BIGINT) AS n
-FROM (SELECT DISTINCT src, dst, type FROM e WHERE half = 0) GROUP BY type
+_SNAP_SQL = f"""
+WITH {_SNAPSHOT_HALVES_SQL}
+SELECT 'v1' AS snapshot, type, CAST(count(*) AS BIGINT) AS n FROM v1 GROUP BY type
 UNION ALL
-SELECT 'v2', type, CAST(count(*) AS BIGINT) AS n
-FROM (SELECT DISTINCT src, dst, type FROM e) GROUP BY type
+SELECT 'v2', type, CAST(count(*) AS BIGINT) AS n FROM v2 GROUP BY type
 """
 
 
@@ -3415,28 +3408,9 @@ def snapshot_time_travel(spark, sf_dir):
     a past snapshot is bit-stable after later commits. The Iceberg
     commit model over plain parquet; `writeTo(...).append()` is the
     drop-in when that runtime exists on the cluster."""
-    from gfftoneo4j_spark.plans.graph_sink import (
-        read_graph_snapshot,
-        write_graph_snapshot,
-    )
+    from gfftoneo4j_spark.plans.graph_sink import read_graph_snapshot
 
-    li = load_table(spark, sf_dir, "lineitem")
-    edges = li.select(
-        F.concat(F.lit("o:"), F.col("l_orderkey").cast("string")).alias("src"),
-        F.concat(F.lit("p:"), F.col("l_partkey").cast("string")).alias("dst"),
-        F.concat(
-            F.lit("q"), F.pmod(F.col("l_linenumber"), F.lit(3)).cast("string")
-        ).alias("type"),
-        F.pmod(F.col("l_orderkey"), F.lit(2)).alias("half"),
-    )
-    nodes = edges.select(F.col("src").alias("node_id")).distinct().select(
-        "node_id", F.lit("order").alias("label")
-    )
-    out = _scratch_dir(spark, "kg_gate_snap", sf_dir)
-    write_graph_snapshot(
-        nodes, edges.where(F.col("half") == 0).drop("half"), out, "half"
-    )
-    write_graph_snapshot(nodes, edges.drop("half"), out, "full")
+    out = _commit_halves(spark, sf_dir, "kg_gate_snap")
 
     def counts(g, tag):
         return (
@@ -3940,16 +3914,8 @@ def bitwise_aggs(spark, sf_dir):
 # Snapshot diff (audit the change between two graph versions)
 # --------------------------------------------------------------------------
 
-_SNAP_DIFF_SQL = """
-WITH e AS (
-  SELECT DISTINCT 'o:' || CAST(l_orderkey AS VARCHAR) AS src,
-                  'p:' || CAST(l_partkey AS VARCHAR) AS dst,
-                  'q' || CAST(l_linenumber % 3 AS VARCHAR) AS type,
-                  l_orderkey % 2 AS half
-  FROM lineitem
-),
-v1 AS (SELECT DISTINCT src, dst, type FROM e WHERE half = 0),
-v2 AS (SELECT DISTINCT src, dst, type FROM e)
+_SNAP_DIFF_SQL = f"""
+WITH {_SNAPSHOT_HALVES_SQL}
 SELECT 'A' AS op, src, dst, type FROM (
   SELECT src, dst, type FROM v2 EXCEPT SELECT src, dst, type FROM v1
 )
@@ -3968,28 +3934,9 @@ def snapshot_diff(spark, sf_dir):
     reports added/removed edges via two anti-joins — here every diff
     row is an 'A' (v1 ⊂ v2), and the oracle's EXCEPT twin agrees
     edge-for-edge."""
-    from gfftoneo4j_spark.plans.graph_sink import (
-        diff_snapshots,
-        write_graph_snapshot,
-    )
+    from gfftoneo4j_spark.plans.graph_sink import diff_snapshots
 
-    li = load_table(spark, sf_dir, "lineitem")
-    edges = li.select(
-        F.concat(F.lit("o:"), F.col("l_orderkey").cast("string")).alias("src"),
-        F.concat(F.lit("p:"), F.col("l_partkey").cast("string")).alias("dst"),
-        F.concat(
-            F.lit("q"), F.pmod(F.col("l_linenumber"), F.lit(3)).cast("string")
-        ).alias("type"),
-        F.pmod(F.col("l_orderkey"), F.lit(2)).alias("half"),
-    )
-    nodes = edges.select(F.col("src").alias("node_id")).distinct().select(
-        "node_id", F.lit("order").alias("label")
-    )
-    out = _scratch_dir(spark, "kg_gate_snapdiff", sf_dir)
-    write_graph_snapshot(
-        nodes, edges.where(F.col("half") == 0).drop("half"), out, "half"
-    )
-    write_graph_snapshot(nodes, edges.drop("half"), out, "full")
+    out = _commit_halves(spark, sf_dir, "kg_gate_snapdiff")
     return diff_snapshots(spark, out, 1, 2)
 
 
@@ -4043,14 +3990,8 @@ def conv_features(spark, sf_dir):
 # Deterministic neighbor sampling (GraphSAGE-style fan-out cap)
 # --------------------------------------------------------------------------
 
-_NEIGHBOR_SAMPLE_SQL = """
-WITH m AS (SELECT count(*) AS m FROM documents),
-base AS (SELECT doc_id % m.m AS i, m.m AS m FROM documents, m),
-raw AS (
-  SELECT i AS s, (i + 1) % m AS t FROM base
-  UNION ALL SELECT i, (i * 2) % m FROM base
-  UNION ALL SELECT i, (i * 3) % m FROM base
-),
+_NEIGHBOR_SAMPLE_SQL = f"""
+WITH {_circulant_sql()},
 e AS (SELECT DISTINCT s, t FROM raw WHERE s <> t),
 r AS (
   SELECT s, t,
@@ -4476,14 +4417,8 @@ def daily_new_users(spark, sf_dir):
 # Graph reciprocity
 # --------------------------------------------------------------------------
 
-_RECIPROCITY_SQL = """
-WITH m AS (SELECT count(*) AS m FROM documents),
-base AS (SELECT doc_id % m.m AS i, m.m AS m FROM documents, m),
-raw AS (
-  SELECT i AS s, (i + 1) % m AS t FROM base
-  UNION ALL SELECT i, (i * 2) % m FROM base
-  UNION ALL SELECT i, (i * 3) % m FROM base
-),
+_RECIPROCITY_SQL = f"""
+WITH {_circulant_sql()},
 e AS (SELECT DISTINCT s, t FROM raw WHERE s <> t)
 SELECT CAST(count(*) AS BIGINT) AS n_edges,
        CAST(count(*) FILTER (WHERE EXISTS (
@@ -5136,16 +5071,6 @@ def doc_chunks(spark, sf_dir):
     )
 
 
-_UND_EDGES_SQL = """
-WITH triples AS ({triples}),
-raw AS (SELECT subj AS u, obj AS v FROM triples),
-und AS (
-  SELECT DISTINCT s, t FROM (
-    SELECT u AS s, v AS t FROM raw UNION ALL SELECT v AS s, u AS t FROM raw
-  ) WHERE s IS NOT NULL AND t IS NOT NULL AND s <> t
-)"""
-
-
 _KCORE_ROUND_SQL = """
 d{K} AS (SELECT s, count(*) AS deg FROM e{P} GROUP BY s),
 k{K} AS (SELECT s FROM d{K} WHERE deg >= 4),
@@ -5156,7 +5081,7 @@ e{K} AS (
 
 
 _KCORE_SQL = (
-    _UND_EDGES_SQL.replace("{triples}", _KG_TRIPLES_SQL)
+    _KG_UND_SQL
     + ",\ne0 AS MATERIALIZED (SELECT s, t FROM und),"
     + ",".join(_KCORE_ROUND_SQL.format(K=k, P=k - 1) for k in (1, 2, 3))
     + """
@@ -5175,13 +5100,12 @@ def graph_kcore(spark, sf_dir):
     on first."""
     from gfftoneo4j_spark.operators.graph import kcore_peel
 
-    t = QUERIES["kg_triples"](spark, sf_dir).localCheckpoint(eager=True)
-    edges = t.select(F.col("subj").alias("u"), F.col("obj").alias("v"))
+    edges = _kg_edges(spark, sf_dir)
     return kcore_peel(edges, k=4, rounds=3)
 
 
 _LINKPRED_SQL = (
-    _UND_EDGES_SQL.replace("{triples}", _KG_TRIPLES_SQL)
+    _KG_UND_SQL
     + """,
 deg AS (SELECT s, count(*) AS deg FROM und GROUP BY s),
 thin AS (
@@ -5217,8 +5141,7 @@ def link_prediction_q(spark, sf_dir):
     enrichment."""
     from gfftoneo4j_spark.operators.graph import link_prediction
 
-    t = QUERIES["kg_triples"](spark, sf_dir).localCheckpoint(eager=True)
-    edges = t.select(F.col("subj").alias("u"), F.col("obj").alias("v"))
+    edges = _kg_edges(spark, sf_dir)
     return link_prediction(edges, min_common=2, hub_cap=64)
 
 
@@ -5254,13 +5177,7 @@ def stream_interval_join_left(spark, sf_dir):
 
 
 _PPR_SQL = f"""
-WITH triples AS ({_KG_TRIPLES_SQL}),
-edges AS (SELECT DISTINCT subj AS u, obj AS v FROM triples),
-nodes AS (
-  SELECT DISTINCT node FROM (
-    SELECT u AS node FROM edges UNION ALL SELECT v AS node FROM edges
-  )
-),
+WITH {_kg_edges_sql()},
 outdeg AS (SELECT u, CAST(count(*) AS BIGINT) AS deg FROM edges GROUP BY u),
 r0 AS (
   SELECT node,
@@ -5316,8 +5233,7 @@ def graph_ppr(spark, sf_dir):
     exchanges; operators/graph.py pagerank_fixed_point(seeds=...))."""
     from gfftoneo4j_spark.operators.graph import pagerank_fixed_point
 
-    t = QUERIES["kg_triples"](spark, sf_dir).localCheckpoint(eager=True)
-    edges = t.select(F.col("subj").alias("u"), F.col("obj").alias("v"))
+    edges = _kg_edges(spark, sf_dir)
     seeds = (
         edges.select(F.col("u").alias("node"))
         .unionAll(edges.select(F.col("v").alias("node")))
@@ -5691,7 +5607,7 @@ def pmi_edges(spark, sf_dir):
     hub_cap); counts are combinable; the corpus size joins in as one
     broadcast scalar; n_ab >= 2 prunes the singleton tail before the
     degree joins."""
-    t = QUERIES["kg_triples"](spark, sf_dir).localCheckpoint(eager=True)
+    t = _kg_triples(spark, sf_dir)
     ce = (
         t.where(F.col("pred") == "refers_to")
         .select(
@@ -6480,13 +6396,7 @@ _HITS_STEP_SQL = """
 
 _HITS_SQL = (
     f"""
-WITH triples AS ({_KG_TRIPLES_SQL}),
-e AS (SELECT DISTINCT subj AS u, obj AS v FROM triples),
-nodes AS (
-  SELECT DISTINCT node FROM (
-    SELECT u AS node FROM e UNION ALL SELECT v AS node FROM e
-  )
-),
+WITH {_kg_edges_sql("e")},
 h0 AS (SELECT node, CAST(1000000 AS BIGINT) AS h FROM nodes),"""
     + ",".join(
         _HITS_STEP_SQL.format(out=out, c=c, pc=pc, prev=prev, to=to, frm=frm)
@@ -6517,8 +6427,7 @@ def graph_hits(spark, sf_dir):
     triples snapshot."""
     from gfftoneo4j_spark.operators.graph import hits_fixed_point
 
-    t = QUERIES["kg_triples"](spark, sf_dir).localCheckpoint(eager=True)
-    edges = t.select(F.col("subj").alias("u"), F.col("obj").alias("v"))
+    edges = _kg_edges(spark, sf_dir)
     return hits_fixed_point(edges, iters=2)
 
 
@@ -7112,8 +7021,7 @@ w{K} AS (
 
 _WALKS_SQL = (
     f"""
-WITH triples AS ({_KG_TRIPLES_SQL}),
-e AS (SELECT DISTINCT subj AS u, obj AS v FROM triples),
+WITH {_kg_edges_sql("e")},
 w0 AS (SELECT DISTINCT u AS start, u AS node FROM e),"""
     + ",".join(_WALK_STEP_SQL.format(K=k, P=k - 1) for k in (1, 2, 3))
     + """
@@ -7138,8 +7046,7 @@ def graph_random_walks(spark, sf_dir):
     combinable min_by — never a per-walk sort."""
     from gfftoneo4j_spark.operators.graph import deterministic_walks
 
-    t = QUERIES["kg_triples"](spark, sf_dir).localCheckpoint(eager=True)
-    edges = t.select(F.col("subj").alias("u"), F.col("obj").alias("v"))
+    edges = _kg_edges(spark, sf_dir)
     return deterministic_walks(edges, steps=3)
 
 
@@ -7148,8 +7055,7 @@ def graph_random_walks(spark, sf_dir):
 # --------------------------------------------------------------------------
 
 _ASSORT_SQL = f"""
-WITH triples AS ({_KG_TRIPLES_SQL}),
-e AS (SELECT DISTINCT subj AS u, obj AS v FROM triples),
+WITH {_kg_edges_sql("e")},
 od AS (SELECT u, CAST(count(*) AS DOUBLE) AS deg FROM e GROUP BY u),
 id_ AS (SELECT v, CAST(count(*) AS DOUBLE) AS deg FROM e GROUP BY v)
 SELECT round(corr(od.deg, id_.deg), 6) AS assortativity,
@@ -7168,11 +7074,7 @@ def graph_assortativity(spark, sf_dir):
     corr() fold (corr is a combinable moment aggregation — this is a
     single pass over edges after the degree joins, no pair
     materialization)."""
-    t = QUERIES["kg_triples"](spark, sf_dir).localCheckpoint(eager=True)
-    e = (
-        t.select(F.col("subj").alias("u"), F.col("obj").alias("v"))
-        .distinct()
-    )
+    e = _kg_edges(spark, sf_dir).distinct()
     od = e.groupBy("u").agg(F.count(F.lit(1)).cast("double").alias("odeg"))
     idg = e.groupBy("v").agg(F.count(F.lit(1)).cast("double").alias("ideg"))
     return (
@@ -7590,9 +7492,8 @@ def graph_pagerank_weighted(spark, sf_dir):
     3-round CTEs with the weighted recurrence."""
     from gfftoneo4j_spark.operators.graph import pagerank_fixed_point
 
-    t = QUERIES["kg_triples"](spark, sf_dir).localCheckpoint(eager=True)
     we = (
-        t.select(F.col("subj").alias("u"), F.col("obj").alias("v"))
+        _kg_edges(spark, sf_dir)
         .groupBy("u", "v")
         .agg(F.count(F.lit(1)).alias("w"))
     )
@@ -7905,22 +7806,11 @@ def graph_modularity(spark, sf_dir):
     intra-edges, per-community degree mass) stays a BIGINT until one
     final shared-structure double expression, so the gate rides
     integers + one rounded division, not float accumulation order."""
-    from gfftoneo4j_spark.operators.graph import label_propagation
+    from gfftoneo4j_spark.operators.graph import _undirected, label_propagation
 
-    t = QUERIES["kg_triples"](spark, sf_dir).localCheckpoint(eager=True)
-    edges = t.select(F.col("subj").alias("u"), F.col("obj").alias("v"))
+    edges = _kg_edges(spark, sf_dir)
     comm = label_propagation(edges, iters=3).localCheckpoint(eager=True)
-    und = (
-        edges.select(F.col("u").alias("s"), F.col("v").alias("t"))
-        .unionAll(edges.select(F.col("v").alias("s"), F.col("u").alias("t")))
-        .where(
-            F.col("s").isNotNull()
-            & F.col("t").isNotNull()
-            & (F.col("s") != F.col("t"))
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = _undirected(edges, "u", "v").localCheckpoint(eager=True)
     simple = und.where(F.col("s") < F.col("t"))
     ca = comm.select(
         F.col("node").alias("s"), F.col("community").alias("c_a")
@@ -7961,12 +7851,8 @@ def graph_modularity(spark, sf_dir):
 # CUPED variance reduction (experimentation metrics)
 # --------------------------------------------------------------------------
 
-_CUPED_SQL = """
-WITH bounds AS (
-  SELECT (CAST(floor(epoch(min(ts))) AS BIGINT)
-          + CAST(floor(epoch(max(ts))) AS BIGINT)) // 2 AS mid
-  FROM events
-),
+_CUPED_SQL = f"""
+WITH {_EVENT_MID_SQL},
 xy AS (
   SELECT user_id,
          CAST(sum(CASE WHEN CAST(floor(epoch(ts)) AS BIGINT)
@@ -8008,17 +7894,7 @@ def cuped_variance_reduction(spark, sf_dir):
     6dp-pinned scalars re-entering the plan, two combinable moment
     folds — no wide exchange beyond the per-user rollup."""
     ev = load_table(spark, sf_dir, "events")
-    mid = ev.agg(
-        (
-            (
-                F.unix_timestamp(F.min("ts")).cast("bigint")
-                + F.unix_timestamp(F.max("ts")).cast("bigint")
-            )
-            / F.lit(2)
-        )
-        .cast("bigint")
-        .alias("mid")
-    )
+    mid = _event_mid(ev)
     sec = F.unix_timestamp("ts").cast("bigint")
     dec0 = F.lit(0).cast("decimal(18,2)")
     xy = (
@@ -8117,14 +7993,9 @@ def pca_top_component(spark, sf_dir):
 # Power-law exponent of the degree tail (Clauset-style MLE)
 # --------------------------------------------------------------------------
 
-_PLAW_SQL = f"""
-WITH triples AS ({_KG_TRIPLES_SQL}),
-raw AS (SELECT subj AS u, obj AS v FROM triples),
-und AS (
-  SELECT DISTINCT s, t FROM (
-    SELECT u AS s, v AS t FROM raw UNION ALL SELECT v AS s, u AS t FROM raw
-  ) WHERE s IS NOT NULL AND t IS NOT NULL AND s <> t
-),
+_PLAW_SQL = (
+    _KG_UND_SQL
+    + """,
 deg AS (SELECT s, CAST(count(*) AS BIGINT) AS d FROM und GROUP BY s),
 tail AS (SELECT d FROM deg WHERE d >= 2)
 SELECT CAST(count(*) AS BIGINT) AS n_tail,
@@ -8132,6 +8003,7 @@ SELECT CAST(count(*) AS BIGINT) AS n_tail,
        round(1 + count(*) / sum(ln(d / 1.5)), 6) AS alpha
 FROM tail
 """
+)
 
 
 @register("powerlaw_alpha", _PLAW_SQL)
@@ -8145,18 +8017,9 @@ def powerlaw_alpha(spark, sf_dir):
     don't. One combinable degree agg + a 3-column scalar fold; the
     estimator expression is shared SQL text on both engines (the
     wilson_conversion trick)."""
-    t = QUERIES["kg_triples"](spark, sf_dir).localCheckpoint(eager=True)
-    edges = t.select(F.col("subj").alias("u"), F.col("obj").alias("v"))
-    und = (
-        edges.select(F.col("u").alias("s"), F.col("v").alias("t"))
-        .unionAll(edges.select(F.col("v").alias("s"), F.col("u").alias("t")))
-        .where(
-            F.col("s").isNotNull()
-            & F.col("t").isNotNull()
-            & (F.col("s") != F.col("t"))
-        )
-        .distinct()
-    )
+    from gfftoneo4j_spark.operators.graph import _undirected
+
+    und = _undirected(_kg_edges(spark, sf_dir), "u", "v")
     tail = (
         und.groupBy("s")
         .agg(F.count(F.lit(1)).alias("d"))
@@ -8173,11 +8036,8 @@ def powerlaw_alpha(spark, sf_dir):
 # Vocabulary growth curve (Heaps' law audit over shingles)
 # --------------------------------------------------------------------------
 
-_HEAPS_SQL = """
-WITH toks AS (
-  SELECT doc_id, w, generate_subscripts(w, 1) AS p
-  FROM (SELECT doc_id, string_split(trim(text), ' ') AS w FROM documents)
-),
+_HEAPS_SQL = f"""
+WITH {_TOKS_SQL},
 sh AS (
   SELECT doc_id, array_to_string(w[p:p + 2], ' ') AS term
   FROM toks WHERE p + 2 <= len(w)
@@ -8439,8 +8299,7 @@ def bpe_tokenize_q(spark, sf_dir):
 
 _BETWEEN_SQL = (
     f"""
-WITH triples AS ({_KG_TRIPLES_SQL}),
-e AS (SELECT DISTINCT subj AS u, obj AS v FROM triples),
+WITH {_kg_edges_sql("e")},
 w0 AS (SELECT DISTINCT u AS start, u AS node FROM e),"""
     + ",".join(_WALK_STEP_SQL.format(K=k, P=k - 1) for k in (1, 2, 3))
     + """
@@ -8471,8 +8330,7 @@ def graph_betweenness_approx(spark, sf_dir):
     one combinable count + a broadcast-scalar normalize."""
     from gfftoneo4j_spark.operators.graph import walk_visit_centrality
 
-    t = QUERIES["kg_triples"](spark, sf_dir).localCheckpoint(eager=True)
-    edges = t.select(F.col("subj").alias("u"), F.col("obj").alias("v"))
+    edges = _kg_edges(spark, sf_dir)
     return walk_visit_centrality(edges, steps=3)
 
 
@@ -8526,13 +8384,7 @@ k{K} AS (
 
 _KATZ_SQL = (
     f"""
-WITH triples AS ({_KG_TRIPLES_SQL}),
-edges AS (SELECT DISTINCT subj AS u, obj AS v FROM triples),
-nodes AS (
-  SELECT DISTINCT node FROM (
-    SELECT u AS node FROM edges UNION ALL SELECT v AS node FROM edges
-  )
-),
+WITH {_kg_edges_sql()},
 k0 AS (SELECT node, CAST(1000000 AS BIGINT) AS x FROM nodes),"""
     + ",".join(_KATZ_ROUND_SQL.format(K=k, P=k - 1) for k in (1, 2, 3))
     + """
@@ -8555,8 +8407,7 @@ def graph_katz_centrality(spark, sf_dir):
     bit-exact at any partitioning)."""
     from gfftoneo4j_spark.operators.graph import katz_centrality
 
-    t = QUERIES["kg_triples"](spark, sf_dir).localCheckpoint(eager=True)
-    edges = t.select(F.col("subj").alias("u"), F.col("obj").alias("v"))
+    edges = _kg_edges(spark, sf_dir)
     return katz_centrality(edges, iters=3)
 
 
@@ -8818,9 +8669,9 @@ def pq_encode_q(spark, sf_dir):
 # Ancestor closure via pointer doubling (ontology / category-tree closure)
 # --------------------------------------------------------------------------
 
-_CLOSURE_SQL = """
-WITH RECURSIVE m AS (SELECT count(*) AS m FROM documents),
-nodes AS (SELECT DISTINCT doc_id % m.m AS i FROM documents, m),
+_CLOSURE_SQL = f"""
+WITH RECURSIVE {_circulant_sql()},
+nodes AS (SELECT DISTINCT i FROM base),
 par AS (SELECT i AS c, (i - 1) // 3 AS p FROM nodes WHERE i > 0),
 cl AS (
   SELECT c, p, 1 AS d FROM par
@@ -8857,18 +8708,9 @@ def ancestor_closure_q(spark, sf_dir):
 # Approximate closeness centrality (landmark multi-source BFS)
 # --------------------------------------------------------------------------
 
-_CLOSENESS_SQL = """
-WITH RECURSIVE m AS (SELECT count(*) AS m FROM documents),
-base AS (SELECT doc_id % m.m AS i, m.m AS m FROM documents, m),
-raw AS (
-  SELECT i AS s, (i + 1) % m AS t FROM base
-  UNION ALL SELECT i, (i * 2) % m FROM base
-  UNION ALL SELECT i, (i * 3) % m FROM base
-),
-und AS (
-  SELECT s, t FROM raw WHERE s <> t
-  UNION SELECT t, s FROM raw WHERE s <> t
-),
+_CLOSENESS_SQL = f"""
+WITH RECURSIVE {_circulant_sql()},
+{_UND_SQL},
 seeds AS (
   SELECT i FROM (SELECT DISTINCT i FROM base)
   ORDER BY md5('s:' || CAST(i AS VARCHAR)), i LIMIT 4
@@ -10170,32 +10012,10 @@ def stats_pruning_audit(spark, sf_dir):
 
 
 def _truss_support_block(p: str, rel: str) -> str:
-    """One edge-support CTE block (degree-oriented triangle
-    enumeration, same shape as the graph_clustering_coeff oracle)
-    computing {p}sup(a, b, support) over edge relation `rel`."""
+    """One edge-support CTE block computing {p}sup(a, b, support) over
+    edge relation `rel` from _triangle_sql's triangles."""
     return f"""
-{p}deg AS MATERIALIZED (
-  SELECT n, CAST(count(*) AS BIGINT) AS d FROM (
-    SELECT a AS n FROM {rel} UNION ALL SELECT b AS n FROM {rel}
-  ) GROUP BY n
-),
-{p}keyed AS (
-  SELECT u.a, u.b, x.d AS da, y.d AS db
-  FROM {rel} u JOIN {p}deg x ON x.n = u.a JOIN {p}deg y ON y.n = u.b
-),
-{p}o AS MATERIALIZED (
-  SELECT CASE WHEN da < db OR (da = db AND a < b) THEN a ELSE b END AS x,
-         CASE WHEN da < db OR (da = db AND a < b) THEN b ELSE a END AS y,
-         CASE WHEN da < db OR (da = db AND a < b) THEN db ELSE da END AS dy
-  FROM {p}keyed
-),
-{p}w AS (
-  SELECT e1.x, e1.y, e2.y AS z FROM {p}o e1 JOIN {p}o e2 ON e1.x = e2.x
-  WHERE e1.dy < e2.dy OR (e1.dy = e2.dy AND e1.y < e2.y)
-),
-{p}t AS MATERIALIZED (
-  SELECT w.x, w.y, w.z FROM {p}w w JOIN {p}o c ON c.x = w.y AND c.y = w.z
-),
+{_triangle_sql(p, rel)},
 {p}sup AS MATERIALIZED (
   SELECT a, b, CAST(count(*) AS BIGINT) AS support FROM (
     SELECT least(x, y) AS a, greatest(x, y) AS b FROM {p}t
@@ -10206,18 +10026,8 @@ def _truss_support_block(p: str, rel: str) -> str:
 
 
 _TRUSS_SQL = f"""
-WITH m AS (SELECT count(*) AS m FROM documents),
-base AS (SELECT doc_id % m.m AS i, m.m AS m FROM documents, m),
-raw AS (
-  SELECT i AS s, (i + 1) % m AS t FROM base
-  UNION ALL SELECT i, (i + 2) % m FROM base
-  UNION ALL SELECT i, (i + 3) % m FROM base
-  UNION ALL SELECT i, (i * 2) % m FROM base
-),
-e0 AS MATERIALIZED (
-  SELECT DISTINCT least(s, t) AS a, greatest(s, t) AS b
-  FROM raw WHERE s <> t
-),
+WITH {_circulant_sql(_ADDITIVE)},
+{_canonical_sql("e0")},
 {_truss_support_block("r0", "e0")},
 e1 AS MATERIALIZED (
   SELECT u.a, u.b FROM e0 u LEFT JOIN r0sup s ON s.a = u.a AND s.b = u.b
@@ -10254,40 +10064,10 @@ def graph_truss_peel(spark, sf_dir):
     return truss_peel(raw, k=4, rounds=2, src="s", dst="t")
 
 
-_CLIQUE4_SQL = """
-WITH m AS (SELECT count(*) AS m FROM documents),
-base AS (SELECT doc_id % m.m AS i, m.m AS m FROM documents, m),
-raw AS (
-  SELECT i AS s, (i + 1) % m AS t FROM base
-  UNION ALL SELECT i, (i + 2) % m FROM base
-  UNION ALL SELECT i, (i + 3) % m FROM base
-  UNION ALL SELECT i, (i * 2) % m FROM base
-),
-und AS MATERIALIZED (
-  SELECT DISTINCT least(s, t) AS a, greatest(s, t) AS b FROM raw WHERE s <> t
-),
-deg AS MATERIALIZED (
-  SELECT n, CAST(count(*) AS BIGINT) AS d FROM (
-    SELECT a AS n FROM und UNION ALL SELECT b AS n FROM und
-  ) GROUP BY n
-),
-keyed AS (
-  SELECT u.a, u.b, x.d AS da, y.d AS db
-  FROM und u JOIN deg x ON x.n = u.a JOIN deg y ON y.n = u.b
-),
-o AS MATERIALIZED (
-  SELECT CASE WHEN da < db OR (da = db AND a < b) THEN a ELSE b END AS x,
-         CASE WHEN da < db OR (da = db AND a < b) THEN b ELSE a END AS y,
-         CASE WHEN da < db OR (da = db AND a < b) THEN db ELSE da END AS dy
-  FROM keyed
-),
-w AS (
-  SELECT e1.x, e1.y, e2.y AS z FROM o e1 JOIN o e2 ON e1.x = e2.x
-  WHERE e1.dy < e2.dy OR (e1.dy = e2.dy AND e1.y < e2.y)
-),
-t AS MATERIALIZED (
-  SELECT w.x, w.y, w.z FROM w JOIN o c ON c.x = w.y AND c.y = w.z
-),
+_CLIQUE4_SQL = f"""
+WITH {_circulant_sql(_ADDITIVE)},
+{_canonical_sql()},
+{_triangle_sql("", "und")},
 q AS (
   SELECT t.x, t.y, t.z, ex.y AS w
   FROM t
@@ -10545,21 +10325,9 @@ a{r + 1} AS MATERIALIZED (
 
 
 _MIS_SQL = (
-    """
-WITH m AS (SELECT count(*) AS m FROM documents),
-base AS (SELECT doc_id % m.m AS i, m.m AS m FROM documents, m),
-raw AS (
-  SELECT i AS s, (i + 1) % m AS t FROM base
-  UNION ALL SELECT i, (i + 2) % m FROM base
-  UNION ALL SELECT i, (i + 3) % m FROM base
-  UNION ALL SELECT i, (i * 2) % m FROM base
-),
-und AS MATERIALIZED (
-  SELECT DISTINCT s, t FROM (
-    SELECT s, t FROM raw WHERE s <> t
-    UNION ALL SELECT t, s FROM raw WHERE s <> t
-  )
-),
+    f"""
+WITH {_circulant_sql(_ADDITIVE)},
+{_UND_SQL},
 a0 AS MATERIALIZED (
   SELECT DISTINCT i AS node, md5('mis:' || CAST(i AS VARCHAR)) AS p
   FROM base
@@ -10600,11 +10368,8 @@ def luby_mis_q(spark, sf_dir):
 # Stupid-backoff bigram scores (Brants 2007)
 # --------------------------------------------------------------------------
 
-_BACKOFF_SQL = """
-WITH toks AS (
-  SELECT doc_id, w, generate_subscripts(w, 1) AS p
-  FROM (SELECT doc_id, string_split(trim(text), ' ') AS w FROM documents)
-),
+_BACKOFF_SQL = f"""
+WITH {_TOKS_SQL},
 uni AS MATERIALIZED (
   SELECT w[p] AS tok, CAST(count(*) AS BIGINT) AS c FROM toks GROUP BY 1
 ),
@@ -10772,18 +10537,9 @@ def fellegi_sunter_scores(spark, sf_dir):
 # Deterministic negative-edge sampling (GNN / link-pred training data)
 # --------------------------------------------------------------------------
 
-_NEGSAMPLE_SQL = """
-WITH m AS (SELECT count(*) AS m FROM documents),
-base AS (SELECT doc_id % m.m AS i, m.m AS m FROM documents, m),
-raw AS (
-  SELECT i AS s, (i + 1) % m AS t FROM base
-  UNION ALL SELECT i, (i * 2) % m FROM base
-  UNION ALL SELECT i, (i * 3) % m FROM base
-),
-und AS MATERIALIZED (
-  SELECT DISTINCT least(s, t) AS a, greatest(s, t) AS b
-  FROM raw WHERE s <> t
-),
+_NEGSAMPLE_SQL = f"""
+WITH {_circulant_sql()},
+{_canonical_sql()},
 nodes AS (SELECT DISTINCT i, m FROM base),
 cand AS (
   SELECT n.i AS u, j.j,
@@ -10812,14 +10568,10 @@ def negative_edge_samples(spark, sf_dir):
     |V|^2 — which is what makes negative sampling viable where
     enumerating non-edges never is. The rejected draws (true edges)
     are simply absent, the standard rejection-sampling contract."""
+    from gfftoneo4j_spark.operators.graph import _canonical_undirected
+
     ids, raw = _circulant(spark, sf_dir)
-    und = (
-        raw.where(F.col("s") != F.col("t"))
-        .select(
-            F.least("s", "t").alias("a"), F.greatest("s", "t").alias("b")
-        )
-        .distinct()
-    )
+    und = _canonical_undirected(raw, "s", "t")
     cand = (
         ids.distinct()
         .select("i", "m", F.explode(F.expr("sequence(1, 4)")).alias("j"))
@@ -11031,13 +10783,7 @@ def srm_check(spark, sf_dir):
 _HARDNEG_SQL = f"""
 WITH ex AS ({_EMB_EXPLODE_SQL}),
 lab AS (SELECT vec_id, label FROM embeddings),
-n AS (SELECT vec_id, sqrt(sum(x * x)) AS nrm FROM ex GROUP BY vec_id),
-q AS (SELECT * FROM ex WHERE vec_id < 5),
-dots AS (
-  SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id, sum(q.x * e.x) AS dp
-  FROM q JOIN ex e ON q.i = e.i AND e.vec_id <> q.vec_id
-  GROUP BY q.vec_id, e.vec_id
-),
+{_cosine_sql()},
 scored AS (
   SELECT d.query_id, d.neighbor_id,
          round(d.dp / (nq.nrm * ne.nrm), 3) AS score
@@ -11048,11 +10794,7 @@ scored AS (
   JOIN lab ln ON ln.vec_id = d.neighbor_id
   WHERE ln.label <> lq.label
 )
-SELECT query_id, neighbor_id, score, rank FROM (
-  SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-       ORDER BY score DESC, neighbor_id) AS INTEGER) AS rank
-  FROM scored
-) WHERE rank <= 3
+{_top3_sql()}
 """
 
 
@@ -11244,20 +10986,9 @@ ja{r + 1} AS MATERIALIZED (
 
 
 _JP_SQL = (
-    """
-WITH m AS (SELECT count(*) AS m FROM documents),
-base AS (SELECT doc_id % m.m AS i, m.m AS m FROM documents, m),
-raw AS (
-  SELECT i AS s, (i + 1) % m AS t FROM base
-  UNION ALL SELECT i, (i * 2) % m FROM base
-  UNION ALL SELECT i, (i * 3) % m FROM base
-),
-und AS MATERIALIZED (
-  SELECT DISTINCT s, t FROM (
-    SELECT s, t FROM raw WHERE s <> t
-    UNION ALL SELECT t, s FROM raw WHERE s <> t
-  )
-),
+    f"""
+WITH {_circulant_sql()},
+{_UND_SQL},
 ja0 AS MATERIALIZED (
   SELECT DISTINCT i AS node, md5('jp:' || CAST(i AS VARCHAR)) AS p
   FROM base
@@ -11376,18 +11107,9 @@ def theil_sen_slopes(spark, sf_dir):
 # Landmark eccentricity / diameter lower bound
 # --------------------------------------------------------------------------
 
-_ECC_SQL = """
-WITH RECURSIVE m AS (SELECT count(*) AS m FROM documents),
-base AS (SELECT doc_id % m.m AS i, m.m AS m FROM documents, m),
-raw AS (
-  SELECT i AS s, (i + 1) % m AS t FROM base
-  UNION ALL SELECT i, (i * 2) % m FROM base
-  UNION ALL SELECT i, (i * 3) % m FROM base
-),
-und AS (
-  SELECT s, t FROM raw WHERE s <> t
-  UNION SELECT t, s FROM raw WHERE s <> t
-),
+_ECC_SQL = f"""
+WITH RECURSIVE {_circulant_sql()},
+{_UND_SQL},
 seeds AS (
   SELECT i FROM (SELECT DISTINCT i FROM base)
   ORDER BY md5('e:' || CAST(i AS VARCHAR)), i LIMIT 4
@@ -12038,11 +11760,8 @@ def bootstrap_ci(spark, sf_dir):
 # Interpolated Kneser-Ney bigram LM (tokenizer/LM suite round 3)
 # --------------------------------------------------------------------------
 
-_KN_SQL = """
-WITH toks AS (
-  SELECT doc_id, w, generate_subscripts(w, 1) AS p
-  FROM (SELECT doc_id, string_split(trim(text), ' ') AS w FROM documents)
-),
+_KN_SQL = f"""
+WITH {_TOKS_SQL},
 uni AS MATERIALIZED (
   SELECT w[p] AS tok, CAST(count(*) AS BIGINT) AS c FROM toks GROUP BY 1
 ),
@@ -12145,11 +11864,8 @@ def kneser_ney_scores(spark, sf_dir):
 # Dunning log-likelihood-ratio collocations (G^2 over bigrams)
 # --------------------------------------------------------------------------
 
-_LLR_SQL = """
-WITH toks AS (
-  SELECT doc_id, w, generate_subscripts(w, 1) AS p
-  FROM (SELECT doc_id, string_split(trim(text), ' ') AS w FROM documents)
-),
+_LLR_SQL = f"""
+WITH {_TOKS_SQL},
 bi AS MATERIALIZED (
   SELECT w[p] AS w1, w[p + 1] AS w2, CAST(count(*) AS BIGINT) AS k11
   FROM toks WHERE p + 1 <= len(w) GROUP BY 1, 2
@@ -12254,11 +11970,8 @@ def dunning_llr_collocations(spark, sf_dir):
 # --------------------------------------------------------------------------
 
 _TEXTRANK_SQL = (
-    """
-WITH toks AS (
-  SELECT doc_id, w, generate_subscripts(w, 1) AS p
-  FROM (SELECT doc_id, string_split(trim(text), ' ') AS w FROM documents)
-),
+    f"""
+WITH {_TOKS_SQL},
 adj AS (
   SELECT w[p] AS a, w[p + 1] AS b
   FROM toks WHERE p + 1 <= len(w) AND w[p] <> w[p + 1]
@@ -12323,11 +12036,8 @@ def textrank_keywords(spark, sf_dir):
 # MSTTR lexical diversity (mean segmental type-token ratio)
 # --------------------------------------------------------------------------
 
-_MSTTR_SQL = """
-WITH toks AS (
-  SELECT doc_id, w, generate_subscripts(w, 1) AS p
-  FROM (SELECT doc_id, string_split(trim(text), ' ') AS w FROM documents)
-),
+_MSTTR_SQL = f"""
+WITH {_TOKS_SQL},
 seg AS (
   SELECT doc_id, (p - 1) // 10 AS seg,
          CAST(count(DISTINCT w[p]) AS BIGINT) AS types
@@ -12515,7 +12225,7 @@ def kg_bgp_entity_paths(spark, sf_dir):
     bounded by |entity types|^2. The join ORDER follows selectivity
     (links edges first, refers_to lookups second), the textbook BGP
     plan Catalyst can reorder freely because it's all declarative."""
-    t = QUERIES["kg_triples"](spark, sf_dir).localCheckpoint(eager=True)
+    t = _kg_triples(spark, sf_dir)
     rt = t.where(F.col("pred") == "refers_to").select(
         F.col("subj").alias("m"), F.col("obj").alias("e")
     )
@@ -12535,17 +12245,9 @@ def kg_bgp_entity_paths(spark, sf_dir):
 # Directed 3-node motif census (feed-forward loops vs cycles)
 # --------------------------------------------------------------------------
 
-_MOTIF_SQL = """
-WITH m AS (SELECT count(*) AS m FROM documents),
-base AS (SELECT doc_id % m.m AS i, m.m AS m FROM documents, m),
-e AS (
-  SELECT DISTINCT s, t FROM (
-    SELECT i AS s, (i + 1) % m AS t FROM base
-    UNION ALL SELECT i, (i + 2) % m FROM base
-    UNION ALL SELECT i, (i + 3) % m FROM base
-    UNION ALL SELECT i, (i + m - 3) % m FROM base
-  ) WHERE s <> t
-),
+_MOTIF_SQL = f"""
+WITH {_circulant_sql(("+1", "+2", "+3", "-3"))},
+e AS (SELECT DISTINCT s, t FROM raw WHERE s <> t),
 p2 AS (
   SELECT x.s AS a, x.t AS b, y.t AS c
   FROM e x JOIN e y ON y.s = x.t WHERE x.s <> y.t
@@ -12788,43 +12490,13 @@ def hurst_exponent(spark, sf_dir):
 
 _MRL_SQL = f"""
 WITH ex AS ({_EMB_EXPLODE_SQL}),
-n AS (SELECT vec_id, sqrt(sum(x * x)) AS nrm FROM ex GROUP BY vec_id),
-q AS (SELECT * FROM ex WHERE vec_id < 5),
-dots AS (
-  SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id, sum(q.x * e.x) AS dp
-  FROM q JOIN ex e ON q.i = e.i AND e.vec_id <> q.vec_id
-  GROUP BY q.vec_id, e.vec_id
-),
-full_topk AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT d.query_id, d.neighbor_id,
-           row_number() OVER (PARTITION BY d.query_id
-               ORDER BY round(d.dp / (nq.nrm * ne.nrm), 3) DESC,
-                        d.neighbor_id) AS rank
-    FROM dots d
-    JOIN n nq ON nq.vec_id = d.query_id
-    JOIN n ne ON ne.vec_id = d.neighbor_id
-  ) WHERE rank <= 3
-),
+{_cosine_sql()},
+{_scored_sql()},
+full_topk AS ({_top3_sql()}),
 ex8 AS (SELECT vec_id, x, i FROM ex WHERE i <= 8),
-n8 AS (SELECT vec_id, sqrt(sum(x * x)) AS nrm FROM ex8 GROUP BY vec_id),
-q8 AS (SELECT * FROM ex8 WHERE vec_id < 5),
-dots8 AS (
-  SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id, sum(q.x * e.x) AS dp
-  FROM q8 q JOIN ex8 e ON q.i = e.i AND e.vec_id <> q.vec_id
-  GROUP BY q.vec_id, e.vec_id
-),
-tr_topk AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT d.query_id, d.neighbor_id,
-           row_number() OVER (PARTITION BY d.query_id
-               ORDER BY round(d.dp / (nq.nrm * ne.nrm), 3) DESC,
-                        d.neighbor_id) AS rank
-    FROM dots8 d
-    JOIN n8 nq ON nq.vec_id = d.query_id
-    JOIN n8 ne ON ne.vec_id = d.neighbor_id
-  ) WHERE rank <= 3
-)
+{_cosine_sql("ex8", "8")},
+{_scored_sql("dots8", "n8", "scored8")},
+tr_topk AS ({_top3_sql("scored8")})
 SELECT f.query_id,
        CAST(count(t.neighbor_id) AS BIGINT) AS n_common,
        CAST(count(t.neighbor_id) * 1000000 // 3 AS BIGINT) AS recall_fp
@@ -12915,18 +12587,9 @@ e{r} AS (
 
 
 _ANF_SQL = (
-    """
-WITH m AS (SELECT count(*) AS m FROM documents),
-base AS (SELECT doc_id % m.m AS i, m.m AS m FROM documents, m),
-raw AS (
-  SELECT i AS s, (i + 1) % m AS t FROM base
-  UNION ALL SELECT i, (i * 2) % m FROM base
-  UNION ALL SELECT i, (i * 3) % m FROM base
-),
-und AS MATERIALIZED (
-  SELECT s, t FROM raw WHERE s <> t
-  UNION SELECT t, s FROM raw WHERE s <> t
-),
+    f"""
+WITH {_circulant_sql()},
+{_UND_SQL},
 r0 AS MATERIALIZED (
   SELECT DISTINCT s AS node,
          CAST(('0x' || md5('a:' || CAST(s AS VARCHAR))[1:12]) AS BIGINT) AS h
@@ -13677,18 +13340,9 @@ st{r} AS (
 
 
 _WL_SQL = (
-    """
-WITH m AS (SELECT count(*) AS m FROM documents),
-base AS (SELECT doc_id % m.m AS i, m.m AS m FROM documents, m),
-raw AS (
-  SELECT i AS s, (i + 1) % m AS t FROM base
-  UNION ALL SELECT i, (i * 2) % m FROM base
-  UNION ALL SELECT i, (i * 3) % m FROM base
-),
-und AS MATERIALIZED (
-  SELECT s, t FROM raw WHERE s <> t
-  UNION SELECT t, s FROM raw WHERE s <> t
-),
+    f"""
+WITH {_circulant_sql()},
+{_UND_SQL},
 deg AS MATERIALIZED (
   SELECT s AS node, CAST(count(*) AS VARCHAR) AS c FROM und GROUP BY s
 ),"""
@@ -13790,18 +13444,9 @@ s{r} AS MATERIALIZED (
 
 
 _LS_SQL = (
-    """
-WITH m AS (SELECT count(*) AS m FROM documents),
-base AS (SELECT doc_id % m.m AS i, m.m AS m FROM documents, m),
-raw AS (
-  SELECT i AS s, (i + 1) % m AS t FROM base
-  UNION ALL SELECT i, (i * 2) % m FROM base
-  UNION ALL SELECT i, (i * 3) % m FROM base
-),
-und AS MATERIALIZED (
-  SELECT s, t FROM raw WHERE s <> t
-  UNION SELECT t, s FROM raw WHERE s <> t
-),
+    f"""
+WITH {_circulant_sql()},
+{_UND_SQL},
 deg AS MATERIALIZED (
   SELECT s AS node, CAST(count(*) AS BIGINT) AS deg FROM und GROUP BY s
 ),
@@ -15694,9 +15339,8 @@ def kruskal_wallis(spark, sf_dir):
 # DAG topological levels (critical-path stage assignment)
 # --------------------------------------------------------------------------
 
-_DAG_SQL = """
-WITH RECURSIVE m AS (SELECT count(*) AS m FROM documents),
-base AS (SELECT doc_id % m.m AS i, m.m AS m FROM documents, m),
+_DAG_SQL = f"""
+WITH RECURSIVE {_circulant_sql()},
 e AS MATERIALIZED (
   SELECT i AS s, i + v.d AS t
   FROM base, (VALUES (1), (2), (3)) v(d)
@@ -15727,13 +15371,11 @@ def dag_levels(spark, sf_dir):
     by construction, matching the bounded round count."""
     from gfftoneo4j_spark.operators.graph import dag_longest_path_levels
 
-    d = load_table(spark, sf_dir, "documents")
-    m = d.count()
-    base = d.select((F.col("doc_id") % m).alias("i"))
+    base, _ = _circulant(spark, sf_dir)
     parts = [
         base.select(
             F.col("i").alias("s"), (F.col("i") + dd).alias("t")
-        ).where(((F.col("i") % 8) + dd <= 7) & (F.col("i") + dd < m))
+        ).where(((F.col("i") % 8) + dd <= 7) & (F.col("i") + dd < F.col("m")))
         for dd in (1, 2, 3)
     ]
     edges = parts[0].unionAll(parts[1]).unionAll(parts[2])
@@ -16185,12 +15827,8 @@ def msprt_sequential(spark, sf_dir):
 # Difference-in-differences (2x2 natural-experiment estimator)
 # --------------------------------------------------------------------------
 
-_DID_SQL = """
-WITH bounds AS (
-  SELECT (CAST(floor(epoch(min(ts))) AS BIGINT)
-          + CAST(floor(epoch(max(ts))) AS BIGINT)) // 2 AS mid
-  FROM events
-),
+_DID_SQL = f"""
+WITH {_EVENT_MID_SQL},
 cells AS (
   SELECT CAST(user_id % 2 AS BIGINT) AS treat,
          CASE WHEN CAST(floor(epoch(ts)) AS BIGINT)
@@ -16244,13 +15882,7 @@ def diff_in_diff(spark, sf_dir):
     assembled from those exact integers."""
     ev = load_table(spark, sf_dir, "events")
     sec = F.unix_timestamp("ts").cast("bigint")
-    mid = ev.agg(
-        F.floor(
-            (F.min(sec).cast("bigint") + F.max(sec).cast("bigint")) / 2
-        )
-        .cast("bigint")
-        .alias("mid")
-    )
+    mid = _event_mid(ev)
     v100 = F.round(F.col("value") * 100).cast("bigint")
     cells = ev.crossJoin(F.broadcast(mid)).select(
         (F.col("user_id") % 2).alias("treat"),
@@ -17128,18 +16760,9 @@ def standardization_ate(spark, sf_dir):
 # Rich-club coefficient curve (do hubs preferentially interlink?)
 # --------------------------------------------------------------------------
 
-_RICH_CLUB_SQL = """
-WITH m AS (SELECT count(*) AS m FROM documents),
-base AS (SELECT doc_id % m.m AS i, m.m AS m FROM documents, m),
-raw AS (
-  SELECT i AS s, (i + 1) % m AS t FROM base
-  UNION ALL SELECT i, (i * 2) % m FROM base
-  UNION ALL SELECT i, (i * 3) % m FROM base
-),
-und AS MATERIALIZED (
-  SELECT DISTINCT least(s, t) AS a, greatest(s, t) AS b FROM raw
-  WHERE s <> t
-),
+_RICH_CLUB_SQL = f"""
+WITH {_circulant_sql()},
+{_canonical_sql()},
 deg AS MATERIALIZED (
   SELECT n, CAST(count(*) AS BIGINT) AS d FROM (
     SELECT a AS n FROM und UNION ALL SELECT b AS n FROM und
@@ -17180,14 +16803,10 @@ def rich_club_coefficient(spark, sf_dir):
     bounded by distinct degrees, not nodes — so no per-threshold scan
     of the graph ever happens. Both histograms are combinable exact
     folds on the degree-joined edge snapshot."""
+    from gfftoneo4j_spark.operators.graph import _canonical_undirected
+
     _, raw = _circulant(spark, sf_dir)
-    a, b = F.least("s", "t"), F.greatest("s", "t")
-    und = (
-        raw.select(a.alias("a"), b.alias("b"))
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = _canonical_undirected(raw, "s", "t").localCheckpoint(eager=True)
     deg = (
         und.select(F.col("a").alias("n"))
         .unionAll(und.select(F.col("b").alias("n")))
@@ -18320,12 +17939,8 @@ def best_split_finder(spark, sf_dir):
 # Split-conformal prediction intervals (distributed exact order stat)
 # --------------------------------------------------------------------------
 
-_CONFORMAL_SQL = """
-WITH bounds AS (
-  SELECT (CAST(floor(epoch(min(ts))) AS BIGINT)
-          + CAST(floor(epoch(max(ts))) AS BIGINT)) // 2 AS mid
-  FROM events
-),
+_CONFORMAL_SQL = f"""
+WITH {_EVENT_MID_SQL},
 lab AS (
   SELECT event_type, CAST(round(value * 100) AS BIGINT) AS v100,
          CASE WHEN CAST(floor(epoch(ts)) AS BIGINT)
@@ -18377,13 +17992,7 @@ def split_conformal(spark, sf_dir):
     the coverage scan as one broadcast scalar."""
     ev = load_table(spark, sf_dir, "events")
     sec = F.unix_timestamp("ts").cast("bigint")
-    mid = ev.agg(
-        F.floor(
-            (F.min(sec).cast("bigint") + F.max(sec).cast("bigint")) / 2
-        )
-        .cast("bigint")
-        .alias("mid")
-    )
+    mid = _event_mid(ev)
     lab = ev.crossJoin(F.broadcast(mid)).select(
         "event_type",
         F.round(F.col("value") * 100).cast("bigint").alias("v100"),
@@ -18469,56 +18078,13 @@ def split_conformal(spark, sf_dir):
 
 _ANN_RECALL_SQL = f"""
 WITH ex AS ({_EMB_EXPLODE_SQL}),
-n AS (SELECT vec_id, sqrt(sum(x * x)) AS nrm FROM ex GROUP BY vec_id),
-q AS (SELECT * FROM ex WHERE vec_id < 5),
-dots AS (
-  SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id, sum(q.x * e.x) AS dp
-  FROM q JOIN ex e ON q.i = e.i AND e.vec_id <> q.vec_id
-  GROUP BY q.vec_id, e.vec_id
-),
-exact3 AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-           row_number() OVER (PARTITION BY query_id
-             ORDER BY round(dp / (nq.nrm * ne.nrm), 3) DESC, neighbor_id)
-             AS rank
-    FROM dots
-    JOIN n nq ON nq.vec_id = query_id
-    JOIN n ne ON ne.vec_id = neighbor_id
-  ) WHERE rank <= 3
-),
-planes AS (SELECT vec_id - 5 AS plane_idx, i, x FROM ex
-           WHERE vec_id BETWEEN 5 AND 8),
-bitdots AS (
-  SELECT e.vec_id, p.plane_idx, sum(e.x * p.x) AS dp
-  FROM ex e JOIN planes p ON e.i = p.i
-  GROUP BY e.vec_id, p.plane_idx
-),
-buckets AS (
-  SELECT vec_id AS id,
-         CAST(sum(CASE WHEN dp > 0 THEN CAST(power(2, plane_idx)
-                                             AS INTEGER) ELSE 0 END)
-              AS INTEGER) AS bucket
-  FROM bitdots GROUP BY vec_id
-),
-cand AS (
-  SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id, sum(q.x * e.x) AS dp
-  FROM q JOIN buckets bq ON bq.id = q.vec_id
-  JOIN buckets be ON be.bucket = bq.bucket AND be.id <> q.vec_id
-  JOIN ex e ON e.vec_id = be.id AND e.i = q.i
-  GROUP BY q.vec_id, e.vec_id
-),
-lsh3 AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-           row_number() OVER (PARTITION BY query_id
-             ORDER BY round(dp / (nq.nrm * ne.nrm), 3) DESC, neighbor_id)
-             AS rank
-    FROM cand
-    JOIN n nq ON nq.vec_id = query_id
-    JOIN n ne ON ne.vec_id = neighbor_id
-  ) WHERE rank <= 3
-)
+{_cosine_sql()},
+{_scored_sql()},
+exact3 AS ({_top3_sql()}),
+{_lsh_sql()},
+{_LSH_CAND_SQL},
+{_scored_sql("cand", name="lsh_scored")},
+lsh3 AS ({_top3_sql("lsh_scored")})
 SELECT e.query_id,
        CAST(count(*) AS BIGINT) AS n_exact,
        CAST(sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
@@ -18548,10 +18114,7 @@ def ann_recall_eval(spark, sf_dir):
     exact = SIM.cosine_topk(emb, qids, k=3).select(
         "query_id", "neighbor_id"
     )
-    planes = emb.where(F.col("vec_id").between(5, 8)).select(
-        (F.col("vec_id") - 5).cast("int").alias("plane_idx"),
-        F.col("embedding").alias("plane"),
-    )
+    planes = _lsh_planes(emb)
     lsh = SIM.lsh_topk(emb, qids, planes, k=3).select(
         F.col("query_id").alias("lq"),
         F.col("neighbor_id").alias("ln"),
@@ -18715,20 +18278,7 @@ def ari_nmi_agreement(spark, sf_dir):
 
 _MNN_SQL = f"""
 WITH ex AS ({_EMB_EXPLODE_SQL}),
-planes AS (SELECT vec_id - 5 AS plane_idx, i, x FROM ex
-           WHERE vec_id BETWEEN 5 AND 8),
-bitdots AS (
-  SELECT e.vec_id, p.plane_idx, sum(e.x * p.x) AS dp
-  FROM ex e JOIN planes p ON e.i = p.i
-  GROUP BY e.vec_id, p.plane_idx
-),
-buckets AS MATERIALIZED (
-  SELECT vec_id AS id,
-         CAST(sum(CASE WHEN dp > 0 THEN CAST(power(2, plane_idx)
-                                             AS INTEGER) ELSE 0 END)
-              AS INTEGER) AS bucket
-  FROM bitdots GROUP BY vec_id
-),
+{_lsh_sql()},
 n AS (SELECT vec_id, sqrt(sum(x * x)) AS nrm FROM ex GROUP BY vec_id),
 pairs AS MATERIALIZED (
   SELECT b1.id AS id1, b2.id AS id2, sum(e1.x * e2.x) AS dp
@@ -18766,10 +18316,7 @@ def mutual_nn_pairs(spark, sf_dir):
     bucket-partitioned window, and mutuality is one self-join of the
     tiny best-match frame on the reversed key."""
     emb = load_table(spark, sf_dir, "embeddings")
-    planes = emb.where(F.col("vec_id").between(5, 8)).select(
-        (F.col("vec_id") - 5).cast("int").alias("plane_idx"),
-        F.col("embedding").alias("plane"),
-    )
+    planes = _lsh_planes(emb)
     buckets = SIM.hyperplane_buckets(emb, planes)
     # r06: in-bucket pairs from the (id, bucket) table alone (shared
     # salted/pinned self-join), both orientations restored for the
@@ -18924,18 +18471,8 @@ def forecast_backtest(spark, sf_dir):
 # --------------------------------------------------------------------------
 
 _SCAN_SQL = f"""
-WITH m AS (SELECT count(*) AS m FROM documents),
-base AS (SELECT doc_id % m.m AS i, m.m AS m FROM documents, m),
-raw AS (
-  SELECT i AS s, (i + 1) % m AS t FROM base
-  UNION ALL SELECT i, (i + 2) % m FROM base
-  UNION ALL SELECT i, (i + 3) % m FROM base
-  UNION ALL SELECT i, (i * 2) % m FROM base
-),
-e0 AS MATERIALIZED (
-  SELECT DISTINCT least(s, t) AS a, greatest(s, t) AS b
-  FROM raw WHERE s <> t
-),
+WITH {_circulant_sql(_ADDITIVE)},
+{_canonical_sql("e0")},
 {_truss_support_block("sc", "e0")}
 SELECT u.a, u.b, coalesce(s.support, 0) AS support,
        round((coalesce(s.support, 0) + 2.0)
@@ -18961,16 +18498,13 @@ def edge_structural_similarity(spark, sf_dir):
     degrees are one combinable histogram, and the report is a left
     join so zero-support bridge edges keep sigma defined. Input: the
     triangle-rich additive circulant."""
-    from gfftoneo4j_spark.operators.graph import _enumerate_triangles
+    from gfftoneo4j_spark.operators.graph import (
+        _canonical_undirected,
+        _enumerate_triangles,
+    )
 
     _, raw = _circulant(spark, sf_dir, _ADDITIVE)
-    a, b = F.least("s", "t"), F.greatest("s", "t")
-    und = (
-        raw.select(a.alias("a"), b.alias("b"))
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = _canonical_undirected(raw, "s", "t").localCheckpoint(eager=True)
     deg = (
         und.select(F.col("a").alias("n"))
         .unionAll(und.select(F.col("b").alias("n")))
@@ -19058,7 +18592,7 @@ def entity_conv_diversity(spark, sf_dir):
     while the oracle derives the same rollup closed-form from the
     transcript template; agreeing proves the pipeline's edges carry
     the information losslessly."""
-    t = QUERIES["kg_triples"](spark, sf_dir).localCheckpoint(eager=True)
+    t = _kg_triples(spark, sf_dir)
     hm = t.where(F.col("pred") == "has_mention").select(
         F.col("subj").alias("turn"), F.col("obj").alias("mention")
     )
@@ -19603,19 +19137,9 @@ def _densest_sql(rounds: int = 6) -> str:
     """Oracle generator: unrolled parallel peel rounds. Each round
     removes every node whose degree is <= (1+eps) * average degree,
     recording the density before the cut."""
-    head = """
-WITH m AS (SELECT count(*) AS m FROM documents),
-base AS (SELECT doc_id % m.m AS i, m.m AS m FROM documents, m),
-raw AS (
-  SELECT i AS s, (i + 1) % m AS t FROM base
-  UNION ALL SELECT i, (i + 2) % m FROM base
-  UNION ALL SELECT i, (i + 3) % m FROM base
-  UNION ALL SELECT i, (i * 2) % m FROM base
-),
-e0 AS MATERIALIZED (
-  SELECT DISTINCT least(s, t) AS a, greatest(s, t) AS b
-  FROM raw WHERE s <> t
-)"""
+    head = f"""
+WITH {_circulant_sql(_ADDITIVE)},
+{_canonical_sql("e0")}"""
     parts = []
     for r in range(rounds):
         nxt = r + 1
@@ -19671,14 +19195,10 @@ def densest_subgraph_peel(spark, sf_dir):
     against the kept set, all on an eagerly checkpointed shrinking
     edge frame. The density curve itself is the report (is_best
     marks the certified round)."""
+    from gfftoneo4j_spark.operators.graph import _canonical_undirected
+
     _, raw = _circulant(spark, sf_dir, _ADDITIVE)
-    a, b = F.least("s", "t"), F.greatest("s", "t")
-    e = (
-        raw.select(a.alias("a"), b.alias("b"))
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = _canonical_undirected(raw, "s", "t").localCheckpoint(eager=True)
     curve = []
     for r in range(6):
         deg = (
@@ -20154,12 +19674,8 @@ def design_effect_cluster(spark, sf_dir):
 # Winner's-curse audit (split-half shrinkage of top-ranked arms)
 # --------------------------------------------------------------------------
 
-_WCURSE_SQL = """
-WITH bounds AS (
-  SELECT (CAST(floor(epoch(min(ts))) AS BIGINT)
-          + CAST(floor(epoch(max(ts))) AS BIGINT)) // 2 AS mid
-  FROM events
-),
+_WCURSE_SQL = f"""
+WITH {_EVENT_MID_SQL},
 arms AS (
   SELECT event_type || '_' || CAST(user_id % 4 AS VARCHAR) AS arm,
          CASE WHEN CAST(floor(epoch(ts)) AS BIGINT)
@@ -20208,13 +19724,7 @@ def winners_curse_audit(spark, sf_dir):
     the arm-alphabet frame."""
     ev = load_table(spark, sf_dir, "events")
     sec = F.unix_timestamp("ts").cast("bigint")
-    mid = ev.agg(
-        F.floor(
-            (F.min(sec).cast("bigint") + F.max(sec).cast("bigint")) / 2
-        )
-        .cast("bigint")
-        .alias("mid")
-    )
+    mid = _event_mid(ev)
     v100 = F.round(F.col("value") * 100).cast("bigint")
     arms = ev.crossJoin(F.broadcast(mid)).select(
         F.concat(

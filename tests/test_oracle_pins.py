@@ -58,6 +58,7 @@ def _load_pins() -> dict:
 
 def test_pins_cover_every_twin():
     pins = _load_pins()
+    assert len(ORACLE) == 311  # every query but boruvka_mst (rows only)
     assert sorted(pins) == list(SCALES)
     for scale in SCALES:
         assert set(pins[scale]) == set(ORACLE), scale
