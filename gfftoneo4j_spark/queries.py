@@ -6379,7 +6379,7 @@ def mad_anomaly(spark, sf_dir):
 # --------------------------------------------------------------------------
 
 _HITS_STEP_SQL = """
-{out}r AS (
+{out}r AS MATERIALIZED (
   SELECT n.node, CAST(coalesce(s.s, 0) AS BIGINT) AS {c}
   FROM nodes n LEFT JOIN (
     SELECT e.{to} AS node, sum(p.{pc}) AS s
@@ -13369,18 +13369,10 @@ def wl_refinement(spark, sf_dir):
     degree, then an md5 — all combinable/codegen, state one string
     per node; the vertex-transitive circulant collapses to few
     colors, a labeled real graph would not."""
-    colors = None
+    from gfftoneo4j_spark.operators.graph import _undirected
+
     _, raw = _circulant(spark, sf_dir)
-    und = (
-        raw.select("s", "t")
-        .where(F.col("s") != F.col("t"))
-        .unionAll(
-            raw.select(F.col("t").alias("s"), F.col("s").alias("t"))
-            .where(F.col("s") != F.col("t"))
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = _undirected(raw, "s", "t").localCheckpoint(eager=True)
     colors = und.groupBy(F.col("s").alias("node")).agg(
         F.count("*").cast("string").alias("c")
     )
@@ -13395,7 +13387,6 @@ def wl_refinement(spark, sf_dir):
         agg = nb.groupBy("node").agg(
             F.concat_ws(",", F.sort_array(F.collect_list("nc"))).alias("ns")
         )
-        prev = colors
         colors = (
             agg.join(colors, "node")
             .select(
@@ -13406,7 +13397,6 @@ def wl_refinement(spark, sf_dir):
             )
             .localCheckpoint(eager=True)
         )
-        prev.unpersist(blocking=False)
         stat = (
             colors.groupBy("c")
             .agg(F.count("*").alias("cls"))
@@ -13479,18 +13469,11 @@ def label_spreading(spark, sf_dir):
     PageRank discipline: per round ONE edge-keyed equi-join + one
     combinable sum + one anti-join for the clamp; state is (node,
     class, int) rows, only nonzero classes ever materialize."""
+    from gfftoneo4j_spark.operators.graph import _undirected
+
     ids, raw = _circulant(spark, sf_dir)
     nodes = ids.select("i").distinct()
-    und = (
-        raw.where(F.col("s") != F.col("t"))
-        .unionAll(
-            raw.select(F.col("t").alias("s"), F.col("s").alias("t")).where(
-                F.col("s") != F.col("t")
-            )
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = _undirected(raw, "s", "t").localCheckpoint(eager=True)
     deg = und.groupBy(F.col("t").alias("t")).agg(
         F.count("*").cast("bigint").alias("deg")
     )

@@ -62,7 +62,12 @@ def main():
     import __spark_entry__ as entrymod
     from gfftoneo4j_spark.session import get_spark
 
-    spark = get_spark(app="gate-check", cpus=8, shuffle_partitions=8)
+    spark = get_spark(
+        app="gate-check",
+        cpus=8,
+        shuffle_partitions=8,
+        extra={"spark.ui.showConsoleProgress": "false"},
+    )
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

@@ -1,795 +1,361 @@
-"""Two-cluster-size scaling benchmark (north_rule protocol), v2.
+"""N-vs-4N scaling protocol, shaped by the host it runs on.
 
-The rule requires throughput scaling efficiency >= 0.8 between N and 4N
-EXECUTOR clusters. Sandbox protocol: Spark's `local-cluster[W,C,M]`
-master runs W real, separate executor JVMs with C cores each on this
-machine — the faithful local stand-in for a cluster (a single 32-thread
-local[32] JVM is NOT: allocator/JIT/lock contention caps one JVM well
-below 32 cores, which is exactly why production executors are 4-8 cores).
-N = 1 executor x 8 cores; 4N = 4 executors x 8 cores. Same job, same
-input, efficiency = (throughput_4N / throughput_N) / 4.
+N is ``local-cluster[1,C,M]`` and 4N is ``local-cluster[4,C,M]``: W
+separate executor JVMs with C cores each, the local stand-in for a
+cluster. C = max(1, cores // 4), with the cores read from
+``os.sched_getaffinity``, so 4N fits the host. M, the heap of each
+executor and of each driver, comes from ``MemAvailable``: the envelope
+runs 4 apps of one driver and one executor each, and those 8 heaps get
+half of the free memory.
 
-v2 protocol upgrades (round 2, after the 0.401 round-1 miss was traced):
-- Per-stage profiling (BENCH/stage_profile_sql.json) showed the reduce
-  stages scale near-perfectly (354 vs 359 task-seconds at N vs 4N) while
-  map stages inflate 1.3-1.7x in CPU at 32 busy cores — single-box
-  memory-bus contention, not a pipeline serial fraction.
-- INTERLEAVED sessions (N, 4N, N, 4N): this VM shows +-20% wall drift on
-  identical configs over minutes; alternating sizes makes host drift hit
-  both sides of the ratio instead of biasing it.
-- Executor spec 8 cores / 16 GiB, G1 (measured: 16g cut GC from 10-17%
-  of task time and stabilized walls; ParallelGC regressed).
-- Headline extraction mode is the pure-JVM `sql` path: the mention
-  grammar is regular, so Catalyst expresses it whole-stage-codegen-side
-  ("UDFs are the slow path"); the Arrow pandas-UDF path (north_star's
-  vectorized extraction, parity-tested vs sql in pytest) is reported in
-  a second row — at 4N its 32 Python workers + 32 JVM task threads
-  oversubscribe the 32 hardware cores, a sandbox artifact a real
-  cluster (Python workers co-resident with their own executor) lacks.
-- CONTENTION ENVELOPE: 4 *independent, uncoordinated* 1x8 clusters run
-  the same job concurrently. Any slowdown vs a solo 1x8 run is pure
-  hardware contention (memory bus / shared host) — an upper bound on
-  the scaling ANY job can show on this box. We report raw efficiency
-  and efficiency relative to that envelope.
-- WEAK SCALING: 16M turns @ 1x8 vs 64M turns @ 4x8 (fixed per-core
-  load, the actual 100 TB regime: bigger cluster <-> bigger data).
+Two jobs, each with one work-per-core constant (``PER_CORE``):
+
+- pipeline: ``build_kg`` with ``extraction="sql"`` (the headline path)
+  over a ``write_corpus_fast`` corpus, timed together with its triple
+  count; the check is ``n_triples``;
+- pagerank: 5 rounds of ``pagerank_fixed_point`` over an in-engine
+  graph with hub-skewed sources (the cube of a uniform hash, so the top
+  1% of nodes hold ~27% of out-edges) and nodes = edges / 10; the
+  catalog cache is cleared before each run, because the loop state is
+  cached and an equal plan would otherwise be served from the last
+  run's cache; the check is the node count and the rank mass (integer
+  fixed-point, so it is exact).
+
+Per job, three steps:
+
+1. strong: ``PAIRS`` interleaved N/4N pairs over the 4C-sized input,
+   N first in even pairs and 4N first in odd ones;
+2. envelope: 4 independent N apps run the same input concurrently,
+   behind a barrier after their cold runs. They share nothing but the
+   host, so solo N wall / concurrent wall bounds what any 4-way job can
+   reach here;
+3. weak: the C-sized input at N, against the strong 4N median.
+
+Each child is one app: it waits until all W executors have registered,
+then makes 1 cold run (recorded, kept out of the medians) and
+``MEASURED`` measured runs, each under its own job group. Its
+uncompressed event log is read after ``spark.stop()`` with
+perfbench's ``parse_event_log``, which gives each run's executor CPU,
+tasks and shuffle bytes. Input and shuffle partitions are fixed at 8
+per 4N core, at both sizes. A failed child stops the suite with its
+stderr, and a check that differs between runs stops it too.
+
+Efficiencies are throughput ratios: strong = N wall / (4 x 4N wall),
+envelope = solo N wall / concurrent N wall, weak = weak N wall / strong
+4N wall, each from medians; strong / envelope is not clamped.
 
 Usage:
-  python tools/scaling_bench.py                 # full suite -> BENCH/BASELINE.md
-  python tools/scaling_bench.py --quick         # sql strong-scaling only
-  python tools/scaling_bench.py --run --executors 4 ...   # one child session
+  python tools/scaling_bench.py
+
+The record goes to ``BENCH/scaling.json`` under the host label
+(``4c-15g``), and ``BENCH/BASELINE.md`` is re-rendered from that file.
 """
 
 from __future__ import annotations
 
-import argparse
 import json
 import os
+import shutil
 import statistics
 import subprocess
 import sys
+import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+SCRIPT = os.path.abspath(__file__)
+REPO = os.path.dirname(os.path.dirname(SCRIPT))
+sys.path += [REPO, os.path.join(REPO, "perfbench")]
+RESULTS = os.path.join(REPO, "BENCH", "scaling.json")
+BASELINE = os.path.join(REPO, "BENCH", "BASELINE.md")
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-CORES_PER_EXECUTOR = 8
-EXECUTOR_MEM_MB = 16384
+JOBS = ("pipeline", "pagerank")
+# work per core, chosen on a 4-core host so that a warm strong N run
+# (the 4C-sized input on C cores) takes about 40-60 s
+PER_CORE = {"pipeline": 1_200_000, "pagerank": 1_000_000}
+PAIRS = 3
+MEASURED = 2
+ENVELOPE = 4
+PARTITIONS_PER_CORE = 8
+LAYER = ("executor_cpu_s", "tasks", "shuffle_read_bytes", "shuffle_write_bytes")
 
 
-def run_once(
-    executors: int,
-    corpus_dir: str,
-    extraction: str,
-    warmups: int,
-    measured: int,
-    barrier: str | None = None,
-    job: str = "pipeline",
-) -> None:
+def shape(cores: int, mem_available_mb: int) -> dict:
+    """Cores per executor and the heap of every JVM: 4 executors of C
+    cores fit the host, and the envelope's 2 x 4 heaps take half of the
+    free memory (whole 128 MB steps)."""
+    heap = max(512, mem_available_mb // 2 // (2 * ENVELOPE) // 128 * 128)
+    return {"cores": cores, "C": max(1, cores // 4), "heap_mb": heap}
+
+
+def host() -> tuple[str, dict]:
+    with open("/proc/meminfo") as f:
+        mem = {k: int(v.split()[0]) for k, v in (l.split(":", 1) for l in f)}
+    cores = len(os.sched_getaffinity(0))
+    label = f"{cores}c-{mem['MemTotal'] // 2**20}g"
+    return label, shape(cores, mem["MemAvailable"] // 1024)
+
+
+# ---------------------------------------------------------------- child
+
+
+def child(spec: dict) -> list[dict]:
+    """One app of ``spec["executors"]`` executors: 1 cold run, then
+    MEASURED runs; per run the wall, the check and the LAYER counters."""
     from pyspark.sql import functions as F
+    from tracing import JOB_GROUP, parse_event_log
 
-    from gfftoneo4j_spark.plans.pipeline import build_kg
     from gfftoneo4j_spark.session import get_spark
-    from gfftoneo4j_spark.sources.transcripts import (
-        read_alias_dict,
-        read_transcripts,
-    )
 
-    os.environ["PYTHONPATH"] = REPO
-    # Fixed fine-grained work decomposition at BOTH cluster sizes
-    # (strong-scaling protocol): split the scan at ~4MB so the input
-    # yields hundreds of tasks regardless of executor count — the local
-    # stand-in for a 100 TB table's tens of thousands of natural splits.
-    extra = {
-        "spark.sql.files.maxPartitionBytes": "4m",
-        "spark.sql.files.openCostInBytes": "512k",
-        "spark.executorEnv.PYTHONPATH": REPO,
-    }
-    if job == "pagerank":
-        # 10^8 edges through 32 shuffle partitions is ~3M+ rows per
-        # partition with 8 concurrent tasks per executor — the 4x8
-        # probe OOMed an executor materializing the checkpoint. 256
-        # partitions (fixed at BOTH sizes, strong-scaling protocol)
-        # keeps partitions ~400k rows, the same sizing rule a 100 TB
-        # run applies via spark.sql.shuffle.partitions ~ data/128MB.
-        extra["spark.sql.shuffle.partitions"] = "256"
-        # Shuffle dirs stay on the session default tmpfs: jstack during
-        # a disk-dir probe showed every 4x8 task thread inside
-        # FileOutputStream.writeBytes — 32 writers serialized on the
-        # VM's one virtio disk, and 4x8 measured SLOWER than 1x8 (129s
-        # vs 90s at 30M edges). The budget that makes tmpfs safe here:
-        # 4x14g heap + ~10G shuffle residue at 60M edges + 8g driver
-        # ~= 75G of the 126G tmpfs-backed RAM — but ONLY with the rest
-        # of the machine idle, which the harness notes in BASELINE.md.
-        # local-cluster executors default to spark.executor.memory=1g
-        # (the worker's 16384 MB spec is only what it ADVERTISES); the
-        # pipeline job's per-task state fits in 1g, but hash-
-        # aggregating 10^8 edges does not — stage 6 OOMed every
-        # executor. 14g request = one executor per 16 GiB worker.
-        extra["spark.executor.memory"] = "14g"
-        extra["spark.executor.extraJavaOptions"] = "-XX:+UseG1GC"
-        # Per-round |E|-row shuffles between co-located executor JVMs
-        # went through localhost TCP (netty) and this VM spends ~85%
-        # SYSTEM time in that path — 4x8 measured SLOWER than 1x8.
-        # Host-local shuffle reading (SPARK-27651) lets an executor
-        # read a same-host peer's shuffle files straight from disk,
-        # which is both the fix here and exactly what a real cluster's
-        # multi-executor-per-node layout does.
-        extra["spark.shuffle.readHostLocalDisk"] = "true"
-    spark = get_spark(
-        app=f"scaling-{executors}x{CORES_PER_EXECUTOR}-{job}-{extraction}",
-        master=f"local-cluster[{executors},{CORES_PER_EXECUTOR},{EXECUTOR_MEM_MB}]",
-        extra=extra,
-    )
-    if job == "pagerank":
-        # Iterative shuffle-per-round workload (verdict r03 #4): the
-        # pipeline scales near-linearly because it is a one-pass DAG;
-        # scaling regressions in iterative ops hide in the per-round
-        # exchange + checkpoint cadence, so they get their own N-vs-4N
-        # datapoint. Deterministic synthetic graph, generated in-engine
-        # (no corpus): E edges over V nodes, hub-skewed sources
-        # (cube of a uniform hash -> top-1% nodes carry ~27% of
-        # out-edges, the Zipf-ish regime where per-round groupBy skew
-        # shows), uniform destinations. Fixed 256-way decomposition at
-        # both cluster sizes (strong-scaling protocol, same as the 4MB
-        # scan splits for the pipeline job).
-        from gfftoneo4j_spark.operators.graph import pagerank_fixed_point
-
-        n_edges = int(os.environ.get("SPARK_GRAFT_PR_EDGES", 60_000_000))
-        n_nodes = max(1, n_edges // 10)
-        base = spark.range(0, n_edges, 1, 256)
-        u_hash = F.pmod(F.xxhash64(F.lit("u"), F.col("id")), F.lit(1_000_003))
-        # dense 4-byte node ids (VERDICT r04 item 3): n_nodes ~ 6M fits
-        # INT with 300x headroom; halving the id bytes shrinks the
-        # per-round rank-vector shuffle, the hash-table keys the |E|
-        # probe reads, and the groupBy(v) combine rows — the remaining
-        # untested lever on the DRAM-bound N-vs-4N datapoint. (The
-        # dense_ids gated query is the general string->dense mapping;
-        # here ids are born dense.)
-        edges_df = base.select(
-            F.floor(
-                F.lit(n_nodes) * F.pow(u_hash / F.lit(1_000_003.0), F.lit(3.0))
-            )
-            .cast("int")
-            .alias("u"),
-            F.pmod(F.xxhash64(F.lit("v"), F.col("id")), F.lit(n_nodes))
-            .cast("int")
-            .alias("v"),
+    w, c, heap = spec["executors"], spec["C"], spec["heap_mb"]
+    parts = PARTITIONS_PER_CORE * 4 * c
+    log_dir = tempfile.mkdtemp(prefix="scaling-eventlog-")
+    try:
+        spark = get_spark(
+            app=f"scaling-{spec['job']}-{w}x{c}",
+            master=f"local-cluster[{w},{c},{heap}]",
+            shuffle_partitions=parts,
+            extra={
+                "spark.driver.memory": f"{heap}m",
+                "spark.executor.memory": f"{heap}m",
+                "spark.executorEnv.PYTHONPATH": REPO,
+                # the scan splits into many tasks at both sizes
+                "spark.sql.files.maxPartitionBytes": "4m",
+                "spark.sql.files.openCostInBytes": "512k",
+                "spark.ui.showConsoleProgress": "false",
+                "spark.eventLog.enabled": "true",
+                "spark.eventLog.compress": "false",
+                "spark.eventLog.dir": f"file://{log_dir}",
+            },
         )
-        n_turns = n_edges  # throughput denominator: edges per second
-
-        def one_run() -> tuple[float, int]:
-            # HONESTY GUARD: the loop state is columnar `persist`, and
-            # Spark's CacheManager matches EQUIVALENT logical plans —
-            # a repeated run of this deterministic in-engine job would
-            # silently serve the loop invariants AND the final round
-            # from the previous run's cache (measured: a fully-lazy
-            # variant "ran" 60M edges in 2.03s). localCheckpoint-era
-            # runs had unique lineage per call and never reused, so
-            # comparable timing requires dropping the cache each run.
-            spark.catalog.clearCache()
-            t0 = time.time()
-            ranks = pagerank_fixed_point(edges_df, iters=5)
-            row = ranks.select(
-                F.count(F.lit(1)).alias("n"), F.sum("rank").alias("mass")
-            ).collect()[0]
-            return time.time() - t0, int(row["n"])
-
-    else:
-        t = read_transcripts(
-            spark, os.path.join(corpus_dir, "transcripts.parquet")
-        )
-        d = read_alias_dict(spark, os.path.join(corpus_dir, "alias_dict.parquet"))
-        n_turns = t.count()
-
-        def one_run() -> tuple[float, int]:
-            # a NEW plan per execution: re-collecting the same DataFrame
-            # would reuse its shuffle map outputs (stage skipping).
-            # build_kg is timed too: staging `linked` runs the alias
-            # dictionary's broadcast jobs when the build is created.
-            t0 = time.time()
-            res = build_kg(spark, t, d, extraction=extraction)
-            n = res.triples.select(F.count(F.lit(1))).collect()[0][0]
-            return time.time() - t0, n
-
-    # Steady-state protocol: first executions pay JIT compilation of the
-    # plan's whole-stage-codegen classes in every executor JVM (measured
-    # 70s -> 46s -> 9s back-to-back); production jobs run warm for hours.
-    cold_sec, n_triples = one_run()
-    for _ in range(warmups - 1):
-        one_run()
-    if barrier:
-        # envelope mode: wait until every concurrent sibling is warmed,
-        # so the measured runs overlap fully
-        with open(barrier + f".ready.{os.getpid()}", "w") as f:
-            f.write("1")
-        while not os.path.exists(barrier):
+        sc = spark.sparkContext
+        # executors register after the session starts; a job planned
+        # before then sees a smaller defaultParallelism
+        deadline = time.time() + 180
+        while sc._jsc.sc().getExecutorMemoryStatus().size() < w + 1:
+            if time.time() > deadline:
+                raise RuntimeError(f"{w} executors did not register")
             time.sleep(0.2)
-    walls = [one_run()[0] for _ in range(measured)]
-    print(
-        json.dumps(
-            {
-                "executors": executors,
-                "extraction": extraction,
-                "job": job,
-                "cores": executors * CORES_PER_EXECUTOR,
-                "n_turns": n_turns,
-                "n_triples": n_triples,
-                "walls": [round(w, 2) for w in walls],
-                "cold_sec": round(cold_sec, 2),
-            }
-        )
-    )
 
-
-def _child(args: list[str], tag: str, retries: int = 1) -> dict:
-    # one retry: a multi-hundred-second child losing one executor to a
-    # transient (ambient memory pressure, GC stall past the heartbeat)
-    # shouldn't sink a multi-hour suite
-    lines: list[str] = []
-    for attempt in range(retries + 1):
-        out = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--run", *args],
-            capture_output=True,
-            text=True,
-            check=False,
-        )
-        lines = [l for l in out.stdout.splitlines() if l.startswith("{")]
-        if lines:
-            break
-        print(out.stdout[-2000:], out.stderr[-2000:], file=sys.stderr)
-        if attempt < retries:
-            print(f"child {tag} failed; retrying", file=sys.stderr)
-    if not lines:
-        raise SystemExit(f"child {tag} failed")
-    r = json.loads(lines[-1])
-    print(f"[{tag}] walls={r['walls']} cold={r['cold_sec']}", file=sys.stderr)
-    return r
-
-
-def _ensure_corpus(corpus_dir: str, turns: int) -> None:
-    from gfftoneo4j_spark.corpus import write_corpus_fast
-
-    manifest = os.path.join(corpus_dir, "_MANIFEST.json")
-    want = {"turns": turns, "version": 5}
-    if not (os.path.exists(manifest) and json.load(open(manifest)) == want):
-        print(f"generating {turns} turns into {corpus_dir} ...", file=sys.stderr)
-        write_corpus_fast(corpus_dir, turns)
-        json.dump(want, open(manifest, "w"))
-
-
-def strong_scaling(
-    corpus: str,
-    extraction: str,
-    sessions: int,
-    measured: int,
-    job: str = "pipeline",
-) -> dict:
-    """Interleaved N / 4N sessions; median over all measured walls."""
-    walls: dict[int, list[float]] = {1: [], 4: []}
-    meta: dict[int, dict] = {}
-    for _ in range(sessions):
-        for ex in (1, 4):
-            r = _child(
-                [
-                    "--executors", str(ex), "--corpus", corpus,
-                    "--extraction", extraction, "--job", job,
-                    "--warmups", "1", "--measured", str(measured),
-                ],
-                f"strong {ex}x8 {job if job != 'pipeline' else extraction}",
+        if spec["job"] == "pipeline":
+            from gfftoneo4j_spark.plans.pipeline import build_kg
+            from gfftoneo4j_spark.sources.transcripts import (
+                read_alias_dict,
+                read_transcripts,
             )
-            walls[ex].extend(r["walls"])
-            meta[ex] = r
-    out = {}
-    for ex in (1, 4):
-        med = statistics.median(walls[ex])
-        out[ex] = {
-            "wall_median": round(med, 2),
-            "walls": walls[ex],
-            "cold_sec": meta[ex]["cold_sec"],
-            "turns_per_sec": round(meta[ex]["n_turns"] / med, 1),
-            "n_triples": meta[ex]["n_triples"],
-            "n_turns": meta[ex]["n_turns"],
-        }
-    out["efficiency"] = round(
-        (out[4]["turns_per_sec"] / out[1]["turns_per_sec"]) / 4.0, 3
-    )
-    return out
+
+            t = read_transcripts(spark, os.path.join(spec["corpus"], "transcripts.parquet"))
+            d = read_alias_dict(spark, os.path.join(spec["corpus"], "alias_dict.parquet"))
+
+            def one_run():
+                res = build_kg(spark, t, d, extraction="sql")
+                return res.triples.select(F.count(F.lit(1))).collect()[0][0]
+
+        else:
+            from gfftoneo4j_spark.operators.graph import pagerank_fixed_point
+
+            n_nodes = max(1, spec["units"] // 10)
+            u_hash = F.pmod(F.xxhash64(F.lit("u"), F.col("id")), F.lit(1_000_003))
+            edges = spark.range(0, spec["units"], 1, parts).select(
+                F.floor(F.lit(n_nodes) * F.pow(u_hash / F.lit(1_000_003.0), F.lit(3.0)))
+                .cast("int")
+                .alias("u"),
+                F.pmod(F.xxhash64(F.lit("v"), F.col("id")), F.lit(n_nodes))
+                .cast("int")
+                .alias("v"),
+            )
+
+            def one_run():
+                ranks = pagerank_fixed_point(edges, iters=5)
+                row = ranks.agg(F.count(F.lit(1)), F.sum("rank")).collect()[0]
+                return [row[0], row[1]]
+
+        runs = []
+        for i in range(1 + MEASURED):
+            if i == 1 and spec.get("barrier"):
+                open(os.path.join(spec["barrier"], f"ready.{os.getpid()}"), "w").close()
+                while not os.path.exists(os.path.join(spec["barrier"], "go")):
+                    time.sleep(0.2)
+            spark.catalog.clearCache()
+            sc.setLocalProperty(JOB_GROUP, f"run#{i}")
+            t0 = time.perf_counter()
+            check = one_run()
+            runs.append({"wall_s": round(time.perf_counter() - t0, 2), "check": check})
+            for jrdd in sc._jsc.getPersistentRDDs().values():
+                jrdd.unpersist()
+        spark.stop()  # flushes the event log
+        groups = parse_event_log(log_dir)
+    finally:
+        shutil.rmtree(log_dir, ignore_errors=True)
+    for i, run in enumerate(runs):
+        run.update({k: round(groups[f"run#{i}"][k], 3) for k in LAYER})
+    return runs
 
 
-def envelope(
-    corpus: str, extraction: str, solo_wall: float, job: str = "pipeline"
-) -> dict:
-    """4 independent, uncoordinated 1x8 clusters running the same job
-    concurrently. Zero Spark coordination between them -> any slowdown
-    vs the solo 1x8 wall is pure shared-hardware contention, an upper
-    bound on the scaling ANY 4x-parallel job can exhibit on this box."""
-    barrier = f"/tmp/kg_envelope_barrier_{os.getpid()}"
-    for f in os.listdir("/tmp"):
-        if f.startswith(os.path.basename(barrier)):
-            os.unlink(os.path.join("/tmp", f))
+# ---------------------------------------------------------- orchestrator
+
+
+def _argv(spec: dict) -> list[str]:
+    return [sys.executable, SCRIPT, "--child", json.dumps(spec)]
+
+
+def _result(spec: dict, code: int, out: str, err: str) -> list[dict]:
+    if code != 0:
+        sys.stderr.write(err)
+        raise SystemExit(f"child {spec} failed with exit code {code}")
+    runs = json.loads(out.splitlines()[-1])
+    print(f"  {spec['job']} {spec['executors']}x{spec['C']} {spec['units']:,}:",
+          [r["wall_s"] for r in runs], file=sys.stderr, flush=True)
+    return runs
+
+
+def run_child(spec: dict) -> list[dict]:
+    p = subprocess.run(_argv(spec), capture_output=True, text=True, check=False)
+    return _result(spec, p.returncode, p.stdout, p.stderr)
+
+
+def run_envelope(spec: dict) -> list[list[dict]]:
+    """ENVELOPE concurrent N children; their measured runs start
+    together once every child has finished its cold run."""
+    barrier = tempfile.mkdtemp(prefix="scaling-barrier-")
+    logs = [tempfile.TemporaryFile("w+") for _ in range(ENVELOPE)]
+    spec = {**spec, "barrier": barrier}
     procs = [
-        subprocess.Popen(
-            [
-                sys.executable, os.path.abspath(__file__), "--run",
-                "--executors", "1", "--corpus", corpus,
-                "--extraction", extraction, "--job", job,
-                "--warmups", "1", "--measured", "2", "--barrier", barrier,
-            ],
-            stdout=subprocess.PIPE,
-            stderr=subprocess.DEVNULL,
-            text=True,
-        )
-        for _ in range(4)
+        subprocess.Popen(_argv(spec), stdout=subprocess.PIPE, stderr=log, text=True)
+        for log in logs
     ]
-    # release the barrier once all 4 have finished warm-up
-    while True:
-        ready = [f for f in os.listdir("/tmp") if f.startswith(os.path.basename(barrier) + ".ready")]
-        if len(ready) >= 4:
-            break
-        if any(p.poll() is not None for p in procs):
-            raise SystemExit("an envelope child died before the barrier")
-        time.sleep(0.5)
-    with open(barrier, "w") as f:
-        f.write("go")
-    walls = []
-    for p in procs:
-        out, _ = p.communicate()
-        lines = [l for l in out.splitlines() if l.startswith("{")]
-        walls.extend(json.loads(lines[-1])["walls"])
-    med = statistics.median(walls)
-    contention = med / solo_wall
-    print(f"[envelope] concurrent walls={walls} solo={solo_wall}", file=sys.stderr)
+    try:
+        while len([f for f in os.listdir(barrier) if f.startswith("ready.")]) < ENVELOPE:
+            for p, log in zip(procs, logs):
+                if p.poll() is not None:
+                    log.seek(0)
+                    _result(spec, p.returncode or 1, "", log.read())
+            time.sleep(0.5)
+        open(os.path.join(barrier, "go"), "w").close()
+        out = []
+        for p, log in zip(procs, logs):
+            stdout, _ = p.communicate()
+            log.seek(0)
+            out.append(_result(spec, p.returncode, stdout, log.read()))
+        return out
+    finally:
+        for p, log in zip(procs, logs):
+            p.kill()
+            log.close()
+        shutil.rmtree(barrier, ignore_errors=True)
+
+
+def _side(children: list[list[dict]]) -> dict:
+    measured = [r for runs in children for r in runs[1:]]
+    walls = [r["wall_s"] for r in measured]
     return {
-        "concurrent_walls": walls,
-        "wall_median": round(med, 2),
-        "solo_wall": solo_wall,
-        "contention_factor": round(contention, 3),
-        # the best strong-scaling efficiency the hardware permits: 4
-        # truly independent jobs achieve 4/contention of ideal
-        "envelope_efficiency": round(1.0 / contention, 3),
+        "cold_s": [runs[0]["wall_s"] for runs in children],
+        "walls": walls,
+        "wall_median": round(statistics.median(walls), 2),
+        **{k: [r[k] for r in measured] for k in LAYER},
     }
 
 
-def weak_scaling(small_corpus: str, strong: dict, extraction: str) -> dict:
-    """Fixed per-core load: 16M turns @ 1x8 vs 64M turns @ 4x8 — the
-    actual 100 TB regime (bigger cluster <-> bigger data). Reuses the
-    strong-scaling 4x8 median as the big-corpus datapoint."""
-    r1 = _child(
-        [
-            "--executors", "1", "--corpus", small_corpus,
-            "--extraction", extraction, "--warmups", "1", "--measured", "3",
-        ],
-        f"weak 1x8 {extraction}",
-    )
-    w1 = statistics.median(r1["walls"])
-    thr1 = r1["n_turns"] / w1
-    thr4 = strong[4]["turns_per_sec"]
+def _same_check(job: str, children: list[list[dict]]):
+    checks = {json.dumps(r["check"]) for runs in children for r in runs}
+    if len(checks) != 1:
+        raise SystemExit(f"{job}: runs over one input disagree: {sorted(checks)}")
+    return json.loads(checks.pop())
+
+
+def efficiencies(job: dict) -> dict:
+    n, n4 = job["strong"]["n"], job["strong"]["4n"]
+    strong = n["wall_median"] / (4 * n4["wall_median"])
+    envelope = n["wall_median"] / job["envelope"]["wall_median"]
+    cpu = statistics.median(n4["executor_cpu_s"]) / statistics.median(n["executor_cpu_s"])
     return {
-        "small": {
-            "n_turns": r1["n_turns"],
-            "wall_median": round(w1, 2),
-            "turns_per_sec": round(thr1, 1),
-        },
-        "big": {
-            "n_turns": strong[4]["n_turns"],
-            "wall_median": strong[4]["wall_median"],
-            "turns_per_sec": thr4,
-        },
-        "efficiency": round(thr4 / (4.0 * thr1), 3),
+        "strong": round(strong, 3),
+        "envelope": round(envelope, 3),
+        "vs_envelope": round(strong / envelope, 3),
+        "weak": round(job["weak"]["wall_median"] / n4["wall_median"], 3),
+        "executor_cpu_4n_over_n": round(cpu, 3),
     }
 
 
-def _load_results(path: str) -> dict:
-    """json round-trips the per-cluster-size int keys (1, 4) to the
-    strings "1"/"4"; write_baseline_md indexes with ints — normalize
-    digit keys back on load so merged reruns can re-render every
-    section."""
-
-    def fix(d):
-        if isinstance(d, dict):
-            return {
-                (int(k) if isinstance(k, str) and k.isdigit() else k): fix(v)
-                for k, v in d.items()
-            }
-        return d
-
-    return fix(json.load(open(path)))
-
-
-def orchestrate(args) -> None:
-    if args.render:
-        # regenerate BASELINE.md from the recorded suite results (no
-        # measurement) — used after narrative edits to this writer
-        results = _load_results(os.path.join(REPO, "BENCH", "scaling.json"))
-        write_baseline_md(results)
-        return
-    if args.pagerank_weak:
-        # weak datapoint only: one 1x8 child at edges/4, reuses the
-        # recorded strong_pagerank 4x8 median as the big-graph side
-        # (same protocol shape as weak_scaling for the pipeline).
-        path = os.path.join(REPO, "BENCH", "scaling.json")
-        results = _load_results(path)
-        big = results["strong_pagerank"][4]
-        os.environ["SPARK_GRAFT_PR_EDGES"] = str(big["n_turns"] // 4)
-        try:
-            r1 = _child(
-                [
-                    "--executors", "1", "--corpus", args.corpus,
-                    "--extraction", "sql", "--job", "pagerank",
-                    "--warmups", "1", "--measured", "2",
-                ],
-                "weak-pagerank 1x8",
-            )
-        finally:
-            del os.environ["SPARK_GRAFT_PR_EDGES"]
-        w1 = statistics.median(r1["walls"])
-        thr1 = r1["n_turns"] / w1
-        results["weak_pagerank"] = {
-            "small": {
-                "n_turns": r1["n_turns"],
-                "wall_median": round(w1, 2),
-                "walls": r1["walls"],
-                "turns_per_sec": round(thr1, 1),
-            },
-            "big": {
-                "n_turns": big["n_turns"],
-                "wall_median": big["wall_median"],
-                "turns_per_sec": big["turns_per_sec"],
-            },
-            "efficiency": round(big["turns_per_sec"] / (4.0 * thr1), 3),
-        }
-        print(json.dumps(results["weak_pagerank"], default=str))
-        write_baseline_md(results)
-        return
-    if args.pagerank:
-        # iterative-op datapoint only: merge into the recorded suite
-        # results instead of re-running the (expensive) pipeline rows
-        path = os.path.join(REPO, "BENCH", "scaling.json")
-        results = _load_results(path) if os.path.exists(path) else {
-            "protocol": "v2-interleaved"
-        }
-        # sessions=3: this box intermittently degrades a whole session
-        # ~4-7x (measured: walls [206, 237] against the same session's
-        # 59s cold — an executor-loss/GC-stall mode, not host drift);
-        # a 3-wall median survives one poisoned session where 2 walls
-        # cannot.
-        results["strong_pagerank"] = strong_scaling(
-            args.corpus, "sql", sessions=3, measured=1, job="pagerank"
-        )
-        results["envelope_pagerank"] = envelope(
-            args.corpus,
-            "sql",
-            results["strong_pagerank"][1]["wall_median"],
-            job="pagerank",
-        )
-        eff = results["strong_pagerank"]["efficiency"]
-        env = results["envelope_pagerank"]["envelope_efficiency"]
-        results["pagerank_efficiency_vs_envelope"] = (
-            round(min(eff / env, 1.0), 3) if env else None
-        )
-        print(json.dumps(results, default=str))
-        with open(path, "w") as f:
-            json.dump(results, f, indent=1, default=str)
-        if "strong_sql" in results:
-            write_baseline_md(results)
-        return
-    corpus = args.corpus
-    _ensure_corpus(corpus, args.turns)
-    results: dict = {"protocol": "v2-interleaved"}
-
-    results["strong_sql"] = strong_scaling(corpus, "sql", sessions=2, measured=3)
-    if not args.quick:
-        results["strong_pandas"] = strong_scaling(
-            corpus, "pandas", sessions=1, measured=2
-        )
-        results["envelope"] = envelope(
-            corpus, "sql", results["strong_sql"][1]["wall_median"]
-        )
-        small = corpus.rstrip("/") + "_16m"
-        _ensure_corpus(small, args.turns // 4)
-        results["weak_sql"] = weak_scaling(small, results["strong_sql"], "sql")
-        eff = results["strong_sql"]["efficiency"]
-        env = results["envelope"]["envelope_efficiency"]
-        results["efficiency_vs_envelope"] = round(min(eff / env, 1.0), 3) if env else None
-
-    print(json.dumps(results, default=str))
-    write_baseline_md(results)
+def protocol(job: str, shp: dict, corpora: dict) -> dict:
+    c = shp["C"]
+    big = {"job": job, "C": c, "heap_mb": shp["heap_mb"],
+           "units": 4 * c * PER_CORE[job], "corpus": corpora[4 * c]}
+    strong = {"n": [], "4n": []}
+    for pair in range(PAIRS):
+        for side in ("n", "4n") if pair % 2 == 0 else ("4n", "n"):
+            spec = {**big, "executors": 1 if side == "n" else 4}
+            strong[side].append(run_child(spec))
+    envelope = run_envelope({**big, "executors": 1})
+    small = {**big, "executors": 1, "units": c * PER_CORE[job], "corpus": corpora[c]}
+    weak = [run_child(small)]
+    rec = {
+        "per_core": PER_CORE[job],
+        "check": _same_check(job, strong["n"] + strong["4n"] + envelope),
+        "strong": {side: {"units": big["units"], **_side(ch)} for side, ch in strong.items()},
+        "envelope": _side(envelope),
+        "weak": {"units": small["units"], "check": _same_check(job, weak), **_side(weak)},
+    }
+    rec["efficiency"] = efficiencies(rec)
+    return rec
 
 
-def write_baseline_md(r: dict) -> None:
-    bench_dir = os.path.join(REPO, "BENCH")
-    os.makedirs(bench_dir, exist_ok=True)
-    s = r["strong_sql"]
-    eff = s["efficiency"]
+def render(results: dict) -> str:
+    """BENCH/BASELINE.md: one row per host and job."""
+    def cell(v):
+        return "–" if v is None else f"{v:,}" if isinstance(v, int) else str(v)
+
     lines = [
-        "# BENCH/BASELINE.md — measured scaling (north_rule protocol, v2)",
+        "# N-vs-4N scaling",
         "",
-        "North rule: throughput scaling efficiency >= 0.8 between N and 4N",
-        "executor clusters. Sandbox protocol: `local-cluster[W,8,16384]` runs",
-        "W real executor JVMs (8 cores / 16 GiB each) on this 32-core VM; the",
-        "full pipeline (scan -> window-rank ordering -> triple extraction ->",
-        "broadcast entity linking -> large/small-star CC -> edge",
-        "materialization with in-window key dedup) runs over the SAME input",
-        "at both sizes; efficiency = (throughput_4N / throughput_N) / 4.",
-        "Sessions are INTERLEAVED (N, 4N, N, 4N) because this shared-host VM",
-        "drifts +-20% on identical configs over minutes; medians are over all",
-        "measured walls per size (1 JIT warm-up per session, unmeasured).",
+        "Rendered by `tools/scaling_bench.py` from `BENCH/scaling.json`; the",
+        "protocol is in the tool's docstring. N is `local-cluster[1,C,M]` and 4N",
+        "`local-cluster[4,C,M]`; walls are medians in seconds over the 4C-sized",
+        "input. Efficiencies are throughput 4N / (4 x throughput N); envelope is",
+        "solo N / 4 concurrent N. The 32-core record's narrative is",
+        "`BENCH/BASELINE_r02_32core.md`.",
         "",
-        f"Input: deterministic synthetic corpus ({s[1]['n_turns']:,} turns,",
-        "Zipf(1.3) entity skew, one mega-conversation holding ~1% of turns;",
-        "`gfftoneo4j_spark.corpus.write_corpus_fast`, seed=42).",
-        "",
-        "## Strong scaling — headline (pure-JVM `sql` extraction)",
-        "",
-        "| cluster | wall median (s) | all walls | turns/sec | triples |",
-        "|---|---|---|---|---|",
-        f"| 1x8 (N) | {s[1]['wall_median']} | {s[1]['walls']} | {s[1]['turns_per_sec']:,} | {s[1]['n_triples']:,} |",
-        f"| 4x8 (4N) | {s[4]['wall_median']} | {s[4]['walls']} | {s[4]['turns_per_sec']:,} | {s[4]['n_triples']:,} |",
-        "",
-        f"**Raw scaling efficiency: {eff}** (target >= 0.8: {'PASS' if eff >= 0.8 else 'MISS'}).",
-        "",
+        "| host | job | C | turns or edges | N wall | 4N wall | strong | envelope "
+        "| strong / envelope | weak | executor CPU 4N/N |",
+        "|---|---|---|---|---|---|---|---|---|---|---|",
     ]
-    if "envelope" in r:
-        e = r["envelope"]
-        ve = r.get("efficiency_vs_envelope")
-        lines += [
-            "## Hardware contention envelope",
-            "",
-            "4 *independent, uncoordinated* 1x8 clusters ran the same job",
-            "concurrently (barrier-synchronized after JIT warm-up). They share",
-            "nothing but the box, so their slowdown vs a solo 1x8 run is pure",
-            "hardware contention (one memory bus / shared host) — the upper",
-            "bound on the strong-scaling ANY 4x-parallel job can show here:",
-            "",
-            f"- solo 1x8 wall: {e['solo_wall']} s; concurrent walls: {e['concurrent_walls']}",
-            f"- contention factor: {e['contention_factor']}x -> **envelope efficiency {e['envelope_efficiency']}**",
-            f"- pipeline efficiency relative to the envelope: **{ve}**",
-            "",
-            "A real 4-node cluster gives each executor its own memory bus, so",
-            "the envelope loss is a sandbox artifact; the pipeline itself",
-            "scales at ~the hardware bound (per-stage profile in",
-            "BENCH/stage_profile_sql.json: reduce stages show ~0 task-time",
-            "inflation N->4N; map-stage CPU inflates 1.3-1.7x at 32 busy",
-            "cores, which is the bus).",
-            "",
-        ]
-    if "weak_sql" in r:
-        w = r["weak_sql"]
-        lines += [
-            "## Weak scaling (fixed per-core load — the 100 TB regime)",
-            "",
-            "| cluster | turns | wall (s) | turns/sec |",
-            "|---|---|---|---|",
-            f"| 1x8 | {w['small']['n_turns']:,} | {w['small']['wall_median']} | {w['small']['turns_per_sec']:,} |",
-            f"| 4x8 | {w['big']['n_turns']:,} | {w['big']['wall_median']} | {w['big']['turns_per_sec']:,} |",
-            "",
-            f"**Weak scaling efficiency: {w['efficiency']}**",
-            "",
-        ]
-    if "strong_pagerank" in r:
-        g = r["strong_pagerank"]
-        lines += [
-            "## Strong scaling — iterative PageRank (shuffle-per-round workload)",
-            "",
-            "The pipeline above is a one-pass DAG; iterative graph ops pay a",
-            "per-round exchange + lineage-truncation cadence where scaling",
-            "regressions hide. Same interleaved N-vs-4N protocol over",
-            f"`pagerank_fixed_point` (5 rounds, {g[1]['n_turns']:,} deterministic",
-            "synthetic edges, hub-skewed sources: top-1% of nodes hold ~27% of",
-            "out-edges; generated in-engine, fixed 256-way decomposition at",
-            "both sizes):",
-            "",
-            "| cluster | wall median (s) | all walls | edges/sec |",
-            "|---|---|---|---|",
-            f"| 1x8 (N) | {g[1]['wall_median']} | {g[1]['walls']} | {g[1]['turns_per_sec']:,} |",
-            f"| 4x8 (4N) | {g[4]['wall_median']} | {g[4]['walls']} | {g[4]['turns_per_sec']:,} |",
-            "",
-            f"**PageRank raw scaling efficiency: {g['efficiency']}**"
-            f" (target >= 0.8: {'PASS' if g['efficiency'] >= 0.8 else 'MISS'}).",
-            "",
-        ]
-        if "envelope_pagerank" in r:
-            ep = r["envelope_pagerank"]
-            vs = r.get("pagerank_efficiency_vs_envelope")
-            lines += [
-                "MEASUREMENT HONESTY NOTE: columnar loop state is `persist`,",
-                "and Spark's CacheManager matches equivalent logical plans,",
-                "so a repeated run of this deterministic in-engine job would",
-                "silently serve loop invariants and the final round from the",
-                "previous run's cache (caught when a fully-lazy variant",
-                "\"ran\" 60M edges in 2.03s). Every measured run therefore",
-                "calls spark.catalog.clearCache() first; checkpoint-era",
-                "numbers (unique lineage per call, no reuse possible) are",
-                "directly comparable. Honest columnar-vs-checkpoint deltas:",
-                "1x8 210.6s -> 91.5s, 4x8 139.8s -> 36.8s.",
-                "",
-                "The contention envelope — 4 independent, uncoordinated 1x8",
-                "clusters running the same job concurrently (zero Spark",
-                "coordination, so any slowdown vs solo is shared hardware):",
-                "",
-                f"- solo 1x8 wall: {ep['solo_wall']}s; 4 concurrent 1x8 walls:"
-                f" {ep['concurrent_walls']}",
-                f"- **envelope efficiency {ep['envelope_efficiency']}**,",
-                f"- **PageRank efficiency vs envelope: {vs}**"
-                f" (target >= 0.8: {'PASS' if (vs or 0) >= 0.8 else 'MISS'}).",
-                "",
-                "For this job the envelope sits BELOW the coordinated",
-                "cluster's raw efficiency: 4 independent copies carry 4x the",
-                "columnar-cache + tmpfs-shuffle + 14g-heap footprint of one",
-                "4x8 cluster, and that pressure triggers this box's",
-                "degraded-session mode (bimodal ~150s / ~450s walls above).",
-                "Sharing one cache and one shuffle footprint is exactly what",
-                "coordinated scaling buys — the operator extracts MORE than",
-                "4 independent jobs can from the same hardware; the residual",
-                "raw-efficiency gap to 0.8 is the shared-DRAM + localhost-",
-                "shuffle sandbox, which a real 4-node cluster does not share.",
-                "",
-                "Protocol defenses, both measured this round: (a) sessions=3",
-                "with a 3-wall median — this box intermittently degrades a",
-                "whole session 4-7x (walls [206, 237] against that same",
-                "session's 59s cold; an executor-loss/GC-stall mode, not",
-                "drift); (b) materialization-cadence A/B (mat_every 1 vs 2,",
-                "interleaved): 34.0s vs 33.9s at 4x8 — per-round barriers",
-                "are NOT the bottleneck, so the default per-round",
-                "materialization stands.",
-                "",
-                "Measured plan fixes this datapoint includes (A/B at 60M",
-                "edges):",
-                "- SortMergeJoin re-sorted the checkpointed |E|-row snapshot",
-                "  every round -> SHUFFLE_HASH rank/degree joins stream the",
-                "  edges unsorted: 262s -> 202s at 1x8.",
-                "- Lazy per-round checkpoints deferred the loop into one",
-                "  mega-DAG with racing duplicate stage work -> eager: 286s",
-                "  -> 147s at 4x8, wall-neutral at 1x8.",
-                "- Shuffle dirs on the VM's one virtio disk serialized 32",
-                "  writers (jstack: every task thread in writeBytes) ->",
-                "  tmpfs, same as the pipeline protocol.",
-                "- Per-round localCheckpoint stored DESERIALIZED row blocks;",
-                "  re-reading them every round was allocation/bandwidth-",
-                "  bound -> compressed columnar persist (`_mat`,",
-                "  operators/graph.py): honest walls 210.6 -> 91.5 at 1x8,",
-                "  139.8 -> 36.8 at 4x8.",
-                "",
-                "## Round-5 closing experiment — the question is CLOSED",
-                "",
-                "The one untested lever after round 4 was per-round byte",
-                "volume: round 5 re-ran the identical protocol with (a) dense",
-                "4-byte node ids (INT vs BIGINT — halves the id bytes in the",
-                "rank vector, the probe-side hash keys, and the combine",
-                "rows), (b) the attenuation quotient HOISTED off the |E|-row",
-                "path (the per-edge (r*85) div (100*deg) depends only on the",
-                "source node, so it is now computed once per node on the",
-                "hash(u)-co-partitioned |V| vectors — one build side per",
-                "probe instead of two, and the 64-bit division leaves the",
-                "edge loop entirely; bit-identical results, gates green).",
-                "Round-4 medians: 1x8 91.51s / 4x8 36.84s, efficiency 0.621.",
-                "Round-5 medians with both levers (table above): walls",
-                "statistically unchanged. Shrinking bytes-per-row and",
-                "per-edge CPU did not move either wall, which pins the",
-                "bottleneck as shared-DRAM bandwidth on the loop state's",
-                "columnar cache churn + tmpfs shuffle — a property of ONE",
-                "32-core box, not of the plan. CONCLUSION (final): the",
-                "per-round plan is the minimal shape (one co-partitioned",
-                "|V|-vector projection, one SHUFFLE_HASH edge probe, one",
-                "combinable sum, one zero-exchange join back); efficiency-",
-                "vs-envelope remains the honest metric here (1.0) and the",
-                "raw 0.8 target needs per-node memory buses. Do not",
-                "re-measure on this sandbox; re-test on real multi-host",
-                "hardware when available.",
-                "",
-            ]
-        if "weak_pagerank" in r:
-            wp = r["weak_pagerank"]
-            lines += [
-                "## Weak scaling — iterative PageRank (fixed per-core load)",
-                "",
-                "Same job, graph scaled with the cluster (15M edges @ 1x8 vs",
-                "60M @ 4x8; nodes = edges/10 at both, so per-core work is",
-                "constant — the 100 TB regime, where a bigger cluster means",
-                "bigger data):",
-                "",
-                "| cluster | edges | wall median (s) | edges/sec |",
-                "|---|---|---|---|",
-                f"| 1x8 | {wp['small']['n_turns']:,} |"
-                f" {wp['small']['wall_median']} |"
-                f" {wp['small']['turns_per_sec']:,} |",
-                f"| 4x8 | {wp['big']['n_turns']:,} |"
-                f" {wp['big']['wall_median']} |"
-                f" {wp['big']['turns_per_sec']:,} |",
-                "",
-                f"**PageRank weak scaling efficiency: {wp['efficiency']}**"
-                f" (target >= 0.8:"
-                f" {'PASS' if wp['efficiency'] >= 0.8 else 'MISS'}).",
-                "",
-            ]
-    if "strong_pandas" in r:
-        p = r["strong_pandas"]
-        lines += [
-            "## Strong scaling — Arrow pandas-UDF extraction path",
-            "",
-            "| cluster | wall median (s) | walls | turns/sec |",
-            "|---|---|---|---|",
-            f"| 1x8 | {p[1]['wall_median']} | {p[1]['walls']} | {p[1]['turns_per_sec']:,} |",
-            f"| 4x8 | {p[4]['wall_median']} | {p[4]['walls']} | {p[4]['turns_per_sec']:,} |",
-            "",
-            f"Efficiency: {p['efficiency']}. The pandas path keeps parity with",
-            "`sql` (pytest cross-check) but at 4N its 32 Python workers + 32",
-            "JVM task threads oversubscribe the 32 hardware cores — on a real",
-            "cluster each executor's Python workers ride that executor's own",
-            "cores, so this penalty is also a single-box artifact. The",
-            "headline config uses the JVM path because the mention grammar is",
-            "regular (UDFs are the slow path; built-ins express it).",
-            "",
-        ]
-    lines += [
-        "## Protocol notes",
-        "",
-        "- Each session is its own subprocess (a JVM's master string is fixed",
-        "  at SparkSession creation); shuffle dirs on tmpfs (a cluster",
-        "  executor shuffles to node-local NVMe; this VM's one virtio disk",
-        "  would serialize 32 concurrent shuffle writers).",
-        "- Input split at 4 MB so the scan yields hundreds of tasks at both",
-        "  sizes (stand-in for a 100 TB table's natural splits).",
-        "- Executor spec 8 cores / 16 GiB, G1: measured GC was 10-17% of task",
-        "  time at 8 GiB and walls destabilized; 16 GiB fixed both. ParallelGC",
-        "  regressed (31 -> 40 s drift at 4N).",
-        "- Scaling engineering log (all measured, rounds 1-2):",
-        "  1. no persist() of turns/linked (cache build slower than re-scan);",
-        "  2. global edge dropDuplicates -> in-window lag() key dedup;",
-        "  3. id strings built post-shuffle (halves shuffled bytes);",
-        "  4. ts dropped from the turn exchange (tie order is output-",
-        "     invariant: duplicate keys build identical id strings);",
-        "  5. real executor JVMs, interleaved sessions, 16 GiB + G1;",
-        "  6. headline extraction on the pure-JVM regexp path (the grammar",
-        "     is regular); Arrow pandas UDF kept + parity-tested.",
-    ]
-    path = os.path.join(bench_dir, "BASELINE.md")
-    with open(path, "w") as f:
-        f.write("\n".join(lines) + "\n")
-    with open(os.path.join(bench_dir, "scaling.json"), "w") as f:
-        json.dump(r, f, indent=2, default=str)
-    print(f"wrote {path}", file=sys.stderr)
+    for label, rec in results.items():
+        for job in JOBS:
+            r, e = rec[job], rec[job]["efficiency"]
+            lines.append("| " + " | ".join(cell(v) for v in (
+                label, job, rec["shape"]["C"], r["strong"]["n"]["units"],
+                r["strong"]["n"]["wall_median"], r["strong"]["4n"]["wall_median"],
+                e["strong"], e["envelope"], e["vs_envelope"], e["weak"],
+                e["executor_cpu_4n_over_n"],
+            )) + " |")
+    return "\n".join(lines) + "\n"
 
 
 def main() -> None:
-    p = argparse.ArgumentParser()
-    p.add_argument("--run", action="store_true")
-    p.add_argument("--executors", type=int, default=1)
-    p.add_argument("--corpus", default="/tmp/kg_scaling_corpus")
-    p.add_argument("--extraction", default="sql")
-    p.add_argument("--warmups", type=int, default=1)
-    p.add_argument("--measured", type=int, default=3)
-    p.add_argument("--barrier", default=None)
-    # Sized so per-executor work stays representative: 10^12 turns on a
-    # 1000-executor cluster is ~10^9 turns per executor; small corpora
-    # make fixed per-run costs dominate and strong scaling saturates
-    # artificially.
-    p.add_argument("--turns", type=int, default=64_000_000)
-    p.add_argument("--quick", action="store_true")
-    p.add_argument("--job", default="pipeline", choices=["pipeline", "pagerank"])
-    p.add_argument("--pagerank", action="store_true",
-                   help="run only the iterative pagerank N-vs-4N datapoint "
-                        "and merge it into BENCH/scaling.json + BASELINE.md")
-    p.add_argument("--pagerank-weak", action="store_true",
-                   help="run only the weak-scaling pagerank datapoint "
-                        "(edges/4 @ 1x8 vs recorded 4x8) and merge it")
-    p.add_argument("--render", action="store_true",
-                   help="rewrite BENCH/BASELINE.md from BENCH/scaling.json "
-                        "without measuring anything")
-    args = p.parse_args()
-    if args.run:
-        run_once(
-            args.executors,
-            args.corpus,
-            args.extraction,
-            args.warmups,
-            args.measured,
-            args.barrier,
-            args.job,
-        )
-    else:
-        orchestrate(args)
+    if sys.argv[1:2] == ["--child"]:
+        print(json.dumps(child(json.loads(sys.argv[2]))))
+        return
+    from gfftoneo4j_spark.corpus import write_corpus_fast
+
+    label, shp = host()
+    print(f"{label}: {shp}", file=sys.stderr, flush=True)
+    corpus_root = tempfile.mkdtemp(prefix="scaling-corpus-")
+    try:
+        corpora = {}
+        for cores in (shp["C"], 4 * shp["C"]):
+            corpora[cores] = os.path.join(corpus_root, str(cores))
+            write_corpus_fast(corpora[cores], cores * PER_CORE["pipeline"])
+        rec = {"shape": shp, **{job: protocol(job, shp, corpora) for job in JOBS}}
+    finally:
+        shutil.rmtree(corpus_root, ignore_errors=True)
+    with open(RESULTS) as f:
+        results = json.load(f)
+    results[label] = rec
+    with open(RESULTS, "w") as f:
+        json.dump(results, f, indent=1)
+        f.write("\n")
+    with open(BASELINE, "w") as f:
+        f.write(render(results))
+    print(json.dumps({label: {job: rec[job]["efficiency"] for job in JOBS}}))
 
 
 if __name__ == "__main__":
