@@ -33,6 +33,11 @@ LOOP_JOBS = {
     "scc": 79,  # scc_coloring(prop_rounds=4, max_outer=2)
     "mis": 27,  # luby_mis(rounds=4)
     "coloring": 35,  # jones_plassmann_coloring(rounds=4)
+    "ppr": 33,  # pagerank_fixed_point(iters=3, seeds=), 2 seeds
+    "wpr": 27,  # pagerank_fixed_point(iters=3, weight=)
+    "katz": 25,  # katz_centrality(iters=3)
+    "hits": 39,  # hits_fixed_point(iters=2)
+    "walks": 16,  # deterministic_walks(steps=3)
 }
 
 
@@ -112,6 +117,13 @@ def test_graph_loop_job_budgets(spark):
         "scc": lambda: G.scc_coloring(e, prop_rounds=4, max_outer=2),
         "mis": lambda: G.luby_mis(e, nodes, rounds=4),
         "coloring": lambda: G.jones_plassmann_coloring(e, nodes, rounds=4),
+        "ppr": lambda: G.pagerank_fixed_point(e, iters=3, seeds=seeds),
+        "wpr": lambda: G.pagerank_fixed_point(
+            e.withColumn("w", F.col("u") % 3 + 1), iters=3, weight="w"
+        ),
+        "katz": lambda: G.katz_centrality(e, iters=3),
+        "hits": lambda: G.hits_fixed_point(e, iters=2),
+        "walks": lambda: G.deterministic_walks(e, steps=3),
     }
     jobs, rows = {}, {}
     for name, op in ops.items():
