@@ -38,12 +38,6 @@ def distinct_token_ratio(text: Column) -> Column:
     return F.round(F.size(F.array_distinct(toks)) / F.size(toks), 3)
 
 
-def stopword_ratio(text: Column, lang: str = "en") -> Column:
-    toks = F.split(F.lower(F.trim(text)), " +")
-    hits = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS[lang])))
-    return F.round(hits / F.size(toks), 3)
-
-
 def quality_score(text: Column) -> Column:
     """Composite quality heuristic in [0,1]: length band + diversity -
     the shape of a C4/Gopher-style filter, deterministic and portable."""

@@ -18,6 +18,7 @@ ANSI-SQL oracle and reproducible run-to-run at any cluster size.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from functools import reduce
 
 from pyspark import StorageLevel
@@ -25,11 +26,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _mat(
-    df: DataFrame, prev: DataFrame | None = None, round_no: int = 0
-) -> DataFrame:
-    """Materialize loop state as COLUMNAR cache (persist + count),
-    freeing the superseded snapshot.
+def _mat(df: DataFrame) -> DataFrame:
+    """Materialize a frame as COLUMNAR cache (persist + count).
 
     Why not localCheckpoint: checkpoint blocks store deserialized
     row objects, and re-reading them every round is allocation /
@@ -39,31 +37,65 @@ def _mat(
     4x8 (per-round 23s -> 5.5s) just by switching the loop state and
     invariants to compressed columnar InMemoryRelation, which also
     preserves outputPartitioning for the exchange-free SHJ.
-
-    Cadence: loop state is materialized EVERY round. Deferring all
-    rounds into one final mega-DAG made its stages race to
-    materialize the same snapshots and duplicate work (A/B: 286s
-    deferred vs 147s per-round at 4x8); materializing every 2nd or
-    3rd round instead measured inside noise.
-
-    Loop state passes its 1-based ``round_no`` and the state it
-    supersedes as ``prev``; round 1's ``prev`` is the loop's initial
-    projection, never cached, so it is left alone. Lineage is NOT
-    truncated by persist, so every 6th round the fresh cache is copied
-    into a (cache-fed, cheap) localCheckpoint and released: the
-    analyzer never sees an unboundedly deep plan, and no cache leaks
-    per 6 rounds. Loop invariants pass no ``round_no``.
     """
     out = df.persist(StorageLevel.MEMORY_AND_DISK)
     out.count()
-    if prev is not None and round_no != 1:
-        # a no-op when prev is a checkpoint (never cache-registered)
-        prev.unpersist(blocking=False)
-    if round_no and round_no % 6 == 0:
-        truncated = out.localCheckpoint(eager=True)
-        out.unpersist(blocking=False)
-        return truncated
     return out
+
+
+def _fixed_point(
+    init: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    rounds: int,
+    pinned: tuple[DataFrame, ...] = (),
+) -> DataFrame:
+    """Run ``state = step(state)`` for ``rounds`` rounds from the lazy
+    ``init`` and return the final state: the loop driver of PageRank,
+    LPA and Katz, whose rounds read their state once.
+
+    Every round's state is ``_mat``-ed. Deferring all rounds into one
+    final mega-DAG made its stages race to materialize the same
+    snapshots (A/B: 286s deferred vs 147s per-round at 4x8); every 2nd
+    or 3rd round measured inside noise. From round 2 on, the state the
+    round supersedes is released. Persist does NOT truncate lineage, so
+    every 6th round the fresh cache is copied into a (cache-fed, cheap)
+    eager localCheckpoint and released; the next round's cache spills
+    to disk rather than dropping, so that round frees the checkpoint's
+    blocks as well. After the last round the ``pinned`` invariants
+    (2-3x |E| of columnar blocks) are released; the answer lives in
+    the final state's cache.
+
+    The rule for every other loop: state that a round reads TWICE (a
+    frontier and its anti-join, an active set and its update) is an
+    eager localCheckpoint per round, never ``_mat``-ed — a persisted
+    frame keeps its lineage, so each round re-reads the earlier ones
+    (scc_components went 5.2s -> 90.2s at sf0.01) — and per-round
+    output is kept as pieces and unioned once (``_union_all``). So CC,
+    k-core, truss, the SCC colour loop, ancestor closure, temporal
+    arrival, KMV, wl_refinement and densest_subgraph_peel keep eager
+    checkpoints; label_spreading too (through this driver it took 27
+    -> 33 jobs at sf0.001 and sf0.01). deterministic_walks stays out,
+    as every frontier is also an output piece, and so does HITS: the
+    L1 sum it needs anyway materializes each half-round's lazy
+    checkpoint in one job (a count-based driver took 39 -> 68 jobs).
+    There is no ``until=`` probe or per-round record: no loop needs
+    one (CC's checksum loop holds read-twice state).
+    """
+    state = init
+    for i in range(1, rounds + 1):
+        nxt = _mat(step(state))
+        if i % 6 == 1 and i > 1:
+            # a local checkpoint is cache-registered only as its RDD
+            state._jdf.queryExecution().logical().rdd().unpersist(False)
+        elif i > 1:
+            state.unpersist(blocking=False)
+        state = nxt
+        if i % 6 == 0:
+            state = nxt.localCheckpoint(eager=True)
+            nxt.unpersist(blocking=False)
+    for df in pinned:
+        df.unpersist(blocking=False)
+    return state
 
 
 def _directed(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -290,7 +322,7 @@ def dag_longest_path_levels(
     frontier = nodes.join(targets, "node", "left_anti").select(
         "node", F.lit(0).cast("long").alias("l")
     )
-    levels = frontier
+    pieces = [frontier]
     for r in range(1, rounds + 1):
         frontier = (
             frontier.join(e, frontier["node"] == e["s"])
@@ -298,7 +330,7 @@ def dag_longest_path_levels(
             .distinct()
             .localCheckpoint(eager=True)
         )
-        levels = levels.union(frontier)
+        pieces.append(frontier)
     if frontier.join(e, frontier["node"] == e["s"]).limit(1).count() > 0:
         raise ValueError(
             f"dag_longest_path_levels: frontier still advancing after "
@@ -309,6 +341,7 @@ def dag_longest_path_levels(
     # aggregated output — the anti-join needs only membership, and
     # probing the groupBy would recompute the whole aggregation for a
     # limit-1 answer
+    levels = _union_all(pieces)
     if nodes.join(
         levels.select("node"), "node", "left_anti"
     ).limit(1).count() > 0:
@@ -475,8 +508,8 @@ def pagerank_fixed_point(
     the pre-keyed edge snapshot against the current rank vector (the
     rank side builds, the edges stream unsorted), one map-side-
     combinable groupBy sum, and a left join back to the node set; the
-    per-round columnar materialization (``_mat``) keeps state compact
-    and lineage is truncated every 6th round. Total ranks stay
+    per-round columnar materialization (``_fixed_point``) keeps state
+    compact and lineage is truncated every 6th round. Total ranks stay
     ~scale * |V|, so BIGINT holds to ~10^12 nodes.
 
     The loop invariants (deduped edges, node set, out-degrees) are
@@ -514,16 +547,12 @@ def pagerank_fixed_point(
         .repartition("u")
     )
     e = _mat(e)
-    nodes = _mat(_endpoints(e, "u", "v"))
-    degagg = (
-        F.sum("w") if weight is not None else F.count(F.lit(1))
-    )
-    outdeg = _mat(e.groupBy("u").agg(degagg.alias("deg")))
+    nodes = _endpoints(e, "u", "v")
     base = int(scale * (damping_den - damping_num) // damping_den)
     if seeds is not None:
         # Personalized PageRank: all initial mass AND the teleport term
         # go only to the seed set — ranks become proximity-to-seeds.
-        # The seed marker rides the (checkpointed) node vector, so the
+        # The seed marker rides the (cached) node vector, so the
         # per-iteration plan is IDENTICAL to the global variant: the
         # CASE on the marker replaces the constant, zero extra
         # exchanges. Same integer fixed-point, same unrolled oracle.
@@ -532,20 +561,21 @@ def pagerank_fixed_point(
             .distinct()
             .withColumn("is_seed", F.lit(True))
         )
-        nodes = _mat(
-            nodes.join(sd, "node", "left").select(
-                "node",
-                F.coalesce("is_seed", F.lit(False)).alias("is_seed"),
-            ),
-            prev=nodes,
+        nodes = nodes.join(sd, "node", "left").select(
+            "node", F.coalesce("is_seed", F.lit(False)).alias("is_seed")
         )
         base_col = F.when(F.col("is_seed"), F.lit(base)).otherwise(F.lit(0))
         init_col = F.when(F.col("is_seed"), F.lit(scale)).otherwise(F.lit(0))
     else:
         base_col = F.lit(base)
         init_col = F.lit(scale)
-    ranks = nodes.select("node", init_col.cast("long").alias("r"))
-    for i in range(1, iters + 1):
+    nodes = _mat(nodes)
+    degagg = (
+        F.sum("w") if weight is not None else F.count(F.lit(1))
+    )
+    outdeg = _mat(e.groupBy("u").agg(degagg.alias("deg")))
+
+    def step(ranks: DataFrame) -> DataFrame:
         # Per-node quotient BEFORE the edge join (unweighted path): the
         # per-edge contribution (r * num) div (den * deg) depends only
         # on the SOURCE node, so compute it once per node by joining the
@@ -601,19 +631,15 @@ def pagerank_fixed_point(
                 )
             )
         summed = contrib.groupBy("node").agg(F.sum("c").alias("s"))
-        new_ranks = nodes.join(summed, "node", "left").select(
+        return nodes.join(summed, "node", "left").select(
             "node",
             (base_col + F.coalesce(F.col("s"), F.lit(0)))
             .cast("long")
             .alias("r"),
         )
-        ranks = _mat(new_ranks, prev=ranks, round_no=i)
-    # the answer lives in the final state's cache; the loop invariants
-    # (2-3x |E| of columnar blocks) would otherwise stay pinned for the
-    # session — a real leak across a many-query run. Lineage stays
-    # intact, so an eviction-triggered recompute still works.
-    for inv in (e, nodes, outdeg):
-        inv.unpersist(blocking=False)
+
+    init = nodes.select("node", init_col.cast("long").alias("r"))
+    ranks = _fixed_point(init, step, iters, pinned=(e, nodes, outdeg))
     return ranks.select("node", F.col("r").alias("rank"))
 
 
@@ -691,10 +717,8 @@ def label_propagation(
     nodes are in the same community iff their labels are equal.
     """
     und = _mat(_undirected(edges, src, dst).repartition("s"))
-    labels = und.select(F.col("s").alias("node")).distinct().select(
-        "node", F.col("node").alias("label")
-    )
-    for i in range(1, iters + 1):
+
+    def step(labels: DataFrame) -> DataFrame:
         votes = (
             # SHUFFLE_HASH: same lesson as the PageRank loop — SMJ
             # would re-sort the checkpointed |E|-row snapshot every
@@ -715,14 +739,12 @@ def label_propagation(
                 )
             ).alias("best")
         )
-        labels = _mat(
-            best.select("node", F.col("best.label").alias("label")),
-            prev=labels,
-            round_no=i,
-        )
-    # free the edge-snapshot cache (answer lives in the final labels
-    # cache; lineage intact for eviction-triggered recompute)
-    und.unpersist(blocking=False)
+        return best.select("node", F.col("best.label").alias("label"))
+
+    init = und.select(F.col("s").alias("node")).distinct().select(
+        "node", F.col("node").alias("label")
+    )
+    labels = _fixed_point(init, step, iters, pinned=(und,))
     return labels.select("node", F.col("label").alias("community"))
 
 
@@ -916,31 +938,24 @@ def hits_fixed_point(
     driver scalars (the CC-checksum discipline) that re-enter the plan
     as literals, keeping the oracle expressible.
     """
-    # dedup ONCE, then derive both pre-keyed copies and the node set
-    # from the cache — lazily, each of the three _mats below would
-    # re-run the |E|-wide distinct shuffle
-    base = _mat(_directed(edges, src, dst))
-    e_by_u = _mat(base.repartition("u"))
-    e_by_v = _mat(base.repartition("v"))
-    nodes = _mat(_endpoints(base, "u", "v"))
-    base.unpersist(blocking=False)
-
-    cached: list[DataFrame] = []
+    # dedup ONCE, then derive the other pre-keyed copy and the node set
+    # from the cache, as katz_centrality does
+    e_by_u = _mat(_directed(edges, src, dst).repartition("u"))
+    e_by_v = _mat(e_by_u.repartition("v"))
+    nodes = _mat(_endpoints(e_by_u, "u", "v"))
 
     def _normalize(raw: DataFrame, col: str) -> DataFrame:
         """raw: (node, col) summed scores -> L1-normalized to total
-        ~= scale, floor per element. ONE job per half-round (r06):
-        the node-joined raw vector is persisted and the scalar-sum
-        action itself materializes the cache — the earlier
-        _mat-then-sum shape paid a separate count() barrier before the
-        sum for the same blocks. The normalized result stays a LAZY
-        projection over the cache — downstream consumers pay a cache
-        scan + one multiply, not a recompute."""
+        ~= scale, floor per element. ONE job per half-round: the
+        node-joined raw vector is a LAZY localCheckpoint that the
+        scalar-sum action itself materializes (CC's checksum loop), so
+        every half-round cuts the lineage; a persisted vector kept it,
+        and the plans grew until iters=7 ran the driver out of heap.
+        The normalized result stays a lazy projection over it."""
         full = nodes.join(raw, "node", "left").select(
             "node",
             F.coalesce(F.col(col), F.lit(0)).cast("long").alias(col),
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        cached.append(full)
+        ).localCheckpoint(eager=False)
         total = full.agg(F.sum(col)).collect()[0][0] or 1
         return full.select(
             "node", F.expr(f"({col} * {scale}) div {total}").alias(col)
@@ -970,10 +985,9 @@ def hits_fixed_point(
         F.coalesce("h", F.lit(0)).cast("long").alias("hub"),
         F.coalesce("a", F.lit(0)).cast("long").alias("auth"),
     )
-    # the answer is a lazy projection over the LAST two cached vectors
-    # (final a and h) — free everything else, same leak discipline as
-    # pagerank_fixed_point's invariant unpersist
-    for inv in (e_by_u, e_by_v, *cached[:-2]):
+    # the answer is a lazy projection over the final a and h
+    # checkpoints and the node set; the edge snapshots are released
+    for inv in (e_by_u, e_by_v):
         inv.unpersist(blocking=False)
     return out
 
@@ -1011,8 +1025,8 @@ def katz_centrality(
     """
     e = _mat(_directed(edges, src, dst).repartition("u"))
     nodes = _mat(_endpoints(e, "u", "v"))
-    x = nodes.select("node", F.lit(scale).cast("long").alias("x"))
-    for i in range(1, iters + 1):
+
+    def step(x: DataFrame) -> DataFrame:
         qvec = x.withColumnRenamed("node", "u").select(
             "u",
             F.expr(f"(x * {alpha_num}) div {alpha_den}").alias("q"),
@@ -1022,18 +1036,15 @@ def katz_centrality(
             .groupBy(F.col("v").alias("node"))
             .agg(F.sum("q").alias("s"))
         )
-        x = _mat(
-            nodes.join(summed, "node", "left").select(
-                "node",
-                (F.lit(scale) + F.coalesce(F.col("s"), F.lit(0)))
-                .cast("long")
-                .alias("x"),
-            ),
-            prev=x,
-            round_no=i,
+        return nodes.join(summed, "node", "left").select(
+            "node",
+            (F.lit(scale) + F.coalesce(F.col("s"), F.lit(0)))
+            .cast("long")
+            .alias("x"),
         )
-    for inv in (e, nodes):
-        inv.unpersist(blocking=False)
+
+    init = nodes.select("node", F.lit(scale).cast("long").alias("x"))
+    x = _fixed_point(init, step, iters, pinned=(e, nodes))
     return x.select("node", F.col("x").alias("katz"))
 
 
@@ -1110,9 +1121,7 @@ def deterministic_walks(
     frontier = e.select(F.col("u").alias("node")).distinct().select(
         F.col("node").alias("start"), F.col("node")
     )
-    out = frontier.select(
-        "start", F.lit(0).alias("step"), F.col("node")
-    )
+    pieces = [frontier.select("start", F.lit(0).alias("step"), "node")]
     for k in range(1, steps + 1):
         nxt = (
             frontier.join(e, frontier["node"] == e["u"])
@@ -1127,11 +1136,11 @@ def deterministic_walks(
             .agg(F.expr("min_by(v, score)").alias("node"))
         )
         frontier = nxt.localCheckpoint(eager=True)
-        out = out.unionByName(
+        pieces.append(
             frontier.select("start", F.lit(k).alias("step"), "node")
         )
     e.unpersist(blocking=False)
-    return out
+    return _union_all(pieces)
 
 
 def ancestor_closure(

@@ -13369,14 +13369,14 @@ def wl_refinement(spark, sf_dir):
     degree, then an md5 — all combinable/codegen, state one string
     per node; the vertex-transitive circulant collapses to few
     colors, a labeled real graph would not."""
-    from gfftoneo4j_spark.operators.graph import _undirected
+    from gfftoneo4j_spark.operators.graph import _undirected, _union_all
 
     _, raw = _circulant(spark, sf_dir)
     und = _undirected(raw, "s", "t").localCheckpoint(eager=True)
     colors = und.groupBy(F.col("s").alias("node")).agg(
         F.count("*").cast("string").alias("c")
     )
-    out = None
+    stats = []
     for r in (1, 2, 3):
         nb = und.join(
             colors.withColumnRenamed("node", "t").withColumnRenamed(
@@ -13407,8 +13407,8 @@ def wl_refinement(spark, sf_dir):
             )
             .select("round", "n_colors", "max_class")
         )
-        out = stat if out is None else out.unionAll(stat)
-    return out
+        stats.append(stat)
+    return _union_all(stats)
 
 
 # --------------------------------------------------------------------------

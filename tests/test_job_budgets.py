@@ -33,10 +33,10 @@ LOOP_JOBS = {
     "scc": 79,  # scc_coloring(prop_rounds=4, max_outer=2)
     "mis": 27,  # luby_mis(rounds=4)
     "coloring": 35,  # jones_plassmann_coloring(rounds=4)
-    "ppr": 33,  # pagerank_fixed_point(iters=3, seeds=), 2 seeds
+    "ppr": 30,  # pagerank_fixed_point(iters=3, seeds=), 2 seeds
     "wpr": 27,  # pagerank_fixed_point(iters=3, weight=)
     "katz": 25,  # katz_centrality(iters=3)
-    "hits": 39,  # hits_fixed_point(iters=2)
+    "hits": 37,  # hits_fixed_point(iters=2)
     "walks": 16,  # deterministic_walks(steps=3)
 }
 

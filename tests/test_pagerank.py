@@ -147,8 +147,21 @@ def _logical_joins(df):
     return n
 
 
+def _lineage_graph(spark):
+    return spark.createDataFrame(
+        [(f"n{i}", f"n{(i * 7 + 3) % 30}") for i in range(60)],
+        "u string, v string",
+    )
+
+
 @pytest.mark.parametrize(
-    "op", ["pagerank_fixed_point", "label_propagation", "katz_centrality"]
+    "op",
+    [
+        "pagerank_fixed_point",
+        "label_propagation",
+        "katz_centrality",
+        "hits_fixed_point",
+    ],
 )
 def test_loop_lineage_is_truncated(spark, op):
     """Persisted loop state keeps its lineage, so every rank-style loop
@@ -157,11 +170,38 @@ def test_loop_lineage_is_truncated(spark, op):
     of growing with each round."""
     from gfftoneo4j_spark.operators import graph
 
-    edges = spark.createDataFrame(
-        [(f"n{i}", f"n{(i * 7 + 3) % 30}") for i in range(60)],
-        "u string, v string",
-    )
+    edges = _lineage_graph(spark)
     fn = getattr(graph, op)
     assert _logical_joins(fn(edges, iters=7)) == _logical_joins(
         fn(edges, iters=13)
     )
+
+
+@pytest.mark.parametrize("iters", [3, 7])
+@pytest.mark.parametrize("op", ["global", "seeds", "weight", "lpa", "katz"])
+def test_driver_loops_release_their_caches(spark, op, iters):
+    """A fixed-point loop leaves at most one cached frame behind, the one
+    its answer reads: superseded rounds and the loop invariants are
+    released. "At most" because the ContextCleaner may free unrelated
+    blocks while the op runs."""
+    from pyspark.sql import functions as F
+
+    from gfftoneo4j_spark.operators import graph
+
+    edges = _lineage_graph(spark)
+    seeds = spark.createDataFrame([("n3",), ("n10",)], "seed string")
+    fn = {
+        "global": lambda: pagerank_fixed_point(edges, iters=iters),
+        "seeds": lambda: pagerank_fixed_point(edges, iters=iters, seeds=seeds),
+        "weight": lambda: pagerank_fixed_point(
+            edges.distinct().withColumn("w", F.length("u")),
+            iters=iters,
+            weight="w",
+        ),
+        "lpa": lambda: graph.label_propagation(edges, iters=iters),
+        "katz": lambda: graph.katz_centrality(edges, iters=iters),
+    }[op]
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    fn().collect()
+    assert jsc.getPersistentRDDs().size() - before <= 1
