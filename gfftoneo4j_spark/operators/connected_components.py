@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gfftoneo4j_spark.operators.graph import _drop_checkpoint
+
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
     rev = edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
@@ -132,6 +134,9 @@ def connected_components(
     large-star/small-star loop. Pass ``local_threshold=0`` to force the
     distributed path. Each distributed round localCheckpoints the
     shrinking edge set: truncates lineage and re-balances partitions.
+    Once the next round's checksum has filled its checkpoint, the
+    superseded round is freed; the answer reads only the last round and
+    the initial snapshot.
     """
     cur = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
@@ -161,13 +166,17 @@ def connected_components(
     if prev_sig[0] == 0:
         return all_nodes.select("node", F.col("node").alias("component"))
     converged = False
+    snapshot = cur
     for _ in range(max_iter):
         # LAZY checkpoint: the checksum job materializes it as a side
         # effect — ONE Spark job per round instead of two (checkpoint
         # then checksum), halving the loop's fixed cost; lineage is
         # still truncated for the next round's plan
-        cur = _small_star(_large_star(cur)).localCheckpoint(eager=False)
-        sig = _checksum(cur)
+        nxt = _small_star(_large_star(cur)).localCheckpoint(eager=False)
+        sig = _checksum(nxt)
+        if cur is not snapshot:  # all_nodes still reads the snapshot
+            _drop_checkpoint(cur)
+        cur = nxt
         if sig == prev_sig:
             converged = True
             break

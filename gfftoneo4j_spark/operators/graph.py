@@ -43,6 +43,13 @@ def _mat(df: DataFrame) -> DataFrame:
     return out
 
 
+def _drop_checkpoint(df: DataFrame) -> None:
+    """Free a localCheckpoint frame's blocks now. The checkpoint is
+    registered only as a persistent RDD, so ``df.unpersist()`` does
+    nothing to it and the ContextCleaner frees it only after a JVM GC."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
 def _fixed_point(
     init: DataFrame,
     step: Callable[[DataFrame], DataFrame],
@@ -85,8 +92,7 @@ def _fixed_point(
     for i in range(1, rounds + 1):
         nxt = _mat(step(state))
         if i % 6 == 1 and i > 1:
-            # a local checkpoint is cache-registered only as its RDD
-            state._jdf.queryExecution().logical().rdd().unpersist(False)
+            _drop_checkpoint(state)
         elif i > 1:
             state.unpersist(blocking=False)
         state = nxt

@@ -21,6 +21,8 @@ edges; Neo4JUtils.scala:30-48 stringifies properties and enforces
 - ``triples`` is a pure column-rename of ``edges`` — at 10^12 edges
   materializing it twice would double the largest table for zero new
   information, so readers get it as a projection (``read_graph``).
+- The Parquet encoding (zstd, v2 data pages) comes from the session
+  (``session.get_spark``); no writer here names a codec.
 """
 
 from __future__ import annotations

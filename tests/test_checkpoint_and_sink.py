@@ -133,6 +133,65 @@ def test_graph_sink_roundtrip(spark, dfs, tmp_path):
     assert (tmp_path / "graph" / "edges" / "type=next_turn").exists()
 
 
+def test_graph_sink_files_are_zstd_and_read_alike(spark, dfs, tmp_path):
+    """The session's Parquet encoding (zstd, v2 data pages) reaches every
+    column chunk the sink writes, and Spark, pyarrow and DuckDB read the
+    same node rows (string ids, ``props`` maps built from turns whose
+    ``tool`` is null) and edge rows back."""
+    import duckdb
+    import pyarrow.parquet as pq
+
+    tdf, ddf = dfs
+    res = build_kg(spark, tdf, ddf)
+    path = tmp_path / "graph"
+    write_graph(res.nodes, res.edges, str(path))
+
+    files = sorted(path.glob("*/*/*.parquet"))
+    assert {f.parent.parent.name for f in files} == {"nodes", "edges"}
+    codecs = set()
+    for f in files:
+        meta = pq.ParquetFile(f).metadata
+        for g in range(meta.num_row_groups):
+            rg = meta.row_group(g)
+            codecs |= {rg.column(c).compression for c in range(rg.num_columns)}
+    assert codecs == {"ZSTD"}
+
+    def node(node_id, label, props):
+        items = props.items() if isinstance(props, dict) else props
+        return node_id, label, tuple(sorted(items))
+
+    cols = ("node_id", "label", "props")
+    g = read_graph(spark, str(path))
+    by_spark = {
+        "nodes": {node(*r) for r in g.nodes.select(*cols).collect()},
+        "edges": {tuple(r) for r in g.edges.select("src", "dst", "type").collect()},
+    }
+    arrow = {t: pq.read_table(path / t).to_pylist() for t in ("nodes", "edges")}
+    by_arrow = {
+        "nodes": {node(r["node_id"], r["label"], r["props"]) for r in arrow["nodes"]},
+        "edges": {(r["src"], r["dst"], r["type"]) for r in arrow["edges"]},
+    }
+    con = duckdb.connect()
+    scan = "read_parquet('{}/*/*.parquet', hive_partitioning = true)"
+    by_duckdb = {
+        "nodes": {
+            node(i, lab, [(e["key"], e["value"]) for e in entries])
+            for i, lab, entries in con.execute(
+                "SELECT node_id, label, map_entries(props) FROM "
+                + scan.format(path / "nodes")
+            ).fetchall()
+        },
+        "edges": set(
+            con.execute("SELECT src, dst, type FROM " + scan.format(path / "edges")).fetchall()
+        ),
+    }
+    assert by_spark["nodes"] == {node(*r) for r in res.nodes.select(*cols).collect()}
+    assert by_spark["edges"] == {tuple(r) for r in res.edges.select("src", "dst", "type").collect()}
+    assert by_arrow == by_spark and by_duckdb == by_spark
+    turns = [n for n in by_spark["nodes"] if n[1] == "turn"]
+    assert turns and all("tool" not in dict(n[2]) for n in turns)
+
+
 def test_graph_sink_dedup_on_write(spark, dfs, tmp_path):
     """`create unique` (Neo4JUtils.scala:43): duplicate inserts collapse."""
     tdf, ddf = dfs

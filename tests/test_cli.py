@@ -130,6 +130,9 @@ def test_query_profile_records_each_repetition(sf_dir):
     assert [type(r["wall_s"]) for r in rec["runs"]] == [float, float]
     jobs = [r["jobs"] for r in rec["runs"]]
     assert jobs[0] == jobs[1] > 0
+    # the second repetition finds the first one's classes in the cache
+    compiles = [r["codegen_compiles"] for r in rec["runs"]]
+    assert compiles[0] > compiles[1] >= 0
     assert rec["package"].startswith(REPO + os.sep)
 
 

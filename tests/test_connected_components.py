@@ -79,3 +79,22 @@ def test_cc_matches_oracle_canonical_map(spark):
 def test_cc_empty_edges(spark):
     df = spark.createDataFrame([], "u string, v string")
     assert connected_components(df).count() == 0
+
+
+def test_cc_releases_superseded_round_checkpoints(spark):
+    """The distributed loop frees each round's checkpoint once the next
+    round's checksum has filled its own. What is left is what the answer
+    reads: the initial snapshot (for the node set) and the last round.
+    "At most" because the ContextCleaner may free unrelated RDDs while
+    the op runs."""
+    from pyspark.sql import functions as F
+
+    path = spark.range(2000).select(
+        F.format_string("n%04d", "id").alias("u"),
+        F.format_string("n%04d", F.col("id") + 1).alias("v"),
+    )
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    got = connected_components(path, local_threshold=0).collect()
+    assert len(got) == 2001 and {r["component"] for r in got} == {"n0000"}
+    assert jsc.getPersistentRDDs().size() - before <= 2

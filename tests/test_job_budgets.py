@@ -55,11 +55,17 @@ def _jobs(spark, group, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(f"budget-{group}"))
 
 
-def test_write_read_and_lookup_job_budgets(spark, tmp_path):
+def _budget_build(spark):
+    """(turns, alias rows, ``build_kg`` result) of the budget corpus."""
     cfg = CorpusConfig(n_conversations=30, n_entities=15, seed=11)
     turns, dict_rows = make_transcripts(cfg), make_alias_dict(cfg)
     t = spark.createDataFrame(turns, TRANSCRIPT_SCHEMA)
     res = build_kg(spark, t, spark.createDataFrame(dict_rows, ALIAS_DICT_SCHEMA))
+    return turns, dict_rows, res
+
+
+def test_write_read_and_lookup_job_budgets(spark, tmp_path):
+    turns, dict_rows, res = _budget_build(spark)
     path = str(tmp_path / "graph")
     _, n_write = _jobs(spark, "write", lambda: write_graph(res.nodes, res.edges, path))
     _, n_lineage = _jobs(
@@ -89,6 +95,24 @@ def test_write_read_and_lookup_job_budgets(spark, tmp_path):
     assert got == want
     assert (n_write, n_lineage, n_metrics) == (WRITE_JOBS, LINEAGE_JOBS, METRICS_JOBS)
     assert (n_read, n_lookup) == (READ_JOBS, LOOKUP_JOBS)
+
+
+def test_repeated_build_compiles_no_new_classes(spark, tmp_path):
+    """The session's codegen cache holds every class a build and its
+    writes generate (~150), and their names carry no AQE stage number,
+    so the second run of the same op compiles none. With Spark's
+    defaults (100 entries, stage ids in class names) it compiled ~160."""
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = codegen.METRIC_COMPILATION_TIME()
+    counts = []
+    for run in ("first", "second"):
+        c0 = compiles.getCount()
+        _, _, res = _budget_build(spark)
+        write_graph(res.nodes, res.edges, str(tmp_path / run / "graph"))
+        res.lineage.write.parquet(str(tmp_path / run / "lineage"))
+        res.metrics.write.parquet(str(tmp_path / run / "metrics"))
+        counts.append(compiles.getCount() - c0)
+    assert counts[1] == 0, counts
 
 
 def _budget_graph(spark):

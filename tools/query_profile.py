@@ -6,11 +6,14 @@ Usage:
 
 Each repetition runs under the job group ``<query>#<rep>`` and writes to
 the noop sink, so the computation is timed, not a collect; cached and
-persisted data is then released. After the last query the session stops,
-which flushes the uncompressed event log, and perfbench's
-``parse_event_log`` sums each group's jobs and stages. A query that
-raises gets the error in its record and the run goes on. The session
-comes from ``get_spark``: ``$SPARK_GRAFT_CPUS`` and ``$SPARK_GRAFT_MASTER``
+persisted data is then released. ``codegen_compiles`` is the number of
+generated classes the driver JVM compiled during the repetition: the
+exact count of Spark's ``CodegenMetrics`` compilation histogram, whose
+timings are a sampled reservoir and are not summed. After the last
+query the session stops, which flushes the uncompressed event log, and
+perfbench's ``parse_event_log`` sums each group's jobs and stages. A
+query that raises gets the error in its record and the run goes on. The
+session comes from ``get_spark``: ``$SPARK_GRAFT_CPUS`` and ``$SPARK_GRAFT_MASTER``
 (``local-cluster[W,C,M]`` for executor JVMs) apply.
 
 ``--base SHA`` runs the queries from a ``git archive`` of SHA and from
@@ -60,16 +63,23 @@ def profile(sf_dir: str, names: list[str], reps: int) -> dict:
             },
         )
         sc = spark.sparkContext
+        codegen = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        compiles = codegen.METRIC_COMPILATION_TIME()
         out = {}
         for name in names:
             rec = out[name] = {"package": package, "runs": []}
             try:
                 for rep in range(reps):
                     sc.setLocalProperty(JOB_GROUP, f"{name}#{rep}")
-                    t0 = time.perf_counter()
+                    c0, t0 = compiles.getCount(), time.perf_counter()
                     df = QUERIES[name](spark, sf_dir)
                     df.write.format("noop").mode("overwrite").save()
-                    rec["runs"].append({"wall_s": round(time.perf_counter() - t0, 3)})
+                    rec["runs"].append(
+                        {
+                            "wall_s": round(time.perf_counter() - t0, 3),
+                            "codegen_compiles": compiles.getCount() - c0,
+                        }
+                    )
                     spark.catalog.clearCache()
                     for jrdd in sc._jsc.getPersistentRDDs().values():
                         jrdd.unpersist()
