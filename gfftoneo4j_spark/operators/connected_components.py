@@ -137,6 +137,10 @@ def connected_components(
     Once the next round's checksum has filled its checkpoint, the
     superseded round is freed; the answer reads only the last round and
     the initial snapshot.
+
+    The answer is sorted by ``node`` within each partition, as the
+    loop driver's in operators/graph.py are; the distributed path's
+    final join reads no cache, so AQE already sizes it to its data.
     """
     cur = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
@@ -152,7 +156,7 @@ def connected_components(
         head = cur.limit(local_threshold + 1).collect()
         if len(head) <= local_threshold:
             spark = edges.sparkSession
-            out = _local_union_find([(r["u"], r["v"]) for r in head])
+            out = sorted(_local_union_find([(r["u"], r["v"]) for r in head]))
             return spark.createDataFrame(out, "node string, component string")
 
     # reads the checkpointed `cur` twice, once per branch of the union —
@@ -195,6 +199,8 @@ def connected_components(
     comp = _min_neighbor(sym).select(
         F.col("u").alias("node"), F.col("m").alias("component")
     )
-    return all_nodes.join(comp, "node", "left").select(
-        "node", F.coalesce("component", "node").alias("component")
+    return (
+        all_nodes.join(comp, "node", "left")
+        .select("node", F.coalesce("component", "node").alias("component"))
+        .sortWithinPartitions("node")
     )

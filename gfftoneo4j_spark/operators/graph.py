@@ -87,6 +87,28 @@ def _fixed_point(
     checkpoint in one job (a count-based driver took 39 -> 68 jobs).
     There is no ``until=`` probe or per-round record: no loop needs
     one (CC's checksum loop holds read-twice state).
+
+    Output contract: the answer is sized to its data and sorted by
+    ``node`` within each partition. The state keeps the fixed
+    ``spark.sql.shuffle.partitions`` count (Spark plans cached frames
+    with ``canChangeCachedPlanOutputPartitioning=false``), so a small
+    answer would be written as one tiny hash-ordered file per shuffle
+    partition. It is coalesced, with no shuffle, to ceil(materialized
+    bytes / ``spark.sql.adaptive.advisoryPartitionSizeInBytes``)
+    partitions, never to more than it has: a large answer keeps its
+    partitioning. The size is the final state's own statistics, which
+    after ``_mat`` (and a round-6 checkpoint, which keeps them) are
+    the materialized size. Sorted ids share prefixes that v2 pages'
+    DELTA_BYTE_ARRAY stores once: ``kg_analytics`` writes 0.10 bytes
+    per input byte instead of 0.32; sorting alone gave 0.23, the
+    coalesce alone 0.28. A caller that only reads the answer pays
+    nothing: ``coalesce`` is narrow (no job), and Catalyst's
+    EliminateSorts drops the sort under a join or an order-irrelevant
+    aggregate. Rejected: a ``rebalance`` hint (one more |V| exchange
+    per answer, which no rule removes under a join), and
+    ``canChangeCachedPlanOutputPartitioning=true`` (PageRank 29 -> 35
+    jobs, LPA 20 -> 23, same wall, and it breaks the exchange-free
+    rounds co-partitioned on hash(u)).
     """
     state = init
     for i in range(1, rounds + 1):
@@ -101,7 +123,15 @@ def _fixed_point(
             nxt.unpersist(blocking=False)
     for df in pinned:
         df.unpersist(blocking=False)
-    return state
+    spark = state.sparkSession
+    advisory = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    )
+    size = state._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    parts = max(1, -(-size // advisory))
+    if parts < state.rdd.getNumPartitions():
+        state = state.coalesce(parts)
+    return state.sortWithinPartitions("node")
 
 
 def _directed(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -777,7 +807,8 @@ def kcore_peel(
     survivor set only shrinks, so per-round cost is monotonically
     non-increasing). localCheckpoint truncates lineage so the plan
     stays O(1)-deep across rounds, same discipline as the CC /
-    PageRank / LPA loops.
+    PageRank / LPA loops; each round frees the checkpoint it
+    supersedes.
 
     Returns (node string, degree long) for the nodes still alive after
     ``rounds`` rounds, with their residual degree.
@@ -786,12 +817,14 @@ def kcore_peel(
     for _ in range(rounds):
         deg = e.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
         keep = deg.where(F.col("deg") >= k).select("s")
-        e = (
+        nxt = (
             e.join(keep, "s", "semi")
             .join(keep.withColumnRenamed("s", "t"), "t", "semi")
             .select("s", "t")
             .localCheckpoint(eager=True)
         )
+        _drop_checkpoint(e)
+        e = nxt
     return e.groupBy(F.col("s").alias("node")).agg(
         F.count(F.lit(1)).alias("degree")
     )
@@ -942,7 +975,14 @@ def hits_fixed_point(
     TWICE, pre-keyed per side — one extra |E| of columnar cache buys
     zero edge exchanges in every round. The global sums are one-row
     driver scalars (the CC-checksum discipline) that re-enter the plan
-    as literals, keeping the oracle expressible.
+    as literals, keeping the oracle expressible. Each filled half-round
+    checkpoint frees the one it read, so a call leaves the node set and
+    the last a and h registered.
+
+    The answer is sorted by ``node`` within each partition, like
+    ``_fixed_point``'s, but keeps its shuffle-partition count: it joins
+    the cached node set, and without CBO a join's size estimate is the
+    product of its inputs' sizes, so there is no size to coalesce to.
     """
     # dedup ONCE, then derive the other pre-keyed copy and the node set
     # from the cache, as katz_centrality does
@@ -950,26 +990,27 @@ def hits_fixed_point(
     e_by_v = _mat(e_by_u.repartition("v"))
     nodes = _mat(_endpoints(e_by_u, "u", "v"))
 
-    def _normalize(raw: DataFrame, col: str) -> DataFrame:
+    def _normalize(raw: DataFrame, col: str) -> tuple[DataFrame, DataFrame]:
         """raw: (node, col) summed scores -> L1-normalized to total
         ~= scale, floor per element. ONE job per half-round: the
         node-joined raw vector is a LAZY localCheckpoint that the
         scalar-sum action itself materializes (CC's checksum loop), so
         every half-round cuts the lineage; a persisted vector kept it,
         and the plans grew until iters=7 ran the driver out of heap.
-        The normalized result stays a lazy projection over it."""
+        Returns the filled checkpoint and the normalized vector, a
+        lazy projection over it."""
         full = nodes.join(raw, "node", "left").select(
             "node",
             F.coalesce(F.col(col), F.lit(0)).cast("long").alias(col),
         ).localCheckpoint(eager=False)
         total = full.agg(F.sum(col)).collect()[0][0] or 1
-        return full.select(
+        return full, full.select(
             "node", F.expr(f"({col} * {scale}) div {total}").alias(col)
         )
 
     h = nodes.select("node", F.lit(scale).cast("long").alias("h"))
-    a = None
-    for _ in range(iters):
+    h_ck = a_ck = None
+    for i in range(iters):
         a_raw = (
             e_by_u.join(
                 h.withColumnRenamed("node", "u").hint("shuffle_hash"), "u"
@@ -977,7 +1018,9 @@ def hits_fixed_point(
             .groupBy(F.col("v").alias("node"))
             .agg(F.sum("h").alias("a"))
         )
-        a = _normalize(a_raw, "a")
+        a_ck, a = _normalize(a_raw, "a")
+        if h_ck is not None:
+            _drop_checkpoint(h_ck)
         h_raw = (
             e_by_v.join(
                 a.withColumnRenamed("node", "v").hint("shuffle_hash"), "v"
@@ -985,7 +1028,9 @@ def hits_fixed_point(
             .groupBy(F.col("u").alias("node"))
             .agg(F.sum("a").alias("h"))
         )
-        h = _normalize(h_raw, "h")
+        h_ck, h = _normalize(h_raw, "h")
+        if i < iters - 1:
+            _drop_checkpoint(a_ck)
     out = nodes.join(h, "node", "left").join(a, "node", "left").select(
         "node",
         F.coalesce("h", F.lit(0)).cast("long").alias("hub"),
@@ -995,7 +1040,7 @@ def hits_fixed_point(
     # checkpoints and the node set; the edge snapshots are released
     for inv in (e_by_u, e_by_v):
         inv.unpersist(blocking=False)
-    return out
+    return out.sortWithinPartitions("node")
 
 
 def katz_centrality(

@@ -3,6 +3,7 @@ delete_propagation beyond the SQL-twin gate: HITS score semantics and
 partition invariance (the bit-exactness claim), probability-mass and
 conservation invariants."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from gfftoneo4j_spark.operators.graph import hits_fixed_point
@@ -33,6 +34,28 @@ def test_hits_partition_invariant(spark):
         for r in hits_fixed_point(edges.repartition(13), iters=2).collect()
     )
     assert a == b  # integer fixed-point: bit-exact at any partitioning
+
+
+def _registered_by(spark, make) -> int:
+    """Persistent RDDs that ``make()`` creates and that are still
+    registered after its answer is collected. Counting ids, not the
+    size of the map, leaves out RDDs the ContextCleaner frees meanwhile."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    make().collect()
+    return len(set(jsc.getPersistentRDDs().keySet()) - before)
+
+
+@pytest.mark.parametrize("iters", [2, 4])
+def test_hits_frees_superseded_checkpoints(spark, iters):
+    """Each half-round frees the checkpoint it read once its own is
+    filled: what stays is what the answer reads, the node set and the
+    last a and h (the parent left 5 at iters=2 and 8 at iters=4)."""
+    edges = spark.createDataFrame(
+        [(f"n{i}", f"n{(i * 7 + 3) % 30}") for i in range(60)],
+        "u string, v string",
+    )
+    assert _registered_by(spark, lambda: hits_fixed_point(edges, iters=iters)) <= 3
 
 
 def test_turn_transitions_probability_mass(spark, sf_dir):

@@ -60,6 +60,17 @@ def test_kcore_whole_graph_survives_k1(spark):
     assert {r["node"] for r in out} == set("abcdefg")
 
 
+def test_kcore_frees_superseded_checkpoints(spark):
+    """Each round frees the checkpoint it supersedes; only the last
+    round, which the answer reads, stays registered (the parent left 4
+    at rounds=3). Counts the ids a call creates, so RDDs the
+    ContextCleaner frees meanwhile do not mask a leak."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    kcore_peel(_edges(spark, CLIQUE_CHAIN), k=2, rounds=3).collect()
+    assert len(set(jsc.getPersistentRDDs().keySet()) - before) <= 1
+
+
 def test_link_prediction_scores_and_excludes_existing_edges(spark):
     # x and y share neighbors m1, m2 and are NOT adjacent -> candidate;
     # x and m1 ARE adjacent -> never a candidate whatever they share

@@ -25,11 +25,15 @@ Per job, three steps:
 
 1. strong: ``PAIRS`` interleaved N/4N pairs over the 4C-sized input,
    N first in even pairs and 4N first in odd ones;
-2. envelope: 4 independent N apps run the same input concurrently,
+2. weak: after each strong pair, one N child over the C-sized input,
+   so the ``PAIRS`` weak children see the host as the strong pairs do;
+   the median of their measured walls is set against the strong 4N
+   median (one weak child against the 4N median of 6 read 0.549 and
+   0.684 on two runs of the same code);
+3. envelope: 4 independent N apps run the same input concurrently,
    behind a barrier after their cold runs. They share nothing but the
    host, so solo N wall / concurrent wall bounds what any 4-way job can
-   reach here;
-3. weak: the C-sized input at N, against the strong 4N median.
+   reach here.
 
 Each child is one app: it waits until all W executors have registered,
 then makes 1 cold run (recorded, kept out of the medians) and
@@ -280,14 +284,15 @@ def protocol(job: str, shp: dict, corpora: dict) -> dict:
     c = shp["C"]
     big = {"job": job, "C": c, "heap_mb": shp["heap_mb"],
            "units": 4 * c * PER_CORE[job], "corpus": corpora[4 * c]}
+    small = {**big, "executors": 1, "units": c * PER_CORE[job], "corpus": corpora[c]}
     strong = {"n": [], "4n": []}
+    weak = []
     for pair in range(PAIRS):
         for side in ("n", "4n") if pair % 2 == 0 else ("4n", "n"):
             spec = {**big, "executors": 1 if side == "n" else 4}
             strong[side].append(run_child(spec))
+        weak.append(run_child(small))
     envelope = run_envelope({**big, "executors": 1})
-    small = {**big, "executors": 1, "units": c * PER_CORE[job], "corpus": corpora[c]}
-    weak = [run_child(small)]
     rec = {
         "per_core": PER_CORE[job],
         "check": _same_check(job, strong["n"] + strong["4n"] + envelope),
