@@ -191,7 +191,8 @@ def _frontier_reach(
     """The frontier loop of bfs_distances, multi_source_bfs and
     scc_coloring: ``start`` (*key, node, dist=0) expands over ``adj``
     (s, t) for ``rounds`` hops, each reach scoped by its ``key``
-    columns. Returns (*key, node, dist), dist = first-discovery round.
+    columns. Each piece is (*key, node, dist), dist = first-discovery
+    round.
 
     Per round the frontier (last round's discoveries) joins ``adj`` by
     column name — a DataFrame-qualified ``adj["t"]`` is an ambiguous
@@ -201,7 +202,8 @@ def _frontier_reach(
     every round's plan reads the earlier rounds twice, through the
     frontier and through the visited pieces. Every round runs: an
     emptiness probe would cost a job in every round, more than the
-    empty rounds it could skip."""
+    empty rounds it could skip. Returns the pieces, which the caller
+    unions (``_union_all``) and may free once it has read them."""
     pieces = [start.localCheckpoint(eager=True)]
     step = adj.withColumnRenamed("s", "node")
     for depth in range(1, rounds + 1):
@@ -215,7 +217,7 @@ def _frontier_reach(
             .withColumn("dist", F.lit(depth))
             .localCheckpoint(eager=True)
         )
-    return _union_all(pieces)
+    return pieces
 
 
 def _orient_edges(und: DataFrame) -> DataFrame:
@@ -273,7 +275,8 @@ def _enumerate_triangles(und: DataFrame) -> DataFrame:
     so wedge fan-out is bounded by ~sqrt(2m) per node regardless of
     hub skew. Each triangle is produced exactly once as (x, y, z)
     with pi(x) < pi(y) < pi(z) under pi = (degree, id). Shared by
-    triangle_counts, clustering coefficients and truss_peel."""
+    triangle_counts and clustering coefficients; truss_peel keeps the
+    orientation to free it."""
     return _triangles_from_oriented(_orient_edges(und))
 
 
@@ -711,7 +714,7 @@ def bfs_distances(
     start = edges.sparkSession.range(1).select(
         F.lit(source).cast("bigint").alias("node"), F.lit(0).alias("dist")
     )
-    return _frontier_reach(start, und, [], max_depth)
+    return _union_all(_frontier_reach(start, und, [], max_depth))
 
 
 def label_propagation(
@@ -1281,7 +1284,7 @@ def multi_source_bfs(
         F.col(seed_col).cast("bigint").alias("node"),
         F.lit(0).alias("dist"),
     ).distinct()
-    return _frontier_reach(start, und, ["seed"], max_depth)
+    return _union_all(_frontier_reach(start, und, ["seed"], max_depth))
 
 
 def temporal_earliest_arrival(
@@ -1392,7 +1395,11 @@ def scc_coloring(
 
     Returns (node, scc_id) with scc_id = min member id. Nodes left
     active after max_outer rounds are NOT emitted (caller asserts
-    completion by row count).
+    completion by row count). Each outer round frees its edge
+    snapshot, colours and reach pieces once its SCCs are extracted,
+    and the active set it read once the next one is filled: the
+    answer reads only the extracted pieces, one per round that found
+    any.
     """
     e_all = (
         edges.select(
@@ -1411,8 +1418,13 @@ def scc_coloring(
     # lazy: the count that opens each outer round materializes it
     active = active.localCheckpoint(eager=False)
     pieces = []
+    spent = None  # the active set the current one was computed from
     for _ in range(max_outer):
-        if active.count() == 0:
+        n_active = active.count()
+        if spent is not None:
+            _drop_checkpoint(spent)
+            spent = None
+        if n_active == 0:
             break
         e_act = (
             e_all.join(active.withColumnRenamed("node", "eu"), "eu")
@@ -1420,14 +1432,14 @@ def scc_coloring(
             .localCheckpoint(eager=True)
         )
         color = active.select("node", F.col("node").alias("c"))
-        for _ in range(prop_rounds):
+        for r in range(prop_rounds):
             upd = (
                 e_act.join(color, e_act["eu"] == color["node"])
                 .groupBy(F.col("ev").alias("node2"))
                 .agg(F.max("c").alias("uc"))
                 .withColumnRenamed("node2", "node")
             )
-            color = (
+            nxt = (
                 color.join(upd, "node", "left_outer")
                 .select(
                     "node",
@@ -1437,6 +1449,9 @@ def scc_coloring(
                 )
                 .localCheckpoint(eager=True)
             )
+            if r > 0:
+                _drop_checkpoint(color)
+            color = nxt
         roots = color.where(F.col("c") == F.col("node"))
         # backward reach from each root over same-color edges (v -> u).
         # The reach needs no color join term: by induction from the
@@ -1461,7 +1476,8 @@ def scc_coloring(
         start = roots.select(
             F.col("c").alias("col"), "node", F.lit(0).alias("dist")
         )
-        visited = _frontier_reach(start, adj, ["col"], prop_rounds)
+        reach = _frontier_reach(start, adj, ["col"], prop_rounds)
+        visited = _union_all(reach)
         members = visited.groupBy("col").agg(
             F.min("node").alias("scc_id")
         )
@@ -1470,7 +1486,10 @@ def scc_coloring(
             .select("node", "scc_id")
             .localCheckpoint(eager=True)
         )
+        for df in (e_act, color, adj, *reach):
+            _drop_checkpoint(df)
         pieces.append(extracted)
+        spent = active
         active = active.join(
             extracted.select("node"), "node", "left_anti"
         ).localCheckpoint(eager=False)
@@ -1478,14 +1497,18 @@ def scc_coloring(
         return active.select(
             "node", F.col("node").alias("scc_id")
         ).where(F.lit(False))
+    for df in (e_all, active, spent):
+        if df is not None:
+            _drop_checkpoint(df)
     return _union_all(pieces)
 
 
-def _edge_support(und: DataFrame) -> DataFrame:
-    """Per-edge triangle support over a canonical undirected edge set
-    (a, b), a < b: every enumerated triangle contributes 1 to each of
-    its three edges. Combinable count; support 0 edges are absent."""
-    tris = _enumerate_triangles(und)
+def _edge_support(oriented: DataFrame) -> DataFrame:
+    """Per-edge triangle support over the degree orientation
+    (``_orient_edges``) of a canonical undirected edge set (a, b),
+    a < b: every enumerated triangle contributes 1 to each of its
+    three edges. Combinable count; support 0 edges are absent."""
+    tris = _triangles_from_oriented(oriented)
     pair = lambda p, q: F.struct(  # noqa: E731
         F.least(p, q).alias("a"), F.greatest(p, q).alias("b")
     )
@@ -1519,20 +1542,26 @@ def truss_peel(
     pagerank discipline). Support counting reuses the degree-oriented
     triangle enumeration, so per round the quadratic wedge step stays
     sqrt(2m)-bounded and the peel itself is a broadcast-or-shuffle
-    left join + filter. Returns surviving edges with their support
-    RECOUNTED on the surviving subgraph: (u, v, support), u < v.
+    left join + filter. Each round frees the edge set and orientation
+    it supersedes: the answer reads the last two. Returns surviving
+    edges with their support RECOUNTED on the surviving subgraph:
+    (u, v, support), u < v.
     """
     und = _canonical_undirected(edges, src, dst).localCheckpoint(eager=True)
+    oriented = _orient_edges(und)
     thresh = k - 2
     for _ in range(rounds):
-        sup = _edge_support(und)
-        und = (
-            und.join(sup, ["a", "b"], "left_outer")
+        nxt = (
+            und.join(_edge_support(oriented), ["a", "b"], "left_outer")
             .where(F.coalesce(F.col("support"), F.lit(0)) >= thresh)
             .select("a", "b")
             .localCheckpoint(eager=True)
         )
-    final = _edge_support(und)
+        _drop_checkpoint(und)
+        _drop_checkpoint(oriented)
+        und = nxt
+        oriented = _orient_edges(und)
+    final = _edge_support(oriented)
     return (
         und.join(final, ["a", "b"], "left_outer")
         .select(

@@ -10,8 +10,14 @@ edges; Neo4JUtils.scala:30-48 stringifies properties and enforces
   partitioned by ``type`` (6 predicates) — per-label / per-predicate
   reads prune to one partition directory at any scale.
 - `create unique` (K2) = ``dropDuplicates`` on the natural key at
-  the write, not a server-side constraint. The edges dedup runs on the
-  write's own (type, src) spread, so it adds no shuffle.
+  the write, not a server-side constraint. Each dedup runs on the
+  write's own exchange, so it adds no shuffle.
+- Each table is range-partitioned on its key (nodes on ``node_id``,
+  edges on (type, src)) and sorted within each file, so every file
+  holds a contiguous sorted key range and files in one directory never
+  overlap. Sorted neighbours compress: ``kg_build`` writes 0.31 bytes
+  per input byte instead of 0.89 with hash-spread files
+  (``_write_tables`` has the numbers and the rejected variant).
 - Atomicity (K3, Neo4JUtils.scala:22-28's transaction bracket) =
   parquet overwrite + a ``_GRAPH_MANIFEST.json`` written only AFTER
   both tables commit, via the Hadoop FileSystem API (works for
@@ -37,23 +43,66 @@ GRAPH_MANIFEST = "_GRAPH_MANIFEST.json"
 
 def _write_tables(nodes: DataFrame, edges: DataFrame, path: str, mode: str) -> None:
     """K2 `create unique`: each table unique by natural key at the sink
-    boundary. r06: repartition by (partition col, natural key) pinned to
-    the core count — keying on the partition column ALONE collapsed the
-    write to one task per label/type (a 30 TB type would be one
-    straggler at scale; measured 3-task serial writes at sf0.1). Each
-    task writes at most one file per directory it holds, so files per
-    directory are bounded by the task count and file size tracks
-    data/cores (guide §6 sizing). Edges spread BEFORE the dedup:
-    hash(type, src) already clusters (src, dst, type), so the dedup
-    needs no exchange of its own; hash(label, node_id) does not cluster
-    node_id alone, so nodes gain nothing from that order."""
-    n_par = nodes.sparkSession.sparkContext.defaultParallelism
-    nodes = nodes.dropDuplicates(["node_id"]).repartition(n_par, "label", "node_id")
-    edges = edges.repartition(n_par, "type", "src").dropDuplicates(
-        ["src", "dst", "type"]
+    boundary, written range-partitioned and key-sorted.
+
+    Nodes are range-partitioned on ``node_id`` and edges on (type, src),
+    and each task sorts its rows by (label, node_id) or (type, src,
+    dst). A range partitioning on a subset of the dedup key satisfies
+    the dedup's clustering, so the dedup rides the write's one exchange
+    per table; the leading partition column of the sort also satisfies
+    the ordering a ``partitionBy`` write asks for, so no sort is added.
+    AQE coalesces adjacent ranges to the advisory partition size: a
+    small graph is one file per label or type, a large one many files,
+    each a contiguous sorted key range, none overlapping another in its
+    directory. Neighbouring ids then share the prefixes that v2 pages'
+    DELTA_BYTE_ARRAY stores once and the runs zstd compresses.
+    ``kg_build`` writes 0.31 bytes per input byte instead of 0.89
+    (seed 1: nodes 258,921 B in 16 files -> 108,399 B in 4, edges
+    287,410 B in 20 -> 81,168 B in 5). Neither half does it alone: a
+    sort within the old core-count hash slices, each holding every
+    n-th id, saved 1.4%; AQE-coalesced hash slices without a sort left
+    edges at 307,069 B (nodes fell to 108,399 B only because their
+    dedup is a sort-based aggregate).
+
+    Rejected: hash partitioning on the dedup's own exchange plus the
+    sort. It matched at 20k turns, but at 400k turns AQE kept 7 hash
+    slices per label and the ratio only went 1.34 -> 1.22; the range
+    layout went 1.34 -> 0.41 (9 node and 9 edge files, up to 5 per
+    directory). Cost: the range bounds are sampled by one job per
+    table (at scale the edges sample re-reads the window passes'
+    shuffle output), the price Spark's global sort and Iceberg's
+    ``write.distribution-mode=range`` pay too."""
+    nodes = (
+        nodes.repartitionByRange("node_id")
+        .dropDuplicates(["node_id"])
+        .sortWithinPartitions("label", "node_id")
     )
-    nodes.write.mode(mode).partitionBy("label").parquet(f"{path}/nodes")
-    edges.write.mode(mode).partitionBy("type").parquet(f"{path}/edges")
+    edges = (
+        edges.repartitionByRange("type", "src")
+        .dropDuplicates(["src", "dst", "type"])
+        .sortWithinPartitions("type", "src", "dst")
+    )
+    spark = nodes.sparkSession
+    for name, df, part in (("nodes", nodes, "label"), ("edges", edges, "type")):
+        target = f"{path}/{name}"
+        df.write.mode(mode).partitionBy(part).parquet(target)
+        if not _has_data_file(spark, target):
+            # a partitioned write of no rows leaves no file to infer the
+            # schema from; one empty file, columns in the order a
+            # partitioned read gives them, lets the table read back
+            cols = [c for c in df.columns if c != part] + [part]
+            spark.createDataFrame([], df.select(*cols).schema).write.mode(
+                "append"
+            ).parquet(target)
+
+
+def _has_data_file(spark: SparkSession, path: str) -> bool:
+    fs, root = _fs(spark, path)
+    files = fs.listFiles(root, True)
+    while files.hasNext():
+        if not files.next().getPath().getName().startswith(("_", ".")):
+            return True
+    return False
 
 
 def _read_tables(spark: SparkSession, path: str) -> GraphTables:

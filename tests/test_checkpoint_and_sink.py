@@ -10,13 +10,17 @@ dedup-on-write and manifest-last atomicity.
 
 from datetime import datetime, timedelta
 
+import pyarrow.parquet as pq
 import pytest
 
+from gfftoneo4j_spark.corpus import CorpusConfig, make_alias_dict, make_transcripts
 from gfftoneo4j_spark.plans.checkpoint import StageCheckpointer
 from gfftoneo4j_spark.plans.graph_sink import (
     GRAPH_MANIFEST,
     read_graph,
+    read_graph_snapshot,
     write_graph,
+    write_graph_snapshot,
 )
 from gfftoneo4j_spark.plans.pipeline import build_kg
 from gfftoneo4j_spark.sources.transcripts import ALIAS_DICT_SCHEMA, TRANSCRIPT_SCHEMA
@@ -215,3 +219,80 @@ def test_graph_sink_torn_write_detected(spark, dfs, tmp_path):
     (tmp_path / "graph" / GRAPH_MANIFEST).unlink()  # simulate torn run
     with pytest.raises(FileNotFoundError):
         read_graph(spark, path)
+
+
+def _write_and_read(writer, nodes, edges, path):
+    """Write with ``writer`` and read back; returns the directory that
+    holds ``nodes/`` and ``edges/`` and the tables read."""
+    writer(nodes, edges, str(path))
+    if writer is write_graph:
+        return path, read_graph(nodes.sparkSession, str(path))
+    return path / "v1", read_graph_snapshot(nodes.sparkSession, str(path))
+
+
+def _file_keys(table_dir, cols):
+    """Per partition directory, the key tuples of each data file in it."""
+    by_dir = {}
+    for f in sorted(table_dir.glob("*/*.parquet")):
+        t = pq.read_table(f, columns=cols)
+        keys = list(zip(*(t.column(c).to_pylist() for c in cols)))
+        by_dir.setdefault(f.parent.name, []).append(keys)
+    return by_dir
+
+
+@pytest.mark.parametrize("writer", [write_graph, write_graph_snapshot])
+def test_graph_sink_files_are_key_sorted_ranges(spark, tmp_path, writer):
+    """Every file the sink writes holds a contiguous, sorted key range:
+    node files are sorted by node_id, edge files by (src, dst), and with
+    AQE's coalescing off (so each directory holds several files) the
+    [min, max] key ranges of the files in one label or type directory
+    never overlap, which hash-spread files, each holding every n-th id,
+    do. The rows are the built graph's."""
+    cfg = CorpusConfig(n_conversations=30, n_entities=15, seed=11)
+    res = build_kg(
+        spark,
+        spark.createDataFrame(make_transcripts(cfg), TRANSCRIPT_SCHEMA),
+        spark.createDataFrame(make_alias_dict(cfg), ALIAS_DICT_SCHEMA),
+    )
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    coalesce = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        root, g = _write_and_read(writer, res.nodes, res.edges, tmp_path / "g")
+    finally:
+        spark.conf.set(key, coalesce)
+
+    layouts = {
+        "nodes": _file_keys(root / "nodes", ["node_id"]),
+        "edges": _file_keys(root / "edges", ["src", "dst"]),
+    }
+    for table, by_dir in layouts.items():
+        assert max(len(files) for files in by_dir.values()) > 1, table
+        for part, files in by_dir.items():
+            for keys in files:
+                assert keys == sorted(keys), (table, part)
+            spans = sorted((keys[0][0], keys[-1][0]) for keys in files if keys)
+            for (_, hi), (lo, _) in zip(spans, spans[1:]):
+                assert hi < lo, (table, part, spans)
+
+    cols = ("node_id", "label")
+    assert sorted(g.nodes.select(*cols).collect()) == sorted(
+        res.nodes.select(*cols).collect()
+    )
+    edge_cols = ("src", "dst", "type")
+    assert sorted(g.edges.select(*edge_cols).collect()) == sorted(
+        res.edges.select(*edge_cols).distinct().collect()
+    )
+
+
+@pytest.mark.parametrize("writer", [write_graph, write_graph_snapshot])
+def test_graph_sink_writes_an_empty_graph(spark, dfs, tmp_path, writer):
+    tdf, ddf = dfs
+    res = build_kg(spark, tdf, ddf)
+    _, g = _write_and_read(
+        writer,
+        res.nodes.where("false"),
+        res.edges.where("false"),
+        tmp_path / "g",
+    )
+    assert g.nodes.count() == 0 and g.edges.count() == 0

@@ -36,18 +36,8 @@ def test_hits_partition_invariant(spark):
     assert a == b  # integer fixed-point: bit-exact at any partitioning
 
 
-def _registered_by(spark, make) -> int:
-    """Persistent RDDs that ``make()`` creates and that are still
-    registered after its answer is collected. Counting ids, not the
-    size of the map, leaves out RDDs the ContextCleaner frees meanwhile."""
-    jsc = spark.sparkContext._jsc
-    before = set(jsc.getPersistentRDDs().keySet())
-    make().collect()
-    return len(set(jsc.getPersistentRDDs().keySet()) - before)
-
-
 @pytest.mark.parametrize("iters", [2, 4])
-def test_hits_frees_superseded_checkpoints(spark, iters):
+def test_hits_frees_superseded_checkpoints(spark, registered_by, iters):
     """Each half-round frees the checkpoint it read once its own is
     filled: what stays is what the answer reads, the node set and the
     last a and h (the parent left 5 at iters=2 and 8 at iters=4)."""
@@ -55,7 +45,7 @@ def test_hits_frees_superseded_checkpoints(spark, iters):
         [(f"n{i}", f"n{(i * 7 + 3) % 30}") for i in range(60)],
         "u string, v string",
     )
-    assert _registered_by(spark, lambda: hits_fixed_point(edges, iters=iters)) <= 3
+    assert registered_by(lambda: hits_fixed_point(edges, iters=iters)) <= 3
 
 
 def test_turn_transitions_probability_mass(spark, sf_dir):

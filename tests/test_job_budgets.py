@@ -19,7 +19,9 @@ from gfftoneo4j_spark.plans.graph_sink import read_graph, write_graph
 from gfftoneo4j_spark.plans.pipeline import build_kg
 from gfftoneo4j_spark.sources.transcripts import ALIAS_DICT_SCHEMA, TRANSCRIPT_SCHEMA
 
-WRITE_JOBS = 9  # write_graph of a default build
+# write_graph of a default build; 2 of its jobs sample the range bounds
+# that nodes and edges are partitioned on, one per table
+WRITE_JOBS = 11
 LINEAGE_JOBS = 10  # then its lineage to parquet
 METRICS_JOBS = 5  # then its metrics to parquet
 READ_JOBS = 2  # read_graph: parquet schema inference

@@ -60,15 +60,11 @@ def test_kcore_whole_graph_survives_k1(spark):
     assert {r["node"] for r in out} == set("abcdefg")
 
 
-def test_kcore_frees_superseded_checkpoints(spark):
+def test_kcore_frees_superseded_checkpoints(spark, registered_by):
     """Each round frees the checkpoint it supersedes; only the last
     round, which the answer reads, stays registered (the parent left 4
-    at rounds=3). Counts the ids a call creates, so RDDs the
-    ContextCleaner frees meanwhile do not mask a leak."""
-    jsc = spark.sparkContext._jsc
-    before = set(jsc.getPersistentRDDs().keySet())
-    kcore_peel(_edges(spark, CLIQUE_CHAIN), k=2, rounds=3).collect()
-    assert len(set(jsc.getPersistentRDDs().keySet()) - before) <= 1
+    at rounds=3)."""
+    assert registered_by(lambda: kcore_peel(_edges(spark, CLIQUE_CHAIN), k=2, rounds=3)) <= 1
 
 
 def test_link_prediction_scores_and_excludes_existing_edges(spark):

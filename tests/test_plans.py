@@ -140,9 +140,10 @@ def test_default_build_extracts_once(spark, tmp_path):
 
 @pytest.mark.parametrize("writer", [write_graph, write_graph_snapshot])
 def test_sink_edge_dedup_rides_the_write_spread(spark, tmp_path, monkeypatch, writer):
-    """The sink's `create unique` edge dedup runs on the (type, src)
-    exchange that spreads the write, not on a (src, dst, type) exchange
-    of its own."""
+    """Each sink table has exactly one exchange: the range partitioning
+    that spreads the write (nodes on node_id, edges on (type, src)).
+    The `create unique` dedup rides it; neither table gains a hash
+    exchange of its own on (src), (src, dst, type) or (node_id)."""
     plans = {}
     parquet = DataFrameWriter.parquet
 
@@ -151,13 +152,27 @@ def test_sink_edge_dedup_rides_the_write_spread(spark, tmp_path, monkeypatch, wr
         return parquet(self, path, *args, **kwargs)
 
     monkeypatch.setattr(DataFrameWriter, "parquet", recording)
-    nodes = spark.createDataFrame([("m", "mention")], "node_id string, label string")
+    nodes = spark.createDataFrame(
+        [("m", "mention")] * 2, "node_id string, label string"
+    )
     edges = spark.createDataFrame(
         [("m", "e", "refers_to")] * 2, "src string, dst string, type string"
     )
     writer(nodes, edges, str(tmp_path / "graph"))
-    assert re.search(r"Exchange hashpartitioning\(type#\d+, src#", plans["edges"])
-    assert not re.search(r"Exchange hashpartitioning\(src#", plans["edges"])
+    exchanges = {
+        table: re.findall(r"Exchange (.*)", plan)
+        for table, plan in plans.items()
+    }
+    assert len(exchanges["nodes"]) == 1, exchanges
+    assert re.match(
+        r"rangepartitioning\(node_id#\d+ ASC NULLS FIRST, \d+\)",
+        exchanges["nodes"][0],
+    )
+    assert len(exchanges["edges"]) == 1, exchanges
+    assert re.match(
+        r"rangepartitioning\(type#\d+ ASC NULLS FIRST, src#\d+ ASC NULLS FIRST, \d+\)",
+        exchanges["edges"][0],
+    )
 
 
 def test_scan_filter_pushdown(spark, sf_dir):

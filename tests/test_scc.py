@@ -109,3 +109,18 @@ def test_scc_random_digraphs_match_tarjan(spark):
 def test_scc_isolated_nodes_are_singletons(spark):
     got = _run(spark, 4, [(0, 1)])
     assert got == {0: 0, 1: 1, 2: 2, 3: 3}
+
+
+def test_scc_keeps_only_its_extracted_pieces(spark, registered_by):
+    """Each outer round frees its edge snapshot, colours and reach
+    pieces, and the active set it read: what stays is one extracted
+    piece per round. The descending chain 2 -> 1 -> 0 takes three
+    rounds, one singleton each, and exhausts ``max_outer`` (the parent
+    left 26)."""
+    e = spark.createDataFrame([(2, 1), (1, 0)], "u long, v long")
+
+    def run():
+        return scc_coloring(e, prop_rounds=3, max_outer=3)
+
+    assert registered_by(run) <= 3
+    assert {r["node"]: r["scc_id"] for r in run().collect()} == {0: 0, 1: 1, 2: 2}

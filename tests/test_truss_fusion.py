@@ -40,6 +40,20 @@ def test_truss_k3_is_triangle_closure(spark):
     assert {(r["u"], r["v"]) for r in got} == {(0, 1), (0, 2), (1, 2)}
 
 
+def test_truss_frees_superseded_checkpoints(spark, registered_by):
+    """Each round frees the edge set and degree orientation it
+    supersedes: the answer reads the last edge set and its orientation
+    (the parent left 6-8 at rounds=3)."""
+    tri = [(3 * c + i, 3 * c + (i + 1) % 3) for c in range(4) for i in range(3)]
+    quad = [(12 + 4 * c + i, 12 + 4 * c + (i + 1) % 4) for c in range(3) for i in range(4)]
+    e = _edges(spark, tri + quad)
+    assert registered_by(lambda: truss_peel(e, k=3, rounds=3)) <= 2
+    got = truss_peel(e, k=3, rounds=3).collect()
+    assert sorted((r["u"], r["v"], r["support"]) for r in got) == sorted(
+        (min(a, b), max(a, b), 1) for a, b in tri
+    )
+
+
 def test_four_cliques_k5(spark):
     # K5: C(5,4) = 5 distinct 4-cliques; every node sits in
     # C(4,3) = 4 of them.
