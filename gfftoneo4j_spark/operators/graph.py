@@ -43,11 +43,12 @@ def _mat(df: DataFrame) -> DataFrame:
     return out
 
 
-def _drop_checkpoint(df: DataFrame) -> None:
-    """Free a localCheckpoint frame's blocks now. The checkpoint is
+def _drop_checkpoint(*dfs: DataFrame) -> None:
+    """Free localCheckpoint frames' blocks now. A checkpoint is
     registered only as a persistent RDD, so ``df.unpersist()`` does
     nothing to it and the ContextCleaner frees it only after a JVM GC."""
-    df._jdf.queryExecution().logical().rdd().unpersist(False)
+    for df in dfs:
+        df._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 def _fixed_point(
@@ -1217,7 +1218,8 @@ def ancestor_closure(
     min() re-aggregation.
 
     Iterative-loop discipline as pagerank_fixed_point: each round's
-    relation is an eager localCheckpoint so lineage stays flat.
+    relation is an eager localCheckpoint so lineage stays flat, and
+    the relation it supersedes is freed; the answer reads the last.
 
     Returns (node, anc, dist) for 1 <= dist <= max_depth.
     KG role: the reference materializes only direct parent edges
@@ -1246,7 +1248,9 @@ def ancestor_closure(
             )
             .where(F.col("d") <= max_depth)
         )
-        rel = rel.unionByName(hop).distinct().localCheckpoint(eager=True)
+        nxt = rel.unionByName(hop).distinct().localCheckpoint(eager=True)
+        _drop_checkpoint(rel)
+        rel = nxt
         reach *= 2
     return rel.select(
         F.col("c").alias("node"),
@@ -1310,7 +1314,9 @@ def temporal_earliest_arrival(
     combinable min — never path enumeration (the oracle's recursive
     CTE enumerates; this relaxes state, which is why it survives
     out-degree^k blowup at 100 TB). min() is order-free, so results
-    are bit-exact at any partitioning.
+    are bit-exact at any partitioning. Each round frees the state and
+    frontier it supersedes, and the edge snapshot and last frontier
+    are freed at the end: the answer reads only the final state.
 
     seeds: one bigint column. Returns (seed, node, arrival) with
     arrival = -1 for the seed origin rows (filter `arrival >= 0`
@@ -1352,13 +1358,17 @@ def temporal_earliest_arrival(
             .select("seed", "node", F.col("cand").alias("arr"))
             .localCheckpoint(eager=True)
         )
-        state = (
+        nxt = (
             state.unionByName(improved)
             .groupBy("seed", "node")
             .agg(F.min("arr").alias("arr"))
             .localCheckpoint(eager=True)
         )
-        frontier = improved
+        _drop_checkpoint(state, frontier)
+        state, frontier = nxt, improved
+    _drop_checkpoint(e)
+    if frontier is not state:
+        _drop_checkpoint(frontier)
     return state.select("seed", "node", F.col("arr").alias("arrival"))
 
 
@@ -1486,8 +1496,7 @@ def scc_coloring(
             .select("node", "scc_id")
             .localCheckpoint(eager=True)
         )
-        for df in (e_act, color, adj, *reach):
-            _drop_checkpoint(df)
+        _drop_checkpoint(e_act, color, adj, *reach)
         pieces.append(extracted)
         spent = active
         active = active.join(
@@ -1557,8 +1566,7 @@ def truss_peel(
             .select("a", "b")
             .localCheckpoint(eager=True)
         )
-        _drop_checkpoint(und)
-        _drop_checkpoint(oriented)
+        _drop_checkpoint(und, oriented)
         und = nxt
         oriented = _orient_edges(und)
     final = _edge_support(oriented)

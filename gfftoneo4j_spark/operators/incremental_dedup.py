@@ -82,11 +82,12 @@ def band_rows(
 def _read_state(
     spark: SparkSession, path: str, schema: str
 ) -> DataFrame:
-    """Read an append-only state table; absent dir -> empty frame.
-    (Dedup of replayed appends happens at the union with the new
-    batch — one distinct covers both sources.)"""
+    """Read an append-only state table with its declared ``schema`` (no
+    inference job); absent dir -> empty frame. (Dedup of replayed
+    appends happens at the union with the new batch — one distinct
+    covers both sources.)"""
     try:
-        return spark.read.parquet(path)
+        return spark.read.schema(schema).parquet(path)
     except Exception:
         return spark.createDataFrame([], schema)
 

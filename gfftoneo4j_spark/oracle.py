@@ -17,6 +17,11 @@ Frozen decisions (mirroring SURVEY.md quirks):
 - misses (alias not in dictionary) are dropped + logged, the
   ParentInfoNotFound path (GeneReader.scala:85-90).
 - `create unique` edge semantics (Neo4JUtils.scala:43) -> set dedup.
+- a repeated (conv_id, turn_idx) key keeps the first row after the
+  (turn_idx, ts) sort; the repeat counts as lineage
+  `duplicate_turn_key` and each of its linked mentions as
+  `duplicate_mention_key` (the engine's key dedup, pipeline._keyed_chain).
+  Repeats with different text are not specified.
 - Q8: all node properties stringified.
 
 Vocabulary (SURVEY.md §1.3): the reference's six relationship types
@@ -105,6 +110,18 @@ def build_graph(transcript_rows: list[dict], alias_rows: list[dict]) -> dict:
     for conv in by_conv.values():
         conv.sort(key=lambda r: (r["turn_idx"], r["ts"]))
 
+    def link(text: str) -> list[tuple[int, str]]:
+        """(pos, entity) of each mention in ``text`` that links to exactly
+        one entity: extraction (P1) + linking (J2) + Q9."""
+        linked = []
+        for pos, m in enumerate(MENTION_RE.finditer(text)):
+            ents = alias_to_ents.get(m.group(1).lower(), set())
+            if len(ents) == 1:
+                linked.append((pos, *ents))
+            else:
+                lineage["ambiguous_alias" if ents else "unlinked_alias"] += 1
+        return linked
+
     nodes: set = set()
     edges: set = set()
 
@@ -115,24 +132,20 @@ def build_graph(transcript_rows: list[dict], alias_rows: list[dict]) -> dict:
         prev_turn = None
         for row in turns:
             tnode = turn_node(conv_id, row["turn_idx"])
+            linked = link(row["text"])
+            if tnode == prev_turn:  # a repeated turn key: the first row is kept
+                lineage["duplicate_turn_key"] += 1
+                if linked:
+                    lineage["duplicate_mention_key"] += len(linked)
+                continue
             nodes.add((tnode, "turn"))
             edges.add((tnode, cnode, "in_conv"))
             if prev_turn is not None:
                 edges.add((prev_turn, tnode, "next_turn"))
             prev_turn = tnode
 
-            # -- extraction (P1) + linking (J2) + Q9 ----------------------
             turn_mentions: list[str] = []
-            for pos, m in enumerate(MENTION_RE.finditer(row["text"])):
-                alias = m.group(1).lower()
-                ents = alias_to_ents.get(alias, set())
-                if len(ents) == 0:
-                    lineage["unlinked_alias"] += 1
-                    continue
-                if len(ents) > 1:
-                    lineage["ambiguous_alias"] += 1
-                    continue
-                (ent,) = ents
+            for pos, ent in linked:
                 mnode = mention_node(conv_id, row["turn_idx"], pos)
                 nodes.add((mnode, "mention"))
                 can = canon.get(ent, ent)

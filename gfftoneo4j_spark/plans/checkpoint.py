@@ -18,6 +18,7 @@ from __future__ import annotations
 import json
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 MANIFEST = "_STAGE_MANIFEST.json"
 
@@ -56,7 +57,11 @@ class StageCheckpointer:
 
     ``fingerprint`` is the caller-supplied identity of the stage's input
     (config hash, upstream snapshot id, ...). A stage re-runs iff its
-    manifest is missing or carries a different fingerprint.
+    manifest is missing or carries a different fingerprint. The
+    manifest records the stage's schema, and the stage is read back
+    with it, so a reuse starts no inference job; a manifest without
+    one counts as missing (stages are a cache, recomputed, not read
+    by inference).
     """
 
     def __init__(self, spark: SparkSession, base_dir: str):
@@ -72,13 +77,13 @@ class StageCheckpointer:
     def stage(self, name: str, df: DataFrame, fingerprint: str) -> DataFrame:
         data_dir, manifest_path = self._paths(name)
         m = fs_read_json(self.spark, manifest_path)
-        if m is not None and m.get("fingerprint") == fingerprint:
+        if m is not None and m.get("fingerprint") == fingerprint and "schema" in m:
             self.reused.append(name)
-            return self.spark.read.parquet(data_dir)
-        df.write.mode("overwrite").parquet(data_dir)
-        # manifest written only after a successful data commit
-        fs_write_json(
-            self.spark, manifest_path, {"name": name, "fingerprint": fingerprint}
-        )
-        self.computed.append(name)
-        return self.spark.read.parquet(data_dir)
+        else:
+            df.write.mode("overwrite").parquet(data_dir)
+            # manifest written only after a successful data commit
+            m = {"name": name, "fingerprint": fingerprint, "schema": df.schema.json()}
+            fs_write_json(self.spark, manifest_path, m)
+            self.computed.append(name)
+        schema = StructType.fromJson(json.loads(m["schema"]))
+        return self.spark.read.schema(schema).parquet(data_dir)

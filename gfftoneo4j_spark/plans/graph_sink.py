@@ -10,8 +10,11 @@ edges; Neo4JUtils.scala:30-48 stringifies properties and enforces
   partitioned by ``type`` (6 predicates) — per-label / per-predicate
   reads prune to one partition directory at any scale.
 - `create unique` (K2) = ``dropDuplicates`` on the natural key at
-  the write, not a server-side constraint. Each dedup runs on the
-  write's own exchange, so it adds no shuffle.
+  the write, not a server-side constraint. As in the reference, where
+  the store applies it at write time, the sink is the one place nodes
+  are made unique: ``build_kg`` hands over one node row per
+  occurrence. Each dedup runs on the write's own exchange, so it adds
+  no shuffle.
 - Each table is range-partitioned on its key (nodes on ``node_id``,
   edges on (type, src)) and sorted within each file, so every file
   holds a contiguous sorted key range and files in one directory never
@@ -24,6 +27,10 @@ edges; Neo4JUtils.scala:30-48 stringifies properties and enforces
   hdfs:// and s3a:// paths, not only driver-local ones). A torn run
   never looks complete; Iceberg's ``writeTo(...).append()`` is the
   drop-in upgrade when that runtime is on the cluster.
+- As in Iceberg's commit metadata, each commit's manifest records its
+  tables' schemas, and every reader reads with them: no schema
+  inference job per table, and an empty graph (directories holding
+  only ``_SUCCESS``) reads back with its columns.
 - ``triples`` is a pure column-rename of ``edges`` — at 10^12 edges
   materializing it twice would double the largest table for zero new
   information, so readers get it as a projection (``read_graph``).
@@ -33,17 +40,25 @@ edges; Neo4JUtils.scala:30-48 stringifies properties and enforces
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from gfftoneo4j_spark.plans.checkpoint import _fs, fs_read_json, fs_write_json
 
 GRAPH_MANIFEST = "_GRAPH_MANIFEST.json"
 
 
-def _write_tables(nodes: DataFrame, edges: DataFrame, path: str, mode: str) -> None:
+def _write_tables(nodes: DataFrame, edges: DataFrame, path: str, mode: str) -> dict:
     """K2 `create unique`: each table unique by natural key at the sink
-    boundary, written range-partitioned and key-sorted.
+    boundary, written range-partitioned and key-sorted. This is the
+    graph's only node dedup. Returns each table's ``StructType.json()``
+    for the commit's manifest, columns in the order a partitioned read
+    gives them: data columns, then ``label`` or ``type``. A table with
+    no rows leaves only ``_SUCCESS``, and its recorded schema is what
+    reads it back.
 
     Nodes are range-partitioned on ``node_id`` and edges on (type, src),
     and each task sorts its rows by (label, node_id) or (type, src,
@@ -82,34 +97,28 @@ def _write_tables(nodes: DataFrame, edges: DataFrame, path: str, mode: str) -> N
         .dropDuplicates(["src", "dst", "type"])
         .sortWithinPartitions("type", "src", "dst")
     )
-    spark = nodes.sparkSession
+    schemas = {}
     for name, df, part in (("nodes", nodes, "label"), ("edges", edges, "type")):
-        target = f"{path}/{name}"
-        df.write.mode(mode).partitionBy(part).parquet(target)
-        if not _has_data_file(spark, target):
-            # a partitioned write of no rows leaves no file to infer the
-            # schema from; one empty file, columns in the order a
-            # partitioned read gives them, lets the table read back
-            cols = [c for c in df.columns if c != part] + [part]
-            spark.createDataFrame([], df.select(*cols).schema).write.mode(
-                "append"
-            ).parquet(target)
+        df.write.mode(mode).partitionBy(part).parquet(f"{path}/{name}")
+        cols = [c for c in df.columns if c != part] + [part]
+        schemas[name] = df.select(*cols).schema.json()
+    return schemas
 
 
-def _has_data_file(spark: SparkSession, path: str) -> bool:
-    fs, root = _fs(spark, path)
-    files = fs.listFiles(root, True)
-    while files.hasNext():
-        if not files.next().getPath().getName().startswith(("_", ".")):
-            return True
-    return False
+def _read_tables(spark: SparkSession, path: str, schemas: dict | None) -> GraphTables:
+    """Read a committed graph's tables with the schemas its manifest
+    records: no inference job, and a table with no rows (a directory
+    holding only ``_SUCCESS``) reads back empty with its columns. A
+    manifest committed before schemas were recorded has none; only
+    those graphs are read by inference."""
 
+    def read(name: str) -> DataFrame:
+        reader = spark.read
+        if schemas is not None:
+            reader = reader.schema(StructType.fromJson(json.loads(schemas[name])))
+        return reader.parquet(f"{path}/{name}")
 
-def _read_tables(spark: SparkSession, path: str) -> GraphTables:
-    return GraphTables(
-        nodes=spark.read.parquet(f"{path}/nodes"),
-        edges=spark.read.parquet(f"{path}/edges"),
-    )
+    return GraphTables(nodes=read("nodes"), edges=read("edges"))
 
 
 def write_graph(
@@ -120,7 +129,7 @@ def write_graph(
 ) -> dict:
     """Write ``{path}/nodes`` (partitioned by label) and ``{path}/edges``
     (partitioned by type), dedup-on-write, manifest-last. Returns the
-    manifest dict."""
+    manifest dict: the fingerprint and each table's schema."""
     path = path.rstrip("/")
     spark = nodes.sparkSession
     # Rewrite atomicity: the manifest lives OUTSIDE the table dirs, so
@@ -132,8 +141,8 @@ def write_graph(
     fs, mpath = _fs(spark, f"{path}/{GRAPH_MANIFEST}")
     if fs.exists(mpath):
         fs.delete(mpath, False)
-    _write_tables(nodes, edges, path, "overwrite")
-    manifest = {"fingerprint": fingerprint, "tables": ["nodes", "edges"]}
+    schemas = _write_tables(nodes, edges, path, "overwrite")
+    manifest = {"fingerprint": fingerprint, "schemas": schemas}
     fs_write_json(spark, f"{path}/{GRAPH_MANIFEST}", manifest)
     return manifest
 
@@ -199,7 +208,7 @@ def read_graph(spark: SparkSession, path: str) -> GraphTables:
         raise FileNotFoundError(
             f"{path} has no {GRAPH_MANIFEST}: graph write never completed"
         )
-    return _read_tables(spark, path)
+    return _read_tables(spark, path, m.get("schemas"))
 
 
 # ---------------------------------------------------------------------------
@@ -241,6 +250,18 @@ def _write_manifest_atomic(spark: SparkSession, path: str, obj: dict) -> None:
         fs2.rename(tpath, final)
 
 
+def _version_dirs(spark: SparkSession, path: str) -> dict:
+    """{N: Hadoop Path} of every ``v<N>`` directory under ``path``: the
+    committed snapshots and any a torn write left behind."""
+    fs, root = _fs(spark, path)
+    found = {}
+    for st in fs.listStatus(root) if fs.exists(root) else []:
+        name = st.getPath().getName()
+        if name.startswith("v") and name[1:].isdigit():
+            found[int(name[1:])] = st.getPath()
+    return found
+
+
 def _snapshots(spark: SparkSession, path: str) -> dict:
     m = fs_read_json(spark, f"{path.rstrip('/')}/{SNAPSHOT_MANIFEST}")
     return m or {"current": None, "versions": {}}
@@ -267,19 +288,13 @@ def write_graph_snapshot(
     path = path.rstrip("/")
     spark = nodes.sparkSession
     man = _snapshots(spark, path)
-    used = {int(v) for v in man["versions"]}
-    fs, root = _fs(spark, path)
-    if fs.exists(root):
-        for st in fs.listStatus(root):
-            name = st.getPath().getName()
-            if name.startswith("v") and name[1:].isdigit():
-                used.add(int(name[1:]))
+    used = {int(v) for v in man["versions"]} | set(_version_dirs(spark, path))
     version = (max(used) + 1) if used else 1
-    _write_tables(nodes, edges, f"{path}/v{version}", "errorifexists")
-    man["versions"][str(version)] = {"fingerprint": fingerprint}
+    schemas = _write_tables(nodes, edges, f"{path}/v{version}", "errorifexists")
+    man["versions"][str(version)] = {"fingerprint": fingerprint, "schemas": schemas}
     man["current"] = version
     _write_manifest_atomic(spark, f"{path}/{SNAPSHOT_MANIFEST}", man)
-    return {"version": version, **man["versions"][str(version)]}
+    return {"version": version, "fingerprint": fingerprint}
 
 
 def read_graph_snapshot(
@@ -294,7 +309,7 @@ def read_graph_snapshot(
             f"{path}: no committed snapshot v{v} (committed: "
             f"{sorted(man['versions'])})"
         )
-    return _read_tables(spark, f"{path}/v{v}")
+    return _read_tables(spark, f"{path}/v{v}", man["versions"][str(v)].get("schemas"))
 
 
 def rollback_graph(spark: SparkSession, path: str, version: int) -> dict:
@@ -323,30 +338,21 @@ def expire_graph_snapshots(
     # the WHOLE list, the exact opposite of the request
     newest = set(committed[-keep:]) if keep > 0 else set()
     keep_set = newest | ({man["current"]} - {None})
-    fs, root = _fs(spark, path)
-    deleted: list[int] = []
-    on_disk: set[int] = set()
-    if fs.exists(root):
-        for st in fs.listStatus(root):
-            name = st.getPath().getName()
-            if not (name.startswith("v") and name[1:].isdigit()):
-                continue
-            v = int(name[1:])
-            if v in keep_set:
-                on_disk.add(v)
-                continue
-            fs.delete(st.getPath(), True)
-            deleted.append(v)
-            man["versions"].pop(str(v), None)
+    fs, _ = _fs(spark, path)
+    dirs = _version_dirs(spark, path)
+    deleted = sorted(set(dirs) - keep_set)
+    for v in deleted:
+        fs.delete(dirs[v], True)
+        man["versions"].pop(str(v), None)
     # prune manifest entries whose v-dirs are already gone from disk
     # (e.g. removed out-of-band): a dangling entry would advertise a
     # time-travel target that can only raise on read. Never prune
     # current — a missing current dir is corruption worth surfacing.
     for v in committed:
-        if v not in on_disk and v != man["current"] and str(v) in man["versions"]:
+        if v not in dirs and v != man["current"]:
             man["versions"].pop(str(v), None)
     _write_manifest_atomic(spark, f"{path}/{SNAPSHOT_MANIFEST}", man)
-    return sorted(deleted)
+    return deleted
 
 
 def diff_snapshots(

@@ -33,6 +33,11 @@ Scale notes (100 TB / 10^12 turns):
   Those blocks are executor-local: a lost executor fails the job instead
   of recomputing; resumable runs pass a `StageCheckpointer`. `edges`,
   the largest table, stays lazy: storing it bought nothing.
+- Nodes take no exchange of their own in the build: the conversation
+  and entity nodes are each a ``distinct`` (one exchange on conv_id,
+  one on canonical_id), turn and mention nodes are projections, and
+  the union is made unique by ``node_id`` on the graph sink's range
+  exchange, the only exchange on node_id.
 - Node ids are deterministic strings (content-addressed), so re-runs
   and resumed runs produce identical graphs — unlike the reference's
   server-assigned Neo4j ids (Neo4JUtils.scala:38).
@@ -125,6 +130,16 @@ class StrictModeViolation(ValueError):
 
 @dataclass
 class KGResult:
+    """The build's outputs, all lazy. ``edges`` (and ``triples``) hold
+    each edge once: their keys are deduped inside the window passes.
+    ``nodes`` holds one row per node occurrence: an id repeats only
+    when the input repeats a turn key (a replayed turn and its
+    mentions). Every writer of the graph (``graph_sink``'s
+    ``write_graph``, ``write_graph_snapshot`` and
+    ``write_bucketed_graph``) makes nodes unique by ``node_id`` on its
+    own exchange: the sink is where `create unique` happens, as the
+    graph store applies it in the reference (Neo4JUtils.scala:42-43)."""
+
     turns: DataFrame
     nodes: DataFrame
     edges: DataFrame
@@ -182,8 +197,11 @@ def _keyed_chain(df: DataFrame, keys: list[str], segment_rows: int | None):
     build the SAME turn_id string, so the survivor of the lag()-dedup
     and every lead() target are invariant to tie order — carrying ts
     as a tie-break would add 8 bytes x 10^12 rows to the pipeline's
-    largest exchange for zero semantic effect (the oracle agrees: its
-    (turn_idx, ts) sort yields key-identical survivors).
+    largest exchange for zero semantic effect. The oracle applies the
+    same rule: it keeps the first row of each repeated key after its
+    (turn_idx, ts) sort and counts the repeats in lineage
+    (``duplicate_turn_key``, ``duplicate_mention_key``). Which of two
+    repeats with DIFFERENT text survives is left open by both.
 
     Without ``segment_rows`` the lead() window has the lag() window's
     spec over the same partitioning: Catalyst reuses the exchange and
@@ -412,7 +430,7 @@ def build_kg(
     nodes = reduce(
         lambda a, b: a.unionByName(b),
         [conv_nodes, turn_nodes, mention_nodes, entity_nodes],
-    ).dropDuplicates(["node_id"])
+    )
 
     # --- lineage + metrics (Writer analogue, kept not discarded: Q6) -----
     lineage = union_lineage(

@@ -15,9 +15,12 @@ knob is chosen for a multi-executor cluster and merely *tested* on
 - Every Parquet file the engine writes is zstd-compressed with v2 data
   pages, decided here and nowhere else: the graph sink, stage
   checkpoints, lineage/metrics and analytics outputs all inherit it.
-  ``kg_build`` writes 0.89 bytes per input byte instead of 1.92 with
-  snappy v1 pages; v2 prefix-codes the string ids (DELTA_BYTE_ARRAY).
-  Spark, pyarrow and DuckDB read the files back.
+  ``kg_build`` writes 0.31 bytes per input byte with the graph sink's
+  key-sorted files (``plans/graph_sink.py``). The encoding alone was
+  measured on the hash-spread files the sink wrote before: 0.89 bytes
+  per input byte instead of 1.92 with snappy v1 pages; v2 prefix-codes
+  the string ids (DELTA_BYTE_ARRAY). Spark, pyarrow and DuckDB read
+  the files back.
 - Generated classes are reused across ops. A cold build + writes
   compiles ~150 classes, and Spark's cache is 4 LRU segments of a
   quarter of ``spark.sql.codegen.cache.maxEntries`` each: at its

@@ -14,7 +14,12 @@ import pyarrow.parquet as pq
 import pytest
 
 from gfftoneo4j_spark.corpus import CorpusConfig, make_alias_dict, make_transcripts
-from gfftoneo4j_spark.plans.checkpoint import StageCheckpointer
+from gfftoneo4j_spark.plans.checkpoint import (
+    MANIFEST,
+    StageCheckpointer,
+    fs_read_json,
+    fs_write_json,
+)
 from gfftoneo4j_spark.plans.graph_sink import (
     GRAPH_MANIFEST,
     read_graph,
@@ -111,6 +116,26 @@ def test_fingerprint_change_invalidates(spark, dfs, tmp_path):
     ck = StageCheckpointer(spark, base)
     build_kg(spark, tdf, ddf, checkpointer=ck, fingerprint="v2")
     assert ck.reused == [] and ck.computed == ALL_STAGES
+
+
+def test_stage_manifest_without_schema_is_recomputed(spark, dfs, tmp_path):
+    """A stage manifest records the stage's schema, which the reuse
+    reads with; one without it (written before schemas were recorded)
+    counts as missing, and the stage is computed again."""
+    tdf, ddf = dfs
+    base = str(tmp_path / "ck")
+    ck = StageCheckpointer(spark, base)
+    build_kg(spark, tdf, ddf, checkpointer=ck, fingerprint="v1")
+    manifest = f"{base}/edges/{MANIFEST}"
+    m = fs_read_json(spark, manifest)
+    del m["schema"]
+    fs_write_json(spark, manifest, m)
+
+    ck = StageCheckpointer(spark, base)
+    res = build_kg(spark, tdf, ddf, checkpointer=ck, fingerprint="v1")
+    assert ck.computed == ["edges"] and ck.reused == ALL_STAGES[:-1]
+    assert "schema" in fs_read_json(spark, manifest)
+    assert len(_triples(res)) > 0
 
 
 def test_graph_sink_roundtrip(spark, dfs, tmp_path):
@@ -289,10 +314,46 @@ def test_graph_sink_files_are_key_sorted_ranges(spark, tmp_path, writer):
 def test_graph_sink_writes_an_empty_graph(spark, dfs, tmp_path, writer):
     tdf, ddf = dfs
     res = build_kg(spark, tdf, ddf)
-    _, g = _write_and_read(
+    root, g = _write_and_read(
         writer,
         res.nodes.where("false"),
         res.edges.where("false"),
         tmp_path / "g",
     )
     assert g.nodes.count() == 0 and g.edges.count() == 0
+    # the schemas live in the manifest: no placeholder data file
+    data_files = [
+        f
+        for table in ("nodes", "edges")
+        for f in (root / table).rglob("*")
+        if f.is_file() and not f.name.startswith(("_", "."))
+    ]
+    assert data_files == []
+
+
+def _without_schemas(obj):
+    """A manifest as committed before schemas were recorded."""
+    if isinstance(obj, dict):
+        return {k: _without_schemas(v) for k, v in obj.items() if k != "schemas"}
+    return obj
+
+
+@pytest.mark.parametrize("writer", [write_graph, write_graph_snapshot])
+def test_manifest_without_schemas_reads_by_inference(spark, dfs, tmp_path, writer):
+    """A graph whose manifest records no schemas (committed before they
+    were) still reads back, by inference, the same columns and rows."""
+    tdf, ddf = dfs
+    res = build_kg(spark, tdf, ddf)
+    path = tmp_path / "g"
+    _, declared = _write_and_read(writer, res.nodes, res.edges, path)
+    (manifest,) = path.glob("_*.json")
+    m = fs_read_json(spark, str(manifest))
+    assert _without_schemas(m) != m
+    fs_write_json(spark, str(manifest), _without_schemas(m))
+
+    read = read_graph if writer is write_graph else read_graph_snapshot
+    inferred = read(spark, str(path))
+    for table in ("nodes", "edges"):
+        want, got = getattr(declared, table), getattr(inferred, table)
+        assert got.columns == want.columns, table
+        assert sorted(got.collect()) == sorted(want.collect()), table

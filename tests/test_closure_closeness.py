@@ -41,6 +41,16 @@ def test_closure_depth_cap(spark):
     assert got.count() == 8  # the 5 direct + 3 dist-2 pairs
 
 
+def test_closure_frees_superseded_checkpoints(spark, registered_by):
+    """Each doubling round frees the relation it supersedes: what stays
+    is the last relation, which the answer reads (the parent left 5 on
+    a 40-node chain at max_depth=16, one per round)."""
+    chain = spark.range(1, 40).select(
+        F.col("id").alias("c"), (F.col("id") - 1).alias("p")
+    )
+    assert registered_by(lambda: ancestor_closure(chain, max_depth=16)) == 1
+
+
 def test_closure_matches_naive_chase(spark):
     """Doubling == per-level chase on a bigger deterministic forest."""
     n = 200

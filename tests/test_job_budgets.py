@@ -15,16 +15,28 @@ from gfftoneo4j_spark import oracle
 from gfftoneo4j_spark.corpus import CorpusConfig, make_alias_dict, make_transcripts
 from gfftoneo4j_spark.operators import graph as G
 from gfftoneo4j_spark.operators.connected_components import connected_components
-from gfftoneo4j_spark.plans.graph_sink import read_graph, write_graph
+from gfftoneo4j_spark.plans.checkpoint import StageCheckpointer
+from gfftoneo4j_spark.plans.graph_sink import (
+    read_graph,
+    read_graph_snapshot,
+    write_graph,
+    write_graph_snapshot,
+)
 from gfftoneo4j_spark.plans.pipeline import build_kg
 from gfftoneo4j_spark.sources.transcripts import ALIAS_DICT_SCHEMA, TRANSCRIPT_SCHEMA
 
 # write_graph of a default build; 2 of its jobs sample the range bounds
-# that nodes and edges are partitioned on, one per table
-WRITE_JOBS = 11
+# that nodes and edges are partitioned on, one per table. 10, not 11:
+# the sink is the only node dedup, so the nodes write plans one exchange
+# on node_id instead of the build's hash dedup plus the sink's range
+WRITE_JOBS = 10
 LINEAGE_JOBS = 10  # then its lineage to parquet
 METRICS_JOBS = 5  # then its metrics to parquet
-READ_JOBS = 2  # read_graph: parquet schema inference
+# read_graph and read_graph_snapshot: 0, not 2, as the manifest records
+# each table's schema and nothing is inferred; a StageCheckpointer reuse
+# reads with the schema in its stage manifest, also 0
+READ_JOBS = 0
+STAGE_REUSE_JOBS = 0
 LOOKUP_JOBS = 4  # one hot-entity lookup
 # graph loops on _budget_graph, each op run once and collected
 LOOP_JOBS = {
@@ -97,6 +109,21 @@ def test_write_read_and_lookup_job_budgets(spark, tmp_path):
     assert got == want
     assert (n_write, n_lineage, n_metrics) == (WRITE_JOBS, LINEAGE_JOBS, METRICS_JOBS)
     assert (n_read, n_lookup) == (READ_JOBS, LOOKUP_JOBS)
+
+
+def test_snapshot_read_and_stage_reuse_job_budgets(spark, tmp_path):
+    _, _, res = _budget_build(spark)
+    snapshots = str(tmp_path / "snapshots")
+    write_graph_snapshot(res.nodes, res.edges, snapshots)
+    _, n_read = _jobs(spark, "read", lambda: read_graph_snapshot(spark, snapshots))
+
+    stages = str(tmp_path / "stages")
+    StageCheckpointer(spark, stages).stage("edges", res.edges, "v1")
+    ck = StageCheckpointer(spark, stages)
+    _, n_reuse = _jobs(spark, "stage-reuse", lambda: ck.stage("edges", res.edges, "v1"))
+
+    assert ck.reused == ["edges"]
+    assert (n_read, n_reuse) == (READ_JOBS, STAGE_REUSE_JOBS)
 
 
 def test_repeated_build_compiles_no_new_classes(spark, tmp_path):

@@ -64,6 +64,11 @@ def _run_both(spark, turns, dict_rows, extraction="pandas"):
     return res, got_triples, want
 
 
+def _lineage_counts(res) -> dict:
+    by_reason = res.lineage.groupBy("reason").sum("n").collect()
+    return {r["reason"]: r["sum(n)"] for r in by_reason}
+
+
 @pytest.mark.parametrize("extraction", ["pandas", "sql"])
 def test_fixture_a_exact(spark, extraction):
     res, got, want = _run_both(spark, FIXTURE_A_TURNS, FIXTURE_A_DICT, extraction)
@@ -76,11 +81,30 @@ def test_fixture_a_exact(spark, extraction):
         for r in res.lineage.collect()
     }
     assert set(lin) == {"quarantine_empty_text", "unlinked_alias", "ambiguous_alias"}
-    lin_n = {
-        r["reason"]: r["n"]
-        for r in res.lineage.groupBy("reason").sum("n").withColumnRenamed("sum(n)", "n").collect()
+    assert _lineage_counts(res) == want["lineage"]
+
+
+def test_replayed_turn_keeps_one_copy_like_the_oracle(spark):
+    """A turn delivered twice, identical (a replayed event): the engine
+    keeps one copy of the repeated (conv_id, turn_idx) key and records
+    the repeat and its two linked mentions in lineage; the oracle
+    applies the same rule, so neither emits the self-loop next_turn or
+    the backward links edge the repeat would make."""
+    turns = [
+        _turn("c", 0, "start <<m:spark_a0>>"),
+        _turn("c", 1, "<<m:spark_a0>> then <<m:join_b0>> <<m:ghost_404>>"),
+        _turn("c", 1, "<<m:spark_a0>> then <<m:join_b0>> <<m:ghost_404>>"),
+        _turn("c", 2, "end"),
+    ]
+    res, got, want = _run_both(spark, turns, FIXTURE_A_DICT)
+    assert got == want["triples"]
+    assert ("turn:c:1", "next_turn", "turn:c:1") not in got
+    assert {(r["node_id"], r["label"]) for r in res.nodes.collect()} == want["nodes"]
+    assert _lineage_counts(res) == want["lineage"] == {
+        "duplicate_turn_key": 1,
+        "duplicate_mention_key": 2,
+        "unlinked_alias": 2,
     }
-    assert lin_n == want["lineage"]
 
 
 def test_fixture_a_canonicalization(spark):

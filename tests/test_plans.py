@@ -138,12 +138,10 @@ def test_default_build_extracts_once(spark, tmp_path):
     assert per_part.agg(F.sum("value")).first()[0] == len(want["triples"])
 
 
-@pytest.mark.parametrize("writer", [write_graph, write_graph_snapshot])
-def test_sink_edge_dedup_rides_the_write_spread(spark, tmp_path, monkeypatch, writer):
-    """Each sink table has exactly one exchange: the range partitioning
-    that spreads the write (nodes on node_id, edges on (type, src)).
-    The `create unique` dedup rides it; neither table gains a hash
-    exchange of its own on (src), (src, dst, type) or (node_id)."""
+def _record_write_plans(monkeypatch) -> dict[str, str]:
+    """Record the plan of every ``DataFrameWriter.parquet`` write, keyed
+    by the last component of its path (``nodes`` / ``edges`` for the
+    graph sink)."""
     plans = {}
     parquet = DataFrameWriter.parquet
 
@@ -152,6 +150,16 @@ def test_sink_edge_dedup_rides_the_write_spread(spark, tmp_path, monkeypatch, wr
         return parquet(self, path, *args, **kwargs)
 
     monkeypatch.setattr(DataFrameWriter, "parquet", recording)
+    return plans
+
+
+@pytest.mark.parametrize("writer", [write_graph, write_graph_snapshot])
+def test_sink_edge_dedup_rides_the_write_spread(spark, tmp_path, monkeypatch, writer):
+    """Each sink table has exactly one exchange: the range partitioning
+    that spreads the write (nodes on node_id, edges on (type, src)).
+    The `create unique` dedup rides it; neither table gains a hash
+    exchange of its own on (src), (src, dst, type) or (node_id)."""
+    plans = _record_write_plans(monkeypatch)
     nodes = spark.createDataFrame(
         [("m", "mention")] * 2, "node_id string, label string"
     )
@@ -173,6 +181,23 @@ def test_sink_edge_dedup_rides_the_write_spread(spark, tmp_path, monkeypatch, wr
         r"rangepartitioning\(type#\d+ ASC NULLS FIRST, src#\d+ ASC NULLS FIRST, \d+\)",
         exchanges["edges"][0],
     )
+
+
+def test_build_nodes_are_made_unique_once_at_the_sink(spark, tmp_path, monkeypatch):
+    """`create unique` for nodes happens once, in the sink: a default
+    build's nodes write holds exactly one exchange keyed on node_id,
+    the sink's range partitioning. (When ``build_kg`` also deduped its
+    nodes, a hashpartitioning(node_id) and two more sorts came first.)"""
+    cfg = CorpusConfig(n_conversations=30, n_entities=15, seed=11)
+    res = build_kg(
+        spark,
+        spark.createDataFrame(make_transcripts(cfg), TRANSCRIPT_SCHEMA),
+        spark.createDataFrame(make_alias_dict(cfg), ALIAS_DICT_SCHEMA),
+    )
+    plans = _record_write_plans(monkeypatch)
+    write_graph(res.nodes, res.edges, str(tmp_path / "graph"))
+    keyed = re.findall(r"Exchange (\w+partitioning)\(node_id#", plans["nodes"])
+    assert keyed == ["rangepartitioning"], keyed
 
 
 def test_scan_filter_pushdown(spark, sf_dir):

@@ -130,3 +130,15 @@ def test_temporal_matches_bruteforce_enumeration(spark):
         .collect()
     }
     assert got == expect
+
+
+def test_temporal_frees_superseded_checkpoints(spark, registered_by):
+    """Each round frees the state and frontier it supersedes, and the
+    edge snapshot and last frontier go at the end: what stays is the
+    final state, which the answer reads (the parent left 10 at
+    rounds=4: the snapshot, the seed state and two per round)."""
+    triples = [(i, (i * 5 + 1) % 12, (i * 7) % 23 + 1) for i in range(12)] + [
+        (i, (i + 1) % 12, i + 2) for i in range(12)
+    ]
+    e, seeds = _edges(spark, triples), _seeds(spark, [0, 6])
+    assert registered_by(lambda: temporal_earliest_arrival(e, seeds, rounds=4)) == 1

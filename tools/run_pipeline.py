@@ -61,7 +61,12 @@ def main(argv: list[str] | None = None) -> None:
     args = p.parse_args(argv)
 
     from gfftoneo4j_spark.plans.checkpoint import StageCheckpointer
-    from gfftoneo4j_spark.plans.graph_sink import write_graph, write_graph_snapshot
+    from gfftoneo4j_spark.plans.graph_sink import (
+        read_graph,
+        read_graph_snapshot,
+        write_graph,
+        write_graph_snapshot,
+    )
     from gfftoneo4j_spark.plans.incremental_build import build_kg_incremental
     from gfftoneo4j_spark.plans.pipeline import build_kg
     from gfftoneo4j_spark.session import get_spark
@@ -116,13 +121,16 @@ def main(argv: list[str] | None = None) -> None:
     if args.lineage_out and res is not None:
         res.lineage.write.mode("overwrite").parquet(f"{args.lineage_out}/lineage")
         res.metrics.write.mode("overwrite").parquet(f"{args.lineage_out}/metrics")
-    tables = args.out if version is None else f"{args.out}/v{version}"
+    if version is None:
+        graph = read_graph(spark, args.out)
+    else:
+        graph = read_graph_snapshot(spark, args.out, version)
     summary = {
         "out": args.out,
         "mode": args.mode,
         "version": version,
-        "n_nodes": spark.read.parquet(f"{tables}/nodes").count(),
-        "n_edges": spark.read.parquet(f"{tables}/edges").count(),
+        "n_nodes": graph.nodes.count(),
+        "n_edges": graph.edges.count(),
         "stages_reused": ck.reused if ck else [],
         "stages_computed": ck.computed if ck else [],
         "wall_sec": round(time.time() - t0, 2),
