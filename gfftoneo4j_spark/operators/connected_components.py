@@ -130,7 +130,8 @@ def connected_components(
     Adaptive execution, same spirit as Spark's broadcast-join threshold:
     an edge set under ``local_threshold`` is solved with driver-side
     union-find in one collect (the entity same-as graph is dictionary-
-    sized by design); anything larger runs the distributed
+    sized by design), and the edge snapshot is freed once collected;
+    anything larger runs the distributed
     large-star/small-star loop. Pass ``local_threshold=0`` to force the
     distributed path. Each distributed round localCheckpoints the
     shrinking edge set: truncates lineage and re-balances partitions.
@@ -155,6 +156,8 @@ def connected_components(
     if local_threshold > 0:
         head = cur.limit(local_threshold + 1).collect()
         if len(head) <= local_threshold:
+            # the answer is driver rows: nothing reads the snapshot again
+            _drop_checkpoint(cur)
             spark = edges.sparkSession
             out = sorted(_local_union_find([(r["u"], r["v"]) for r in head]))
             return spark.createDataFrame(out, "node string, component string")

@@ -30,12 +30,32 @@ shuffle; a shuffle_hash hint keeps the emission itself on the salted
 layout), ``intern_tokens`` (verify compares interned LONG ids, not
 strings — the per-pair hashing cost moves to one per-token join), and
 a recall-exact length prefilter ahead of the intersect.
+
+Each pair-generation decision is stated once, here: the salted pair
+join (``bucket_candidate_pairs``, which the blocked, banded and PPJoin
+prefix joins all call), the LSH banding rule (``lsh_bands``, whose rows
+incremental LSH persists), the MinHash configuration (``MINHASH_K``,
+``LSH_BANDS``, ``LSH_THRESHOLD``) and salt width (``SALT``), and the
+exact-Jaccard verifier (``verify_jaccard_candidates``).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+# The MinHash+LSH configuration every caller and the DuckDB twins share:
+# MINHASH_K permutations, banded into LSH_BANDS bands of
+# MINHASH_K // LSH_BANDS rows, pairs verified at Jaccard >= LSH_THRESHOLD.
+# Batch and incremental LSH read the same constants, so incremental ==
+# rebuild cannot drift through a configuration mismatch.
+MINHASH_K = 8
+LSH_BANDS = 4
+LSH_THRESHOLD = 0.8
+# salt width of every salted pair join (bucket_candidate_pairs and the
+# incremental probe): one hot bucket's quadratic emission spreads over
+# this many tasks
+SALT = 16
 
 
 def exact_duplicates(df: DataFrame, key_cols: list[str], id_col: str) -> DataFrame:
@@ -51,24 +71,13 @@ def exact_duplicates(df: DataFrame, key_cols: list[str], id_col: str) -> DataFra
     )
 
 
-def tokens(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    extra: dict[str, str] | None = None,
-) -> DataFrame:
-    """Distinct (id[, extra...], token) rows, whitespace tokenization.
-
-    ``extra`` maps source column -> output alias for columns carried
-    through the explode (blocking keys, language) — the single
+def tokens(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Distinct (id, token) rows, whitespace tokenization — the single
     tokenizer every Jaccard/MinHash/SimHash entry point shares, so the
     tokenization rule can't drift between them."""
-    cols = [F.col(id_col).alias("id")] + [
-        F.col(src).alias(dst) for src, dst in (extra or {}).items()
-    ]
     return (
         df.select(
-            *cols,
+            F.col(id_col).alias("id"),
             F.explode(F.split(F.col(text_col), " ")).alias("token"),
         )
         .where(F.col("token") != "")
@@ -116,7 +125,6 @@ def shingles(
 def bucket_candidate_pairs(
     keyed: DataFrame,
     key_cols: list[str],
-    salt: int = 16,
     carry: list[str] | None = None,
     pair_filter=None,
     unique: bool = False,
@@ -131,8 +139,8 @@ def bucket_candidate_pairs(
     (guide §2.5):
 
     - the left side carries a deterministic salt (pmod(xxhash64(id)))
-      and the right side is replicated ``salt`` ways, so ONE hot
-      bucket's quadratic pair emission spreads over ``salt`` tasks
+      and the right side is replicated ``SALT`` ways, so ONE hot
+      bucket's quadratic pair emission spreads over ``SALT`` tasks
       instead of serializing in one (AQE skew-join can't see this
       skew: the bucket rows are tiny in bytes, only the join OUTPUT
       explodes);
@@ -187,9 +195,9 @@ def bucket_candidate_pairs(
     spark = keyed.sparkSession
     carry = carry or []
     left = keyed.withColumn(
-        "_salt", F.pmod(F.xxhash64("id"), F.lit(salt)).cast("int")
+        "_salt", F.pmod(F.xxhash64("id"), F.lit(SALT)).cast("int")
     ).repartition(n_par, *key_cols, "_salt")
-    salts = spark.range(salt).select(F.col("id").cast("int").alias("_salt"))
+    salts = spark.range(SALT).select(F.col("id").cast("int").alias("_salt"))
     right = keyed.select(
         F.col("id").alias("id_b"),
         *key_cols,
@@ -215,7 +223,7 @@ def bucket_candidate_pairs(
     # chain ran in ONE task (153 s). The hint forces both sides onto
     # the pinned hash(key_cols, _salt) layout (left's REPARTITION_BY_NUM
     # is reused, AQE cannot coalesce it), so a hot bucket's quadratic
-    # emission genuinely spreads over the ``salt`` tasks.
+    # emission genuinely spreads over the ``SALT`` tasks.
     pairs = (
         left.hint("shuffle_hash")
         .join(right, [*key_cols, "_salt"])
@@ -227,16 +235,16 @@ def bucket_candidate_pairs(
     return pairs.repartition(n_par * 4, "id_a", "id_b").dropDuplicates()
 
 
-def intern_tokens(tok: DataFrame, n_buckets: int = 1024) -> DataFrame:
+def intern_tokens(tok: DataFrame) -> DataFrame:
     """(id, tid) — tokens replaced by injective LONG ids, exactly and
     deterministically (no hash-collision risk: equal tokens get equal
     tids, distinct tokens distinct tids, by construction).
 
     Two-phase, no global sort (the dense_ids discipline): bucket the
-    distinct vocabulary by pmod(xxhash64(token), n_buckets), rank
-    within each bucket (a per-bucket window over ~|vocab|/n_buckets
-    rows), and take tid = rank * n_buckets + bucket — injective across
-    buckets without materializing cumulative offsets. One vocab
+    distinct vocabulary by pmod(xxhash64(token), 1024), rank within
+    each bucket (a per-bucket window over ~|vocab|/1024 rows), and take
+    tid = rank * 1024 + bucket — injective across buckets without
+    materializing cumulative offsets. One vocab
     distinct + one |tok|-row equi-join on the token; both linear,
     the same shape as the prefix filter's document-frequency join.
 
@@ -246,6 +254,7 @@ def intern_tokens(tok: DataFrame, n_buckets: int = 1024) -> DataFrame:
     at sf0.1 (4.6 s vs 12.9 s for 13.8 M pairs) — the per-pair string
     hashing moves to a per-TOKEN join done once (guide §2.3: shuffle
     and probe narrower types)."""
+    n_buckets = 1024
     vocab = tok.select("token").distinct().withColumn(
         "bucket", F.pmod(F.xxhash64("token"), F.lit(n_buckets)).cast("int")
     )
@@ -361,16 +370,15 @@ def ngram_jaccard_pairs(
     return verify_jaccard_candidates(cand, tok, threshold)
 
 
-def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, k: int = 8
-) -> DataFrame:
-    """k-permutation MinHash: sig_i = min over tokens of md5('<i>:'+tok).
-    One groupBy with k min-aggregates — a single shuffle, map-side
-    combinable, portable to any engine with md5."""
+def minhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """MINHASH_K-permutation MinHash: sig_i = min over tokens of
+    md5('<i>:'+tok). One groupBy with MINHASH_K min-aggregates — a
+    single shuffle, map-side combinable, portable to any engine with
+    md5."""
     tok = tokens(df, id_col, text_col)
     aggs = [
         F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("token")))).alias(f"sig_{i}")
-        for i in range(k)
+        for i in range(MINHASH_K)
     ]
     return tok.groupBy("id").agg(*aggs)
 
@@ -399,14 +407,33 @@ def _first_band_filter(arr_col: str, n_bands: int):
     return pred
 
 
-def lsh_candidate_pairs(
-    sigs: DataFrame, k: int = 8, bands: int = 4
-) -> DataFrame:
-    """Band the k signatures into ``bands`` groups of k/bands rows;
-    a pair is a candidate iff it collides in >=1 band. The self-join is
-    per band-hash bucket, never global. CONTRACT: ``sigs`` must carry
-    ONE row per id (minhash_signatures' groupBy guarantees it) —
-    exactly-once emission relies on it.
+def lsh_bands(sigs: DataFrame) -> DataFrame:
+    """(id, bhs, band, band_hash): one row per (doc, band), the LSH
+    banding rule in one place. Band b's hash is the md5 of its
+    MINHASH_K // LSH_BANDS signatures joined by '|'; ``bhs`` carries
+    the doc's whole band-hash array (for the minimal-band filter), and
+    one posexplode emits the per-band rows. Batch LSH joins on
+    (band, band_hash); incremental LSH persists (id, band, band_hash)
+    as its index."""
+    rows = MINHASH_K // LSH_BANDS
+    sig_cols = [f"sig_{i}" for i in range(MINHASH_K)]
+    bhs = F.array(
+        *[
+            F.md5(F.concat_ws("|", *sig_cols[b * rows : (b + 1) * rows]))
+            for b in range(LSH_BANDS)
+        ]
+    )
+    return sigs.select("id", bhs.alias("bhs")).select(
+        "id", "bhs", F.posexplode("bhs").alias("band", "band_hash")
+    )
+
+
+def lsh_candidate_pairs(sigs: DataFrame) -> DataFrame:
+    """A pair is a candidate iff it collides in >=1 band
+    (``lsh_bands``). The self-join is per band-hash bucket, never
+    global. CONTRACT: ``sigs`` must carry ONE row per id
+    (minhash_signatures' groupBy guarantees it) — exactly-once
+    emission relies on it.
 
     r06b minimal-band emission: a pair colliding in several bands used
     to be emitted once per band and deduped with a 30.6 M-row shuffle
@@ -415,51 +442,27 @@ def lsh_candidate_pairs(
     (no earlier band hash matches) — exactly-once by construction,
     identical pair set (>=1 colliding band still means >=1 emission,
     the minimal one), no dedup shuffle."""
-    rows_per_band = k // bands
-    band_hashes = [
-        F.md5(
-            F.concat_ws(
-                "|",
-                *[
-                    f"sig_{i}"
-                    for i in range(b * rows_per_band, (b + 1) * rows_per_band)
-                ],
-            )
-        )
-        for b in range(bands)
-    ]
-    banded = sigs.select("id", F.array(*band_hashes).alias("bhs")).select(
-        "id", "bhs", F.posexplode("bhs").alias("band", "band_hash")
-    )
     return bucket_candidate_pairs(
-        banded,
+        lsh_bands(sigs),
         ["band", "band_hash"],
         carry=["bhs"],
-        pair_filter=_first_band_filter("bhs", bands),
+        pair_filter=_first_band_filter("bhs", LSH_BANDS),
         unique=True,
     )
 
 
-def minhash_lsh_dedup(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 8,
-    bands: int = 4,
-    threshold: float = 0.8,
-) -> DataFrame:
+def minhash_lsh_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Full MinHash+LSH dedup: signatures -> banded candidate pairs ->
     exact-Jaccard verification of candidates only. The verify join
     touches candidate pairs, not the corpus-quadratic pair space —
     LSH's whole point. Returns (id_a, id_b, jaccard) with jaccard >=
-    threshold, rounded 3dp (oracle-portable)."""
-    sigs = minhash_signatures(df, id_col, text_col, k)
-    cand = lsh_candidate_pairs(sigs, k, bands)
+    LSH_THRESHOLD, rounded 3dp (oracle-portable)."""
+    cand = lsh_candidate_pairs(minhash_signatures(df, id_col, text_col))
     tok = tokens(df, id_col, text_col)
     # r06: array_intersect verify — two joins of |cand| small rows
     # against |docs| token-set arrays, instead of exploding
     # |cand| x |doc| token rows through two shuffles and a groupBy
-    return verify_jaccard_candidates(cand, tok, threshold)
+    return verify_jaccard_candidates(cand, tok, LSH_THRESHOLD)
 
 
 def simhash16(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -493,32 +496,30 @@ def simhash_near_dup_pairs(
     sigs: DataFrame,
     id_col: str = "id",
     sig_col: str = "simhash",
-    n_bands: int = 4,
-    band_bits: int = 4,
     hamming_max: int = 2,
 ) -> DataFrame:
     """Near-dup pairs from 16-bit SimHash signatures by banded Hamming
-    blocking: split each signature into ``n_bands`` nibbles; a pair is
-    a candidate iff >= 1 band matches exactly; verify with
+    blocking: split each signature into its 4 nibbles (bands); a pair
+    is a candidate iff >= 1 band matches exactly; verify with
     bit_count(xor) <= ``hamming_max``.
 
     Recall is EXACT, by pigeonhole: hamming_max differing bits can
-    touch at most hamming_max of the n_bands bands, so any pair within
-    the threshold has >= n_bands - hamming_max untouched bands and is
-    always a candidate (requires hamming_max < n_bands). The self-join
-    is per (band, nibble) bucket — 2^band_bits * n_bands buckets —
-    never corpus-global; the verify is a single JVM popcount on the
-    8-byte signatures, no token re-shuffle (contrast with MinHash's
-    exact-Jaccard verify, which re-joins tokens). Returns
+    touch at most hamming_max of the 4 bands, so any pair within the
+    threshold has >= 4 - hamming_max untouched bands and is always a
+    candidate (requires hamming_max < 4). The self-join is per
+    (band, nibble) bucket — 16 * 4 buckets — never corpus-global; the
+    verify is a single JVM popcount on the 8-byte signatures, no token
+    re-shuffle (contrast with MinHash's exact-Jaccard verify, which
+    re-joins tokens). Returns
     (id_a, id_b, hamming int) with id_a < id_b.
 
     CONTRACT: ``sigs`` must carry ONE row per id (simhash16's groupBy
     guarantees it) — exactly-once emission relies on it; duplicated
     signature rows would duplicate output pairs.
     """
+    n_bands = 4  # the 16-bit signature's nibbles
     if hamming_max >= n_bands:
         raise ValueError("pigeonhole recall needs hamming_max < n_bands")
-    mask = (1 << band_bits) - 1
     # r06b: minimal-band emission — each row carries the signature's
     # full nibble array; the join keeps a pair only at its FIRST
     # matching band (no earlier nibble equal), so every candidate is
@@ -528,9 +529,7 @@ def simhash_near_dup_pairs(
     # either — the whole operator is one salted self-join.
     nibs = F.array(
         *[
-            F.shiftright(F.col(sig_col), band_bits * j).bitwiseAND(
-                F.lit(mask)
-            )
+            F.shiftright(F.col(sig_col), 4 * j).bitwiseAND(F.lit(15))
             for j in range(n_bands)
         ]
     )
@@ -780,12 +779,14 @@ def prefix_filter_jaccard(
     pfx = ranked.where(
         F.col("rn") <= F.col("n") - F.ceil(F.lit(threshold) * F.col("n")) + 1
     ).select("id", "token", "rn", "n")
-    # r06: salted/pinned prefix self-join (same parallelism fix as
-    # bucket_candidate_pairs — a stop-word-ish prefix token under
-    # near-dup-dense skew can no longer serialize its quadratic
-    # emission into one task) PLUS the PPJoin length and positional
-    # filters evaluated INSIDE the join, before the dedup shuffle.
-    # Both are provably recall-exact (Xiao et al., PPJoin):
+    # Candidates: the salted, pinned pair join of every blocked dedup
+    # (bucket_candidate_pairs — a stop-word-ish prefix token under
+    # near-dup-dense skew cannot serialize its quadratic emission into
+    # one task; its shuffle_hash hint keeps the 132 M-row raw emission
+    # at sf0.1 off the bimodal 5 s / 19 s broadcast plan), with the
+    # PPJoin length and positional filters evaluated INSIDE the join,
+    # before the dedup shuffle. Both are provably recall-exact (Xiao et
+    # al., PPJoin):
     # - length: J >= t forces min(n_a, n_b) >= t * max(n_a, n_b);
     # - positional: common tokens all sit at ranks >= the FIRST shared
     #   token's rank on BOTH sides (one global token order), so
@@ -794,46 +795,19 @@ def prefix_filter_jaccard(
     #   that bound >= minoverlap = t/(1+t) * (n_a + n_b).
     # The 1e-9 slack only WIDENS candidates at float boundaries —
     # verification stays exact, so the output is unchanged.
-    n_par = pfx.sparkSession.sparkContext.defaultParallelism
-    salt = 16
     eps = 1e-9
-    left = pfx.withColumn(
-        "_salt", F.pmod(F.xxhash64("id"), F.lit(salt)).cast("int")
-    ).repartition(n_par, "token", "_salt")
-    salts = pfx.sparkSession.range(salt).select(
-        F.col("id").cast("int").alias("_salt")
-    )
-    right = pfx.select(
-        F.col("id").alias("id_b"),
-        "token",
-        F.col("rn").alias("rn_b"),
-        F.col("n").alias("n_b"),
-    ).crossJoin(salts)
-    len_ok = (
-        F.least("n", "n_b") + F.lit(eps)
-        >= F.lit(threshold) * F.greatest("n", "n_b")
-    )
-    pos_ok = (
-        1
-        + F.least(F.col("n") - F.col("rn"), F.col("n_b") - F.col("rn_b"))
-        + F.lit(eps)
-        >= F.lit(threshold / (1.0 + threshold))
-        * (F.col("n") + F.col("n_b"))
-    )
-    cand = (
-        # SHUFFLE_HASH, build = the unreplicated left (same reasoning
-        # as bucket_candidate_pairs): letting Spark broadcast the
-        # near-threshold prefix table serializes the 132 M-row raw
-        # emission into the streaming side's AQE-coalesced partitioning
-        # — measured bimodal 5 s / 19 s walls depending on which way
-        # the size estimate fell; the hint pins the emission onto the
-        # hash(token, _salt) layout every run.
-        left.hint("shuffle_hash")
-        .join(right, ["token", "_salt"])
-        .where((F.col("id") < F.col("id_b")) & len_ok & pos_ok)
-        .select(F.col("id").alias("id_a"), "id_b")
-        .repartition(n_par * 4, "id_a", "id_b")
-        .dropDuplicates()
+
+    def ppjoin_ok(a, b):
+        na, nb = a("n"), b("n")
+        len_ok = F.least(na, nb) + F.lit(eps) >= F.lit(threshold) * F.greatest(na, nb)
+        pos_ok = (
+            1 + F.least(na - a("rn"), nb - b("rn")) + F.lit(eps)
+            >= F.lit(threshold / (1.0 + threshold)) * (na + nb)
+        )
+        return len_ok & pos_ok
+
+    cand = bucket_candidate_pairs(
+        pfx, ["token"], carry=["rn", "n"], pair_filter=ppjoin_ok
     )
     # r06: array_intersect verify (raw-jaccard filter then 6 dp round,
     # the PPJoin output contract) — see verify_jaccard_candidates

@@ -12,16 +12,20 @@ parquet state, so each new batch:
    (band, band_hash) — the same bucketed-never-all-pairs shape as the
    batch LSH),
 3. exact-Jaccard-verifies the candidates against the stored token
-   index (semi-join-pruned to candidate ids), and
-4. appends its own band + token rows to the state.
+   index (``verify_jaccard_candidates``, the batch family's verifier),
+   and
+4. appends its own band + token rows to the state, then frees its
+   staged copies of them.
 
-Because MinHash signatures are content-addressed (min of
-md5('<i>:'+token) — operators/dedup.py:148), the band rows a document
-produces are a pure function of its text: the union of per-batch
-passes finds EXACTLY the pair set the full-corpus rebuild finds
-(pytest-pinned on a two-batch split, and the gated query's DuckDB
-oracle IS the full-corpus LSH SQL — incremental == rebuild is the
-correctness gate itself).
+Signatures (``minhash_signatures``: min of md5('<i>:'+token)), band
+rows (``lsh_bands``) and the MinHash configuration (``MINHASH_K``,
+``LSH_BANDS``, ``LSH_THRESHOLD``) all come from operators/dedup.py,
+the same code and constants the batch LSH runs. Signatures are
+content-addressed, so the band rows a document produces are a pure
+function of its text: the union of per-batch passes finds EXACTLY the
+pair set the full-corpus rebuild finds (pytest-pinned on a two-batch
+split, and the gated query's DuckDB oracle IS the full-corpus LSH
+SQL — incremental == rebuild is the correctness gate itself).
 
 State is append-only parquet; replayed appends (a crashed batch re-run)
 are absorbed by the read-side ``.distinct()`` — band and token rows are
@@ -38,45 +42,21 @@ Broder MinHash/LSH from the public formulas.
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gfftoneo4j_spark.operators.dedup import (
+    LSH_THRESHOLD,
+    SALT,
+    lsh_bands,
     minhash_signatures,
     tokens,
     verify_jaccard_candidates,
 )
+from gfftoneo4j_spark.operators.graph import _drop_checkpoint
 
 _BANDS_SUBDIR = "bands"
 _TOKENS_SUBDIR = "tokens"
-# salt width for the probe join (see lsh_index_append): spreads one hot
-# band bucket's pair emission over this many tasks
-_SALT = 16
-
-
-def band_rows(
-    sigs: DataFrame, k: int = 8, bands: int = 4
-) -> DataFrame:
-    """(id, band, band_hash) — the persistable LSH index rows, same
-    banding rule as operators/dedup.py lsh_candidate_pairs (k/bands
-    signatures concatenated then md5'd per band)."""
-    rows_per_band = k // bands
-    parts = []
-    for b in range(bands):
-        cols = [
-            f"sig_{i}"
-            for i in range(b * rows_per_band, (b + 1) * rows_per_band)
-        ]
-        parts.append(
-            sigs.select(
-                "id",
-                F.lit(b).alias("band"),
-                F.md5(F.concat_ws("|", *cols)).alias("band_hash"),
-            )
-        )
-    return reduce(lambda x, y: x.unionByName(y), parts)
 
 
 def _read_state(
@@ -92,29 +72,12 @@ def _read_state(
         return spark.createDataFrame([], schema)
 
 
-def verify_jaccard_pairs(
-    cand: DataFrame, tok: DataFrame, threshold: float
-) -> DataFrame:
-    """Exact token-set Jaccard for candidate (id_a, id_b) pairs against
-    a (id, token) table — the shared verify tail of batch and
-    incremental LSH (delegates to the r06 array_intersect verify in
-    operators/dedup.py: two candidate-list joins against per-doc
-    token-set arrays instead of exploding |cand| x |doc| token rows;
-    collect_set dedupes, so replayed/duplicated token rows cannot
-    inflate sizes). Returns (id_a, id_b, jaccard) at >= threshold,
-    3dp."""
-    return verify_jaccard_candidates(cand, tok, threshold)
-
-
 def lsh_index_append(
     spark: SparkSession,
     batch: DataFrame,
     state_dir: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-    k: int = 8,
-    bands: int = 4,
-    threshold: float = 0.8,
 ) -> DataFrame:
     """Process ONE new batch against the persisted LSH index: returns
     the verified near-dup pairs involving at least one new document
@@ -132,8 +95,10 @@ def lsh_index_append(
     bands_dir = f"{state_dir}/{_BANDS_SUBDIR}"
     tokens_dir = f"{state_dir}/{_TOKENS_SUBDIR}"
 
-    sigs = minhash_signatures(batch, id_col, text_col, k)
-    new_bands = band_rows(sigs, k, bands).localCheckpoint(eager=True)
+    sigs = minhash_signatures(batch, id_col, text_col)
+    new_bands = (
+        lsh_bands(sigs).select("id", "band", "band_hash").localCheckpoint(eager=True)
+    )
     new_tokens = tokens(batch, id_col, text_col).localCheckpoint(
         eager=True
     )
@@ -151,14 +116,14 @@ def lsh_index_append(
     # candidates: new rows probe everything (history + this batch);
     # the join key is the band bucket — never a corpus self-join.
     # r06 (guide §2.5): the history side carries a deterministic salt
-    # and the (smaller) probing batch replicates ``_SALT`` ways, so a
-    # hot band bucket's quadratic emission spreads over _SALT tasks;
+    # and the (smaller) probing batch replicates ``SALT`` ways, so a
+    # hot band bucket's quadratic emission spreads over SALT tasks;
     # join input and pair stream are pinned to core-derived partition
     # counts because AQE sizes partitions from the KB-scale
     # pre-explosion map outputs (measured: the whole probe+verify
     # chain coalesced onto one task at sf0.1).
     n_par = spark.sparkContext.defaultParallelism
-    salts = spark.range(_SALT).select(
+    salts = spark.range(SALT).select(
         F.col("id").cast("int").alias("_salt")
     )
     probe = new_bands.crossJoin(salts)
@@ -166,7 +131,7 @@ def lsh_index_append(
         F.col("id").alias("id_o"),
         "band",
         "band_hash",
-        F.pmod(F.xxhash64("id"), F.lit(_SALT)).cast("int").alias("_salt"),
+        F.pmod(F.xxhash64("id"), F.lit(SALT)).cast("int").alias("_salt"),
     ).repartition(n_par, "band", "band_hash", "_salt")
     cand = (
         # no shuffle_hash hint here, deliberately (contrast with the
@@ -189,10 +154,12 @@ def lsh_index_append(
     # itself, so replayed appends still can't inflate sizes (the same
     # guarantee the old union-distinct provided, one shuffle cheaper)
     all_tokens = old_tokens.unionByName(new_tokens)
-    out = verify_jaccard_pairs(cand, all_tokens, threshold).localCheckpoint(
-        eager=True
-    )
+    out = verify_jaccard_candidates(
+        cand, all_tokens, LSH_THRESHOLD
+    ).localCheckpoint(eager=True)
 
     new_bands.write.mode("append").parquet(bands_dir)
     new_tokens.write.mode("append").parquet(tokens_dir)
+    # the staged rows are in the state now; ``out`` is its own snapshot
+    _drop_checkpoint(new_bands, new_tokens)
     return out

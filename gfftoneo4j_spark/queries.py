@@ -1117,7 +1117,7 @@ def minhash_lsh_pairs(spark, sf_dir):
     dup-injected corpus so recall is checkable (every injected exact
     dup collides in all 4 bands and verifies at jaccard=1.0)."""
     corpus = _dup_corpus(spark, sf_dir)
-    return DD.minhash_lsh_dedup(corpus, "doc_id", "text", k=8, bands=4, threshold=0.8)
+    return DD.minhash_lsh_dedup(corpus, "doc_id", "text")
 
 
 # --------------------------------------------------------------------------
@@ -2264,9 +2264,7 @@ def near_dup_survivors(spark, sf_dir):
     tiny-vocabulary corpus, so this stays gate-only (sf0.01), like
     ngram_jaccard_banded."""
     corpus = _dup_corpus(spark, sf_dir)
-    pairs = DD.minhash_lsh_dedup(
-        corpus, "doc_id", "text", k=8, bands=4, threshold=0.8
-    )
+    pairs = DD.minhash_lsh_dedup(corpus, "doc_id", "text")
     edges = pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
     cc = connected_components(edges)
     return (
@@ -18483,7 +18481,8 @@ def edge_structural_similarity(spark, sf_dir):
     triangle-rich additive circulant."""
     from gfftoneo4j_spark.operators.graph import (
         _canonical_undirected,
-        _enumerate_triangles,
+        _edge_support,
+        _orient_edges,
     )
 
     _, raw = _circulant(spark, sf_dir, _ADDITIVE)
@@ -18494,26 +18493,7 @@ def edge_structural_similarity(spark, sf_dir):
         .groupBy("n")
         .agg(F.count(F.lit(1)).cast("bigint").alias("d"))
     )
-    tris = _enumerate_triangles(und)
-    sup = (
-        tris.select(
-            F.least("x", "y").alias("a"), F.greatest("x", "y").alias("b")
-        )
-        .unionAll(
-            tris.select(
-                F.least("x", "z").alias("a"),
-                F.greatest("x", "z").alias("b"),
-            )
-        )
-        .unionAll(
-            tris.select(
-                F.least("y", "z").alias("a"),
-                F.greatest("y", "z").alias("b"),
-            )
-        )
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("support"))
-    )
+    sup = _edge_support(_orient_edges(und))
     da = deg.select(F.col("n").alias("a"), F.col("d").alias("da"))
     db = deg.select(F.col("n").alias("b"), F.col("d").alias("db"))
     j = (
@@ -18753,29 +18733,28 @@ def minhash_calibration(spark, sf_dir):
     candidates and pinned to micro-integers before the per-bucket
     mean."""
     from gfftoneo4j_spark.operators.dedup import (
+        MINHASH_K,
         lsh_candidate_pairs,
         minhash_signatures,
         tokens,
     )
 
     corpus = _dup_corpus(spark, sf_dir)
-    sigs = minhash_signatures(corpus, "doc_id", "text", k=8).localCheckpoint(
-        eager=True
-    )
-    cand = lsh_candidate_pairs(sigs, 8, 4).where(
+    sigs = minhash_signatures(corpus, "doc_id", "text").localCheckpoint(eager=True)
+    cand = lsh_candidate_pairs(sigs).where(
         (F.col("id_a") % 5 == 0) & (F.col("id_b") % 5 == 0)
     )
     sa = sigs.select(
         F.col("id").alias("id_a"),
-        *[F.col(f"sig_{i}").alias(f"a{i}") for i in range(8)],
+        *[F.col(f"sig_{i}").alias(f"a{i}") for i in range(MINHASH_K)],
     )
     sb = sigs.select(
         F.col("id").alias("id_b"),
-        *[F.col(f"sig_{i}").alias(f"b{i}") for i in range(8)],
+        *[F.col(f"sig_{i}").alias(f"b{i}") for i in range(MINHASH_K)],
     )
     k_match = sum(
         F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
-        for i in range(8)
+        for i in range(MINHASH_K)
     )
     mc = (
         cand.join(sa, "id_a")
@@ -18809,7 +18788,7 @@ def minhash_calibration(spark, sf_dir):
     )
     return truth.groupBy("k_match").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
-        F.round(F.col("k_match") / 8.0, 6).alias("est_jaccard"),
+        F.round(F.col("k_match") / float(MINHASH_K), 6).alias("est_jaccard"),
         F.round(
             F.sum("j_micro").cast("double") / 1000000 / F.count(F.lit(1)),
             6,

@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from gfftoneo4j_spark.plans.pipeline import is_quarantined
+
 NEXT_TURN_OUTPUT = T.StructType(
     [
         T.StructField("subj", T.StringType(), False),
@@ -73,11 +75,7 @@ def _chain_group(key, pdf_iter, state: GroupState):
 def streaming_next_turn_edges(stream: DataFrame) -> DataFrame:
     """next_turn edges over an unbounded turn stream (W2's lead()
     re-expressed as bounded per-key state)."""
-    turns = stream.where(
-        stream["text"].isNotNull()
-        & (stream["text"] != "")
-        & stream["turn_idx"].isNotNull()
-    ).select("conv_id", "turn_idx")
+    turns = stream.where(~is_quarantined()).select("conv_id", "turn_idx")
     return turns.groupBy("conv_id").applyInPandasWithState(
         _chain_group,
         outputStructType=NEXT_TURN_OUTPUT,

@@ -34,8 +34,8 @@ def test_lsh_pairs_exactly_once_under_all_band_collisions(spark):
     docs.append((6, "alpha beta gamma delta zeta"))  # partial overlap
     docs.append((7, "totally unrelated words only here"))
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    sigs = minhash_signatures(df, "doc_id", "text", k=8)
-    pairs = _pair_list(lsh_candidate_pairs(sigs, 8, 4))
+    sigs = minhash_signatures(df, "doc_id", "text")
+    pairs = _pair_list(lsh_candidate_pairs(sigs))
     assert len(pairs) == len(set(pairs)), "duplicate candidate emission"
     # every identical-doc pair is a candidate (collides in all bands)
     for a in range(6):
@@ -59,7 +59,7 @@ def test_lsh_pair_set_matches_banding_bruteforce(spark):
     df = spark.createDataFrame(
         list(texts.items()), "doc_id long, text string"
     )
-    sigs = minhash_signatures(df, "doc_id", "text", k=8)
+    sigs = minhash_signatures(df, "doc_id", "text")
     rows = {r["id"]: [r[f"sig_{i}"] for i in range(8)] for r in sigs.collect()}
     import hashlib
 
@@ -75,7 +75,7 @@ def test_lsh_pair_set_matches_banding_bruteforce(spark):
             ha, hb = band_hashes(rows[a]), band_hashes(rows[b])
             if any(x == y for x, y in zip(ha, hb)):
                 want.add((a, b))
-    got = _pair_list(lsh_candidate_pairs(sigs, 8, 4))
+    got = _pair_list(lsh_candidate_pairs(sigs))
     assert len(got) == len(set(got))
     assert set(got) == want
 

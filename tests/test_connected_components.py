@@ -98,3 +98,15 @@ def test_cc_releases_superseded_round_checkpoints(spark):
     got = connected_components(path, local_threshold=0).collect()
     assert len(got) == 2001 and {r["component"] for r in got} == {"n0000"}
     assert jsc.getPersistentRDDs().size() - before <= 2
+
+
+def test_cc_local_path_frees_its_snapshot(spark, registered_by):
+    """Under ``local_threshold`` the answer is driver rows, so the edge
+    snapshot the size probe read is freed and nothing stays registered."""
+    from pyspark.sql import functions as F
+
+    e = spark.range(24).select(
+        F.format_string("n%02d", "id").alias("u"),
+        F.format_string("n%02d", (F.col("id") + 1) % 24).alias("v"),
+    )
+    assert registered_by(lambda: connected_components(e)) == 0

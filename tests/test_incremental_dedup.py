@@ -31,9 +31,7 @@ def _pairset(df):
 
 
 def test_incremental_equals_full_rebuild(spark, corpus, tmp_path):
-    full = _pairset(
-        minhash_lsh_dedup(corpus, "doc_id", "text", k=8, bands=4, threshold=0.8)
-    )
+    full = _pairset(minhash_lsh_dedup(corpus, "doc_id", "text"))
     assert full, "fixture must contain near-dup pairs"
     b1 = corpus.where("doc_id % 2 = 0")
     b2 = corpus.where("doc_id % 2 = 1")
@@ -54,7 +52,12 @@ def test_replayed_batch_is_absorbed(spark, corpus, tmp_path):
     first = _pairset(lsh_index_append(spark, corpus, state))
     replay = _pairset(lsh_index_append(spark, corpus, state))
     assert replay == first  # same probe vs same (deduped) state
-    full = _pairset(
-        minhash_lsh_dedup(corpus, "doc_id", "text", k=8, bands=4, threshold=0.8)
-    )
+    full = _pairset(minhash_lsh_dedup(corpus, "doc_id", "text"))
     assert first == full
+
+
+def test_append_frees_its_staged_rows(spark, corpus, tmp_path, registered_by):
+    # the batch's band and token rows are checkpointed to be written;
+    # once appended only the returned pairs' own snapshot stays
+    state = str(tmp_path / "lsh_state3")
+    assert registered_by(lambda: lsh_index_append(spark, corpus, state)) == 1

@@ -4,7 +4,8 @@ minhash_lsh_dedup (pairs) pipeline under the adversarial duplicate-mass
 skew the VERDICT flagged.
 
 Usage: python tools/stress_dedup_scale.py [repo_or_worktree] [K]
-(pass a round-start worktree as repo to A/B old vs new code)."""
+(pass a round-start worktree as repo to A/B old vs new code). Cores
+come from $SPARK_GRAFT_CPUS, as for every session get_spark builds."""
 import sys
 import time
 
@@ -16,7 +17,7 @@ from gfftoneo4j_spark.session import get_spark
 from gfftoneo4j_spark.queries import _dup_corpus
 import gfftoneo4j_spark.operators.dedup as DD
 
-spark = get_spark(app="scale-stress", cpus=32)
+spark = get_spark(app="scale-stress")
 base = _dup_corpus(spark, "/root/testdata/sf0.1")
 parts = [base.select((F.col("doc_id") + 10_000_000 * i).alias("doc_id"), "text") for i in range(K)]
 corpus = parts[0]
@@ -25,7 +26,7 @@ for p in parts[1:]:
 corpus = corpus.localCheckpoint(eager=True)
 n = corpus.count()
 t0 = time.time()
-out = DD.minhash_lsh_dedup(corpus, "doc_id", "text", 8, 4, 0.8)
+out = DD.minhash_lsh_dedup(corpus, "doc_id", "text")
 out.write.format("noop").mode("overwrite").save()
 w = time.time() - t0
 print(f"repo={REPO} K={K} docs={n} wall={w:.1f}s", flush=True)
